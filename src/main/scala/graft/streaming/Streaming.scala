@@ -1521,11 +1521,10 @@ object Streaming {
     * (the touched cluster ids, retiring every older row of those
     * clusters), `labels_delta` / `survivors_delta` (the re-labeled
     * members / re-ranked best of the touched clusters). Readers
-    * assemble the current dims from the newest CUMULATIVE base (a
-    * [[compactKeepBest]] artifact, or a pre-r17 whole-rewrite
-    * version) plus the delta slices after it, under the gram index's
-    * latest-wins algebra ([[assembledKeepBestDims]]); the compaction
-    * cadence bounds the read listing at O(K) slices and makes
+    * assemble the current dims from the newest [[compactKeepBest]]
+    * manifest's tier roots plus the delta slices after it, under the
+    * gram index's latest-wins algebra ([[assembledKeepBestDims]]); the
+    * compaction cadence bounds the read listing at O(K) slices and makes
     * pre-compaction version dirs janitor-deletable. Per-wave bytes
     * written are now ∝ batch + touched clusters, never ∝ corpus
     * (StreamProbe's wave_bytes records it).
@@ -1567,12 +1566,6 @@ object Streaming {
         graft.ops.TextAnalysis.qualityScore(col("text")).as("quality_score"),
         col("lang"))
       .write.mode("overwrite").parquet(s"$survDir/v$batchId/docs")
-    // a pre-r16 base (cumulative labels, NO attrs artifact) is
-    // completed into the attrs-bearing form exactly once at upgrade:
-    // the deterministic first-wins docs-slice backfill is PERSISTED
-    // at the base version, so neither this wave nor any later read
-    // pays the all-prior-slices scan again
-    upgradePreAttrsBase(spark, survDir, prior)
     // attrs DELTA: this batch's first-time doc_ids only (first-wins
     // against the assembled prior attrs — a recurring doc_id keeps
     // its first wave's row). The anti-join probes the doc_id-only
@@ -1591,14 +1584,10 @@ object Streaming {
       .select(col("inc_id").as("id_a"), col("hist_id").as("id_b"))
       .union(spark.read.parquet(s"$survDir/v$batchId/intra"))
       .pipe(graft.Caches.pin)
-    def emptyMerged = spark.emptyDataFrame
-      .select(lit(0L).as("doc_id"), lit(0L).as("cluster_id"),
-        lit(0.0).as("quality_score"), lit("").as("lang")).limit(0)
-    val cols = Seq("doc_id", "cluster_id", "quality_score", "lang")
     val (drops, labelsDelta, survDelta, ccHandle) =
       if (wavePairs.isEmpty)
-        (emptyMerged.select(col("cluster_id")), emptyMerged, emptyMerged,
-          Option.empty[DataFrame])
+        (emptyKbRows(spark).select(col("cluster_id")), emptyKbRows(spark),
+          emptyKbRows(spark), Option.empty[DataFrame])
       else {
         val touchedIds = wavePairs.select(col("id_a").as("doc_id"))
           .union(wavePairs.select(col("id_b").as("doc_id"))).distinct()
@@ -1655,7 +1644,7 @@ object Streaming {
         // would re-scan the corpus-sized priorLabels/priorAttrs inputs
         val newMembers = lblNodes
           .join(known.unionByName(fetched), Seq("doc_id"))
-          .select(cols.map(col): _*)
+          .select(kbCols.map(col): _*)
           .pipe(graft.Caches.pin)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("cluster_id"))
@@ -1663,7 +1652,7 @@ object Streaming {
         val newBest = newMembers
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") === 1)
-          .select(cols.map(col): _*)
+          .select(kbCols.map(col): _*)
         (touchedClusters, newMembers, newBest, Some(lbl))
       }
     // delta slices only: drops retire every older row of the touched
@@ -1679,216 +1668,103 @@ object Streaming {
       Array.emptyByteArray)
   }
 
-  /** Deterministic first-wins attrs over the docs slices of the given
-    * versions: tag each slice with its version and keep every row of
-    * the FIRST version that introduced a doc_id — exactly the
-    * incremental attrs dim's semantics (r17, ADVICE: bare
-    * dropDuplicates kept a partition-order-dependent row, so a
-    * backfilled resume could diverge from an always-incremental
-    * lineage when a doc_id recurred with changed attributes). */
-  private def backfillAttrs(spark: SparkSession, survDir: String,
-      vs: Seq[Long]): DataFrame = {
-    val tagged = vs.sorted.map(v =>
-        spark.read.parquet(s"$survDir/v$v/docs")
-          .withColumn("_bver", lit(v)))
-      .reduce(_ unionByName _)
-    tagged
-      .withColumn("_minv", min(col("_bver")).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc_id"))))
-      .where(col("_bver") === col("_minv"))
-      .drop("_bver", "_minv")
+  /** Label/survivor row layout of the delta keep-best lineage. */
+  private val kbCols = Seq("doc_id", "cluster_id", "quality_score", "lang")
+
+  /** First-wins attrs row layout of the delta keep-best lineage. */
+  private val kbAttrCols = Seq("doc_id", "quality_score", "lang")
+
+  private def emptyKbRows(spark: SparkSession): DataFrame =
+    spark.emptyDataFrame
+      .select(lit(0L).as("doc_id"), lit(0L).as("cluster_id"),
+        lit(0.0).as("quality_score"), lit("").as("lang")).limit(0)
+
+  /** The read set of a delta keep-best lineage over the committed
+    * versions `vs0`: the newest [[compactKeepBest]] base (None before
+    * the first compaction), the tier roots its `_CUMULATIVE` manifest
+    * lists, and the versions committed after it, whose delta slices
+    * every reader adds on top. compact/ roots are trusted only under
+    * the marker (written last): a torn compaction leaves compact/
+    * without it and readers keep ignoring it. */
+  private def kbReadSet(survDir: String, vs0: Seq[Long])
+      : (Option[Long], Seq[(Long, String)], Seq[Long]) = {
+    val vs = vs0.sorted
+    val base = cumulativeBaseAt(survDir, vs, "attrs")
+    (base, base.toSeq.flatMap(kbTierRoots(survDir, _)),
+      vs.filter(v => base.forall(v > _)))
   }
 
-  /** The attrs backfill and its readers gate completeness on the
-    * parquet committer's IN-DIR `_SUCCESS` marker. A session with
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` (or a
-    * committer that writes no marker) would treat EVERY committed
-    * attrs dir as torn — a silent O(corpus) re-backfill on every wave
-    * and every reader (r18 ADVICE). Assert the requirement up front
-    * so a non-default committer degrades loudly instead. */
-  private def requireSuccessMarkers(spark: SparkSession): Unit = {
-    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-    require(spark.sparkContext.hadoopConfiguration.getBoolean(key, true),
-      s"$key=false: keep-best attrs completeness is gated on the " +
-        "committer's in-dir _SUCCESS marker — with markers disabled " +
-        "every committed attrs dir reads as torn and the deterministic " +
-        "backfill recomputes O(corpus) per wave and per reader; " +
-        "re-enable the marker (the default) before driving this lineage")
-  }
+  /** First-wins attrs rows projected to `cols`: the given tier frames
+    * plus each tail version's `attrs_delta` slice — append-only, no
+    * drop algebra (delta doc_ids are first-time by construction). The
+    * explicit projection keeps a bucketed store's kb_bucket partition
+    * column out of the union with the delta slices. */
+  private def kbAttrRows(spark: SparkSession, survDir: String,
+      tiers: Seq[DataFrame], tail: Seq[Long],
+      cols: Seq[String] = kbAttrCols): DataFrame =
+    (tiers ++ tail.map(v => spark.read.parquet(s"$survDir/v$v/attrs_delta")))
+      .map(_.select(cols.map(col): _*))
+      .reduceOption(_ unionByName _)
+      .getOrElse(emptyKbRows(spark).select(cols.map(col): _*))
 
-  /** Complete a pre-r16 cumulative base (labels/survivors written
-    * whole, NO attrs artifact) into the attrs-bearing form: persist
-    * the [[backfillAttrs]] result AT the base version, exactly once —
-    * idempotent (deterministic recompute from committed inputs,
-    * skipped when the artifact exists), so the all-prior-slices scan
-    * is paid once at upgrade and never again by any reader. */
-  private def upgradePreAttrsBase(spark: SparkSession, survDir: String,
-      vs: Seq[Long]): Unit = {
-    import java.nio.file.{Files, Paths}
-    requireSuccessMarkers(spark)
-    cumulativeBase(survDir, vs.sorted).foreach { b =>
-      // gate on the parquet committer's IN-DIR _SUCCESS marker, not bare
-      // directory existence (r18, ADVICE): this backfill writes into an
-      // already-committed version, outside the version-level
-      // written-last discipline — a crash mid-backfill leaves a partial
-      // dir whose bare-existence check would pass forever, silently
-      // serving an incomplete first-wins attrs dim. The marker is the
-      // committer's own completion receipt; an unmarked dir is
-      // recomputed (deterministic) and overwritten whole.
-      // an r18 compaction carries its attrs under compact/ (marker-
-      // gated) — no backfill owed there, and the docs slices a
-      // backfill would scan may already be janitor-deleted
-      val compacted =
-        Files.isRegularFile(Paths.get(s"$survDir/v$b/_CUMULATIVE")) &&
-          Files.exists(Paths.get(s"$survDir/v$b/compact/attrs"))
-      if (!compacted &&
-          !Files.isRegularFile(Paths.get(s"$survDir/v$b/attrs/_SUCCESS")))
-        backfillAttrs(spark, survDir, vs.sorted.filter(_ <= b))
-          .write.mode("overwrite").parquet(s"$survDir/v$b/attrs")
-    }
-  }
-
-  /** The newest version of a delta keep-best lineage carrying a
-    * CUMULATIVE artifact: a [[compactKeepBest]] compaction
-    * (`_CUMULATIVE` marker, written last so a crashed compaction is
-    * invisible — a version with both `labels` and `labels_delta` but
-    * no marker is exactly that) or a pre-r17 whole-rewrite version
-    * (cumulative `labels`, no delta slice). */
-  private def cumulativeBase(survDir: String,
-      vs: Seq[Long]): Option[Long] = {
-    import java.nio.file.{Files, Paths}
-    vs.filter { v =>
-      Files.isRegularFile(Paths.get(s"$survDir/v$v/_CUMULATIVE")) ||
-        (Files.exists(Paths.get(s"$survDir/v$v/labels")) &&
-          !Files.exists(Paths.get(s"$survDir/v$v/labels_delta")))
-    }.sorted.lastOption
-  }
+  /** Latest-wins rows of one label/survivor artifact: the given tier
+    * frames (tagged with their BUILD versions) plus each tail
+    * version's `deltaPart` slice, under [[applyKbDrops]] with the
+    * base's cumulative drop store `cumDrops`. One implementation for
+    * the full assembly, the bucketed probe and the compaction merge,
+    * so the three cannot drift. */
+  private def kbLatestRows(spark: SparkSession, survDir: String,
+      cumDrops: Option[DataFrame], tiers: Seq[(Long, DataFrame)],
+      tail: Seq[Long], deltaPart: String): DataFrame =
+    (tiers ++
+        tail.map(v => v -> spark.read.parquet(s"$survDir/v$v/$deltaPart")))
+      .map { case (ver, df) =>
+        df.select(kbCols.map(col): _*).withColumn("_ver", lit(ver)) }
+      .reduceOption(_ unionByName _)
+      .map(applyKbDrops(spark, survDir, tail, _, cumDrops))
+      .getOrElse(emptyKbRows(spark))
 
   /** Assembled (attrs, labels, survivors) over the committed versions
-    * `vs0` of a delta keep-best lineage: rows from the newest
-    * [[cumulativeBase]] plus the delta slices committed after it,
-    * under [[liveGramSlices]]' latest-wins algebra on the CLUSTER
-    * axis — a row from version u survives iff no version later than u
-    * dropped its cluster (ties keep the delta: a wave's drop applies
-    * to strictly older rows, its own delta re-labels the cluster).
-    * Attrs are append-only first-wins deltas, no drops; a pre-r16
-    * base without an attrs artifact falls back to the deterministic
-    * docs-slice backfill (readers on a lineage no r17 wave has
-    * touched yet — the maintainer persists the upgrade at its next
-    * wave). The per-cluster drop dim broadcasts at a size bounded by
-    * the clusters dropped SINCE the oldest manifest tier: the
-    * compaction prunes cumulative entries no kept row can match
-    * (r20, ADVICE — see [[compactKeepBest]]'s drops write), and the
-    * bucket-dir tier-merge bound advances the oldest tier, so the
-    * store cannot grow with every cluster ever dropped. */
+    * `vs0` of a delta keep-best lineage: rows from the newest base's
+    * tier roots plus the delta slices committed after it, under
+    * [[liveGramSlices]]' latest-wins algebra on the CLUSTER axis — a
+    * row from version u survives iff no version later than u dropped
+    * its cluster (ties keep the delta: a wave's drop applies to
+    * strictly older rows, its own delta re-labels the cluster). Attrs
+    * are append-only first-wins deltas, no drops. The per-cluster
+    * drop dim broadcasts at a size bounded by the clusters dropped
+    * SINCE the oldest manifest tier: the compaction prunes cumulative
+    * entries no kept row can match (see [[compactKeepBest]]'s drops
+    * write), and the bucket-dir tier-merge bound advances the oldest
+    * tier, so the store cannot grow with every cluster ever dropped. */
   private[graft] def assembledKeepBestDims(spark: SparkSession,
       survDir: String,
       vs0: Seq[Long]): (DataFrame, DataFrame, DataFrame) = {
-    import java.nio.file.{Files, Paths}
-    requireSuccessMarkers(spark)
-    def emptyMerged = spark.emptyDataFrame
-      .select(lit(0L).as("doc_id"), lit(0L).as("cluster_id"),
-        lit(0.0).as("quality_score"), lit("").as("lang")).limit(0)
-    def emptyAttrs =
-      emptyMerged.select(col("doc_id"), col("quality_score"), col("lang"))
-    val vs = vs0.sorted
-    if (vs.isEmpty) return (emptyAttrs, emptyMerged, emptyMerged)
-    val base = cumulativeBase(survDir, vs)
-    val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    val cols = Seq("doc_id", "cluster_id", "quality_score", "lang")
-    def read(v: Long, part: String) =
-      spark.read.parquet(s"$survDir/v$v/$part")
-    // a base version's cumulative artifact lives under the tier roots
-    // its `_CUMULATIVE` manifest lists (r19 tiering; a legacy empty
-    // marker = the single root v$b/compact — r18 compactions, written
-    // beside the reads, never over them) or at the version top level
-    // (pre-r17 whole rewrites, no marker). compact/ roots are trusted
-    // only under the marker (written last): a torn compaction leaves
-    // compact/ without it and readers must keep ignoring it.
-    val baseRoots: Seq[(Long, String)] = base.toSeq.flatMap { b =>
-      if (Files.isRegularFile(Paths.get(s"$survDir/v$b/_CUMULATIVE")) &&
-          Files.exists(Paths.get(s"$survDir/v$b/compact/attrs")))
-        kbTierRoots(survDir, b)
-      else Seq.empty
-    }
-    val baseAttrs: Seq[DataFrame] =
-      if (baseRoots.nonEmpty)
-        baseRoots.map { case (_, root) =>
-          spark.read.parquet(s"$root/attrs") }
-      else base.toSeq.map { b =>
-        // in-dir _SUCCESS, not bare existence (r18, ADVICE): a torn
-        // upgradePreAttrsBase backfill must fall back to the
-        // deterministic docs-slice recompute, not get served partial
-        if (Files.isRegularFile(Paths.get(s"$survDir/v$b/attrs/_SUCCESS")))
-          read(b, "attrs")
-        else backfillAttrs(spark, survDir, vs.filter(_ <= b))
-      }
-    // explicit projection: an r19 bucketed store carries the
-    // kb_bucket partition column, which must not leak into the
-    // unionByName with the delta slices
-    val attrs = (baseAttrs
-        .map(_.select(col("doc_id"), col("quality_score"), col("lang"))) ++
-      tail.map(v => read(v, "attrs_delta")))
-      .reduceOption(_ unionByName _).getOrElse(emptyAttrs)
+    val (base, roots, tail) = kbReadSet(survDir, vs0)
+    def tiers(part: String) = roots.map { case (ver, root) =>
+      ver -> spark.read.parquet(s"$root/$part") }
     val cumDrops = kbCumulativeDrops(spark, survDir, base)
-    def assemble(cumPart: String, deltaPart: String): DataFrame = {
-      val baseRows: Seq[DataFrame] =
-        if (baseRoots.nonEmpty)
-          baseRoots.map { case (ver, root) =>
-            spark.read.parquet(s"$root/$cumPart").select(cols.map(col): _*)
-              .withColumn("_ver", lit(ver)) }
-        else base.toSeq.map(b =>
-          read(b, cumPart).select(cols.map(col): _*)
-            .withColumn("_ver", lit(b)))
-      val rows = (baseRows ++
-        tail.map(v => read(v, deltaPart).select(cols.map(col): _*)
-          .withColumn("_ver", lit(v))))
-        .reduceOption(_ unionByName _)
-      // drop algebra shared with the r19 bucketed probes — one
-      // implementation, so the pruned and full reads cannot drift
-      rows.map(applyKbDrops(spark, survDir, tail, _, cumDrops))
-        .getOrElse(emptyMerged)
-    }
-    (attrs, assemble("labels", "labels_delta"),
-      assemble("survivors", "survivors_delta"))
+    (kbAttrRows(spark, survDir, tiers("attrs").map(_._2), tail),
+      kbLatestRows(spark, survDir, cumDrops, tiers("labels"), tail,
+        "labels_delta"),
+      kbLatestRows(spark, survDir, cumDrops, tiers("survivors"), tail,
+        "survivors_delta"))
   }
 
   /** doc_id-only membership of the assembled attrs dim — the
-    * first-time anti-join's probe side (r18, VERDICT #2). Reads the
-    * newest base's `compact/members` artifact (doc_id-only, sorted —
-    * written by [[compactKeepBest]] so row-group min/max stats support
-    * runtime-filter pruning at warehouse scale) falling back to the
-    * doc_id COLUMN of the base attrs artifact (parquet-pruned), plus
-    * the tail `attrs_delta` slices' doc_id columns — never the full
-    * three-column dim and never through a localCheckpoint. The
-    * residual per-wave read is the corpus's doc_id column: the
-    * exact-membership floor of a scan model (PLANS.md r18 names it;
-    * the bucketed/indexed store is the warehouse form). */
+    * first-time anti-join's probe side, unpruned: every tier root's
+    * `members` artifact (doc_id-only, sorted — written by
+    * [[compactKeepBest]] so row-group min/max stats support
+    * runtime-filter pruning at warehouse scale) plus the tail
+    * `attrs_delta` slices' doc_id columns — never the full
+    * three-column dim and never through a localCheckpoint. The wave
+    * reads the bucket-pruned form, [[keepBestMembersProbe]]. */
   private[graft] def assembledKeepBestMembers(spark: SparkSession,
       survDir: String, vs0: Seq[Long]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    requireSuccessMarkers(spark)
-    def emptyMembers = spark.emptyDataFrame
-      .select(lit(0L).as("doc_id")).limit(0)
-    val vs = vs0.sorted
-    if (vs.isEmpty) return emptyMembers
-    val base = cumulativeBase(survDir, vs)
-    val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    val baseMembers: Seq[DataFrame] = base.toSeq.flatMap { b =>
-      if (Files.isRegularFile(Paths.get(s"$survDir/v$b/_CUMULATIVE")) &&
-          Files.exists(Paths.get(s"$survDir/v$b/compact/members")))
-        kbTierRoots(survDir, b).map { case (_, root) =>
-          spark.read.parquet(s"$root/members").select(col("doc_id")) }
-      else if (Files.isRegularFile(Paths.get(s"$survDir/v$b/attrs/_SUCCESS")))
-        Seq(spark.read.parquet(s"$survDir/v$b/attrs").select(col("doc_id")))
-      else Seq(backfillAttrs(spark, survDir, vs.filter(_ <= b))
-        .select(col("doc_id")))
-    }
-    (baseMembers ++
-      tail.map(v => spark.read.parquet(s"$survDir/v$v/attrs_delta")
-        .select(col("doc_id"))))
-      .reduceOption(_ unionByName _).getOrElse(emptyMembers)
+    val (_, roots, tail) = kbReadSet(survDir, vs0)
+    kbAttrRows(spark, survDir,
+      roots.map { case (_, root) => spark.read.parquet(s"$root/members") },
+      tail, Seq("doc_id"))
   }
 
   /** The distinct kb_bucket ids (key >> shift) present in `probe`,
@@ -1919,131 +1795,74 @@ object Streaming {
   }
 
   /** Per-root bucket-pruned reads of a compaction artifact across a
-    * base's tier roots (r19 tiering): roots are grouped by their
-    * `BUCKETS` shift so the probe's touched-bucket set is collected
-    * once per DISTINCT width — tiers written at different corpus
-    * sizes legitimately carry different widths; a root without a
-    * readable shift is read unpruned (correct, just not pruned).
-    * Returns (build version, pruned frame) pairs. */
-  private def kbRootsPruned(spark: SparkSession, survDir: String, b: Long,
+    * base's tier roots: roots are grouped by their `BUCKETS` shift so
+    * the probe's touched-bucket set is collected once per DISTINCT
+    * width — tiers written at different corpus sizes legitimately
+    * carry different widths. Returns (build version, pruned frame)
+    * pairs. */
+  private def kbRootsPruned(spark: SparkSession, roots: Seq[(Long, String)],
       part: String, probe: DataFrame,
       probeKey: String): Seq[(Long, DataFrame)] =
-    kbTierRoots(survDir, b)
-      .groupBy { case (_, root) => kbShiftAtRoot(root) }.toSeq
-      .flatMap {
-        case (Some(shift), rs) =>
-          val buckets = touchedKbBuckets(probe, probeKey, shift)
-          rs.map { case (ver, root) =>
-            ver -> bucketPruned(
-              spark.read.parquet(s"$root/$part"), buckets) }
-        case (None, rs) =>
-          rs.map { case (ver, root) =>
-            ver -> spark.read.parquet(s"$root/$part") }
+    roots.groupBy { case (_, root) => kbShiftAtRoot(root) }.toSeq
+      .flatMap { case (shift, rs) =>
+        val buckets = touchedKbBuckets(probe, probeKey, shift)
+        rs.map { case (ver, root) =>
+          ver -> bucketPruned(spark.read.parquet(s"$root/$part"), buckets) }
       }
 
   /** [[assembledKeepBestMembers]] pruned to the buckets the `probe`
-    * frame's doc_ids could live in (r19, VERDICT #2): the base
-    * compaction's bucketed members stores are read at the probe's
-    * kb_bucket partitions only — per-wave read ∝ touched buckets ×
-    * target bucket rows, i.e. ∝ batch — plus the O(K) tail delta
-    * doc_id columns. Sound as the first-time anti-join's right side
-    * because a member whose bucket is outside the probe's bucket set
-    * can never equal a probe doc_id. Falls back to the full
-    * membership when the base carries no bucketed store. */
+    * frame's doc_ids could live in: the base compaction's bucketed
+    * members stores are read at the probe's kb_bucket partitions only
+    * — per-wave read ∝ touched buckets × target bucket rows, i.e.
+    * ∝ batch — plus the O(K) tail delta doc_id columns. Sound as the
+    * first-time anti-join's right side because a member whose bucket
+    * is outside the probe's bucket set can never equal a probe
+    * doc_id. */
   private[graft] def keepBestMembersProbe(spark: SparkSession,
-      survDir: String, vs0: Seq[Long], probe: DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val vs = vs0.sorted
-    val bucketedBase = cumulativeBase(survDir, vs).filter { b =>
-      Files.isRegularFile(Paths.get(s"$survDir/v$b/_CUMULATIVE")) &&
-        Files.exists(Paths.get(s"$survDir/v$b/compact/members"))
-    }
-    bucketedBase match {
-      case None => assembledKeepBestMembers(spark, survDir, vs)
-      case Some(b) =>
-        (kbRootsPruned(spark, survDir, b, "members", probe, "doc_id")
-          .map(_._2.select(col("doc_id"))) ++
-          vs.filter(_ > b).map(v =>
-            spark.read.parquet(s"$survDir/v$v/attrs_delta")
-              .select(col("doc_id"))))
-          .reduce(_ unionByName _)
-    }
-  }
+      survDir: String, vs0: Seq[Long], probe: DataFrame): DataFrame =
+    attrsProbe(spark, survDir, vs0, probe, "members", Seq("doc_id"))
 
   /** Label rows possibly matching the `probe` frame's `keyCol` values
-    * (r19, VERDICT #3) — the bucketed-probe sibling of
-    * [[assembledKeepBestDims]]' label assembly: the newest base's
-    * `compact/<basePart>` store (`labels` keyed by cluster_id, or the
-    * doc-keyed `labels_by_doc` copy) pruned to the probe's kb_bucket
-    * partitions, plus ALL tail `labels_delta` slices (each ∝ its
-    * wave), under the SAME drop algebra. Returns a SUPERSET of the
-    * probe's rows (whole buckets) so callers semi-join exactly as
-    * before — sound because a row whose bucketed key is outside the
-    * probe's bucket set can never equal a probe key. Falls back to
-    * the full assembled labels when the base carries no bucketed
-    * store. */
+    * — the bucketed-probe sibling of [[assembledKeepBestDims]]' label
+    * assembly: the newest base's `<root>/<basePart>` stores (`labels`
+    * keyed by cluster_id, or the doc-keyed `labels_by_doc` copy)
+    * pruned to the probe's kb_bucket partitions, plus ALL tail
+    * `labels_delta` slices (each ∝ its wave), under the SAME drop
+    * algebra. Returns a SUPERSET of the probe's rows (whole buckets)
+    * so callers semi-join exactly as before — sound because a row
+    * whose bucketed key is outside the probe's bucket set can never
+    * equal a probe key. */
   private def labelsProbe(spark: SparkSession, survDir: String,
       vs0: Seq[Long], basePart: String, keyCol: String,
       probe: DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val vs = vs0.sorted
-    val bucketedBase = cumulativeBase(survDir, vs).filter { b =>
-      Files.isRegularFile(Paths.get(s"$survDir/v$b/_CUMULATIVE")) &&
-        Files.exists(Paths.get(s"$survDir/v$b/compact/$basePart"))
-    }
-    bucketedBase match {
-      case None => assembledKeepBestDims(spark, survDir, vs)._2
-      case Some(b) =>
-        val cols = Seq("doc_id", "cluster_id", "quality_score", "lang")
-        val tail = vs.filter(_ > b)
-        val rows = (kbRootsPruned(spark, survDir, b, basePart, probe, keyCol)
-            .map { case (ver, df) =>
-              df.select(cols.map(col): _*).withColumn("_ver", lit(ver)) } ++
-          tail.map(v =>
-            spark.read.parquet(s"$survDir/v$v/labels_delta")
-              .select(cols.map(col): _*).withColumn("_ver", lit(v))))
-          .reduce(_ unionByName _)
-        applyKbDrops(spark, survDir, tail, rows,
-          kbCumulativeDrops(spark, survDir, Some(b)))
-    }
+    val (base, roots, tail) = kbReadSet(survDir, vs0)
+    kbLatestRows(spark, survDir, kbCumulativeDrops(spark, survDir, base),
+      kbRootsPruned(spark, roots, basePart, probe, keyCol), tail,
+      "labels_delta")
   }
 
-  /** First-wins attrs rows possibly matching the `probe` frame's
-    * doc_ids: the base compaction's bucketed attrs store pruned to
-    * the probe's buckets + the tail `attrs_delta` slices (append-only,
-    * no drop algebra — delta doc_ids are first-time by construction).
-    * Superset semantics and fallback as in [[labelsProbe]]. */
+  /** First-wins attrs rows (the `part` artifact projected to `cols`)
+    * possibly matching the `probe` frame's doc_ids: the base
+    * compaction's bucketed store pruned to the probe's buckets + the
+    * tail `attrs_delta` slices. Superset semantics as in
+    * [[labelsProbe]]. */
   private def attrsProbe(spark: SparkSession, survDir: String,
-      vs0: Seq[Long], probe: DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val vs = vs0.sorted
-    val bucketedBase = cumulativeBase(survDir, vs).filter { b =>
-      Files.isRegularFile(Paths.get(s"$survDir/v$b/_CUMULATIVE")) &&
-        Files.exists(Paths.get(s"$survDir/v$b/compact/attrs"))
-    }
-    bucketedBase match {
-      case None => assembledKeepBestDims(spark, survDir, vs)._1
-      case Some(b) =>
-        (kbRootsPruned(spark, survDir, b, "attrs", probe, "doc_id")
-          .map(_._2
-            .select(col("doc_id"), col("quality_score"), col("lang"))) ++
-          vs.filter(_ > b).map(v =>
-            spark.read.parquet(s"$survDir/v$v/attrs_delta")
-              .select(col("doc_id"), col("quality_score"), col("lang"))))
-          .reduce(_ unionByName _)
-    }
+      vs0: Seq[Long], probe: DataFrame, part: String = "attrs",
+      cols: Seq[String] = kbAttrCols): DataFrame = {
+    val (_, roots, tail) = kbReadSet(survDir, vs0)
+    kbAttrRows(spark, survDir,
+      kbRootsPruned(spark, roots, part, probe, "doc_id").map(_._2),
+      tail, cols)
   }
 
   /** The shared latest-wins drop algebra over versioned label rows
     * (`_ver`-tagged): a row from version u survives iff no version
-    * later than u dropped its cluster — factored out of
-    * [[assembledKeepBestDims]] so the bucketed probes cannot drift
-    * from the full assembly.
+    * later than u dropped its cluster.
     *
-    * `cumDrops` (r19 tiering) is the newest compaction's cumulative
-    * per-cluster max-drop store: with KEPT older tiers on disk, a drop
-    * recorded between two compactions must keep retiring the older
-    * tier's rows even after the recording wave's own `drops` slice is
+    * `cumDrops` is the newest compaction's cumulative per-cluster
+    * max-drop store: with KEPT older tiers on disk, a drop recorded
+    * between two compactions must keep retiring the older tier's rows
+    * even after the recording wave's own `drops` slice is
     * janitor-deleted — the cumulative store carries exactly that
     * history. Sound against tier rows tagged with their BUILD version:
     * a tier built at t contains only rows that survived every drop
@@ -2052,7 +1871,7 @@ object Streaming {
     * it. */
   private def applyKbDrops(spark: SparkSession, survDir: String,
       dropVersions: Seq[Long], rows: DataFrame,
-      cumDrops: Option[DataFrame] = None): DataFrame = {
+      cumDrops: Option[DataFrame]): DataFrame = {
     val dropDim = (cumDrops
         .map(_.select(col("cluster_id"), col("_maxDrop").as("_dver"))).toSeq ++
       dropVersions.map(v =>
@@ -2069,41 +1888,27 @@ object Streaming {
     }
   }
 
-  /** Tier roots of a keep-best compaction base (r19 tiering — the
-    * [[bandTierRoots]] manifest idea on the survivor direction): the
-    * base's `_CUMULATIVE` marker lists dim-relative roots (each
-    * holding attrs/members/labels/labels_by_doc/survivors and its own
-    * `BUCKETS` width), newest last; a legacy empty marker (the
-    * pre-tiering full-rewrite form) means the single root
-    * `v<b>/compact`. Each root's BUILD version — the `_ver` its rows
-    * carry under [[applyKbDrops]] — is parsed from the root path. */
-  private def kbTierRoots(survDir: String, b: Long): Seq[(Long, String)] = {
-    import java.nio.file.{Files, Paths}
-    val lines = new String(
-      Files.readAllBytes(Paths.get(s"$survDir/v$b/_CUMULATIVE")),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    if (lines.isEmpty) Seq(b -> s"$survDir/v$b/compact")
-    else lines.map { rel =>
-      val ver = "^v(\\d+)/".r.findFirstMatchIn(rel).map(_.group(1).toLong)
+  /** Tier roots of a keep-best compaction base, each holding
+    * attrs/members/labels/labels_by_doc/survivors and its own
+    * `BUCKETS` width, newest last. Each root's BUILD version — the
+    * `_ver` its rows carry under [[applyKbDrops]] — is parsed from the
+    * root path. */
+  private def kbTierRoots(survDir: String, b: Long): Seq[(Long, String)] =
+    manifestRoots(survDir, b).map { root =>
+      val ver = "^v(\\d+)/".r
+        .findFirstMatchIn(root.stripPrefix(s"$survDir/"))
+        .map(_.group(1).toLong)
         .getOrElse(throw new IllegalStateException(
-          s"unparseable keep-best tier root '$rel' in v$b/_CUMULATIVE"))
-      ver -> s"$survDir/$rel"
+          s"unparseable keep-best tier root '$root' in v$b/_CUMULATIVE"))
+      ver -> root
     }
-  }
 
   /** The newest compaction's cumulative per-cluster drop store
-    * ((cluster_id, _maxDrop) — see [[applyKbDrops]]), or None for a
-    * legacy/pre-tiering base (whose single full store needs only the
-    * tail drop slices, exactly the pre-r19 semantics). */
+    * ((cluster_id, _maxDrop) — see [[applyKbDrops]]), or None before
+    * the first compaction. */
   private def kbCumulativeDrops(spark: SparkSession, survDir: String,
-      base: Option[Long]): Option[DataFrame] = {
-    import java.nio.file.{Files, Paths}
-    base.filter { b =>
-      Files.isRegularFile(Paths.get(s"$survDir/v$b/_CUMULATIVE")) &&
-        Files.exists(Paths.get(s"$survDir/v$b/compact/drops"))
-    }.map(b => spark.read.parquet(s"$survDir/v$b/compact/drops"))
-  }
+      base: Option[Long]): Option[DataFrame] =
+    base.map(b => spark.read.parquet(s"$survDir/v$b/compact/drops"))
 
   /** Power-of-two range-bucket exponent for a compaction's bucketed
     * stores: one stats pass over the assembled dim picks the width
@@ -2160,25 +1965,32 @@ object Streaming {
     * when nothing would be absorbed. A footer read is pure metadata
     * (the row count is in the file footer), needs no job, and costs
     * one short ranged read per file — stores are written
-    * size-targeted, so file counts are bounded. Recursive listing
-    * covers kb_bucket-partitioned stores. */
+    * size-targeted, so file counts are bounded. The recursive walk
+    * covers kb_bucket-partitioned stores and, like Spark's file index,
+    * skips every `_`- or `.`-prefixed entry (a committer's
+    * `_temporary` attempt dirs, checksum and marker files), so the
+    * count is the one `spark.read.parquet(dir).count()` returns. */
   private[graft] def parquetRowCount(spark: SparkSession, dir: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return 0L
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf))
-        try n += r.getRecordCount finally r.close()
-      }
-    }
-    n
+    def rows(d: org.apache.hadoop.fs.Path): Long =
+      fs.listStatus(d).iterator
+        .filterNot { st =>
+          val name = st.getPath.getName
+          name.startsWith("_") || name.startsWith(".")
+        }
+        .map { st =>
+          if (st.isDirectory) rows(st.getPath)
+          else if (!st.getPath.getName.endsWith(".parquet")) 0L
+          else {
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile
+                .fromStatus(st, conf))
+            try r.getRecordCount finally r.close()
+          }
+        }.sum
+    if (fs.exists(p)) rows(p) else 0L
   }
 
   /** Number of kb_bucket partition directories under a bucketed store
@@ -2209,26 +2021,16 @@ object Streaming {
       .flatMap(_.toLongOption).getOrElse(4096L)
 
   /** Compact a delta keep-best lineage at its newest committed
-    * version: SIZE-TIERED since the r19 tiering — merge the fresh
-    * tail slices plus any prior tier roots of comparable size into a
-    * new tier under `v<top>/compact/`, list kept roots + the new tier
-    * in the `_CUMULATIVE` manifest (written last) — the
-    * [[compactGramIndex]] story on the survivor direction with
-    * [[compactUnionStore]]'s amortization. Readers stand on the
-    * manifest tiers + later delta slices (O(log W) stores + O(K)
-    * listings). Janitor-deletable set: below the base, delta/docs
-    * SLICES are subsumed by the tiers and compact roots UNREFERENCED
-    * by the newest manifest by later merges — manifest-referenced
-    * roots and the version markers must survive (StreamingSpec sweeps
-    * exactly that and proves the reader and the next wave unchanged).
-    * Idempotent; safe at any cadence.
+    * version: SIZE-TIERED — merge the fresh tail slices plus any prior
+    * tier roots of comparable size into a new tier under
+    * `v<top>/compact/`, list kept roots + the new tier in the
+    * `_CUMULATIVE` manifest (written last) — the [[compactGramIndex]]
+    * story on the survivor direction with [[compactUnionStore]]'s
+    * amortization. Readers stand on the manifest tiers + later delta
+    * slices (O(log W) stores + O(K) listings). Janitor-deletable set:
+    * [[janitorDeletablePaths]]. Idempotent; safe at any cadence.
     *
-    * r18 (VERDICT #3): the pre-r18 form wrote the cumulative
-    * artifacts OVER the version's top-level paths, which forced a
-    * corpus-sized `localCheckpoint` of all three dims first (a pre-r17
-    * base AT top is read by the very assembly the write replaced) —
-    * executor memory ∝ corpus pinned for the whole compaction. The
-    * `compact/` namespace makes reads and writes disjoint by
+    * The `compact/` namespace keeps reads and writes disjoint by
     * construction: nothing is checkpointed, a crash mid-compaction
     * leaves a torn `compact/` dir no reader trusts (the marker is
     * written last), and the retry overwrites it whole. */
@@ -2239,92 +2041,44 @@ object Streaming {
     require(vs.nonEmpty, s"no committed survivor version under $survDir")
     val top = vs.max
     if (Files.isRegularFile(Paths.get(s"$survDir/v$top/_CUMULATIVE"))) return
-    val base = cumulativeBase(survDir, vs)
-    val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    val cols = Seq("doc_id", "cluster_id", "quality_score", "lang")
-    // SIZE-TIERED merge (r19 — [[compactUnionStore]]'s rule, which the
-    // survivor stores could not take pre-r19 because their latest-wins
-    // precedence needs per-tier version context; [[applyKbDrops]]'
-    // cumDrops store + build-version tags supply exactly that): absorb
-    // prior tier roots smallest-first while a root's attrs rows are
-    // ≤ 2× the rows merged so far. The pre-tiering form rewrote the
-    // FULL assembled dims every trigger — total compaction work
-    // quadratic in wave count; tiered, a row is rewritten O(log W)
-    // times and a trigger whose tails are small writes a small tier.
-    // A pre-r17 whole-rewrite base (no marker) has no compact-layout
-    // root to keep, so it is always absorbed through the full
-    // assembly — a one-time upgrade cost, after which the lineage is
-    // manifest-tiered.
-    val tieredBase = base.filter(b =>
-      Files.isRegularFile(Paths.get(s"$survDir/v$b/_CUMULATIVE")) &&
-        Files.exists(Paths.get(s"$survDir/v$b/compact/attrs")))
-    val priorCumDrops = kbCumulativeDrops(spark, survDir, base)
-    val (kept, attrs, labels, survivors) = tieredBase match {
-      case None =>
-        val (a, l, s) = assembledKeepBestDims(spark, survDir, vs)
-        (Seq.empty[(Long, String)], a, l, s)
-      case Some(b) =>
-        val roots = kbTierRoots(survDir, b)
-        // r20 (ADVICE): a root without the full r19 artifact set (the
-        // doc-keyed labels_by_doc copy + BUCKETS meta — r18-era
-        // compact layouts, written before those artifacts existed)
-        // cannot serve the bucketed probes: if a manifest KEEPS one,
-        // the next wave's labelsProbe reads <root>/labels_by_doc — a
-        // nonexistent path — and crashes. Force-absorb such roots
-        // regardless of size: the same one-time upgrade cost the
-        // pre-r17 whole-rewrite base takes, after which every
-        // manifest-referenced root carries every probe artifact.
-        val (modern, legacy) = roots.partition { case (_, root) =>
-          Files.exists(Paths.get(s"$root/labels_by_doc")) &&
-            Files.isRegularFile(Paths.get(s"$root/BUCKETS"))
-        }
-        // the tier metric is attrs ROW COUNT (the corpus-membership
-        // artifact — one row per streamed doc), summed from parquet
-        // footers on the driver (r20, ADVICE — [[parquetRowCount]]:
-        // no per-store count() jobs on the trigger path)
-        def rowsOf(dir: String): Long = parquetRowCount(spark, dir)
-        var acc = tail.map(v => rowsOf(s"$survDir/v$v/attrs_delta")).sum +
-          legacy.map { case (_, root) => rowsOf(s"$root/attrs") }.sum
-        val absorbed =
-          scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-        absorbed ++= legacy
-        modern.map { rv => rv -> rowsOf(s"${rv._2}/attrs") }
-          .sortBy(_._2).foreach { case (rv, n) =>
-            if (n <= 2 * acc) { absorbed += rv; acc += n }
-          }
-        var keptRoots = roots.filterNot(absorbed.contains)
-        // r20 (VERDICT #4): bucket-dir tier-merge bound — see
-        // [[maxKeptBucketDirs]]. Counted over the roots that would be
-        // KEPT (the new tier's dirs replace the absorbed ones).
-        if (keptRoots.map { case (_, root) =>
-              bucketDirCount(spark, s"$root/attrs") }.sum
-            > maxKeptBucketDirs(spark)) {
-          absorbed ++= keptRoots
-          keptRoots = Seq.empty
-        }
-        val a = (absorbed.toSeq.map { case (_, root) =>
-            spark.read.parquet(s"$root/attrs")
-              .select(col("doc_id"), col("quality_score"), col("lang")) } ++
-          tail.map(v => spark.read.parquet(s"$survDir/v$v/attrs_delta")
-            .select(col("doc_id"), col("quality_score"), col("lang"))))
-          .reduce(_ unionByName _)
-        // merged label/survivor rows carry the SAME drop algebra as
-        // the readers (absorbed tiers tagged with their build
-        // versions, tails with theirs) — so the new tier contains
-        // exactly the rows that survive through `top`, and reading it
-        // tagged `top` is sound (see [[applyKbDrops]])
-        def merge(cumPart: String, deltaPart: String): DataFrame = {
-          val rows = (absorbed.toSeq.map { case (ver, root) =>
-              spark.read.parquet(s"$root/$cumPart")
-                .select(cols.map(col): _*).withColumn("_ver", lit(ver)) } ++
-            tail.map(v => spark.read.parquet(s"$survDir/v$v/$deltaPart")
-              .select(cols.map(col): _*).withColumn("_ver", lit(v))))
-            .reduce(_ unionByName _)
-          applyKbDrops(spark, survDir, tail, rows, priorCumDrops)
-        }
-        (keptRoots, a, merge("labels", "labels_delta"),
-          merge("survivors", "survivors_delta"))
+    val (base, roots, tail) = kbReadSet(survDir, vs)
+    // SIZE-TIERED merge ([[compactUnionStore]]'s rule; the latest-wins
+    // precedence across tiers comes from [[applyKbDrops]]' cumDrops
+    // store + build-version tags): absorb prior tier roots
+    // smallest-first while a root's attrs rows are ≤ 2× the rows
+    // merged so far — a row is rewritten O(log W) times and a trigger
+    // whose tails are small writes a small tier. The tier metric is
+    // attrs ROW COUNT (one row per streamed doc), summed from parquet
+    // footers on the driver ([[parquetRowCount]]: no per-store
+    // count() jobs on the trigger path).
+    def rowsOf(dir: String): Long = parquetRowCount(spark, dir)
+    var acc = tail.map(v => rowsOf(s"$survDir/v$v/attrs_delta")).sum
+    val absorbed = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    roots.map(rv => rv -> rowsOf(s"${rv._2}/attrs")).sortBy(_._2).foreach {
+      case (rv, n) => if (n <= 2 * acc) { absorbed += rv; acc += n }
     }
+    var kept = roots.filterNot(absorbed.contains)
+    // bucket-dir tier-merge bound — see [[maxKeptBucketDirs]]. Counted
+    // over the roots that would be KEPT (the new tier's dirs replace
+    // the absorbed ones).
+    if (kept.map { case (_, root) => bucketDirCount(spark, s"$root/attrs") }
+        .sum > maxKeptBucketDirs(spark)) {
+      absorbed ++= kept
+      kept = Seq.empty
+    }
+    def tiers(part: String) = absorbed.toSeq.map { case (ver, root) =>
+      ver -> spark.read.parquet(s"$root/$part") }
+    val attrs = kbAttrRows(spark, survDir, tiers("attrs").map(_._2), tail)
+    // merged label/survivor rows carry the SAME drop algebra as the
+    // readers (absorbed tiers tagged with their build versions, tails
+    // with theirs) — so the new tier contains exactly the rows that
+    // survive through `top`, and reading it tagged `top` is sound
+    // (see [[applyKbDrops]])
+    val priorCumDrops = kbCumulativeDrops(spark, survDir, base)
+    val labels = kbLatestRows(spark, survDir, priorCumDrops,
+      tiers("labels"), tail, "labels_delta")
+    val survivors = kbLatestRows(spark, survDir, priorCumDrops,
+      tiers("survivors"), tail, "survivors_delta")
     // bucket width (r19, VERDICT #2/#3): see [[kbShiftFor]] — derived
     // from THIS tier's rows, so every tier targets ≈ constant rows per
     // bucket at its own key density (probes collect buckets per
@@ -2379,11 +2133,10 @@ object Streaming {
     // bucket meta BEFORE the marker: a torn compaction never exposes it
     Files.write(Paths.get(s"$survDir/v$top/compact/BUCKETS"),
       shift.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the marker is a MANIFEST since the r19 tiering: kept roots + the
-    // new tier, dim-relative, one per line (a legacy EMPTY marker
-    // still reads as the single root v<b>/compact). Written last — a
-    // torn merge leaves the old manifest authoritative and the orphan
-    // compact/ dir invisible.
+    // the marker is the MANIFEST: kept roots + the new tier,
+    // dim-relative, one per line. Written last — a torn merge leaves
+    // the old manifest authoritative and the orphan compact/ dir
+    // invisible.
     val prefix = s"$survDir/"
     val manifest = (kept.map(_._2.stripPrefix(prefix)) :+
       s"v$top/compact").mkString("\n")
@@ -2400,7 +2153,7 @@ object Streaming {
     val vs = prior.sorted
     val base = bandCumulativeBase(dimDir, vs)
     val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    val roots = base.toSeq.flatMap(b => bandTierRoots(dimDir, b))
+    val roots = base.toSeq.flatMap(manifestRoots(dimDir, _))
     spark.read.parquet(
       (roots.map(r => s"$r/bands") ++
         tail.map(p => s"$dimDir/v$p/bands")): _*)
@@ -2431,14 +2184,12 @@ object Streaming {
         val c = graft.Caches.pin(candLazy)
         // one bucket collection per DISTINCT shift — tiers written at
         // different corpus sizes carry different bucket widths
-        val roots = bandTierRoots(dimDir, b)
-        val shifts = roots.map(r => r -> kbShiftAtRoot(r))
-        val bucketsByShift = shifts.flatMap(_._2).distinct
+        val shifts = manifestRoots(dimDir, b).map(r => r -> kbShiftAtRoot(r))
+        val bucketsByShift = shifts.map(_._2).distinct
           .map(s => s -> touchedKbBuckets(c, "id_b", s)).toMap
         val h = (shifts.map { case (r, sh) =>
-            val df = spark.read.parquet(s"$r/$docsPart")
-            sh.fold(df)(s => bucketPruned(df, bucketsByShift(s)))
-              .select(docsCols.map(col): _*)
+            bucketPruned(spark.read.parquet(s"$r/$docsPart"),
+              bucketsByShift(sh)).select(docsCols.map(col): _*)
           } ++
           tail.map(p => spark.read.parquet(s"$dimDir/v$p/$docsPart")
             .select(docsCols.map(col): _*)))
@@ -2452,38 +2203,18 @@ object Streaming {
 
   /** Newest committed version of a band-index lineage carrying a
     * compacted store ([[compactBandIndex]]'s `compact/bands` under a
-    * `_CUMULATIVE` marker) — [[cumulativeBase]]'s shape on the index
-    * direction. None = no compaction yet: probes fall back to the
-    * all-slices scan. */
+    * `_CUMULATIVE` marker). None = no compaction yet: probes fall
+    * back to the all-slices scan. */
   private def bandCumulativeBase(dimDir: String,
       vs: Seq[Long]): Option[Long] =
     cumulativeBaseAt(dimDir, vs, "bands")
 
-  /** Tier ROOT dirs of a band-index compaction base (r19 tiering —
-    * [[compactUnionStore]]'s manifest idea on the two-artifact store):
-    * the base's `_CUMULATIVE` marker lists dim-relative roots, each
-    * holding `bands`, the shingle artifact and its own `BUCKETS`
-    * width; a legacy empty marker means the single root
-    * `v<b>/compact`. */
-  private def bandTierRoots(dimDir: String, b: Long): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    val lines = new String(
-      Files.readAllBytes(Paths.get(s"$dimDir/v$b/_CUMULATIVE")),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    if (lines.isEmpty) Seq(s"$dimDir/v$b/compact")
-    else lines.map(rel => s"$dimDir/$rel")
-  }
-
   /** The kb_bucket shift a tier root was written with (its `BUCKETS`
-    * meta), or None for a root without a bucketed artifact — callers
-    * then read that tier unpruned. */
-  private def kbShiftAtRoot(root: String): Option[Int] = {
+    * meta, committed before the manifest that lists the root). */
+  private def kbShiftAtRoot(root: String): Int = {
     import java.nio.file.{Files, Paths}
-    val p = Paths.get(s"$root/BUCKETS")
-    if (!Files.isRegularFile(p)) None
-    else scala.util.Try(new String(Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toInt).toOption
+    new String(Files.readAllBytes(Paths.get(s"$root/BUCKETS")),
+      java.nio.charset.StandardCharsets.UTF_8).trim.toInt
   }
 
   /** Newest committed version under `dimDir` whose `compact/<part>`
@@ -2497,21 +2228,20 @@ object Streaming {
     }.sorted.lastOption
   }
 
-  /** The live store dirs of a union-store compaction base: since the
-    * r19 tiering, a version's `_CUMULATIVE` marker is a MANIFEST —
-    * one dim-relative store dir per line, the size-tiered set whose
-    * union is the full accumulated store. A legacy empty marker (the
-    * pre-tiering full-rewrite form) means the single store
-    * `v<b>/compact/<part>`. */
-  private def cumulativeStores(dimDir: String, b: Long,
-      part: String): Seq[String] = {
+  /** The tier dirs a compaction base's `_CUMULATIVE` marker lists, as
+    * paths under `dimDir`. The marker is a MANIFEST — one
+    * dim-relative dir per line, newest last: the size-tiered set whose
+    * union is the full accumulated store (a union store's part dir, or
+    * a band/keep-best root holding several artifacts). Every
+    * compaction lists at least its own new tier. */
+  private def manifestRoots(dimDir: String, b: Long): Seq[String] = {
     import java.nio.file.{Files, Paths}
-    val lines = new String(
+    val rels = new String(
       Files.readAllBytes(Paths.get(s"$dimDir/v$b/_CUMULATIVE")),
       java.nio.charset.StandardCharsets.UTF_8)
       .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    if (lines.isEmpty) Seq(s"$dimDir/v$b/compact/$part")
-    else lines.map(rel => s"$dimDir/$rel")
+    require(rels.nonEmpty, s"empty compaction manifest $dimDir/v$b/_CUMULATIVE")
+    rels.map(rel => s"$dimDir/$rel")
   }
 
   /** Paths composing a union-store history read: the manifest stores
@@ -2523,7 +2253,7 @@ object Streaming {
     val sorted = vs.sorted
     val base = cumulativeBaseAt(dimDir, sorted, part)
     val tail = base.map(b => sorted.filter(_ > b)).getOrElse(sorted)
-    base.toSeq.flatMap(b => cumulativeStores(dimDir, b, part)) ++
+    base.toSeq.flatMap(manifestRoots(dimDir, _)) ++
       tail.map(v => s"$dimDir/v$v/$part")
   }
 
@@ -2555,26 +2285,25 @@ object Streaming {
     base match {
       case None => Seq.empty // nothing compacted: every slice is live
       case Some(b) =>
-        val lines = new String(
-          Files.readAllBytes(Paths.get(s"$dimDir/v$b/_CUMULATIVE")),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-        val roots =
-          (if (lines.isEmpty) Seq(s"$dimDir/v$b/compact")
-           else lines.map(rel => s"$dimDir/$rel"))
-            .map(r => Paths.get(r).normalize)
+        // candidates and roots are compared as NORMALIZED paths: a
+        // `.` or `..` segment in `dimDir` would otherwise defeat
+        // startsWith and offer a protected root
+        val roots = manifestRoots(dimDir, b).map(r => Paths.get(r).normalize)
+        def list(d: Path): Seq[Path] = {
+          val entries = Files.list(d)
+          try entries.toArray.toSeq.map(_.asInstanceOf[Path])
+          finally entries.close()
+        }
         // a path is deletable iff it neither contains nor lies inside
         // a protected root; a dir containing one recurses so the
         // siblings of a nested root (e.g. v1/compact/shas) still go
         def sweep(p: Path): Seq[String] =
-          if (roots.exists(r => r.startsWith(p) && r != p)) {
-            val kids = Files.list(p).toArray.toSeq.map(_.asInstanceOf[Path])
-            kids.flatMap(sweep)
-          } else if (roots.exists(p.startsWith)) Seq.empty
+          if (roots.exists(r => r.startsWith(p) && r != p))
+            list(p).flatMap(sweep)
+          else if (roots.exists(p.startsWith)) Seq.empty
           else Seq(p.toString)
         vs.filter(_ <= b).flatMap { v =>
-          val vd = Paths.get(s"$dimDir/v$v")
-          Files.list(vd).toArray.toSeq.map(_.asInstanceOf[Path])
+          list(Paths.get(s"$dimDir/v$v").normalize)
             .filterNot(e => e.getFileName.toString == "_CUMULATIVE" ||
               e.getFileName.toString == "_SUCCESS")
             .flatMap(sweep)
@@ -2618,7 +2347,7 @@ object Streaming {
     if (Files.isRegularFile(Paths.get(s"$dimDir/v$top/_CUMULATIVE"))) return
     val base = cumulativeBaseAt(dimDir, vs, part)
     val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    val stores = base.toSeq.flatMap(b => cumulativeStores(dimDir, b, part))
+    val stores = base.toSeq.flatMap(manifestRoots(dimDir, _))
     val tailDirs = tail.map(v => s"$dimDir/v$v/$part")
     // the tier metric is ROW COUNT, not bytes: rows track data
     // ∝-exactly for a fixed schema at any scale, and (unlike file
@@ -2685,7 +2414,7 @@ object Streaming {
     // janitor-swept lineage can still recompact
     val base = bandCumulativeBase(dimDir, vs)
     val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    val roots = base.toSeq.flatMap(b => bandTierRoots(dimDir, b))
+    val roots = base.toSeq.flatMap(manifestRoots(dimDir, _))
     // SIZE-TIERED merge ([[compactUnionStore]]'s rule on the shingle
     // rows): absorb prior tiers smallest-first while a tier is ≤ 2×
     // the rows merged so far — the pre-tiering form rewrote the FULL
@@ -2693,7 +2422,7 @@ object Streaming {
     // count. Kept tiers survive in the manifest; band/docs slices are
     // per-batch disjoint, so tiers partition the store exactly and no
     // precedence is needed (unlike the latest-wins keep-best survivor
-    // stores, which stay single-base for that reason).
+    // stores, which need [[applyKbDrops]]' build-version tags).
     def rowsOf(dir: String): Long = parquetRowCount(spark, dir)
     var acc = tail.map(v => rowsOf(s"$dimDir/v$v/$docsPart")).sum
     val absorbed = scala.collection.mutable.ArrayBuffer.empty[String]

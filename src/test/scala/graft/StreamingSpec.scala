@@ -146,28 +146,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  /** Convert the first `n` committed versions of a DELTA keep-best
-    * lineage into the pre-r16 whole-rewrite layout — cumulative
-    * labels/survivors per version, NO attrs artifact, delta slices
-    * gone — the faithful fixture for upgrade-path tests (resuming a
-    * lineage the old maintainer committed). */
-  private def toPreR16Lineage(survDir: String, n: Int): Unit = {
-    val materialized = (0 until n).map { v =>
-      val (_, l, s) = graft.streaming.Streaming.assembledKeepBestDims(
-        spark, survDir, (0L to v.toLong))
-      (v, l.localCheckpoint(), s.localCheckpoint())
-    }
-    (0 until n).foreach { v =>
-      Seq("labels_delta", "survivors_delta", "drops", "attrs_delta",
-        "attrs", "labels", "survivors")
-        .foreach(part => deleteRec(s"$survDir/v$v/$part"))
-    }
-    materialized.foreach { case (v, l, s) =>
-      l.write.mode("overwrite").parquet(s"$survDir/v$v/labels")
-      s.write.mode("overwrite").parquet(s"$survDir/v$v/survivors")
-    }
-  }
-
   /** Stage a frame as N single parquet files in a fresh landing dir so
     * AvailableNow + maxFilesPerTrigger=1 replays it as N micro-batches. */
   private def stageLanding(prefix: String,
@@ -559,120 +537,14 @@ class StreamingSpec extends AnyFunSuite {
       "post-sweep wave over the two-tier stores diverged from batch x59")
   }
 
-  test("tiered keep-best compaction (r19): a legacy single-base " +
-      "lineage (pre-tiering empty marker, no cumulative drop store) " +
-      "keeps reading and upgrades to a manifest at the next trigger") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    val waves = (0 until 4).map(i => docs.filter($"doc_id" % 4 === i))
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(s"graft_kblg_$p").toString
-    val (dimDir, pairsDir, survDir) = (tmp("dim"), tmp("pairs"), tmp("surv"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "cluster_id", "quality_score", "lang")
-        .collect().map(_.toSeq).toSet
-    waves.zipWithIndex.foreach { case (w, i) =>
-      Streaming.keepBestDeltaMaintain(dimDir, pairsDir, survDir,
-        compactEvery = 2)(w, i.toLong)
-      if (i == 1) {
-        // rewrite v1 to the pre-tiering on-disk form: an EMPTY
-        // _CUMULATIVE beside the full single-base store, no
-        // cumulative drop store — exactly what an r19-pre-tiering
-        // compaction left behind
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$survDir/v1/_CUMULATIVE"),
-          Array.emptyByteArray)
-        deleteRec(s"$survDir/v1/compact/drops")
-      }
-    }
-    // the v3 trigger read the legacy base through the empty-marker
-    // fallback and committed a manifest on top of it
-    val manifest = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$survDir/v3/_CUMULATIVE")),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    assert(manifest.nonEmpty,
-      "the post-upgrade trigger did not write a manifest marker")
-    assert(rows(Streaming.streamedKeepBestDeltaSurvivors(spark, survDir))
-        == rows(graft.ops.Dedup.dedupKeepBest(spark, sf)),
-      "legacy-marker keep-best lineage diverged from batch x59")
-  }
-
-  test("keep-best success-marker requirement (r19, ADVICE): a session " +
-      "with marksuccessfuljobs=false fails loudly instead of silently " +
-      "recomputing the O(corpus) attrs backfill on every read") {
-    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val prior = conf.get(key)
-    conf.setBoolean(key, false)
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Streaming.assembledKeepBestDims(
-          spark, "/tmp/graft_nonexistent_kb", Seq.empty)
-      }
-      assert(e.getMessage.contains("marksuccessfuljobs"),
-        s"wrong failure: ${e.getMessage}")
-    } finally {
-      if (prior == null) conf.unset(key) else conf.set(key, prior)
-    }
-  }
-
-  test("torn attrs backfill re-runs (r18, ADVICE): a partial v-base " +
-      "attrs dir without the committer's _SUCCESS is recomputed, not " +
-      "silently served") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    val waves = (0 until 3).map(i => docs.filter($"doc_id" % 3 === i))
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(s"graft_kba_$p").toString
-    val (dimDir, pairsDir, survDir) = (tmp("dim"), tmp("pairs"), tmp("surv"))
-    waves.take(2).zipWithIndex.foreach { case (w, i) =>
-      Streaming.keepBestDeltaUpdate(dimDir, pairsDir, survDir)(w, i.toLong)
-    }
-    toPreR16Lineage(survDir, 2)
-    // plant a WRONG attrs artifact at the base version with NO
-    // _SUCCESS — the faithful image of a backfill that crashed after
-    // writing some part files. Pre-r18 the bare-existence check
-    // trusted it forever; singletons and first-time probes would then
-    // silently miss most of the corpus.
-    val torn = tmp("torn")
-    waves(0).limit(3)
-      .select($"doc_id",
-        graft.ops.TextAnalysis.qualityScore($"text").as("quality_score"),
-        $"lang")
-      .coalesce(1).write.mode("overwrite").parquet(torn)
-    val attrsDir = java.nio.file.Paths.get(s"$survDir/v1/attrs")
-    java.nio.file.Files.createDirectories(attrsDir)
-    new java.io.File(torn).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-      .foreach(f => java.nio.file.Files.copy(f.toPath,
-        attrsDir.resolve(f.getName)))
-    assert(!java.nio.file.Files.isRegularFile(attrsDir.resolve("_SUCCESS")))
-    // the next wave must RE-backfill (marker absent), then the reader
-    // must equal batch x59 — serving the torn dir would fail this
-    Streaming.keepBestDeltaUpdate(dimDir, pairsDir, survDir)(waves(2), 2L)
-    assert(java.nio.file.Files.isRegularFile(attrsDir.resolve("_SUCCESS")),
-      "backfill did not recommit a complete attrs artifact")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "cluster_id", "quality_score", "lang")
-        .collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getString(3))).toSet
-    val streamed = rows(Streaming.streamedKeepBestDeltaSurvivors(spark, survDir))
-    val batch = rows(graft.ops.Dedup.dedupKeepBest(spark, sf))
-    assert(streamed == batch,
-      s"torn-backfill lineage diverged from batch x59: " +
-        s"missing=${(batch -- streamed).take(5)} " +
-        s"extra=${(streamed -- batch).take(5)}")
-  }
-
   test("pre-attrs backfill is deterministic first-wins: a doc_id " +
       "recurring across waves with CHANGED attributes backfills to its " +
       "first wave's row, identical to the always-incremental lineage") {
     import spark.implicits._
     val docs = Tables.documents(spark, sf)
     // wave 2 re-submits a slice of wave-1 doc_ids with mutated text
-    // (changed quality_score) — the class ADVICE flagged: bare
-    // dropDuplicates kept a partition-order-dependent row here, while
-    // the incremental attrs dim is explicitly first-wins
+    // (changed quality_score); the incremental attrs dim is
+    // explicitly first-wins
     val recur = docs.filter($"doc_id" % 3 === 0 && $"doc_id" % 5 === 0)
       .withColumn("text", concat($"text",
         lit(" zq zq zq zq zq zq zq zq zq zq zq zq")))
@@ -681,26 +553,16 @@ class StreamingSpec extends AnyFunSuite {
       docs.filter($"doc_id" % 3 === 2))
     def tmp(p: String) =
       java.nio.file.Files.createTempDirectory(s"graft_kbfw_$p").toString
-    def runLineage(backfill: Boolean): Set[(Long, Double, String)] = {
-      val (dimDir, pairsDir, survDir) = (tmp("dim"), tmp("pairs"), tmp("surv"))
-      waves.take(2).zipWithIndex.foreach { case (w, i) =>
-        Streaming.keepBestDeltaUpdate(dimDir, pairsDir, survDir)(w, i.toLong)
-      }
-      if (backfill) toPreR16Lineage(survDir, 2)
-      Streaming.keepBestDeltaUpdate(dimDir, pairsDir, survDir)(waves(2), 2L)
-      Streaming.streamedKeepBestAttrs(spark, survDir)
-        .select($"doc_id", $"quality_score", $"lang").collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
+    val (dimDir, pairsDir, survDir) = (tmp("dim"), tmp("pairs"), tmp("surv"))
+    waves.zipWithIndex.foreach { case (w, i) =>
+      Streaming.keepBestDeltaUpdate(dimDir, pairsDir, survDir)(w, i.toLong)
     }
-    val incremental = runLineage(backfill = false)
-    val backfilled = runLineage(backfill = true)
-    assert(backfilled == incremental,
-      s"backfilled attrs diverged from the incremental lineage: " +
-        s"missing=${(incremental -- backfilled).take(5)} " +
-        s"extra=${(backfilled -- incremental).take(5)}")
+    val incremental = Streaming.streamedKeepBestAttrs(spark, survDir)
+      .select($"doc_id", $"quality_score", $"lang").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
     // non-vacuity + the semantics pin: the recurring ids' mutated
     // wave-2 scores must actually differ from their wave-1 scores, and
-    // BOTH lineages must carry the wave-1 (first-wins) row for them
+    // the lineage must carry the wave-1 (first-wins) row for them
     val wave1Attrs = waves(0)
       .select($"doc_id",
         graft.ops.TextAnalysis.qualityScore($"text").as("q"), $"lang")
@@ -716,39 +578,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(incremental.filter(t => recurIds.contains(t._1)) ==
         wave1Attrs.filter(t => recurIds.contains(t._1)),
       "recurring doc_ids do not carry their first wave's attributes")
-  }
-
-  test("delta keep-best resumes a PRE-attrs lineage: missing attrs " +
-      "slices are backfilled from the docs slices, result == batch x59") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    val waves = Seq(docs.filter($"doc_id" % 3 === 0),
-      docs.filter($"doc_id" % 3 === 1), docs.filter($"doc_id" % 3 === 2))
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(s"graft_kbu_$p").toString
-    val (dimDir, pairsDir, survDir) = (tmp("dim"), tmp("pairs"), tmp("surv"))
-    waves.take(2).zipWithIndex.foreach { case (w, i) =>
-      Streaming.keepBestDeltaUpdate(dimDir, pairsDir, survDir)(w, i.toLong)
-    }
-    // the faithful pre-r16 fixture (r17): cumulative labels/survivors
-    // per version, NO attrs artifact, no delta slices — the layout the
-    // old whole-rewrite maintainer actually committed
-    toPreR16Lineage(survDir, 2)
-    Streaming.keepBestDeltaUpdate(dimDir, pairsDir, survDir)(waves(2), 2L)
-    // the upgrade must be PERSISTED at the base version: the one-time
-    // docs-slice backfill lands as v1/attrs so no later read pays it
-    assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$survDir/v1/attrs")),
-      "pre-r16 base was not upgraded with a persisted attrs artifact")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "cluster_id", "quality_score", "lang")
-        .collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getString(3))).toSet
-    val streamed = rows(Streaming.streamedKeepBestDeltaSurvivors(spark, survDir))
-    val batch = rows(graft.ops.Dedup.dedupKeepBest(spark, sf))
-    assert(streamed == batch,
-      s"backfilled-lineage resume diverged from batch x59: " +
-        s"missing=${(batch -- streamed).take(5)} extra=${(streamed -- batch).take(5)}")
   }
 
   test("incremental gram dictionary index: adds + tombstones across " +
@@ -1511,55 +1340,6 @@ class StreamingSpec extends AnyFunSuite {
         s"($smallRows vs $tinySliceRows)")
   }
 
-  test("tiered union-store compaction (r19): a LEGACY empty-marker " +
-      "lineage (pre-tiering full store) keeps reading and upgrades " +
-      "to a manifest at the next trigger") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    val weights = graft.ops.TextAnalysis.classifierWeights(spark, sf)
-    val waves = (0 until 4).map(k => docs.filter($"doc_id" % 4 === k))
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(s"graft_ltl_$p").toString
-    val (dA, oA) = (tmp("dimA"), tmp("outA"))
-    val (dB, oB) = (tmp("dimB"), tmp("outB"))
-    def ledger(d: String, o: String) =
-      Streaming.streamedLedger(spark, d, o)
-        .collect().map(_.toSeq).toSet
-    waves.zipWithIndex.foreach { case (w, k) =>
-      Streaming.ledgerUpdate(dA, oA, weights)(w, k.toLong)
-      Streaming.ledgerMaintain(dB, oB, weights, compactEvery = 2)(
-        w, k.toLong)
-      if (k == 1) {
-        // rewrite the v1 marker to the pre-tiering form: an EMPTY
-        // _CUMULATIVE beside a full store (exactly what a lineage
-        // compacted by the r19 pre-tiering code has on disk)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dB/v1/_CUMULATIVE"),
-          Array.emptyByteArray)
-        ()
-      }
-      assert(ledger(dA, oA) == ledger(dB, oB),
-        s"maintained ledger diverged from plain at wave ${k + 1} " +
-          "(legacy-marker lineage)")
-    }
-    // the w3 trigger read the legacy store through the empty-marker
-    // fallback and committed a manifest on top of it
-    val manifest = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dB/v3/_CUMULATIVE")),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    assert(manifest.nonEmpty,
-      "the post-upgrade trigger did not write a manifest marker")
-    val storeUnion = spark.read.parquet(manifest.linesIterator
-        .map(_.trim).filter(_.nonEmpty)
-        .map(rel => s"$dB/$rel").toSeq: _*)
-      .select("h", "keeper").collect().map(_.toSeq).toSet
-    val slices = spark.read
-      .parquet((0 until 4).map(k => s"$dB/v$k/shas"): _*)
-      .select("h", "keeper").collect().map(_.toSeq).toSet
-    assert(storeUnion == slices,
-      "post-upgrade manifest union is not the exact slice union")
-  }
-
   test("union-store janitor (r19): dead slices and unreferenced tiers " +
       "below the base are deletable; the reader and later waves " +
       "(including the next recompaction) stand on the swept tiers") {
@@ -2180,77 +1960,6 @@ class StreamingSpec extends AnyFunSuite {
       "streamed blocklist diverged from the batch-built sketch")
   }
 
-  test("tiered keep-best (r20, ADVICE): a TRUE r18-form root (no " +
-      "labels_by_doc, no BUCKETS, empty marker) big enough to be kept " +
-      "by the size rule is force-absorbed, so no manifest ever " +
-      "references a root the bucketed probes cannot read") {
-    import spark.implicits._
-    val docs = graft.Tables.documents(spark, sf)
-    // most docs in waves 0/1, tiny tails in 2/3: at the v3 trigger the
-    // v1 root dwarfs 2x the tails, exactly the kept-root shape
-    val early = docs.filter($"doc_id" % 11 =!= 0)
-    val lateDocs = docs.filter($"doc_id" % 11 === 0)
-    val waves = Seq(
-      early.filter($"doc_id" % 3 =!= 0),
-      early.filter($"doc_id" % 3 === 0),
-      lateDocs.filter($"doc_id" % 2 === 0),
-      lateDocs.filter($"doc_id" % 2 === 1))
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(s"graft_kbr18_$p").toString
-    val (dimDir, pairsDir, survDir) = (tmp("dim"), tmp("pairs"), tmp("surv"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "cluster_id", "quality_score", "lang")
-        .collect().map(_.toSeq).toSet
-    waves.zipWithIndex.foreach { case (w, i) =>
-      Streaming.keepBestDeltaMaintain(dimDir, pairsDir, survDir,
-        compactEvery = 2)(w, i.toLong)
-      if (i == 1) {
-        // rewrite v1/compact to the TRUE r18 on-disk form: plain
-        // (unbucketed) attrs/members/labels/survivors only, no
-        // labels_by_doc, no BUCKETS, no drops, empty _CUMULATIVE —
-        // what commit-8dc8db5-era compactions left behind
-        def flatten(part: String, cols: Seq[String]): Unit = {
-          val p = s"$survDir/v1/compact/$part"
-          val df = spark.read.parquet(p)
-            .select(cols.map(org.apache.spark.sql.functions.col): _*)
-          val (local, schema) = (df.collect().toSeq, df.schema)
-          deleteRec(p)
-          spark.createDataFrame(
-            spark.sparkContext.parallelize(local, 1), schema)
-            .write.mode("overwrite").parquet(p)
-        }
-        flatten("attrs", Seq("doc_id", "quality_score", "lang"))
-        flatten("members", Seq("doc_id"))
-        flatten("labels",
-          Seq("doc_id", "cluster_id", "quality_score", "lang"))
-        flatten("survivors",
-          Seq("doc_id", "cluster_id", "quality_score", "lang"))
-        deleteRec(s"$survDir/v1/compact/labels_by_doc")
-        deleteRec(s"$survDir/v1/compact/drops")
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(s"$survDir/v1/compact/BUCKETS"))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$survDir/v1/_CUMULATIVE"),
-          Array.emptyByteArray)
-      }
-    }
-    // the v3 trigger must NOT have kept the r18 root: keeping it would
-    // make the next wave's labels_by_doc probe read a missing path
-    val manifest = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$survDir/v3/_CUMULATIVE")),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    assert(manifest == Seq("v3/compact"),
-      s"expected the r18-form root force-absorbed, got: $manifest")
-    // a wave on top of the upgraded manifest exercises the bucketed
-    // probes (labels_by_doc + members + attrs) on the hot path
-    Streaming.keepBestDeltaMaintain(dimDir, pairsDir, survDir,
-      compactEvery = 2)(lateDocs.filter($"doc_id" % 2 === 0), 4L)
-    assert(rows(Streaming.streamedKeepBestDeltaSurvivors(spark, survDir))
-        == rows(graft.ops.Dedup.dedupKeepBest(spark, sf)),
-      "post-upgrade lineage diverged from batch x59")
-  }
-
   test("tiered keep-best (r20, VERDICT #4): the bucket-dir bound " +
       "forces a major merge — one manifest root — and the reader " +
       "stays == batch x59; a single-root manifest's cumulative drop " +
@@ -2322,15 +2031,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(manifest.contains("v1/compact") && manifest.size > 1,
       s"fixture must keep an old-version tier for the sweep test: $manifest")
     // the footer-count helper the tier metrics stand on must agree
-    // with a real count on a bucketed store
-    assert(Streaming.parquetRowCount(spark, s"$survDir/v3/compact/attrs")
-        == spark.read.parquet(s"$survDir/v3/compact/attrs").count(),
+    // with a real count on a bucketed store — also with a stray part
+    // file under a `_temporary` attempt dir, which Spark's file index
+    // skips
+    val store = s"$survDir/v3/compact/attrs"
+    val stray = java.nio.file.Paths.get(s"$store/_temporary/0")
+    java.nio.file.Files.createDirectories(stray)
+    val part = java.nio.file.Files.walk(java.nio.file.Paths.get(store))
+      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+    java.nio.file.Files.copy(part, stray.resolve(part.getFileName))
+    assert(Streaming.parquetRowCount(spark, store)
+        == spark.read.parquet(store).count(),
       "parquetRowCount diverged from count() on a bucketed store")
+    deleteRec(s"$store/_temporary")
     val deletable = Streaming.janitorDeletablePaths(survDir)
-    // the contract's safety half: nothing protected is offered
-    assert(!deletable.exists(p => manifest.exists(r => p.contains(r)) ||
-        p.endsWith("_CUMULATIVE") || p.endsWith("_SUCCESS")),
-      s"deletable set offers a protected path: $deletable")
+    // the contract's safety half: nothing protected is offered — also
+    // when the lineage dir is spelled with a `.` segment
+    for (offered <- Seq(deletable,
+        Streaming.janitorDeletablePaths(s"$survDir/./")))
+      assert(!offered.exists(p => manifest.exists(r => p.contains(r)) ||
+          p.endsWith("_CUMULATIVE") || p.endsWith("_SUCCESS")),
+        s"deletable set offers a protected path: $offered")
     // its usefulness half: the raw slices below the base ARE offered
     assert(deletable.exists(_.contains("/v0/")),
       s"deletable set misses pre-compaction slices: $deletable")
