@@ -75,6 +75,21 @@ object Caches {
       if (!spark.sparkContext.isStopped) old.unpersist(blocking = false)
     }
 
+  private val MaterializeModes: Set[String] = Set("auto", "local", "reliable", "persist")
+
+  /** The strategy [[pin]] runs for a requested `spark.graft.materialize`
+    * value. `auto` is `local` under a local master, else `reliable` when
+    * a checkpoint dir exists, else `persist`. An unknown value is treated
+    * as `auto`: a typo'd conf must degrade to the safe default, not crash
+    * the query mid-plan (the Bench "slow, never dead" discipline). */
+  def materializeMode(requested: String, isLocal: Boolean,
+      hasCheckpointDir: Boolean): String = requested match {
+    case "auto" =>
+      if (isLocal) "local" else if (hasCheckpointDir) "reliable" else "persist"
+    case m if MaterializeModes(m) => m
+    case _ => materializeMode("auto", isLocal, hasCheckpointDir)
+  }
+
   /** Scale-safe eager materialization of an intermediate frame (r20,
     * VERDICT #2). Every multi-consumer intermediate in the query paths
     * used to call `localCheckpoint()` directly — correct and fastest in
@@ -120,20 +135,11 @@ object Caches {
       spark.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty)
     val requested =
       spark.conf.getOption("spark.graft.materialize").getOrElse("auto")
-    val mode = requested match {
-      case "auto" =>
-        if (sc.isLocal) "local"
-        else if (sc.getCheckpointDir.nonEmpty || confDir.nonEmpty) "reliable"
-        else "persist"
-      case m @ ("local" | "reliable" | "persist") => m
-      case other =>
-        // a typo'd conf must degrade to the safe default, not crash the
-        // query mid-plan (the Bench "slow, never dead" discipline)
-        System.err.println(
-          s"[graft] unknown spark.graft.materialize '$other', using auto")
-        if (sc.isLocal) "local" else "persist"
-    }
-    mode match {
+    if (!MaterializeModes(requested))
+      System.err.println(
+        s"[graft] unknown spark.graft.materialize '$requested', using auto")
+    materializeMode(requested, sc.isLocal,
+      sc.getCheckpointDir.nonEmpty || confDir.nonEmpty) match {
       case "local" => df.localCheckpoint()
       case "reliable" =>
         if (sc.getCheckpointDir.isEmpty) {

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 
 /** S7 — CSV sink with the reference's `utf-8-sig` affordance
@@ -9,20 +7,17 @@ import org.apache.spark.sql.DataFrame
   * when the file starts with the EF BB BF byte-order mark, which Spark's
   * CSV writer never emits.
   *
-  * Scale design: the CSV write itself is the normal distributed writer;
-  * the BOM pass then rewrites each part file ON EXECUTORS (one task per
-  * part, streaming copy — constant memory per task, no driver data
-  * movement). Each part file carries its own BOM, which is what a
-  * per-file Excel consumer needs.
-  *
-  * Boundary: the BOM pass lists and renames part files through
-  * java.nio.file, so the sink requires the output path to be a POSIX
-  * filesystem visible to driver AND executors (local disk here, NFS/
-  * FUSE-mounted storage on a cluster). An object-store deployment would
-  * re-express the same pass over the Hadoop FileSystem API. Concurrent
-  * attempts of one task (speculation, a retry racing a zombie) are safe:
-  * each attempt copies to an attempt-unique temp name and installs it
-  * with an atomic rename, and the BOM check makes the rewrite idempotent.
+  * The BOM rides in the header: the first column is renamed to
+  * U+FEFF + its name, whose UTF-8 encoding is EF BB BF, and the frame is
+  * written once by the normal distributed writer. Every part file opens
+  * with its header, so each carries its own BOM, which is what a
+  * per-file Excel consumer needs, and the bytes equal BOM + the plain
+  * write. Spark's CSV reader strips the BOM, so the column reads back
+  * under its own name. Two header forms differ from BOM + the plain
+  * write: a first name opening with `#` (the writer's comment char) is
+  * quoted by the plain write and left bare behind the BOM, as pandas'
+  * `utf-8-sig` writer leaves it; a first name holding a delimiter, quote
+  * or line break would put the BOM inside its quotes.
   */
 object CsvSink {
 
@@ -31,37 +26,12 @@ object CsvSink {
   /** Write `df` as headered CSV; with `bom=true` every part file is
     * prefixed with the UTF-8 BOM (byte-exact `utf-8-sig`). */
   def write(df: DataFrame, path: String, bom: Boolean = true): Unit = {
-    df.write.mode("overwrite")
+    val named = df.columns.headOption match {
+      case Some(c) if bom => df.withColumnRenamed(c, "\uFEFF" + c)
+      case _ => df
+    }
+    named.write.mode("overwrite")
       .option("header", "true").option("encoding", "UTF-8")
       .csv(path)
-    if (!bom) return
-    val parts = Option(new File(path).listFiles()).getOrElse(Array.empty[File])
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      .map(_.getAbsolutePath).toSeq
-    df.sparkSession.sparkContext
-      .parallelize(parts, math.max(1, parts.size))
-      .foreach { p =>
-        val src = Paths.get(p)
-        // idempotent: a retried/speculative task must not double-BOM a
-        // part file the first attempt already rewrote
-        val head = {
-          val in = Files.newInputStream(src)
-          try in.readNBytes(3) finally in.close()
-        }
-        if (!java.util.Arrays.equals(head, Bom)) {
-          // attempt-unique temp + atomic rename: two racing attempts can
-          // never read each other's half-written copy, and the loser's
-          // rename just reinstalls an identical BOM'd file
-          val tmp = Paths.get(p + ".bom." + java.util.UUID.randomUUID())
-          val out = Files.newOutputStream(tmp)
-          try { out.write(Bom); Files.copy(src, out) } finally out.close()
-          Files.move(tmp, src,
-            StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-          // drop Hadoop's local-FS checksum sidecar — it hashed the
-          // pre-BOM bytes and would fail any Hadoop-API re-read
-          Files.deleteIfExists(
-            src.resolveSibling("." + src.getFileName.toString + ".crc"))
-        }
-      }
   }
 }

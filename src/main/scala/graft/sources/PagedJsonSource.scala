@@ -2,11 +2,13 @@ package graft.sources
 
 import java.util
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,10 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
 /** S1/S2 — the reference's paginated REST extraction (Main.py:330-357,
   * 489-511) re-expressed as a DataSource V2 batch source: a landing
   * directory of page files (`page_*.json`, each a JSON array of raw trip
-  * records with nested `entry`/`station` objects) becomes a table with
-  * ONE InputPartition PER PAGE, so Spark schedules page reads in parallel
-  * exactly where the reference used a ThreadPoolExecutor. Per-page reads
-  * are wrapped in the Retry util (S4/S5 analog).
+  * records with nested `entry`/`station` objects) becomes a table whose
+  * InputPartitions are runs of consecutive pages packed to a byte size
+  * ([[PagedJsonTable.groupPages]]), so Spark reads pages in parallel
+  * where the reference used a ThreadPoolExecutor without paying one task
+  * per small page. Per-page reads are wrapped in the Retry util (S4/S5
+  * analog).
   *
   * Usage: spark.read.format("graft.sources.PagedJsonSource").load(dir)
   */
@@ -159,26 +163,42 @@ class PagedJsonTable(path: String, config: PagedProtocol.Config)
 }
 
 object PagedJsonTable {
-  /** Cap on planned partitions: pages are tiny, and one-task-per-page
-    * recreates the small-files problem — group consecutive pages into at
-    * most this many splits (parallel enough for any executor count here;
-    * a cluster deployment would size this from the scan stats). */
-  val MaxPartitions = 128
-
   def listPages(path: String): Array[java.io.File] =
     Option(new java.io.File(path).listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("page_") && f.getName.endsWith(".json"))
       .sortBy(_.getName)
 
+  /** Pack consecutive pages into byte-sized splits by the rule Spark's
+    * file source applies to small files (`FilePartition.maxSplitBytes`
+    * and `getFilePartitions`), read from the active session:
+    * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
+    * `minPartitionNum` (default parallelism when unset). Each page is
+    * charged its length plus the open cost, and a split closes when the
+    * next page would overflow it. Unlike the file source, pages are not
+    * sorted by size: page order holds inside and across splits.
+    * `lastFile`, the one page the `limit` invariant lets be short, goes
+    * to every split. */
   def groupPages(pages: Array[java.io.File], limit: Option[Int] = None,
       lastFile: Option[String] = None): Array[InputPartition] = {
-    if (pages.isEmpty) return Array.empty
-    val chunk = math.max(1, math.ceil(pages.length.toDouble / MaxPartitions).toInt)
-    pages.grouped(chunk)
-      .map(g => PagePartition(g.map(_.getAbsolutePath).toSeq, limit, lastFile)
-        : InputPartition)
-      .toArray
+    val spark = SparkSession.active
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val lens = pages.map(_.length())
+    val maxSplit = FilePartition.maxSplitBytes(spark, lens.iterator.map(_ + openCost).sum)
+    val splits = Array.newBuilder[InputPartition]
+    var split = Vector.empty[String]
+    var size = 0L
+    def close(): Unit = if (split.nonEmpty) {
+      splits += PagePartition(split, limit, lastFile)
+      split = Vector.empty; size = 0L
+    }
+    pages.indices.foreach { i =>
+      if (size + lens(i) > maxSplit) close()
+      size += lens(i) + openCost
+      split :+= pages(i).getAbsolutePath
+    }
+    close()
+    splits.result()
   }
 }
 
@@ -244,21 +264,14 @@ class PagedMicroBatchStream(path: String,
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset =
     latestOffset()
   override def deserializeOffset(json: String): Offset = {
-    val t = json.trim
-    if (!t.startsWith("{"))
-      // pre-fingerprint checkpoint (bare page count): accept — there is
-      // nothing to validate against
-      PageOffset(t.toInt)
-    else {
-      val node = new ObjectMapper().readTree(t)
-      val fp = Option(node.get("fp")).map(_.asText()).getOrElse("")
-      if (fp != fingerprint)
-        throw new IllegalStateException(
-          "paged source: checkpointed offset was recorded under a different " +
-            s"source config/page directory.\n  checkpoint: $fp\n  current:    $fingerprint\n" +
-            "Restart with the original options or a fresh checkpoint location.")
-      PageOffset(node.get("page").asInt())
-    }
+    val node = new ObjectMapper().readTree(json)
+    val fp = Option(node.get("fp")).map(_.asText()).getOrElse("")
+    if (fp != fingerprint)
+      throw new IllegalStateException(
+        "paged source: checkpointed offset was recorded under a different " +
+          s"source config/page directory.\n  checkpoint: $fp\n  current:    $fingerprint\n" +
+          "Restart with the original options or a fresh checkpoint location.")
+    PageOffset(node.get("page").asInt())
   }
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -49,6 +49,18 @@ class CsvSinkSpec extends AnyFunSuite {
           f.getName)
         finally head.close()
       }
+      // the sink writes one part file per packed split of the source, not
+      // one per page: no batch holds more part files than the planner's
+      // splits for the landed pages, and every batch holds fewer than pages
+      val pages = graft.sources.PagedProtocol.effectivePages(
+        pagesDir, graft.sources.PagedProtocol.Default)
+      val splits = graft.sources.PagedJsonTable.groupPages(pages).length
+      for (d <- batchDirs) {
+        val parts = d.listFiles().count(f =>
+          f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+        assert(parts <= splits, d.getName)
+        assert(parts < pages.length, d.getName)
+      }
       // the landed rows together equal the batch q5 output row count
       val total = batchDirs.map { d =>
         spark.read.option("header", "true").csv(d.getAbsolutePath).count()
@@ -74,5 +86,39 @@ class CsvSinkSpec extends AnyFunSuite {
     assert(back.count() == master.count())
     assert(back.columns.toSeq == master.columns.toSeq)
     assert(back.filter(col("end_location_original").contains("مطار")).count() > 0)
+  }
+
+  test("utf-8-sig sink: bytes are the BOM followed by the plain csv write") {
+    val work = java.nio.file.Files.createTempDirectory("graft_csv_bytes")
+    def onlyPart(dir: String): Array[Byte] = {
+      val parts = new java.io.File(dir).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+      assert(parts.length == 1, dir)
+      java.nio.file.Files.readAllBytes(parts.head.toPath)
+    }
+    // the writer quotes a header cell that opens the line with its
+    // comment char '#'; behind the BOM the line no longer opens with it,
+    // so the sink's header starts `#,` where the plain write's starts
+    // `"#",` (pandas' utf-8-sig writer also leaves it bare)
+    val quotedHash = "\"#\",".getBytes("UTF-8")
+    def unquoteHash(b: Array[Byte]): Array[Byte] =
+      if (b.startsWith(quotedHash)) "#,".getBytes("UTF-8") ++ b.drop(quotedHash.length)
+      else b
+    try {
+      // pinned, so both writes see one row order
+      val master = graft.ops.Transform.q4Master(spark, sf).coalesce(1)
+        .localCheckpoint()
+      assert(master.columns.head == "#")
+      Seq("rows" -> master, "empty" -> master.limit(0).coalesce(1),
+          "plain_header" -> master.drop("#")).foreach { case (name, df) =>
+        val plain = s"$work/${name}_plain"
+        df.write.option("header", "true").option("encoding", "UTF-8").csv(plain)
+        graft.sources.CsvSink.write(df, s"$work/${name}_bom")
+        val got = onlyPart(s"$work/${name}_bom")
+        val want = graft.sources.CsvSink.Bom ++ unquoteHash(onlyPart(plain))
+        assert(got.length == want.length && got.sameElements(want),
+          s"$name: first difference at byte ${got.zip(want).indexWhere(p => p._1 != p._2)}")
+      }
+    } finally graft.Fs.deleteRecursively(work)
   }
 }

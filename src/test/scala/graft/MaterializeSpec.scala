@@ -73,4 +73,22 @@ class MaterializeSpec extends AnyFunSuite {
     }
     assert(got == expectedGram)
   }
+
+  test("mode choice: an unknown mode takes the auto branch") {
+    // (requested, local master, checkpoint dir) -> strategy
+    val table = Seq(
+      ("auto", true, true) -> "local",
+      ("auto", false, true) -> "reliable",
+      ("auto", false, false) -> "persist",
+      ("local", false, false) -> "local",
+      ("reliable", true, false) -> "reliable",
+      ("persist", true, true) -> "persist",
+      ("definitely-not-a-mode", true, true) -> "local",
+      ("definitely-not-a-mode", false, true) -> "reliable",
+      ("definitely-not-a-mode", false, false) -> "persist")
+    table.foreach { case ((requested, local, dir), want) =>
+      assert(Caches.materializeMode(requested, local, dir) == want,
+        s"($requested, local=$local, dir=$dir)")
+    }
+  }
 }

@@ -4,7 +4,8 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.sources.{PagedLanding, PagedJsonSource}
+import graft.sources.{PagedJsonSource, PagedJsonTable, PagedLanding, PagePartition,
+  PagedMicroBatchStream, PagedProtocol}
 
 class PagedSourceSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
@@ -34,11 +35,52 @@ class PagedSourceSpec extends AnyFunSuite {
   private def pageIds(i: Int, n: Int): Seq[Long] =
     (0 until n).map(j => i * 100L + j)
 
-  test("batch read: one partition per page, records round-trip") {
+  /** Spark's file-source split rule written out from the session's
+    * confs (`FilePartition.maxSplitBytes`, then `getFilePartitions`'
+    * packing without its size sort): the page-name runs a plan over
+    * `pages` should hold. */
+  private def ruleSplits(pages: Seq[File]): Seq[Seq[String]] = {
+    val c = spark.sessionState.conf
+    val open = c.filesOpenCostInBytes
+    val minParts = c.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism)
+    val maxSplit = math.min(c.filesMaxPartitionBytes,
+      math.max(open, pages.map(_.length + open).sum / minParts))
+    pages.foldLeft(Vector.empty[(Long, Vector[String])]) { (acc, p) =>
+      acc.lastOption match {
+        case Some((size, names)) if size + p.length <= maxSplit =>
+          acc.init :+ ((size + p.length + open, names :+ p.getName))
+        case _ => acc :+ ((p.length + open, Vector(p.getName)))
+      }
+    }.map(_._2)
+  }
+
+  private def plannedSplits(pages: Array[File]): Seq[Seq[String]] =
+    PagedJsonTable.groupPages(pages).toSeq.map(
+      _.asInstanceOf[PagePartition].files.map(new File(_).getName))
+
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally kv.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("batch read: pages packed into byte-sized splits, round-trip") {
     val dir = PagedLanding.ensureLanded(spark, sf)
     val df = spark.read.format("graft.sources.PagedJsonSource").load(dir)
-    val nPages = new File(dir).listFiles().count(_.getName.startsWith("page_"))
-    assert(df.rdd.getNumPartitions == nPages)
+    val pages = PagedJsonTable.listPages(dir)
+    val expected = ruleSplits(pages.toSeq)
+    assert(df.rdd.getNumPartitions == expected.size)
+    assert(expected.size < pages.length, "small pages must share splits")
+    // every page in exactly one split, in page order
+    val planned = plannedSplits(pages)
+    assert(planned == expected)
+    assert(planned.flatten == pages.map(_.getName).toSeq)
+    // a 1-byte split budget and open cost degenerate to one page a split
+    withConfs("spark.sql.files.maxPartitionBytes" -> "1",
+        "spark.sql.files.openCostInBytes" -> "1") {
+      val one = spark.read.format("graft.sources.PagedJsonSource").load(dir)
+      assert(one.rdd.getNumPartitions == pages.length)
+      assert(plannedSplits(pages) == pages.map(p => Seq(p.getName)).toSeq)
+    }
     assert(df.count() == Tables.orders(spark, sf).count())
     // nested struct fields arrive intact
     val flat = df.select(col("serialId"), col("entry.number"), col("station.name"))
@@ -94,8 +136,9 @@ class PagedSourceSpec extends AnyFunSuite {
     val b = stream("date")
     val e = intercept[IllegalStateException](b.deserializeOffset(json))
     assert(e.getMessage.contains("different"))
-    // pre-fingerprint checkpoints (bare page count) are still accepted
-    assert(b.deserializeOffset("7").json().contains("\"page\":7"))
+    // a bare page count carries no fingerprint and fails the same way
+    val bare = intercept[IllegalStateException](a.deserializeOffset("7"))
+    assert(bare.getMessage.contains("different"))
   }
 
   test("replayed batch keeps its own short frontier page exempt from the limit invariant") {
@@ -103,13 +146,16 @@ class PagedSourceSpec extends AnyFunSuite {
     try {
       // batch (0,2) was recorded when page_1 (short) was the frontier;
       // page_2 landed after the crash, before the replay
+      val config = PagedProtocol.Default.copy(limit = Some(3))
       writePage(work.toFile, 0, pageIds(0, 3))
       writePage(work.toFile, 1, pageIds(1, 2))
+      val recorded = new PagedMicroBatchStream(work.toString, config)
+      val (start, end) =
+        (recorded.initialOffset().json(), recorded.latestOffset().json())
       writePage(work.toFile, 2, pageIds(2, 3))
-      val stream = new graft.sources.PagedMicroBatchStream(work.toString,
-        graft.sources.PagedProtocol.Default.copy(limit = Some(3)))
+      val stream = new PagedMicroBatchStream(work.toString, config)
       val parts = stream.planInputPartitions(
-        stream.deserializeOffset("0"), stream.deserializeOffset("2"))
+        stream.deserializeOffset(start), stream.deserializeOffset(end))
       val factory = stream.createReaderFactory()
       val n = parts.map { p =>
         val r = factory.createReader(p)
@@ -118,6 +164,21 @@ class PagedSourceSpec extends AnyFunSuite {
         c
       }.sum
       assert(n == 5)
+    } finally graft.Fs.deleteRecursively(work)
+  }
+
+  test("a packed split holding the short final page reads under the limit invariant") {
+    val work = java.nio.file.Files.createTempDirectory("graft_packed_limit")
+    try {
+      (0 until 4).foreach(i => writePage(work.toFile, i, pageIds(i, 3)))
+      writePage(work.toFile, 4, pageIds(4, 1))
+      // one split for the whole read: the short page shares it
+      withConfs("spark.sql.files.minPartitionNum" -> "1") {
+        val df = spark.read.format("graft.sources.PagedJsonSource")
+          .option("limit", "3").load(work.toString)
+        assert(df.rdd.getNumPartitions == 1)
+        assert(df.count() == 13) // no FetchAbort on the short final page
+      }
     } finally graft.Fs.deleteRecursively(work)
   }
 
