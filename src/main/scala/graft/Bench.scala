@@ -198,8 +198,8 @@ object Bench {
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "600s")
       // every entry point pins UTC: Tables.events casts TimestampNTZ →
-      // TimestampType, which reads session-local instants — an unpinned
-      // bench session on a non-UTC host would time (and could even
+      // TimestampType, which reads session-local instants — a bench
+      // session left on a non-UTC host zone would time (and could even
       // row-count-shift) the e-query windows differently than Verify
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()

@@ -75,120 +75,53 @@ object Caches {
       if (!spark.sparkContext.isStopped) old.unpersist(blocking = false)
     }
 
-  private val MaterializeModes: Set[String] = Set("auto", "local", "reliable", "persist")
+  private[graft] val CleanCheckpoints =
+    "spark.cleaner.referenceTracking.cleanCheckpoints"
 
-  /** The strategy [[pin]] runs for a requested `spark.graft.materialize`
-    * value. `auto` is `local` under a local master, else `reliable` when
-    * a checkpoint dir exists, else `persist`. An unknown value is treated
-    * as `auto`: a typo'd conf must degrade to the safe default, not crash
-    * the query mid-plan (the Bench "slow, never dead" discipline). */
-  def materializeMode(requested: String, isLocal: Boolean,
-      hasCheckpointDir: Boolean): String = requested match {
-    case "auto" =>
-      if (isLocal) "local" else if (hasCheckpointDir) "reliable" else "persist"
-    case m if MaterializeModes(m) => m
-    case _ => materializeMode("auto", isLocal, hasCheckpointDir)
-  }
+  /** [[pin]]'s strategy: `local` under a local master, else `reliable`
+    * if a checkpoint dir exists and its files are cleaned, else `error`. */
+  private[graft] def pinStrategy(isLocal: Boolean, hasDir: Boolean,
+      cleansCheckpoints: Boolean): String =
+    if (isLocal) "local" else if (hasDir && cleansCheckpoints) "reliable" else "error"
 
-  /** Scale-safe eager materialization of an intermediate frame (r20,
-    * VERDICT #2). Every multi-consumer intermediate in the query paths
-    * used to call `localCheckpoint()` directly — correct and fastest in
-    * local mode, but a local-mode ASSUMPTION on a cluster:
-    * `localCheckpoint` truncates lineage and stores the partitions on
-    * the computing executors with no recompute fallback, so one
-    * executor loss makes the whole job unrecoverable (guide §5), and
-    * the pinned blocks tie the frame's lifetime to those executors.
-    * `pin` picks the materialization by `spark.graft.materialize`:
+  // test seam: pins in `body` take the cluster branch under a local master
+  private val clusterPins = new scala.util.DynamicVariable(false)
+  private[graft] def reliablePins[T](body: => T): T = clusterPins.withValue(true)(body)
+
+  /** Eager, lineage-truncating materialization of a multi-consumer
+    * intermediate frame, by the master:
     *
-    *  - `local` — `localCheckpoint()`: the pre-r20 behaviour. In
-    *    local[*] masters the blocks live in the ONE driver process,
-    *    whose loss is app loss regardless of strategy, so lineage
-    *    truncation costs nothing in fault tolerance there — and it
-    *    keeps the CacheManager empty (the x14/x29 "no plan-cache
-    *    substitution" honesty convention for the bench).
-    *  - `reliable` — `checkpoint()` to the configured checkpoint dir
-    *    (`spark.graft.checkpointDir` is applied to the context if no
-    *    dir is set yet; in local mode a temp dir is minted). Survives
-    *    executor loss: the data lives on the shared checkpoint store.
-    *    Costs one extra computation of the frame (Spark writes
-    *    reliable checkpoints in a second job) — measured r20 on the
-    *    gram family, see OPTIMIZATION_r20.md.
-    *  - `persist` — `persist(MEMORY_AND_DISK)` + eager count, returned
-    *    behind a `createDataFrame(rdd, schema)` plan cut. Keeps RDD
-    *    lineage, so executor loss RECOMPUTES instead of failing; no
-    *    shared storage needed; the plan cut keeps iterative callers'
-    *    logical plans bounded (ccStars' plan would otherwise grow 4^r
-    *    — the round-level OOM localCheckpoint was added for). Costs an
-    *    InternalRow↔Row conversion per read of the pinned frame and a
-    *    CacheManager entry until [[unpin]]/[[clear]] — prefer
-    *    `reliable` on clusters when a checkpoint dir exists.
-    *  - `auto` (default) — `local` under a local master; otherwise
-    *    `reliable` when a checkpoint dir is available, else `persist`
-    *    (degrade to slower-but-safe, never to config-error).
-    *
-    * The bench/driver contract is untouched: under local[$CPUS] the
-    * auto mode IS the pre-r20 plan, byte for byte. */
+    *  - local — `localCheckpoint()`. Its blocks live in the one driver
+    *    process, whose loss is app loss anyway, so having no recompute
+    *    fallback costs nothing; fastest, and keeps the CacheManager
+    *    empty (the bench's x14/x29 no-plan-substitution convention).
+    *  - cluster — `checkpoint()` to the shared dir
+    *    (`spark.graft.checkpointDir` applies if the context has none).
+    *    localCheckpoint blocks die with their executor; reliable files
+    *    survive it and lineage ends at them, so a recompute re-reads the
+    *    pinned rows (ids minted before the pin stay stable). Costs a
+    *    second job per pin (OPTIMIZATION_r20.md). Spark deletes the files
+    *    only under `cleanCheckpoints=true`, else a stream's per-wave pins
+    *    fill the dir: a missing dir or cleaner conf fails the first pin,
+    *    before any job runs. */
   def pin(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    def confDir: Option[String] =
+    val confDir =
       spark.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty)
-    val requested =
-      spark.conf.getOption("spark.graft.materialize").getOrElse("auto")
-    if (!MaterializeModes(requested))
-      System.err.println(
-        s"[graft] unknown spark.graft.materialize '$requested', using auto")
-    materializeMode(requested, sc.isLocal,
-      sc.getCheckpointDir.nonEmpty || confDir.nonEmpty) match {
+    pinStrategy(sc.isLocal && !clusterPins.value,
+      sc.getCheckpointDir.nonEmpty || confDir.nonEmpty,
+      sc.getConf.getBoolean(CleanCheckpoints, false)) match {
       case "local" => df.localCheckpoint()
       case "reliable" =>
-        if (sc.getCheckpointDir.isEmpty) {
-          confDir match {
-            case Some(d) => sc.setCheckpointDir(d)
-            case None if sc.isLocal =>
-              sc.setCheckpointDir(java.nio.file.Files
-                .createTempDirectory("graft-ckpt").toString)
-            case None =>
-              // reliable was requested but no shared dir exists —
-              // persist is the only safe materialization left
-              System.err.println("[graft] materialize=reliable with no " +
-                "checkpoint dir (set spark.graft.checkpointDir); " +
-                "falling back to persist")
-              return pinPersist(df)
-          }
-        }
+        if (sc.getCheckpointDir.isEmpty) confDir.foreach(sc.setCheckpointDir)
         df.checkpoint()
-      case _ => pinPersist(df)
+      case _ =>
+        throw new IllegalStateException("Caches.pin on a cluster needs a " +
+          "shared checkpoint dir (set spark.graft.checkpointDir) and " +
+          s"$CleanCheckpoints=true so the ContextCleaner deletes its files")
     }
   }
-
-  // live persist-mode pins: seq -> (returned wrapper, persisted frame).
-  // unpin accepts the wrapper (what callers hold); clear sweeps the rest.
-  private val pinSeq = new java.util.concurrent.atomic.AtomicLong()
-  private val pins =
-    TrieMap.empty[(SparkSession, Long), (DataFrame, DataFrame)]
-  private def pinPersist(df: DataFrame): DataFrame = {
-    pins.keys.filter(_._1.sparkContext.isStopped).foreach(pins.remove)
-    val spark = df.sparkSession
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    p.count() // eager, like localCheckpoint: consumers must never race
-    // plan cut: downstream plans see a leaf scan, not df's whole tree
-    val cut = spark.createDataFrame(p.rdd, p.schema)
-    pins.put((spark, pinSeq.incrementAndGet()), (cut, p))
-    cut
-  }
-
-  /** Release a [[pin]]'d frame that no longer has consumers (iterative
-    * algorithms pin per round; the previous round's frame is garbage
-    * once the next is materialized). No-op for local/reliable pins —
-    * those blocks are owned by the BlockManager/checkpoint store and
-    * reclaimed by GC / clear. */
-  def unpin(df: DataFrame): Unit =
-    pins.find { case (_, (cut, p)) => (cut eq df) || (p eq df) }
-      .foreach { case (k, (_, p)) =>
-        pins.remove(k)
-        if (!k._1.sparkContext.isStopped) p.unpersist(blocking = false)
-      }
 
   /** Unpersist and forget every frame (and plain value) memoized under
     * this session. */
@@ -199,11 +132,6 @@ object Caches {
       }
     }
     values.keys.filter(_._1 eq spark).foreach(values.remove)
-    pins.keys.filter(_._1 eq spark).foreach { k =>
-      pins.remove(k).foreach { case (_, p) =>
-        if (!spark.sparkContext.isStopped) p.unpersist(blocking = false)
-      }
-    }
     // Live-session locks stay: another thread may hold one mid-build,
     // and removing it would mint a fresh lock for the next memo call —
     // re-enabling the duplicate concurrent build the locks exist to

@@ -107,7 +107,10 @@ object StreamProbe {
     // bytes READ per wave (r18, the wave_bytes sibling): task input
     // metrics summed by a listener — a maintainer that re-scans an
     // accumulated dim per wave shows wave_read_bytes growing ∝
-    // history, contention-independently. Listener events post async,
+    // history, contention-independently. `inputMetrics.bytesRead` also
+    // counts cached-block reads (r19: a persisted docs frame's memSize
+    // equalled a wave's "extra" reads), so per-wave read levels are not
+    // disk bytes; growth slopes still are. Listener events post async,
     // so each wave's reading waits for the counter to go quiet.
     val readBytes = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(

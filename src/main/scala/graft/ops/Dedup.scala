@@ -475,13 +475,12 @@ object Dedup {
       maxRounds: Int = 50): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // pin (eager, lineage-truncating in local/reliable modes): each
-    // round's frame references the previous one several times, so
-    // without TRUNCATION the logical plan grows exponentially with
-    // rounds and the per-execution plan-description event OOMs the
-    // driver around round ~10. The pinned RDDs are small (the pair
-    // graph) and are freed by the ContextCleaner / unpin as rounds
-    // drop their references.
+    // pin (eager and lineage-truncating on every master): each round's
+    // frame references the previous one several times, so without
+    // truncation the logical plan grows exponentially with rounds and
+    // the per-execution plan-description event OOMs the driver around
+    // round ~10. The pinned RDDs are small (the pair graph) and the
+    // ContextCleaner frees them as rounds drop their references.
     var edges = graft.Caches.pin(pairs
       .select(greatest($"id_a", $"id_b").as("c"), least($"id_a", $"id_b").as("p"))
       .filter($"c" =!= $"p").distinct())
@@ -513,11 +512,6 @@ object Dedup {
         .select($"p".as("c"), $"m".as("p"))
         .union(minsPerChild.select($"c", $"m".as("p")))
         .distinct())
-      // the round's intermediates are dead once `next` is materialized
-      // (pin is eager) — release them in persist mode so long CC runs
-      // stay bounded; no-op under local/reliable pins
-      graft.Caches.unpin(afterLarge)
-      graft.Caches.unpin(edges)
       edges = next
       rounds += 1
       converged = isStarForest(edges)

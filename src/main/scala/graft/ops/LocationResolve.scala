@@ -884,7 +884,8 @@ object LocationResolve {
         // dict-id + probe-string blocking join + shared-key threshold,
         // dictionary strings joined back onto the surviving
         // near-match-sized candidate set (see fuzzyDictScale); dict
-        // ids are stable because dimC is pin-materialized (eager).
+        // ids are stable because dimC is pinned: lineage ends at the
+        // pin on every master, so no recompute re-mints `_vid`.
         // The id'd dim, gram order and keyed index are PER-DICTIONARY
         // artifacts — a registered query over a fixed dictionary
         // memoizes them (indexMemoKey; Bench prewarms via the query,

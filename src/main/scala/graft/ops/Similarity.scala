@@ -617,9 +617,9 @@ object Similarity {
     * input several times before its first checkpoint (pre-loop star
     * check + round 1), and without this each scan re-executes the full
     * kNN pipeline upstream (measured 6.8 s → ~2 s at sf0.1).
-    * pin (localCheckpoint under the bench's local master — keeps the
-    * CacheManager empty, the x14/x29 honesty convention; scale-safe
-    * forms on a cluster, see Caches.pin). Ids-only, ≤ k·n/2 rows. */
+    * pin (localCheckpoint under the bench's local master, keeping the
+    * CacheManager empty; a reliable checkpoint on a cluster, see
+    * Caches.pin). Ids-only, ≤ k·n/2 rows. */
   private def mutualEdgesOf(g: DataFrame): DataFrame = {
     val spark = g.sparkSession
     import spark.implicits._
@@ -755,14 +755,12 @@ object Similarity {
       val best = votes.withColumn("rk", row_number().over(w))
         .filter($"rk" === 1)
         .select($"src".as("vec_id"), $"nl".as("new_lbl"))
-      val prev = labels
       labels = graft.Caches.pin(labels.join(best, Seq("vec_id"), "left")
         .select($"vec_id",
           coalesce($"lbl", $"new_lbl").as("lbl"),
           when($"lbl".isNotNull, $"origin")
             .when($"new_lbl".isNotNull, lit(s"round$r"))
             .otherwise($"origin").as("origin")))
-      graft.Caches.unpin(prev) // dead once the new round is pinned
     }
     labels
   }
@@ -1722,8 +1720,8 @@ object Similarity {
       // three times (edges checkpoint + both sides of the nodes
       // union), and the O(n²) tiled cosine join is the suite's most
       // expensive — without this it would execute 3× per cold session.
-      // Under the local master pin = localCheckpoint (not persist),
-      // keeping the CacheManager empty, so x14's
+      // Under the local master pin = localCheckpoint, keeping the
+      // CacheManager empty, so x14's
       // no-plan-cache-substitution honesty note still holds.
       val pairs = graft.Caches.pin(cosineNearDupPairs(spark, sfDir)
         .select($"id_a", $"id_b"))

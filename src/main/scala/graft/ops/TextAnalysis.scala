@@ -1505,10 +1505,8 @@ object TextAnalysis {
       else {
         val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((rank, l, r, cnt))
-        val prev = vocab
         vocab = graft.Caches.pin(vocab
           .select(mergeUdf($"syms", lit(l), lit(r)).as("syms"), $"freq"))
-        graft.Caches.unpin(prev)
       }
     }
     merges.toSeq
@@ -1690,13 +1688,11 @@ object TextAnalysis {
         kept.foreach { case (l, r, cnt) =>
           merges += ((merges.length + 1, l, r, cnt))
         }
-        val prev = vocab
         vocab = graft.Caches.pin(vocab
           .select(multiMergeUdf($"syms",
             typedLit(kept.map(_._1).toSeq),
             typedLit(kept.map(_._2).toSeq)).as("syms"),
             $"freq"))
-        graft.Caches.unpin(prev)
       }
     }
     (merges.toSeq, roundTrips)

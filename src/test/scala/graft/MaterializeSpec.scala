@@ -3,16 +3,15 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** r20 (VERDICT #2): the query paths' eager materialization moved from
-  * raw `localCheckpoint()` to [[Caches.pin]], whose strategy is
-  * selected by `spark.graft.materialize` (local | reliable | persist |
-  * auto). These gates pin that EVERY strategy computes byte-identical
-  * results on the operators whose internals route through pin — the
-  * gram/fuzzy family (t12 + fuzzy + ranked + dim/gorder pins) and the
-  * ccStars loop (per-round pins + unpin of dead rounds) — and that the
-  * persist strategy leaves no CacheManager residue after Caches.clear
-  * (the bench-honesty requirement: pinned frames must not outlive a
-  * run and shadow later plans). */
+/** [[Caches.pin]] has two rules, chosen by the master: `localCheckpoint`
+  * under a local master and a reliable `checkpoint()` on a cluster. The
+  * suite reaches the cluster branch through the `Caches.reliablePins`
+  * seam and gates that both rules compute identical results on the
+  * operators whose internals route through pin — the gram/fuzzy family
+  * (t12 + fuzzy + ranked + dim/gorder pins) and the ccStars loop (one
+  * pin per round) — that the choice itself is the master-first table,
+  * and that under reliable pins a recompute ends at the checkpoint
+  * files: dropping every cached block leaves the n13 rows unchanged. */
 class MaterializeSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   private val sf = SparkSuite.sf
@@ -20,75 +19,99 @@ class MaterializeSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  /** Run `body` under a materialize mode with cold memos, restoring the
-    * default (and cold memos) afterwards so suite order can't leak a
-    * mode's pinned frames into another suite's timing or plans. */
-  private def withMode[T](mode: String)(body: => T): T = {
+  /** Run `body` with cold memos, restoring cold memos afterwards so suite
+    * order can't leak pinned frames into another suite's timing or plans. */
+  private def cold[T](body: => T): T = {
     Caches.clear(spark)
     spark.sharedState.cacheManager.clearCache()
-    spark.conf.set("spark.graft.materialize", mode)
     try body
     finally {
-      spark.conf.unset("spark.graft.materialize")
       Caches.clear(spark)
       spark.sharedState.cacheManager.clearCache()
     }
   }
 
-  private lazy val expectedGram =
-    withMode("local")(rows(ops.LocationResolve.gramDictScale(spark, sf)))
+  /** Run `body` with pins on the cluster branch, writing to a fresh
+    * checkpoint dir; the shared context is left without one afterwards
+    * (`setCheckpointDir(null)` clears it). */
+  private def reliable[T](body: => T): T = cold {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    spark.conf.set("spark.graft.checkpointDir", dir.toString)
+    try Caches.reliablePins(body)
+    finally {
+      spark.conf.unset("spark.graft.checkpointDir")
+      spark.sparkContext.setCheckpointDir(null)
+    }
+  }
 
-  test("gram family (n13 path) is mode-invariant: persist ≡ local") {
-    val got = withMode("persist")(rows(ops.LocationResolve.gramDictScale(spark, sf)))
-    assert(got == expectedGram)
+  private lazy val expectedGram =
+    cold(rows(ops.LocationResolve.gramDictScale(spark, sf)))
+
+  test("cluster pin without a checkpoint dir fails before any job runs") {
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty)
+    val group = "materialize-spec-no-dir"
+    sc.setJobGroup(group, "pin without a checkpoint dir")
+    val e =
+      try intercept[IllegalStateException] {
+        Caches.reliablePins(Caches.pin(spark.range(10).toDF("id")))
+      } finally sc.clearJobGroup()
+    assert(e.getMessage.contains("spark.graft.checkpointDir"))
+    assert(e.getMessage.contains(Caches.CleanCheckpoints))
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
   }
 
   test("gram family (n13 path) is mode-invariant: reliable ≡ local") {
-    val got = withMode("reliable")(rows(ops.LocationResolve.gramDictScale(spark, sf)))
+    val got = reliable(rows(ops.LocationResolve.gramDictScale(spark, sf)))
     assert(got == expectedGram)
   }
 
-  test("ccStars under persist mode: identical labels, rounds pinned and released") {
+  test("ccStars: reliable ≡ local") {
     import spark.implicits._
     // two chains and a triangle — enough structure for >1 CC round
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("id_a", "id_b")
-    val base = withMode("local") { val (l, _) = ops.Dedup.ccStars(pairs); rows(l) }
-    val got = withMode("persist") { val (l, _) = ops.Dedup.ccStars(pairs); rows(l) }
+    val base = cold { val (l, _) = ops.Dedup.ccStars(pairs); rows(l) }
+    val got = reliable {
+      val (l, rounds) = ops.Dedup.ccStars(pairs)
+      assert(rounds > 1, "the pin loop must run more than one round")
+      rows(l)
+    }
     assert(got == base)
   }
 
-  test("persist-mode pins leave no CacheManager residue after clear") {
-    withMode("persist") {
-      rows(ops.LocationResolve.gramDictScale(spark, sf))
-      Caches.clear(spark)
-      assert(spark.sharedState.cacheManager.isEmpty,
-        "Caches.clear must unpersist every persist-mode pin")
+  test("fault injection: dropped cached blocks recompute n13 from the reliable pins") {
+    reliable {
+      val sc = spark.sparkContext
+      val df = ops.LocationResolve.gramDictScale(spark, sf)
+      val before = rows(df)
+      // the memo'd index frames (dimC, gram order, keyed index) persist
+      assert(sc.getRDDStorageInfo.exists(_.numCachedPartitions > 0),
+        "no cached block to drop: the gate would be vacuous")
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      assert(sc.getPersistentRDDs.isEmpty)
+      // a fresh execution of the same plan: re-collecting `df` itself
+      // would reuse its first run's shuffle files and read no dropped
+      // block (under localCheckpoint pins this collect fails)
+      assert(rows(df.select("*")) == before)
+      assert(before == expectedGram)
     }
   }
 
-  test("unknown materialize mode degrades to a working default") {
-    val got = withMode("definitely-not-a-mode") {
-      rows(ops.LocationResolve.gramDictScale(spark, sf))
-    }
-    assert(got == expectedGram)
-  }
-
-  test("mode choice: an unknown mode takes the auto branch") {
-    // (requested, local master, checkpoint dir) -> strategy
+  test("pin strategy: a local master decides alone; a cluster needs dir and cleaner") {
+    // (local master, checkpoint dir, cleanCheckpoints) -> strategy
     val table = Seq(
-      ("auto", true, true) -> "local",
-      ("auto", false, true) -> "reliable",
-      ("auto", false, false) -> "persist",
-      ("local", false, false) -> "local",
-      ("reliable", true, false) -> "reliable",
-      ("persist", true, true) -> "persist",
-      ("definitely-not-a-mode", true, true) -> "local",
-      ("definitely-not-a-mode", false, true) -> "reliable",
-      ("definitely-not-a-mode", false, false) -> "persist")
-    table.foreach { case ((requested, local, dir), want) =>
-      assert(Caches.materializeMode(requested, local, dir) == want,
-        s"($requested, local=$local, dir=$dir)")
+      (true, false, false) -> "local",
+      (true, true, false) -> "local",
+      (true, false, true) -> "local",
+      (true, true, true) -> "local",
+      (false, true, true) -> "reliable",
+      (false, true, false) -> "error",
+      (false, false, true) -> "error",
+      (false, false, false) -> "error")
+    table.foreach { case ((local, dir, cleans), want) =>
+      assert(Caches.pinStrategy(local, dir, cleans) == want,
+        s"(local=$local, dir=$dir, cleanCheckpoints=$cleans)")
     }
   }
 }

@@ -11,6 +11,8 @@ object SparkSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the cluster branch of Caches.pin requires it (MaterializeSpec)
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
