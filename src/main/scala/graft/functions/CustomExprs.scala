@@ -152,6 +152,36 @@ object CustomExprs {
       copy(c)
   }
 
+  /** A dictionary's bigram document frequencies, the global gram order
+    * of the blocking keys ([[GramBlockKeys]]). Held by reference in the
+    * plan and shipped with the task binary, never as a plan literal;
+    * prints as its size. */
+  final class GramDf(val df: java.util.Map[UTF8String, java.lang.Long])
+      extends Serializable {
+    override def toString: String = s"gramdf(${df.size})"
+  }
+
+  /** Every gram blocking key ("g1:" and "g2:") of one sorted-joined
+    * string as ONE per-row kernel ([[ExprImpl.gramBlockKeys]]): the
+    * keys come out of a projection, with no window, join or shuffle
+    * (see LocationResolve.withBlockKeys for the derivation). */
+  case class GramBlockKeys(child: Expression, order: GramDf, keepNum: Int,
+      den: Int, f1MaxLen: Int, f2MinLen: Int)
+      extends UnaryExpression with ExpectsInputTypes {
+    override def inputTypes: Seq[DataType] = Seq(StringType)
+    override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    override def nullSafeEval(v: Any): Any =
+      ExprImpl.gramBlockKeys(v.asInstanceOf[UTF8String], order.df,
+        keepNum, den, f1MaxLen, f2MinLen)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val df = ctx.addReferenceObj("gramDf", order.df, "java.util.Map")
+      defineCodeGen(ctx, ev, c => s"$implName.gramBlockKeys($c, $df, " +
+        s"$keepNum, $den, $f1MaxLen, $f2MinLen)")
+    }
+    override protected def withNewChildInternal(c: Expression): Expression =
+      copy(child = c)
+  }
+
   /** A3's pair generator as a native Generator (UDTF): emits every
     * unordered pair (i<j) of a sorted string array — the reference's
     * itertools.combinations(sorted(locs), 2) (Main.py:250). */
@@ -197,6 +227,14 @@ object CustomExprs {
 
   def byte_sum(c: Column): Column =
     org.apache.spark.sql.functions.call_function("byte_sum", c)
+
+  /** [[GramBlockKeys]] carries a per-dictionary map, which a registered
+    * SQL function cannot take, so it is built as a Column directly. */
+  def gram_block_keys(js: Column, order: GramDf, keepNum: Int, den: Int,
+      f1MaxLen: Int, f2MinLen: Int): Column =
+    org.apache.spark.sql.graft.ExprColumn(GramBlockKeys(
+      org.apache.spark.sql.graft.ExprColumn.expression(js), order,
+      keepNum, den, f1MaxLen, f2MinLen))
 
   /** SQL registration (spark.sql("SELECT token_sort_ratio(a,b) …")).
     * Once per session: callers invoke this per query, and re-registering
@@ -271,6 +309,92 @@ object CustomExprs {
 object ExprImpl {
   def tokenSortRatio(a: UTF8String, b: UTF8String): Double =
     Cleaner.tokenSortRatio(a.toString, b.toString)
+
+  /** T(L), the guaranteed shared-bigram count of a sorted-joined
+    * string of L code points at the scheme's cutoff:
+    * max(1, ceil(L·keepNum/den) − 1), in exact integer arithmetic. */
+  def gramT(l: Int, keepNum: Int, den: Int): Int =
+    math.max(1, ((l.toLong * keepNum + den - 1) / den).toInt - 1)
+
+  private val gramHash = UTF8String.fromString("#")
+  private val gramPipe = UTF8String.fromString("|")
+  private val gramG1 = UTF8String.fromString("g1:")
+  private val gramG2 = UTF8String.fromString("g2:")
+
+  /** The gram blocking keys of one sorted-joined string `js` of L code
+    * points: its L−1 code-point bigrams, occurrence-indexed in order of
+    * position ("ab#0", "ab#1", …), sorted by (df, indexed gram) with a
+    * gram absent from `df` at 0 and ties broken in UTF8String binary
+    * order (Spark's string order, which is not Java's UTF-16 order
+    * above the BMP); the sorted list is cut to its (L−T+2)-prefix,
+    * T = [[gramT]]. Emits "g1:<gram>" for the (L−T)-prefix when
+    * L ≤ f1MaxLen and "g2:<a>|<b>" for every rank-ordered pair of the
+    * kept prefix when L ≥ f2MinLen. Code points are walked the way
+    * Spark's `substr` and `length` walk them. */
+  def gramBlockKeys(js: UTF8String,
+      df: java.util.Map[UTF8String, java.lang.Long],
+      keepNum: Int, den: Int, f1MaxLen: Int, f2MinLen: Int)
+      : org.apache.spark.sql.catalyst.util.ArrayData = {
+    val bytes = js.getBytes
+    val starts = new Array[Int](bytes.length + 1)
+    var l = 0
+    var i = 0
+    while (i < bytes.length) {
+      starts(l) = i
+      l += 1
+      i += UTF8String.numBytesForFirstByte(bytes(i))
+    }
+    starts(l) = math.min(i, bytes.length)
+    if (l < 2) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.empty[Any])
+    val t = gramT(l, keepNum, den)
+    val g = l - 1
+    val grams = new Array[UTF8String](g)
+    val dfs = new Array[Long](g)
+    var p = 0
+    while (p < g) {
+      val s = starts(p)
+      val e = starts(p + 2)
+      var occ = 0
+      var q = 0
+      while (q < p) {
+        if (java.util.Arrays.equals(bytes, starts(q), starts(q + 2),
+            bytes, s, e)) occ += 1
+        q += 1
+      }
+      val base = UTF8String.fromBytes(bytes, s, e - s)
+      val d = df.get(base)
+      dfs(p) = if (d == null) 0L else d.longValue
+      grams(p) = UTF8String.concat(base, gramHash,
+        UTF8String.fromString(Integer.toString(occ)))
+      p += 1
+    }
+    // insertion sort of positions by (df, gram): strings are short
+    val rank = Array.range(0, g)
+    i = 1
+    while (i < g) {
+      val x = rank(i)
+      var j = i - 1
+      while (j >= 0 && (dfs(rank(j)) > dfs(x) ||
+          (dfs(rank(j)) == dfs(x) && grams(rank(j)).binaryCompare(grams(x)) > 0))) {
+        rank(j + 1) = rank(j)
+        j -= 1
+      }
+      rank(j + 1) = x
+      i += 1
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    if (l <= f1MaxLen)
+      (0 until math.min(g, l - t)).foreach(r =>
+        out += UTF8String.concat(gramG1, grams(rank(r))))
+    if (l >= f2MinLen) {
+      val keep = math.min(g, l - t + 2)
+      for (a <- 0 until keep; b <- a + 1 until keep)
+        out += UTF8String.concat(gramG2, grams(rank(a)), gramPipe,
+          grams(rank(b)))
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+  }
 
   /** size(array_intersect) without the intersection array: hash-set of
     * b's elements once, then one pass over a counting distinct members

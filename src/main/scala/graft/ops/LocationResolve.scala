@@ -2,7 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
+import graft.functions.CustomExprs
 import graft.nlp.{Goldens, Locations, Normalize}
 
 /** N6/N7 — tier-1 (exact) and tier-2 (combined regex) location resolution
@@ -350,29 +352,6 @@ object LocationResolve {
   private def sortedJoinCol(s: Column): Column =
     array_join(array_sort(filter(split(s, "\\s+"), t => length(t) > 0)), " ")
 
-  /** Occurrence-indexed character bigrams ("ab#0", "ab#1", …) of a
-    * DISTINCT-string frame (`_js`, `_slen`) as ROWS (_js, _slen, _g):
-    * one single-level transform to slice positions, then a
-    * per-(string, gram) row_number for the occurrence index — indexing
-    * makes set intersection equal multiset intersection, which is what
-    * the q-gram count bound speaks about. All codegen projections plus
-    * one window: the first cut derived these with NESTED interpreted
-    * HOFs (per-element lambda-interpreter walks, O(L²) of them) and
-    * keying a 100k-string dictionary cost 14 s; this shape is
-    * sub-second. Runs on vocabulary-bounded string dims only. */
-  private def indexedGramRows(strs: DataFrame): DataFrame = {
-    val spark = strs.sparkSession
-    import spark.implicits._
-    val wOcc = org.apache.spark.sql.expressions.Window
-      .partitionBy($"_js", $"_g0").orderBy($"_pos")
-    strs.select($"_js", $"_slen",
-        posexplode(transform(sequence(lit(1), $"_slen" - 1),
-          i => $"_js".substr(i, lit(2)))).as(Seq("_pos", "_g0")))
-      .withColumn("_g",
-        concat($"_g0", lit("#"), (row_number().over(wOcc) - 1).cast("string")))
-      .select($"_js", $"_slen", $"_g0", $"_g")
-  }
-
   /** Cutoff-derived constants for the gram family, exact integer
     * arithmetic throughout (a float 0.28·L can round ceil across an
     * integer and silently over-tighten the prefix — the same lossy
@@ -405,15 +384,14 @@ object LocationResolve {
   private[graft] final case class GramScheme(cutoffMicro: Int,
       keepNum: Int, den: Int, f1MaxLen: Int, f2MinLen: Int) {
     /** T(L) as driver-side Int (spec/threshold derivation). */
-    def tOf(l: Int): Int =
-      math.max(1, ((l.toLong * keepNum + den - 1) / den).toInt - 1)
+    def tOf(l: Int): Int = graft.functions.ExprImpl.gramT(l, keepNum, den)
   }
 
   private[graft] def gramScheme(cutoff: Double): GramScheme = {
     val c = math.round(cutoff * 100).toInt          // micro-cutoff, exact
     val keepNum = math.max(0, 4 * c - 30000)        // 2800 at 82 → 0.28·L
     val den = 10000
-    def t(l: Int) = math.max(1, ((l.toLong * keepNum + den - 1) / den).toInt - 1)
+    def t(l: Int) = graft.functions.ExprImpl.gramT(l, keepNum, den)
     if (keepNum == 0)
       // cutoff ≤ 75: T ≡ 1, every gram kept, pair keys never sound
       GramScheme(c, keepNum, den, Int.MaxValue, Int.MaxValue)
@@ -498,6 +476,12 @@ object LocationResolve {
     * way). */
   private[graft] val ProbeBroadcastMax = 1000000L
 
+  /** The [[ProbeBroadcastMax]] decision for a probe frame: an early-out
+    * `limit(max + 1).count()`, never a full count of a large probe
+    * side. */
+  private[graft] def probesFitBroadcast(probes: DataFrame): Boolean =
+    probes.limit((ProbeBroadcastMax + 1).toInt).count() <= ProbeBroadcastMax
+
   /** Broadcast bound for the guard-tripped exhaustive fallback's
     * dictionary side (r17): past ~1M variants the dictionary stops
     * being a safe driver/executor-memory broadcast — the same class
@@ -509,32 +493,39 @@ object LocationResolve {
     * dictionary, where the contract may not hold. */
   private[graft] val DictBroadcastMax = 1000000L
 
-  /** Dictionary document frequency per indexed bigram over the SPACED
-    * sorted-join of every dictionary entry — the global gram order
-    * both sides sort prefixes by (rarest first; grams a probe has
-    * that the dictionary lacks get df 0, harmlessly first — they can
-    * never join). Spaced (r16): gram keys live on the scorer's own
-    * sorted-joined form `_js` — the string the indel bound is
-    * literally about — so ONE family is sound for every pair shape
-    * (single↔single, single↔multi, multi↔multi; see [[withBlockKeys]]);
-    * for a single-token entry `_js` is the entry itself, so the r14
-    * single-token df rows are unchanged. Small (bounded by the
-    * dictionary's gram vocabulary) and broadcast. */
+  /** Dictionary document frequency per bigram over the SPACED
+    * sorted-join of every dictionary entry, as rows (_g0, _gdf): the
+    * global gram order both sides sort prefixes by (rarest first;
+    * grams a probe has that the dictionary lacks get df 0, harmlessly
+    * first — they can never join). Spaced (r16): gram keys live on the
+    * scorer's own sorted-joined form `_js` — the string the indel bound
+    * is literally about — so ONE family is sound for every pair shape
+    * (single↔single, single↔multi, multi↔multi; see [[withBlockKeys]]).
+    * df is keyed on the PLAIN bigram: the order only has to be a
+    * consistent function of the indexed gram, and (df(base), gram) is
+    * one. Small (bounded by the dictionary's gram vocabulary); the key
+    * kernel reads it as a map ([[gramDfOf]]). */
   private[graft] def gramOrderOf(dim: DataFrame, strCol: String): DataFrame = {
-    val toks = filter(split(col(strCol), "\\s+"), t => length(t) > 0)
-    val js = array_join(array_sort(toks), " ")
-    val strs = dim.select(js.as("_js"))
+    val strs = dim.select(sortedJoinCol(col(strCol)).as("_js"))
       .filter(length(col("_js")) >= 2)
       .select(col("_js"), length(col("_js")).as("_slen")).distinct()
-    // df keyed on the PLAIN bigram (no occurrence window): the global
-    // order only has to be a consistent function of the indexed gram —
-    // (df(base), gram) is one, at one less window pass; repeat
-    // occurrences are rare enough that their df'=df approximation
-    // costs nothing measurable in selectivity
     strs.select(posexplode(transform(sequence(lit(1), col("_slen") - 1),
         i => col("_js").substr(i, lit(2)))).as(Seq("_pos", "_g0")))
       .groupBy(col("_g0")).agg(count(lit(1)).as("_gdf"))
   }
+
+  /** A gram order frame ([[gramOrderOf]] rows) collected to the
+    * driver as the key kernel's df map — one job. */
+  private[graft] def collectGramDf(order: DataFrame): CustomExprs.GramDf = {
+    val m = new java.util.HashMap[UTF8String, java.lang.Long]()
+    order.select(col("_g0"), col("_gdf")).collect().foreach(r =>
+      m.put(UTF8String.fromString(r.getString(0)), r.getLong(1)))
+    new CustomExprs.GramDf(m)
+  }
+
+  /** The df map of a dictionary's own gram order. */
+  private[graft] def gramDfOf(dim: DataFrame, strCol: String): CustomExprs.GramDf =
+    collectGramDf(gramOrderOf(dim, strCol))
 
   /** Explode a frame's blocking keys for the fuzzy join — the
     * families, each keyed on the scorer's sorted-joined form `_js`
@@ -548,28 +539,27 @@ object LocationResolve {
     *    composed resolver prices this family with its own economics
     *    guard ([[gramDepthOk]] over the "t:" prefix) and can drop it
     *    outright — grams carry the guarantee;
-    *  - char-gram keys on `_js` itself (r16: the SPACED form — the
-    *    r15 despaced `_jx` base is retired): the classic q-gram count
-    *    filter (Gravano et al. VLDB'01) says strings within indel d
-    *    share ≥ max(L,M)−1−2d occurrence-indexed bigrams OF THE FORMS
-    *    THE DISTANCE IS MEASURED ON — which is `_js` verbatim, spaces
-    *    included. That makes ONE derivation sound for EVERY pair
-    *    shape: single↔single (no spaces — byte-identical to the r14
-    *    keys), single↔multi ("newyork" vs "new york": d counts the
-    *    space indel, the bound still holds on the actual joined
-    *    forms — no despacing refund argument needed), and
-    *    multi↔multi ("ab cd x" vs "abcd x" — the boundary r15
-    *    documented as open, CLOSED here). So [[gramScheme]]'s T(L),
-    *    f1/f2 split and r=3 prefix corollary apply verbatim on
-    *    joined lengths. Emitted by single-DISTINCT-token strings
-    *    always; by ALL strings when `crossGrams` is on (the
-    *    full-closure regime the composed resolver runs). Strings
-    *    with L ≤ f1MaxLen emit single-gram keys "g1:" from the
-    *    (g−T+1)-prefix (shared-key guarantee ≥ 1); strings with
-    *    T ≥ 2 (L ≥ f2MinLen) emit gram-PAIR keys "g2:a|b" — every
-    *    unordered pair of the (g−T+2)-prefix (the r=3 prefix),
-    *    guaranteeing ≥ 3 shared pair keys per true match (the
-    *    [[candidateFilter]] threshold);
+    *  - char-gram keys on `_js` itself (the SPACED form): the classic
+    *    q-gram count filter (Gravano et al. VLDB'01) says strings
+    *    within indel d share ≥ max(L,M)−1−2d occurrence-indexed
+    *    bigrams OF THE FORMS THE DISTANCE IS MEASURED ON — which is
+    *    `_js` verbatim, spaces included. That makes ONE derivation
+    *    sound for EVERY pair shape: single↔single, single↔multi
+    *    ("newyork" vs "new york": d counts the space indel) and
+    *    multi↔multi ("ab cd x" vs "abcd x"). So [[gramScheme]]'s T(L),
+    *    f1/f2 split and r=3 prefix corollary apply verbatim on joined
+    *    lengths. Emitted by single-DISTINCT-token strings always; by
+    *    ALL strings when `crossGrams` is on (the full-closure regime
+    *    the composed resolver runs). Strings with L ≤ f1MaxLen emit
+    *    single-gram keys "g1:" from the (g−T+1)-prefix (shared-key
+    *    guarantee ≥ 1); strings with T ≥ 2 (L ≥ f2MinLen) emit
+    *    gram-PAIR keys "g2:a|b" — every rank-ordered pair of the
+    *    (g−T+2)-prefix (the r=3 prefix), guaranteeing ≥ 3 shared pair
+    *    keys per true match (the [[candidateFilter]] threshold). A
+    *    string's whole gram family is one per-row kernel
+    *    ([[CustomExprs.GramBlockKeys]]) over `_js` and the
+    *    dictionary's df map (`gramDf`, rarest first): no window, join
+    *    or pin, so both sides key in one projection;
     *  - ≤1 token of length ≤ 1 → the whole string as "w:" (such
     *    strings only ever cutoff-match their exact selves: the band
     *    forces L = 1 partners, and multi-token strings always have
@@ -578,23 +568,11 @@ object LocationResolve {
     * Output: the input columns + `slenAs` (the scorer-compared
     * JOINED length, feeding [[fuzzyLenBandPred]] — sound for every
     * pair shape because it derives from the score alone) + exploded
-    * `bkey`. Callers should localCheckpoint `df0` (three branch
-    * scans) and `gramOrder` (consulted by both sides) — both are
-    * vocabulary-bounded dims. `materializeRanked=false` skips the
-    * gram-prefix frame's localCheckpoint; dictionary-side index
-    * builds must materialize (memoized once, read forever), and since
-    * r16 the composed resolver materializes its PROBE side too — at
-    * every-string gram keying the three consumers' recomputed window
-    * shuffles cost more stage-job latency than the one checkpoint job
-    * (measured: n13 7.5→6.6 s, n15 6.6→5.8 s on the same host slice;
-    * the r15 false-for-probes doctrine predates probe-side cross
-    * grams). `false` remains right for per-wave streamed keying
-    * (streamedGramResolve), where the frame is consumed once. */
+    * `bkey`: one projection and one explode over `df0`. */
   private[graft] def withBlockKeys(df0: DataFrame, strCol: String,
-      gramOrder: DataFrame, slenAs: String,
+      gramDf: CustomExprs.GramDf, slenAs: String,
       cutoff: Double, grams: Boolean = true,
-      crossGrams: Boolean = false,
-      materializeRanked: Boolean = true): DataFrame = {
+      crossGrams: Boolean = false): DataFrame = {
     val spark = df0.sparkSession
     import spark.implicits._
     val sch = gramScheme(cutoff)
@@ -619,66 +597,25 @@ object LocationResolve {
       .withColumn("_ntokd", size(array_distinct(toks)))
       .withColumn("_slen", length($"_js"))
     val out = payload :+ col("_slen").as(slenAs)
-
-    val multi = df.filter($"_ntokd" >= 2)
-      .select(out :+ explode(transform(blockKeys($"_js"),
-        k => concat(lit("t:"), k))).as("bkey"): _*)
+    val pairKeys = transform(blockKeys($"_js"), k => concat(lit("t:"), k))
     // grams=false: the caller proved no string on the other side can
     // need a gram-keyed match from this one (the n11 inline path's
     // both-sides gate), so neither gram nor whole-string keys can
-    // ever drive a guaranteed match — emit the token-pair family
-    // alone instead of running dead scans and the gram side's eager
-    // localCheckpoint jobs over empty frames
-    if (!grams) return multi
-    val tiny = df.filter($"_ntok" <= 1 && $"_slen" <= 1)
-      .select(out :+ concat(lit("w:"), $"_js").as("bkey"): _*)
-
+    // ever drive a guaranteed match — emit the token-pair family alone
+    if (!grams)
+      return df.filter($"_ntokd" >= 2).select(out :+ explode(pairKeys).as("bkey"): _*)
+    val none = typedLit(Seq.empty[String])
+    val tiny = when($"_ntok" <= 1 && $"_slen" <= 1,
+      array(concat(lit("w:"), $"_js"))).otherwise(none)
     // gram-bearing strings: single-DISTINCT-token strings always (true
     // singles plus the repeated-token degenerates that have no pair
-    // key); ALL strings under the full-closure regime (crossGrams)
-    val single =
-      if (crossGrams) df.filter($"_slen" >= 2)
-      else df.filter($"_ntokd" <= 1 && $"_slen" >= 2)
-    val tCol = greatest(lit(1),
-      floor(($"_slen".cast("long") * sch.keepNum + (sch.den - 1)) /
-        lit(sch.den)).cast("int") - 1)
-    // rarest-first rank per DISTINCT string ((df, gram) lexicographic —
-    // any consistent total order is sound; df makes it selective),
-    // trimmed to the r=3 prefix. The frame is read by up to three
-    // consumers (f1 + both sides of the f2 self-join) — materialized
-    // once when the caller asks (dictionary index builds), recomputed
-    // when not (probe-side keying, where the windows are small).
-    val ranked0 = indexedGramRows(
-        single.select($"_js", $"_slen").distinct())
-      .join(broadcast(gramOrder), Seq("_g0"), "left")
-      .withColumn("_gdf", coalesce($"_gdf", lit(0L)))
-      .withColumn("_t", tCol)
-      .withColumn("_rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy($"_js").orderBy($"_gdf", $"_g")))
-      .filter($"_rk" <= $"_slen" - $"_t" + 2)
-      .select($"_js", $"_slen", $"_t", $"_g", $"_rk")
-    val ranked = if (materializeRanked) graft.Caches.pin(ranked0) else ranked0
-    val f1 = ranked
-      .filter($"_slen" <= sch.f1MaxLen && $"_rk" <= $"_slen" - $"_t")
-      .select($"_js", concat(lit("g1:"), $"_g").as("bkey"))
-    // pair keys via a rank-ordered equi self-join — all codegen; the
-    // pair is canonical because both sides order by the same global
-    // (df, gram) rank
-    val f2 =
-      if (sch.f2MinLen == Int.MaxValue) f1.limit(0)
-      else {
-        val a = ranked.filter($"_slen" >= sch.f2MinLen)
-          .select($"_js", $"_rk".as("_ra"), $"_g".as("_ga"))
-        val b = ranked.filter($"_slen" >= sch.f2MinLen)
-          .select($"_js".as("_jsb"), $"_rk".as("_rb"), $"_g".as("_gb"))
-        a.join(b, $"_js" === $"_jsb" && $"_ra" < $"_rb")
-          .select($"_js",
-            concat(lit("g2:"), $"_ga", lit("|"), $"_gb").as("bkey"))
-      }
-    val gram = single.join(f1.unionByName(f2), Seq("_js"))
-      .select(out :+ $"bkey": _*)
-    multi.unionByName(tiny).unionByName(gram)
+    // key); ALL strings under the full-closure regime
+    val bearing =
+      if (crossGrams) $"_slen" >= 2 else $"_ntokd" <= 1 && $"_slen" >= 2
+    val gram = when(bearing, CustomExprs.gram_block_keys($"_js", gramDf,
+      sch.keepNum, sch.den, sch.f1MaxLen, sch.f2MinLen)).otherwise(none)
+    df.select(out :+ explode(concat(
+      when($"_ntokd" >= 2, pairKeys).otherwise(none), tiny, gram)).as("bkey"): _*)
   }
 
   /** The shared-key candidate filter over the blocking join's output:
@@ -752,13 +689,13 @@ object LocationResolve {
     val grams = graft.Caches.memoValue(spark, s"fuzzydict:$sfDir:singletok")(
         dimHasSingleToken(dim, "vkey")) &&
       dimHasSingleToken(probes, "norm")
-    val gorder =
-      if (grams) graft.Caches.pin(gramOrderOf(dim, "vkey"))
-      else spark.emptyDataFrame.select(lit("").as("_g0"), lit(0L).as("_gdf"))
+    val gdf =
+      if (grams) gramDfOf(dim, "vkey")
+      else new CustomExprs.GramDf(java.util.Collections.emptyMap())
     val dimKeyed = withBlockKeys(dim, "vkey",
-      gorder, "dlen", graft.nlp.Cleaner.FuzzyScoreCutoff, grams)
+      gdf, "dlen", graft.nlp.Cleaner.FuzzyScoreCutoff, grams)
     val probeKeyed = withBlockKeys(probes, "norm",
-      gorder, "plen", graft.nlp.Cleaner.FuzzyScoreCutoff, grams)
+      gdf, "plen", graft.nlp.Cleaner.FuzzyScoreCutoff, grams)
     val best = candidateFilter(
       probeKeyed.join(dimKeyed, "bkey")
         .where(fuzzyLenBandPred($"plen", $"dlen",
@@ -857,10 +794,17 @@ object LocationResolve {
     *    keys from both sides — recall is untouched (grams carry the
     *    guarantee), only the redundant quadratic join goes.
     *    `pairGuard` forces the verdict for specs;
-    *  - probe-broadcast switch ([[ProbeBroadcastMax]]): past ~1M
-    *    distinct probe strings the key join and the string join-backs
-    *    become shuffle equi-joins instead of probe-side broadcasts
-    *    (`probeBroadcast` forces either form). */
+    *  - probe-broadcast switch ([[ProbeBroadcastMax]],
+    *    [[probesFitBroadcast]]): past ~1M distinct probe strings the
+    *    key join and the string join-backs become shuffle equi-joins
+    *    instead of probe-side broadcasts (`probeBroadcast` forces
+    *    either form).
+    *
+    * Per-dictionary artifacts — the id'd dim, its gram df map, the
+    * keyed index and the guard verdicts — are memoized under
+    * `indexMemoKey`. The probe side is keyed per call in one
+    * projection ([[withBlockKeys]]), never pinned, so a warm call's
+    * only eager action here is the probe sizing count. */
   private[graft] def fuzzyResolveDim(probes: DataFrame, dim: DataFrame,
       blocked: Option[Boolean] = None,
       indexMemoKey: Option[String] = None,
@@ -886,7 +830,7 @@ object LocationResolve {
         // near-match-sized candidate set (see fuzzyDictScale); dict
         // ids are stable because dimC is pinned: lineage ends at the
         // pin on every master, so no recompute re-mints `_vid`.
-        // The id'd dim, gram order and keyed index are PER-DICTIONARY
+        // The id'd dim, gram df map and keyed index are PER-DICTIONARY
         // artifacts — a registered query over a fixed dictionary
         // memoizes them (indexMemoKey; Bench prewarms via the query,
         // cold build in cache_build_sec — the ivfIndex/knnEdges
@@ -900,23 +844,20 @@ object LocationResolve {
           dim.select($"vkey", $"canon", $"vorder")
             .withColumn("_vid", monotonically_increasing_id())))
         // the probe side is keyed by the probe STRING itself (r15):
-        // ids existed to keep the hot join skinny, but probe strings
-        // are vocabulary-bounded (≤ ~20 chars) and dropping the id
-        // removes a per-run localCheckpoint job AND the string
-        // join-back — callers should hand cheap/cached probe frames
-        // (the composed resolver derives them from a checkpointed
-        // token frame), since count + keying each evaluate the source
+        // probe strings are vocabulary-bounded (≤ ~20 chars), so no id
+        // and no string join-back. The sizing count and the keying
+        // each evaluate the probe frame (the composed resolver derives
+        // it from its pinned token frame)
         val probeC = probes.select($"fnorm")
         // r16: the index carries EVERY key family for EVERY caller —
         // grams on the spaced joined form are the sole recall-complete
         // family for all pair shapes, so there is nothing probe-shaped
         // left to gate the build on (this also subsumes the r15
         // probe-set-independence rule for memoized indexes)
-        val gorder =
-          memoOr("gorder")(graft.Caches.pin(gramOrderOf(dimC, "vkey")))
+        val gdf = memoVal("gramdf")(gramDfOf(dimC, "vkey"))
         val dimKeyed0 = memoOr("keys")(
           withBlockKeys(dimC.select($"_vid", $"vkey"), "vkey",
-            gorder, "dlen", graft.nlp.Cleaner.FuzzyScoreCutoff,
+            gdf, "dlen", graft.nlp.Cleaner.FuzzyScoreCutoff,
             grams = true, crossGrams = true)
           .select($"_vid", $"dlen", $"bkey"))
         val guardG = gramGuard.getOrElse(memoVal("guard")(
@@ -948,8 +889,7 @@ object LocationResolve {
             "entries) — whole probe set routed through the exhaustive " +
             "length-banded crossJoin; upstream tokenization is the " +
             "real fix for such dictionaries")
-          def sortedLen(c: Column): Column = length(array_join(
-            array_sort(filter(split(c, "\\s+"), t => length(t) > 0)), " "))
+          def sortedLen(c: Column): Column = length(sortedJoinCol(c))
           val bcastDim = dictBroadcast.getOrElse(dimN <= DictBroadcastMax)
           val dimB0 = dimC.select($"vkey", $"canon", $"vorder")
             .withColumn("_dl", sortedLen($"vkey"))
@@ -968,20 +908,16 @@ object LocationResolve {
             if (guardT) dimKeyed0
             else dimKeyed0.filter(!$"bkey".startsWith("t:"))
           val probeKeyed0 = withBlockKeys(probeC,
-            "fnorm", gorder, "plen", graft.nlp.Cleaner.FuzzyScoreCutoff,
-            grams = true, crossGrams = true,
-            materializeRanked = true)
+            "fnorm", gdf, "plen", graft.nlp.Cleaner.FuzzyScoreCutoff,
+            grams = true, crossGrams = true)
             .select($"fnorm", $"plen", $"bkey")
           val probeKeyed =
             if (guardT) probeKeyed0
             else probeKeyed0.filter(!$"bkey".startsWith("t:"))
-          // the probe row count (one full-scan agg — the old shapeStats
-          // probe reduced to the one bit still needed) is computed
-          // lazily HERE: it only feeds the broadcast-sizing default,
-          // and the guard-tripped branch above must not pay a dead
-          // driver action for it (review finding, r16)
-          val bcast = probeBroadcast.getOrElse(
-            probeC.agg(count(lit(1))).head.getLong(0) <= ProbeBroadcastMax)
+          // sized lazily HERE: it only feeds the broadcast default, and
+          // the guard-tripped branch above must not pay a dead driver
+          // action for it
+          val bcast = probeBroadcast.getOrElse(probesFitBroadcast(probeC))
           def maybeBcast(df: DataFrame): DataFrame =
             if (bcast) broadcast(df) else df
           candidateFilter(

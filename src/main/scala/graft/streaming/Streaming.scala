@@ -2575,9 +2575,9 @@ object Streaming {
     graft.ops.LocationResolve.withBlockKeys(
         batch.filter(col("op") === "add")
           .select(col("vkey"), col("canon"), col("vorder")),
-        "vkey", gramOrder, "dlen",
+        "vkey", graft.ops.LocationResolve.collectGramDf(gramOrder), "dlen",
         graft.nlp.Cleaner.FuzzyScoreCutoff,
-        grams = true, crossGrams = true, materializeRanked = false)
+        grams = true, crossGrams = true)
       .write.mode("overwrite").parquet(s"$idxDir/v$batchId/keys")
     batch.filter(col("op") === "del").select(col("vkey"))
       .write.mode("overwrite").parquet(s"$idxDir/v$batchId/dels")
@@ -2718,21 +2718,17 @@ object Streaming {
     val (liveKeys, _) = liveGramSlices(spark, idxDir, vs)
     val live = liveKeys.drop("_ver")
     val probeD = probes.select(col("fnorm")).distinct()
-    // probe broadcast under the batch path's sizing switch (r17,
-    // VERDICT #2 — this reader broadcast probe keys unconditionally
-    // while LocationResolve gained the ProbeBroadcastMax gate in r15):
-    // a fact-level probe set past ~1M distinct strings degrades to a
-    // shuffle equi-join instead of a driver-sized broadcast. The
-    // limit-probe count is an early-out, never a full scan of a
-    // large probe side; `probeBroadcast` forces either form for the
-    // StreamingSpec shuffle≡broadcast gate.
-    val maxP = graft.ops.LocationResolve.ProbeBroadcastMax
+    // probe broadcast under the batch path's sizing rule: a
+    // fact-level probe set past ~1M distinct strings degrades to a
+    // shuffle equi-join instead of a driver-sized broadcast;
+    // `probeBroadcast` forces either form for the StreamingSpec
+    // shuffle≡broadcast gate
     val bcast = probeBroadcast.getOrElse(
-      probeD.limit((maxP + 1).toInt).count() <= maxP)
+      graft.ops.LocationResolve.probesFitBroadcast(probeD))
     val probeKeyed0 = graft.ops.LocationResolve.withBlockKeys(
-        probeD, "fnorm", gramOrder,
+        probeD, "fnorm", graft.ops.LocationResolve.collectGramDf(gramOrder),
         "plen", graft.nlp.Cleaner.FuzzyScoreCutoff,
-        grams = true, crossGrams = true, materializeRanked = false)
+        grams = true, crossGrams = true)
     val probeKeyed = if (bcast) broadcast(probeKeyed0) else probeKeyed0
     val cutoff = graft.nlp.Cleaner.FuzzyScoreCutoff
     graft.ops.LocationResolve.candidateFilter(

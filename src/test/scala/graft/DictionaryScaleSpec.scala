@@ -427,9 +427,8 @@ class DictionaryScaleSpec extends AnyFunSuite {
     assert(dim.count() > LocationResolve.FuzzyBlockSwitch)
     // the guard itself must trip on this dictionary's keyed index for
     // the t-family and PASS for the gram family
-    val gorder = LocationResolve.gramOrderOf(dim, "vkey").localCheckpoint()
     val keys = LocationResolve.withBlockKeys(
-      dim.select($"vkey"), "vkey", gorder, "dlen",
+      dim.select($"vkey"), "vkey", LocationResolve.gramDfOf(dim, "vkey"), "dlen",
       graft.nlp.Cleaner.FuzzyScoreCutoff, crossGrams = true)
     assert(!LocationResolve.gramDepthOk(keys, idCol = "vkey", family = "t:"),
       "t-family guard did NOT trip on a shared-head-token dictionary")
@@ -557,9 +556,8 @@ class DictionaryScaleSpec extends AnyFunSuite {
       .distinct().localCheckpoint()
     // the guard itself must actually trip on this dictionary's keyed
     // index — otherwise the fallback assertions below are vacuous
-    val gorder = LocationResolve.gramOrderOf(dim, "vkey").localCheckpoint()
     val keys = LocationResolve.withBlockKeys(
-      dim.select($"vkey"), "vkey", gorder, "dlen",
+      dim.select($"vkey"), "vkey", LocationResolve.gramDfOf(dim, "vkey"), "dlen",
       graft.nlp.Cleaner.FuzzyScoreCutoff)
     assert(!LocationResolve.gramDepthOk(keys, idCol = "vkey"),
       "economics guard did NOT trip on a closed-4-letter-vocabulary " +
