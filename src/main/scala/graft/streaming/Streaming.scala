@@ -2537,6 +2537,19 @@ object Streaming {
     assembledKeepBestDims(spark, survDir, vs)._1
   }
 
+  /** The key kernel's df map of a frozen gram order frame, collected
+    * once per frame object: the order never changes for a stream's
+    * life, so every later wave and read reuses the map instead of
+    * running a driver job for it. Weakly keyed by frame identity
+    * (Dataset keeps reference equality), so a dropped frame frees its
+    * map. */
+  private val frozenGramDfs = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, graft.functions.CustomExprs.GramDf]())
+
+  private def frozenGramDf(gramOrder: DataFrame): graft.functions.CustomExprs.GramDf =
+    frozenGramDfs.computeIfAbsent(gramOrder,
+      o => graft.ops.LocationResolve.collectGramDf(o))
+
   /** Tenth maintainer — the fuzzy dictionary's gram/token blocking
     * index, maintained INCREMENTALLY as the dictionary itself changes:
     * the batch path memoizes a per-version index
@@ -2575,7 +2588,7 @@ object Streaming {
     graft.ops.LocationResolve.withBlockKeys(
         batch.filter(col("op") === "add")
           .select(col("vkey"), col("canon"), col("vorder")),
-        "vkey", graft.ops.LocationResolve.collectGramDf(gramOrder), "dlen",
+        "vkey", frozenGramDf(gramOrder), "dlen",
         graft.nlp.Cleaner.FuzzyScoreCutoff,
         grams = true, crossGrams = true)
       .write.mode("overwrite").parquet(s"$idxDir/v$batchId/keys")
@@ -2726,7 +2739,7 @@ object Streaming {
     val bcast = probeBroadcast.getOrElse(
       graft.ops.LocationResolve.probesFitBroadcast(probeD))
     val probeKeyed0 = graft.ops.LocationResolve.withBlockKeys(
-        probeD, "fnorm", graft.ops.LocationResolve.collectGramDf(gramOrder),
+        probeD, "fnorm", frozenGramDf(gramOrder),
         "plen", graft.nlp.Cleaner.FuzzyScoreCutoff,
         grams = true, crossGrams = true)
     val probeKeyed = if (bcast) broadcast(probeKeyed0) else probeKeyed0
