@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 import scala.util.chaining._
 
@@ -306,14 +307,8 @@ object Streaming {
       ckptDir: String): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
     requireSharedLifecycle(dimDir, ckptDir)
-    val q = docs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        unigramModelUpdate(dimDir)(df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(docs, ckptDir)(
+      _.foreachBatch(unigramModelUpdate(dimDir) _))
   }
 
   /** x27 streaming sibling — the decontamination BLOCKLIST maintained
@@ -386,14 +381,7 @@ object Streaming {
   def buildBlocklist(docs: DataFrame, dimDir: String, ckptDir: String): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
     requireSharedLifecycle(dimDir, ckptDir)
-    val q = docs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        blocklistUpdate(dimDir)(df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(docs, ckptDir)(_.foreachBatch(blocklistUpdate(dimDir) _))
   }
 
   /** x18 streaming sibling — incremental NEAR-DUP dedup: the LSH band
@@ -652,12 +640,8 @@ object Streaming {
       s"bench span dim missing under $dimDir — run benchSpanDim first")
     Files.createDirectories(Paths.get(outDir))
     requireSliceLifecycle(outDir, ckptDir, "rewrite")
-    val q = train.writeStream
-      .foreachBatch(decontamRewriteUpdate(dimDir, outDir) _)
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(train, ckptDir)(
+      _.foreachBatch(decontamRewriteUpdate(dimDir, outDir) _))
   }
 
   /** Every committed batch's decontaminated documents. A slice is
@@ -777,13 +761,8 @@ object Streaming {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     requireSharedLifecycle(dimDir, ckptDir)
     requireSliceLifecycle(outDir, ckptDir, "ledger")
-    val q = docs.writeStream
-      .foreachBatch(ledgerMaintain(dimDir, outDir, weights,
-        compactEvery) _)
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(docs, ckptDir)(
+      _.foreachBatch(ledgerMaintain(dimDir, outDir, weights, compactEvery) _))
   }
 
   /** x73/x74 streaming sibling — the corpus DATASHEET maintained
@@ -976,14 +955,8 @@ object Streaming {
       ckptDir: String, compactEvery: Int = 8): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
     requireSharedLifecycle(dimDir, ckptDir)
-    val q = docs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        datasheetMaintain(dimDir, compactEvery)(df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(docs, ckptDir)(
+      _.foreachBatch(datasheetMaintain(dimDir, compactEvery) _))
   }
 
   /** One maintained datasheet wave WITH the compaction cadence on its
@@ -1062,14 +1035,8 @@ object Streaming {
       books: Array[Array[Array[Double]]]): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
     requireSharedLifecycle(indexDir, ckptDir)
-    val q = embs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        ivfPqIndexUpdate(indexDir, cents, books)(df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(embs, ckptDir)(
+      _.foreachBatch(ivfPqIndexUpdate(indexDir, cents, books) _))
   }
 
   /** x26 top-k over the committed slices — SELF-CONTAINED: queries and
@@ -1153,14 +1120,8 @@ object Streaming {
       cents: Array[Array[Double]]): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     requireSharedLifecycle(outDir, ckptDir)
-    val q = embs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        semDecontUpdate(benchDir, outDir, cents)(df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(embs, ckptDir)(
+      _.foreachBatch(semDecontUpdate(benchDir, outDir, cents) _))
   }
 
   /** The accumulated clean training slice across committed versions —
@@ -1225,14 +1186,8 @@ object Streaming {
       outDir: String, ckptDir: String): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     requireSharedLifecycle(outDir, ckptDir)
-    val q = docs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        snapshotDiffUpdate(oldDir, outDir)(df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(docs, ckptDir)(
+      _.foreachBatch(snapshotDiffUpdate(oldDir, outDir) _))
   }
 
   /** The complete reconciliation across committed versions: the
@@ -1265,12 +1220,8 @@ object Streaming {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     requireSharedLifecycle(dimDir, ckptDir)
     requireSliceLifecycle(outDir, ckptDir, "rewrite")
-    val q = docs.writeStream
-      .foreachBatch(spanIndexMaintain(dimDir, outDir, compactEvery) _)
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(docs, ckptDir)(
+      _.foreachBatch(spanIndexMaintain(dimDir, outDir, compactEvery) _))
   }
 
   /** Run the incremental near-dup dedup over a documents stream to
@@ -1282,14 +1233,8 @@ object Streaming {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pairsDir))
     requireSharedLifecycle(dimDir, ckptDir)
     requireSliceLifecycle(pairsDir, ckptDir, "pair")
-    val q = docs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        bandIndexMaintain(dimDir, pairsDir, compactEvery)(df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(docs, ckptDir)(
+      _.foreachBatch(bandIndexMaintain(dimDir, pairsDir, compactEvery) _))
   }
 
   /** One maintained wave of the band index WITH the compaction
@@ -1434,14 +1379,8 @@ object Streaming {
     // the pairs dir is the same bandIndexUpdate state buildBandIndex
     // drives — both entry points must enforce the same slice guard
     requireSliceLifecycle(pairsDir, ckptDir, "pair")
-    val q = docs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        keepBestUpdate(dimDir, pairsDir, survDir)(df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(docs, ckptDir)(
+      _.foreachBatch(keepBestUpdate(dimDir, pairsDir, survDir) _))
   }
 
   /** Survivor-set reader for the REBUILD-form maintainer: the latest
@@ -2498,15 +2437,8 @@ object Streaming {
     requireSharedLifecycle(dimDir, ckptDir)
     requireSharedLifecycle(survDir, ckptDir)
     requireSliceLifecycle(pairsDir, ckptDir, "pair")
-    val q = docs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        keepBestDeltaMaintain(dimDir, pairsDir, survDir, compactEvery)(
-          df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(docs, ckptDir)(_.foreachBatch(
+      keepBestDeltaMaintain(dimDir, pairsDir, survDir, compactEvery) _))
   }
 
   /** The delta maintainer's survivor set as of the latest committed
@@ -2625,14 +2557,8 @@ object Streaming {
       compactEvery: Int = 8): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(idxDir))
     requireSharedLifecycle(idxDir, ckptDir)
-    val q = updates.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        gramIndexMaintain(idxDir, gramOrder, compactEvery)(df, batchId)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(updates, ckptDir)(
+      _.foreachBatch(gramIndexMaintain(idxDir, gramOrder, compactEvery) _))
   }
 
   /** Compact the streamed gram index up to its newest committed
@@ -2839,14 +2765,10 @@ object Streaming {
     * exactly-once batch ids naming the output dirs. */
   def tripCycleToCsv(spark: SparkSession, pagesDir: String, outDir: String,
       checkpointDir: String): Unit = {
-    val q = tripCycle(spark, pagesDir).writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
+    runAvailableNow(tripCycle(spark, pagesDir), checkpointDir)(_.foreachBatch {
+      (df: DataFrame, batchId: Long) =>
         graft.sources.CsvSink.write(df, s"$outDir/batch_$batchId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    })
   }
 
   /** Run a streaming DataFrame to completion over the finite fixture
@@ -2856,14 +2778,47 @@ object Streaming {
       outputMode: String = "append"): DataFrame = {
     val ckpt = java.nio.file.Files
       .createTempDirectory(s"graft_ckpt_$name").toString
-    val q = streamed.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(streamed, ckpt)(
+      _.format("memory").queryName(name).outputMode(outputMode))
     spark.table(name)
+  }
+
+  private val IsolationKey = "spark.sql.artifact.isolation.enabled"
+  private val startLocks = new java.util.WeakHashMap[SparkSession, AnyRef]
+
+  /** Start `streamed` on the sink `sink` sets up, checkpointed at
+    * `ckptDir`, as an AvailableNow query, and block until it finishes.
+    * Every engine stream starts here.
+    *
+    * Each start clones the caller's session, and with artifact isolation
+    * on, the clone's tasks run under a fresh per-session class loader.
+    * Spark keys its codegen cache by (class loader, source), so every
+    * start compiled all of the query's generated classes again. The clone
+    * copies the caller's conf inside `start()`, so isolation is switched
+    * off on the caller only around `start()`: the stream's tasks then
+    * share the executors' loader and the classes compiled by earlier
+    * starts. A per-session lock keeps concurrent starts from restoring
+    * each other's override. A session holding its own artifacts keeps
+    * isolation, since its stream may need them. */
+  private[graft] def runAvailableNow(streamed: DataFrame, ckptDir: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val spark = streamed.sparkSession
+    val w = sink(streamed.writeStream)
+      .option("checkpointLocation", ckptDir)
+      .trigger(Trigger.AvailableNow())
+    val q =
+      if (org.apache.spark.sql.graft.SessionArtifacts.added(spark)) w.start()
+      else {
+        val lock = startLocks.synchronized(
+          startLocks.computeIfAbsent(spark, _ => new AnyRef))
+        lock.synchronized {
+          val before = spark.conf.getAll.get(IsolationKey)
+          spark.conf.set(IsolationKey, "false")
+          try w.start()
+          finally before.fold(spark.conf.unset(IsolationKey))(
+            spark.conf.set(IsolationKey, _))
+        }
+      }
+    q.awaitTermination()
   }
 }

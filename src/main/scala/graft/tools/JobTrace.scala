@@ -1,7 +1,9 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** Builder-side job profiler: run ONE registered query (warm pass
@@ -13,7 +15,9 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkLis
   * owns them (the `spark.sql.execution.id` job property): one line per
   * execution with its span, job count and the engine frame that
   * issued it, so a driver gap points at the eager action (a pin, a
-  * sizing count, the final write) it sits in.
+  * sizing count, the final write) it sits in. Both the query and each
+  * execution also report their janino compilations (count and compile
+  * milliseconds), so a plan that recompiles on every run shows up.
   *   sbt "runMain graft.tools.JobTrace <sfDir> <query> [warm=1]"
   */
 object JobTrace {
@@ -40,6 +44,10 @@ object JobTrace {
     val owner = scala.collection.concurrent.TrieMap.empty[Int, Long]
     // execution id -> (start, end, owning engine frame)
     val execs = scala.collection.concurrent.TrieMap.empty[Long, (Double, Double, String)]
+    // execution id -> janino (compilations, compile nanos): the counters
+    // at its start while it runs, then the counts inside it
+    val compileAt = scala.collection.concurrent.TrieMap.empty[Long, (Long, Long)]
+    val compiledIn = scala.collection.concurrent.TrieMap.empty[Long, (Long, Long)]
     val t0 = System.nanoTime()
     def now: Double = (System.nanoTime() - t0) / 1e9
     val listener = new SparkListener {
@@ -69,9 +77,14 @@ object JobTrace {
             .find(l => l.startsWith("graft.") && !l.startsWith("graft.Caches"))
             .getOrElse(x.description)
           execs.put(x.executionId, (now, Double.NaN, s"${x.description} <- $frame"))
+          compileAt.put(x.executionId, compiled)
         case x: SparkListenerSQLExecutionEnd =>
           execs.get(x.executionId).foreach { case (st, _, site) =>
             execs.put(x.executionId, (st, now, site))
+          }
+          compileAt.remove(x.executionId).foreach { case (n0, ns0) =>
+            val (n, ns) = compiled
+            compiledIn.put(x.executionId, (n - n0, ns - ns0))
           }
         case _ =>
       }
@@ -82,11 +95,13 @@ object JobTrace {
     // Catalyst passes) from the ACTION (final-plan analysis + AQE
     // stage execution), so the driver gap attributes to one of them
     // instead of reading as one opaque number
+    val (n0, ns0) = compiled
     val tq0 = System.nanoTime()
     val frame = graft.SparkEntry.queries(name)(spark, sfDir)
     val tCon = (System.nanoTime() - tq0) / 1e9
     frame.write.format("noop").mode("overwrite").save()
     val total = (System.nanoTime() - tq0) / 1e9
+    val (n1, ns1) = compiled
     // the listener bus is async with no public drain hook: poll until
     // the row count is stable across two 300 ms windows (a fixed sleep
     // silently dropped late job-end events on loaded hosts, and the
@@ -121,11 +136,13 @@ object JobTrace {
           "jobs outside any SQL execution")
       })
       val span = if (en.isNaN) Double.NaN else en - st
+      val (nc, nsc) = compiledIn.getOrElse(id, (0L, 0L))
       println(String.format(fmt,
-        "[exec] %4d  at %7.2fs  span %6.2fs  %3d jobs  gap %6.2fs  %s",
+        "[exec] %4d  at %7.2fs  span %6.2fs  %3d jobs  gap %6.2fs  " +
+          "%2d compiles %5.0f ms  %s",
         Long.box(id), Double.box(st), Double.box(span), Int.box(jobs.length),
         Double.box(span - union(jobs.map { case (_, at, dur, _) => (at, at + dur) })),
-        site))
+        Long.box(nc), Double.box(nsc / 1e6), site))
     }
     // the gap is total MINUS the union of job [start, end) intervals,
     // not minus the duration sum: Spark schedules broadcast-exchange
@@ -135,10 +152,12 @@ object JobTrace {
     val covered = union(finalRows.map { case (_, at, dur, _) => (at, at + dur) })
     println(String.format(fmt,
       "[jobtrace] %s total %.2fs, %d jobs, job-sum %.2fs, " +
-        "covered %.2fs (gap %.2fs = driver/plan time)",
+        "covered %.2fs (gap %.2fs = driver/plan time), " +
+        "%d compiles in %.0f ms",
       name, Double.box(total), Int.box(finalRows.length),
       Double.box(finalRows.map(_._3).sum), Double.box(covered),
-      Double.box(total - covered)))
+      Double.box(total - covered), Long.box(n1 - n0),
+      Double.box((ns1 - ns0) / 1e6)))
     // covered time inside the construction window alone: the part of
     // tCon that was scheduled work (the eager pins' jobs), so
     // (tCon - coveredCon) is pure construction-side Catalyst/driver
@@ -153,6 +172,13 @@ object JobTrace {
       Double.box((total - tCon) - (covered - coveredCon))))
     spark.stop()
   }
+
+  /** janino compilations in this JVM so far (the driver's and, on a
+    * local master, the tasks'): count and total compile nanoseconds. An
+    * execution's share is read when the listener sees its events, so a
+    * compile running across an edge may count in its neighbour. */
+  private def compiled: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   /** Length of the union of [start, end) intervals. */
   private def union(iv: Seq[(Double, Double)]): Double = {
