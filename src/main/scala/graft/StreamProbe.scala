@@ -93,16 +93,8 @@ object StreamProbe {
     // a maintainer that rewrites an accumulated dim per wave shows
     // wave_bytes growing ∝ history; a delta-slice maintainer stays
     // flat (≈ batch + touched rows)
-    def duDir(path: String): Long = {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p)) 0L
-      else {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-      }
-    }
+    def duDir(path: String): Long =
+      graft.streaming.VersionedStore(path, spark).bytes(path)
 
     // bytes READ per wave (r18, the wave_bytes sibling): task input
     // metrics summed by a listener — a maintainer that re-scans an

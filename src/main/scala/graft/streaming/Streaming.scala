@@ -189,124 +189,32 @@ object Streaming {
     * scoring with it reproduces batch x45 bit-exactly (StreamingSpec,
     * 2-batch replayed split).
     *
-    * Exactly-once without a transactional store: batch b merges the
-    * newest COMMITTED version with id < b (never the dir it is itself
-    * writing), writes `v<b>` once, and readers pick the newest version
-    * with a `_SUCCESS` marker. A replay of an already-committed batch
-    * is a NO-OP (skip on the marker) rather than an idempotent
-    * rewrite: mode-overwrite would delete the committed dir (marker
-    * included) before rewriting it, and a concurrent [[unigramModel]]
-    * reader that already resolved that version would read a
-    * disappearing parquet dir — the torn-version hazard the other
-    * updaters in this file document. The tokenizer and count shapes
-    * are shared with batch x45 ([[graft.ops.TextAnalysis
-    * .unigramWords]]/`unigramCounts`) so the two trainers cannot
-    * drift. */
-  def unigramModelUpdate(dimDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (new java.io.File(s"$dimDir/v$batchId/_SUCCESS").isFile) return
-    val spark = batch.sparkSession
-    val counts = graft.ops.TextAnalysis.unigramCounts(
-      graft.ops.TextAnalysis.unigramWords(batch))
-    val prior = modelVersions(dimDir).filter(_ < batchId)
-    requirePredecessorState(dimDir, batchId, prior)
-    val merged =
-      if (prior.isEmpty) counts
-      else spark.read.parquet(s"$dimDir/v${prior.max}")
-        .union(counts).groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
-    merged.write.mode("overwrite").parquet(s"$dimDir/v$batchId")
-  }
-
-  /** The fresh-DIM direction of the lifecycle guard: a resumed batch
-    * (id ≥ 1) whose predecessor version is gone means the dim dir was
-    * emptied or swapped mid-lineage — merging would silently serve a
-    * "model"/blocklist containing only this batch's data. Batch-0
-    * retries have no predecessor and pass (offsets are logged before
-    * the batch function runs, so a crash mid-batch-0 legitimately
-    * resumes onto an empty dim). [[requireSharedLifecycle]] catches the
-    * fresh-CHECKPOINT direction at start-up. */
-  private def requirePredecessorState(dimDir: String, batchId: Long,
-      prior: Seq[Long]): Unit =
-    require(batchId == 0 || prior.nonEmpty,
-      s"batch $batchId resumed but $dimDir holds no prior committed " +
-        "version — dim dir and checkpoint have diverged")
-
-  /** A dim dir and its stream checkpoint share ONE lifecycle: version
-    * ids are micro-batch ids, which restart at 0 under a fresh
-    * checkpoint — resuming into a dimDir populated by a PREVIOUS
-    * lineage would silently merge/serve the old run's state (its max
-    * version can shadow the new run's). Refuse the mismatch up front. */
-  private def requireSharedLifecycle(dimDir: String, ckptDir: String): Unit = {
-    val freshCkpt = !java.nio.file.Files.exists(
-      java.nio.file.Paths.get(ckptDir, "offsets"))
-    require(!(freshCkpt && modelVersions(dimDir).nonEmpty),
-      s"$dimDir already holds versions from another stream lineage but " +
-        s"checkpoint $ckptDir is fresh — use a new dim dir (or the old " +
-        "checkpoint) so batch ids and versions stay aligned")
-  }
-
-  /** The output-slice direction of the lifecycle guard — ONE
-    * definition for every builder that emits per-batch `b<k>` slices
-    * (band pairs, span rewrites, decontam rewrites, ledger rows):
-    * batch ids restart at 0 under a fresh checkpoint, and a longer
-    * dead lineage's extra `b<k>` slices would survive the new run's
-    * overwrites and be silently unioned by the committed-slice
-    * readers. Refuse the mismatch up front, like
-    * [[requireSharedLifecycle]] does for the dim direction. */
-  private def requireSliceLifecycle(sliceDir: String, ckptDir: String,
-      what: String): Unit = {
-    val freshCkpt = !java.nio.file.Files.exists(
-      java.nio.file.Paths.get(ckptDir, "offsets"))
-    val staleSlices = Option(new java.io.File(sliceDir).listFiles())
-      .toSeq.flatten
-      .exists(f => f.isDirectory && f.getName.matches("b\\d+"))
-    require(!(freshCkpt && staleSlices),
-      s"$sliceDir already holds $what slices from another stream " +
-        s"lineage but checkpoint $ckptDir is fresh — use a new dir " +
-        "(or the old checkpoint) so batch ids and slices stay aligned")
-  }
-
-  /** Union of every COMMITTED per-batch `b<k>` slice under
-    * `slicesDir` — ONE definition of the reader gate all streamed-
-    * output accessors share: a slice counts iff `markerFor(k)` exists
-    * (the batch's single commit point; updaters write slices first,
-    * marker last, so a crash in that window leaves the slice
-    * invisible until the replay re-commits it), `empty` before any
-    * commit. */
-  private def committedSlices(spark: SparkSession, slicesDir: String,
-      markerFor: String => java.nio.file.Path)(
-      empty: => DataFrame): DataFrame = {
-    val slices = Option(new java.io.File(slicesDir).listFiles())
-      .toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
-      .filter(f => java.nio.file.Files.isRegularFile(
-        markerFor(f.getName.drop(1))))
-      .map(_.getPath)
-    if (slices.isEmpty) empty else spark.read.parquet(slices: _*)
-  }
-
-  /** Committed model versions (dirs `v<batchId>` carrying `_SUCCESS`). */
-  private def modelVersions(dimDir: String): Seq[Long] = {
-    val d = new java.io.File(dimDir)
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getName.drop(1).toLong)
-  }
+    * Batch b merges the newest committed version below b into `v<b>`;
+    * readers take the newest committed version. Commit protocol:
+    * [[VersionedStore]]. The tokenizer and count shapes are shared with
+    * batch x45 ([[graft.ops.TextAnalysis.unigramWords]]/`unigramCounts`)
+    * so the two trainers cannot drift. */
+  def unigramModelUpdate(dimDir: String)(batch: DataFrame, batchId: Long): Unit =
+    VersionedStore(dimDir, batch.sparkSession).wave(batchId) { prior =>
+      val counts = graft.ops.TextAnalysis.unigramCounts(
+        graft.ops.TextAnalysis.unigramWords(batch))
+      val merged =
+        if (prior.isEmpty) counts
+        else batch.sparkSession.read.parquet(s"$dimDir/v${prior.max}")
+          .union(counts).groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
+      merged.write.mode("overwrite").parquet(s"$dimDir/v$batchId")
+    }
 
   /** The newest committed incremental model, or None before batch 0. */
   def unigramModel(spark: SparkSession, dimDir: String): Option[DataFrame] =
-    modelVersions(dimDir) match {
-      case Seq() => None
-      case vs    => Some(spark.read.parquet(s"$dimDir/v${vs.max}"))
-    }
+    VersionedStore(dimDir, spark).versions.lastOption
+      .map(v => spark.read.parquet(s"$dimDir/v$v"))
 
   /** Run the incremental trainer over a documents stream to completion
     * (AvailableNow over the staged landing dir). */
   def trainUnigramModel(docs: DataFrame, dimDir: String,
       ckptDir: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
-    requireSharedLifecycle(dimDir, ckptDir)
+    VersionedStore(dimDir, docs.sparkSession).startLineage(ckptDir)
     runAvailableNow(docs, ckptDir)(
       _.foreachBatch(unigramModelUpdate(dimDir) _))
   }
@@ -322,65 +230,51 @@ object Streaming {
     * regardless of micro-batch boundaries, arrival order, or replays —
     * a stronger streaming ≡ batch claim than set equality, and
     * StreamingSpec asserts it at the byte level. Same versioned-dir
-    * exactly-once shape as [[unigramModelUpdate]]. */
+    * shape as [[unigramModelUpdate]]: `sketch.bin` is written before the
+    * marker and a committed replay is a no-op, so no reader sees a
+    * half-written sketch under a standing `_SUCCESS`. */
   def blocklistUpdate(dimDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    val bytes = graft.ops.Dedup.bloomSketchOf(batch)
-    val prior = modelVersions(dimDir).filter(_ < batchId)
-    requirePredecessorState(dimDir, batchId, prior)
-    // an empty micro-batch still COMMITS (an empty sketch / the carried
-    // prior): every processed batch id must leave a version behind, or
-    // the predecessor-state guard above couldn't tell "batch was empty"
-    // from "accumulated state was lost"
-    def emptySketch: Array[Byte] = {
-      val bf = org.apache.spark.util.sketch.BloomFilter.create(
-        graft.ops.Dedup.BloomExpectedItems, graft.ops.Dedup.BloomNumBits)
+    import org.apache.spark.util.sketch.BloomFilter
+    val store = VersionedStore(dimDir, batch.sparkSession)
+    def bytesOf(bf: BloomFilter): Array[Byte] = {
       val out = new java.io.ByteArrayOutputStream()
       bf.writeTo(out)
       out.toByteArray
     }
-    val merged = (Option(bytes), prior) match {
-      case (None, Seq())   => emptySketch
-      case (None, ps)      => Files.readAllBytes(
-        Paths.get(s"$dimDir/v${ps.max}/sketch.bin"))
-      case (Some(b), Seq()) => b
-      case (Some(b), ps)   =>
-        import org.apache.spark.util.sketch.BloomFilter
-        val acc = BloomFilter.readFrom(new java.io.ByteArrayInputStream(
-          Files.readAllBytes(Paths.get(s"$dimDir/v${ps.max}/sketch.bin"))))
-        acc.mergeInPlace(BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
-        val out = new java.io.ByteArrayOutputStream()
-        acc.writeTo(out)
-        out.toByteArray
+    store.wave(batchId) { prior =>
+      val bytes = graft.ops.Dedup.bloomSketchOf(batch)
+      def priorSketch = store.readBytes(s"$dimDir/v${prior.max}/sketch.bin")
+      // an empty micro-batch still COMMITS (an empty sketch / the carried
+      // prior): every processed batch id must leave a version behind, or
+      // the predecessor guard couldn't tell "batch was empty" from
+      // "accumulated state was lost"
+      val merged = (Option(bytes), prior) match {
+        case (None, Seq())   => bytesOf(BloomFilter.create(
+          graft.ops.Dedup.BloomExpectedItems, graft.ops.Dedup.BloomNumBits))
+        case (None, _)       => priorSketch
+        case (Some(b), Seq()) => b
+        case (Some(b), _)    =>
+          val acc = BloomFilter.readFrom(
+            new java.io.ByteArrayInputStream(priorSketch))
+          acc.mergeInPlace(
+            BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
+          bytesOf(acc)
+      }
+      store.writeBytes(s"$dimDir/v$batchId/sketch.bin", merged)
     }
-    val vdir = Paths.get(s"$dimDir/v$batchId")
-    Files.createDirectories(vdir)
-    // commit via temp + atomic rename: a retried already-committed batch
-    // must never truncate-and-rewrite sketch.bin in place while the prior
-    // _SUCCESS still stands — a concurrent blocklist() reader could
-    // observe a half-written sketch. After the move, the committed bytes
-    // are either the old complete sketch or the new identical one.
-    val tmp = vdir.resolve("sketch.bin.tmp")
-    Files.write(tmp, merged)
-    Files.move(tmp, vdir.resolve("sketch.bin"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    Files.write(vdir.resolve("_SUCCESS"), Array.emptyByteArray) // commit marker
   }
 
   /** The newest committed blocklist sketch, or None before batch 0. */
-  def blocklist(dimDir: String): Option[Array[Byte]] =
-    modelVersions(dimDir) match {
-      case Seq() => None
-      case vs    => Some(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dimDir/v${vs.max}/sketch.bin")))
-    }
+  def blocklist(dimDir: String): Option[Array[Byte]] = {
+    val store = VersionedStore(dimDir)
+    store.versions.lastOption
+      .map(v => store.readBytes(s"$dimDir/v$v/sketch.bin"))
+  }
 
   /** Run the incremental blocklist builder over a benchmark-doc stream
     * to completion (AvailableNow). */
   def buildBlocklist(docs: DataFrame, dimDir: String, ckptDir: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
-    requireSharedLifecycle(dimDir, ckptDir)
+    VersionedStore(dimDir, docs.sparkSession).startLineage(ckptDir)
     runAvailableNow(docs, ckptDir)(_.foreachBatch(blocklistUpdate(dimDir) _))
   }
 
@@ -403,77 +297,51 @@ object Streaming {
     * batch), the band index is APPEND-ONLY: versions are disjoint batch
     * slices and the index is their union — per-batch write cost scales
     * with the batch, not the accumulated history, which is what makes
-    * the pattern sustainable on an unbounded stream. The READ side is
-    * bounded by [[compactBandIndex]] (r19): probes stand on the newest
-    * compacted store + O(K) tail slices, and the shingle verify prunes
-    * to the candidates' kb_bucket partitions.
-    * Same versioned-dir exactly-once shape as [[unigramModelUpdate]]:
-    * a retried batch recomputes byte-identical slices and pairs from
-    * inputs a retry cannot have touched, and readers only see versions
-    * with a `_SUCCESS` marker. StreamingSpec replays a 2-wave split
-    * (history wave, then increment wave) and proves the streamed pair
-    * set ≡ batch x18's on the same split. */
+    * the pattern sustainable on an unbounded stream. Probes read the
+    * read set ([[compactBandIndex]] tiers + O(K) tail slices), and the
+    * shingle verify prunes to the candidates' kb_bucket partitions.
+    * Commit protocol: [[VersionedStore]]. StreamingSpec replays a
+    * 2-wave split (history wave, then increment wave) and proves the
+    * streamed pair set ≡ batch x18's on the same split. */
   def bandIndexUpdate(dimDir: String, pairsDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    val spark = batch.sparkSession
-    // replay of an ALREADY-COMMITTED batch (foreachBatch commits its
-    // offsets before the epoch is logged, so a crash in that window
-    // replays the batch): the marker is written last, so its presence
-    // means docs, bands AND the pair slice are all fully on disk — and
-    // a recompute is byte-identical by construction. Rewriting in
-    // place would tear the version down under a concurrent reader
-    // (mode overwrite deletes first), the exact half-committed-read
-    // hazard blocklistUpdate avoids via atomic rename. Skip instead.
-    if (Files.isRegularFile(Paths.get(s"$dimDir/v$batchId/_SUCCESS"))) return
-    val prior = modelVersions(dimDir).filter(_ < batchId)
-    requirePredecessorState(dimDir, batchId, prior)
-    val docs = graft.ops.Dedup.shingledOf(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted like docs: bands feeds the cross-history probe AND its
-    // own slice write — separate actions, so without the persist the
-    // 32-hash signature aggregation runs twice per micro-batch
-    // (exchange reuse cannot span write jobs; same fix as
-    // datasheetUpdate)
-    val bands = graft.ops.Dedup.bandsOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs =
-      if (prior.isEmpty)
-        // batch 0 probes an empty index — commit an empty pair slice so
-        // the pairs dir mirrors processed batches (same reasoning as the
-        // blocklist's empty-batch commit)
-        spark.emptyDataFrame
-          .select(lit(0L).as("inc_id"), lit(0L).as("hist_id"),
-            lit(0.0).as("jaccard")).limit(0)
-      else {
-        // history = newest compaction store + O(K) tail slices (r19):
-        // pre-compaction, every wave re-opened ALL prior slices — at
-        // 32 shuffle files per slice the per-wave footer/listing read
-        // alone grew ∝ wave count (measured ~91 KB/wave on the r19
-        // probe corpus, the dominant residual slope after the
-        // keep-best store bucketing). Falls back to the all-slices
-        // scan when no compaction exists, correctness unchanged.
-        val histBands = bandHistBands(spark, dimDir, prior)
-        val candLazy = bands.as("a").join(histBands.as("b"),
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
-        val (cand, hist) = bandVerifyInputs(spark, dimDir, prior, candLazy)
-        graft.ops.Dedup.verifyJaccard(cand, docs, hist)
-          .select(col("id_a").as("inc_id"), col("id_b").as("hist_id"),
-            col("jaccard"))
-      }
-    pairs.write.mode("overwrite").parquet(s"$pairsDir/b$batchId")
-    // commit this batch's index slice LAST, marker after both writes:
-    // a crash between the slice writes leaves no _SUCCESS, so readers
-    // and resumed lineages never see a half-committed version
-    docs.write.mode("overwrite").parquet(s"$dimDir/v$batchId/docs")
-    bands.write.mode("overwrite").parquet(s"$dimDir/v$batchId/bands")
-    bands.unpersist(blocking = false)
-    docs.unpersist(blocking = false)
-    Files.write(Paths.get(s"$dimDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    VersionedStore(dimDir, batch.sparkSession).wave(batchId) { prior =>
+      val spark = batch.sparkSession
+      val docs = graft.ops.Dedup.shingledOf(batch)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // persisted like docs: bands feeds the cross-history probe AND its
+      // own slice write — separate actions, so without the persist the
+      // 32-hash signature aggregation runs twice per micro-batch
+      // (exchange reuse cannot span write jobs; same fix as
+      // datasheetUpdate)
+      val bands = graft.ops.Dedup.bandsOf(docs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pairs =
+        if (prior.isEmpty)
+          // batch 0 probes an empty index — commit an empty pair slice so
+          // the pairs dir mirrors processed batches (same reasoning as the
+          // blocklist's empty-batch commit)
+          spark.emptyDataFrame
+            .select(lit(0L).as("inc_id"), lit(0L).as("hist_id"),
+              lit(0.0).as("jaccard")).limit(0)
+        else {
+          // history = the read set (manifest tiers + O(K) tail slices)
+          val histBands = bandHistBands(spark, dimDir, prior)
+          val candLazy = bands.as("a").join(histBands.as("b"),
+              col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
+            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+            .distinct()
+          val (cand, hist) = bandVerifyInputs(spark, dimDir, prior, candLazy)
+          graft.ops.Dedup.verifyJaccard(cand, docs, hist)
+            .select(col("id_a").as("inc_id"), col("id_b").as("hist_id"),
+              col("jaccard"))
+        }
+      pairs.write.mode("overwrite").parquet(s"$pairsDir/b$batchId")
+      docs.write.mode("overwrite").parquet(s"$dimDir/v$batchId/docs")
+      bands.write.mode("overwrite").parquet(s"$dimDir/v$batchId/bands")
+      bands.unpersist(blocking = false)
+      docs.unpersist(blocking = false)
+    }
 
   /** x70 streaming sibling — incremental SUBSTRING dedup: the
     * frequent-span problem at ingest. Each arriving batch is rewritten
@@ -497,56 +365,45 @@ object Streaming {
     * StreamingSpec pins exact equality on the fixture's range-split
     * waves and the subset guarantee is structural. */
   def spanIndexUpdate(dimDir: String, outDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    val spark = batch.sparkSession
-    // committed replay is a no-op (same reasoning as bandIndexUpdate)
-    if (Files.isRegularFile(Paths.get(s"$dimDir/v$batchId/_SUCCESS"))) return
-    val prior = modelVersions(dimDir).filter(_ < batchId)
-    requirePredecessorState(dimDir, batchId, prior)
-    val docs = batch.select(col("doc_id"), col("text"))
-      .withColumn("w", split(col("text"), " "))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val g = graft.ops.Dedup.gramsOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val histHits =
-      if (prior.isEmpty)
-        g.select(col("doc_id"), col("pos")).limit(0)
-      else {
-        // history = tiered manifest stores + O(K) tail slices (r19):
-        // the pre-compaction form re-opened every prior slice per wave
-        val hist = spark.read.parquet(
-          unionStorePaths(dimDir, prior, "spans"): _*)
-        g.join(hist, Seq("ng"), "left_semi").select(col("doc_id"), col("pos"))
-      }
-    val key = graft.ops.Dedup.occKeyOf(col("doc_id"), col("pos"))
-    val batchStats = g.groupBy(col("ng"))
-      .agg(countDistinct(col("doc_id")).as("nd"), min(key).as("first_key"))
-      .filter(col("nd") >= 2)
-    val batchCuts = g.join(batchStats, "ng")
-      .filter(key =!= col("first_key"))
-      .select(col("doc_id"), col("pos"))
-    val flagged = histHits.union(batchCuts).distinct()
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("pos"))).as("fs"))
-    graft.ops.Dedup.rewriteFromFlags(docs, flagged)
-      .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-    // commit the span slice LAST, marker after both writes — readers
-    // gate output slices on the version marker (streamedRewrites)
-    g.select(col("ng")).distinct()
-      .write.mode("overwrite").parquet(s"$dimDir/v$batchId/spans")
-    g.unpersist(blocking = false)
-    docs.unpersist(blocking = false)
-    Files.write(Paths.get(s"$dimDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    VersionedStore(dimDir, batch.sparkSession).wave(batchId) { prior =>
+      val spark = batch.sparkSession
+      val docs = batch.select(col("doc_id"), col("text"))
+        .withColumn("w", split(col("text"), " "))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val g = graft.ops.Dedup.gramsOf(docs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val histHits =
+        if (prior.isEmpty)
+          g.select(col("doc_id"), col("pos")).limit(0)
+        else {
+          val hist = spark.read.parquet(
+            unionStorePaths(spark, dimDir, prior, "spans"): _*)
+          g.join(hist, Seq("ng"), "left_semi").select(col("doc_id"), col("pos"))
+        }
+      val key = graft.ops.Dedup.occKeyOf(col("doc_id"), col("pos"))
+      val batchStats = g.groupBy(col("ng"))
+        .agg(countDistinct(col("doc_id")).as("nd"), min(key).as("first_key"))
+        .filter(col("nd") >= 2)
+      val batchCuts = g.join(batchStats, "ng")
+        .filter(key =!= col("first_key"))
+        .select(col("doc_id"), col("pos"))
+      val flagged = histHits.union(batchCuts).distinct()
+        .groupBy(col("doc_id"))
+        .agg(sort_array(collect_set(col("pos"))).as("fs"))
+      graft.ops.Dedup.rewriteFromFlags(docs, flagged)
+        .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+      g.select(col("ng")).distinct()
+        .write.mode("overwrite").parquet(s"$dimDir/v$batchId/spans")
+      g.unpersist(blocking = false)
+      docs.unpersist(blocking = false)
+    }
 
   /** Compact a span-index lineage at its newest committed version —
     * [[compactUnionStore]] on the span direction (the probe is a
     * left_semi on uniform span hashes, so arrival-range buckets
     * cannot prune it; the wins are the deduplicated size-tiered
-    * stores and O(log W + K) dirs per probe instead of O(waves)).
-    * Idempotent; torn dirs invisible without the manifest marker. */
+    * stores and O(log W + K) dirs per probe instead of O(waves)). */
   def compactSpanIndex(spark: SparkSession, dimDir: String): Unit =
     compactUnionStore(spark, dimDir, "spans", Seq("ng"),
       distinctStore = true)
@@ -561,14 +418,17 @@ object Streaming {
       compactSpanIndex(batch.sparkSession, dimDir)
   }
 
+  /** The union of committed slices `paths`, or `empty` before any. */
+  private def slicesOr(spark: SparkSession, paths: Seq[String])(
+      empty: => DataFrame): DataFrame =
+    if (paths.isEmpty) empty else spark.read.parquet(paths: _*)
+
   /** Every committed batch's rewritten documents (the stream's output
-    * corpus so far). Slices gate on the `v<k>/_SUCCESS` marker exactly
-    * like [[streamedNearDupPairs]] — an output slice whose batch never
-    * committed is invisible. */
+    * corpus so far): the span lineage's committed `b<k>` slices. */
   def streamedRewrites(spark: SparkSession, dimDir: String,
       outDir: String): DataFrame =
-    committedSlices(spark, outDir,
-        k => java.nio.file.Paths.get(s"$dimDir/v$k/_SUCCESS")) {
+    slicesOr(spark,
+        VersionedStore(dimDir, spark).committedSlices(outDir)) {
       spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0L).as("n_words"),
           lit(0L).as("n_dup_occurrences"), lit(0L).as("n_removed"),
@@ -585,11 +445,9 @@ object Streaming {
     * starts, rewrite (shared [[graft.ops.Dedup.rewriteFromFlags]]),
     * write the slice. Streamed output therefore equals batch x76
     * EXACTLY on ANY wave split (no keep-first cross-batch coupling),
-    * and no version chain is needed: the parquet committer's _SUCCESS
-    * inside each `b<k>` slice is the single commit point (x70's
-    * separate `v<k>` marker exists only to make its TWO per-batch
-    * artifacts atomic — here there is one), and a foreachBatch replay
-    * of a torn slice overwrites it byte-identically.
+    * and no version chain is needed: the slice is the batch's only
+    * artifact, so its own `_SUCCESS` is the commit point
+    * ([[VersionedStore]]).
     *
     * At 100 TB: per-batch cost is batch grams × one broadcast-dim
     * probe — the x18 band-index property (work ∝ increment, never ∝
@@ -607,8 +465,8 @@ object Streaming {
     * _SUCCESS. */
   def decontamRewriteUpdate(dimDir: String, outDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    if (Files.isRegularFile(Paths.get(s"$outDir/b$batchId/_SUCCESS"))) return
+    if (VersionedStore(outDir, batch.sparkSession)
+        .exists(s"$outDir/b$batchId/_SUCCESS")) return
     val spark = batch.sparkSession
     // bench spans are tiny relative to any training corpus (x47's
     // broadcast reasoning, same as batch x76's core)
@@ -630,28 +488,22 @@ object Streaming {
 
   /** Run the incremental decontamination rewrite to completion
     * (AvailableNow). The bench dim must already exist ([[benchSpanDim]]
-    * — it is lifecycle-independent precisely because it is static);
-    * the fresh-checkpoint-vs-stale-slices guard mirrors
-    * [[buildSpanIndex]]. */
+    * — it is lifecycle-independent precisely because it is static). */
   def buildDecontamRewrites(train: DataFrame, dimDir: String,
       outDir: String, ckptDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    require(Files.exists(Paths.get(s"$dimDir/spans")),
+    val spark = train.sparkSession
+    require(VersionedStore(dimDir, spark).exists(s"$dimDir/spans"),
       s"bench span dim missing under $dimDir — run benchSpanDim first")
-    Files.createDirectories(Paths.get(outDir))
-    requireSliceLifecycle(outDir, ckptDir, "rewrite")
+    VersionedStore(outDir, spark).startSlices(ckptDir, "rewrite")
     runAvailableNow(train, ckptDir)(
       _.foreachBatch(decontamRewriteUpdate(dimDir, outDir) _))
   }
 
-  /** Every committed batch's decontaminated documents. A slice is
-    * committed iff its own parquet _SUCCESS exists (see
-    * [[decontamRewriteUpdate]] — the slice is this sibling's single
-    * per-batch artifact). */
+  /** Every committed batch's decontaminated documents: the `b<k>`
+    * slices carrying their own `_SUCCESS`. */
   def streamedDecontamRewrites(spark: SparkSession,
       outDir: String): DataFrame =
-    committedSlices(spark, outDir,
-        k => java.nio.file.Paths.get(s"$outDir/b$k/_SUCCESS")) {
+    slicesOr(spark, VersionedStore(outDir, spark).selfCommittedSlices) {
       spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0L).as("n_words"),
           lit(0L).as("n_contam_occurrences"), lit(0L).as("n_removed"),
@@ -671,63 +523,55 @@ object Streaming {
     *  - shas new to history take their batch-local min admitted id as
     *    keeper; that slice is appended to the dim.
     *
-    * Two artifacts per batch (ledger slice + dim slice) → the x70
-    * marker discipline: both writes, THEN the `v<k>/_SUCCESS` marker;
-    * readers gate on the marker; committed replay is a no-op. */
+    * Two artifacts per batch (ledger slice `b<k>` + dim slice), both
+    * written before the version marker ([[VersionedStore]]). */
   def ledgerUpdate(dimDir: String, outDir: String, weights: Array[Long])(
-      batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    if (Files.isRegularFile(Paths.get(s"$dimDir/v$batchId/_SUCCESS"))) return
-    val spark = batch.sparkSession
-    graft.functions.CustomExprs.register(spark)
-    val prior = modelVersions(dimDir).filter(_ < batchId)
-    requirePredecessorState(dimDir, batchId, prior)
-    val scored = batch.select(col("doc_id"), col("text"))
-      .withColumn("w0", split(col("text"), " "))
-      .withColumn("feat_sum_micro",
-        graft.ops.TextAnalysis.classifierScoreMicro(col("w0"), weights))
-      .withColumn("h", sha2(col("text"), 256))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hist =
-      if (prior.isEmpty)
-        scored.select(col("h"), col("doc_id").as("hist_keeper")).limit(0)
-      else
-        // history = tiered manifest stores + O(K) tail slices (r19):
-        // the pre-compaction form re-opened every prior shas slice
-        spark.read.parquet(unionStorePaths(dimDir, prior, "shas"): _*)
-          // by NAME — the slice is written via groupBy/agg/join, whose
-          // column order is an implementation detail a positional
-          // rename would silently mislabel
-          .select(col("h"), col("keeper").as("hist_keeper"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-    val ledger = scored
-      .withColumn("batch_keeper",
-        min(when(col("feat_sum_micro") > 0, col("doc_id"))).over(w))
-      .join(hist, Seq("h"), "left")
-      .withColumn("keeper", coalesce(col("hist_keeper"), col("batch_keeper")))
-      .select(col("doc_id"), col("feat_sum_micro"),
-        when(col("feat_sum_micro") <= 0, lit("classifier"))
-          .when(col("doc_id") =!= col("keeper"), lit("exact_dup"))
-          .otherwise(lit("kept")).as("stage"),
-        when(col("feat_sum_micro") <= 0, lit(null).cast("long"))
-          .otherwise(col("keeper")).as("keeper_id"))
-    ledger.write.mode("overwrite").parquet(s"$outDir/b$batchId")
-    // dim slice: shas NEW to history, keyed by their batch keeper
-    scored.filter(col("feat_sum_micro") > 0)
-      .groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
-      .join(hist, Seq("h"), "left_anti")
-      .write.mode("overwrite").parquet(s"$dimDir/v$batchId/shas")
-    scored.unpersist(blocking = false)
-    Files.write(Paths.get(s"$dimDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    VersionedStore(dimDir, batch.sparkSession).wave(batchId) { prior =>
+      val spark = batch.sparkSession
+      graft.functions.CustomExprs.register(spark)
+      val scored = batch.select(col("doc_id"), col("text"))
+        .withColumn("w0", split(col("text"), " "))
+        .withColumn("feat_sum_micro",
+          graft.ops.TextAnalysis.classifierScoreMicro(col("w0"), weights))
+        .withColumn("h", sha2(col("text"), 256))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hist =
+        if (prior.isEmpty)
+          scored.select(col("h"), col("doc_id").as("hist_keeper")).limit(0)
+        else
+          spark.read.parquet(unionStorePaths(spark, dimDir, prior, "shas"): _*)
+            // by NAME — the slice is written via groupBy/agg/join, whose
+            // column order is an implementation detail a positional
+            // rename would silently mislabel
+            .select(col("h"), col("keeper").as("hist_keeper"))
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
+      val ledger = scored
+        .withColumn("batch_keeper",
+          min(when(col("feat_sum_micro") > 0, col("doc_id"))).over(w))
+        .join(hist, Seq("h"), "left")
+        .withColumn("keeper", coalesce(col("hist_keeper"), col("batch_keeper")))
+        .select(col("doc_id"), col("feat_sum_micro"),
+          when(col("feat_sum_micro") <= 0, lit("classifier"))
+            .when(col("doc_id") =!= col("keeper"), lit("exact_dup"))
+            .otherwise(lit("kept")).as("stage"),
+          when(col("feat_sum_micro") <= 0, lit(null).cast("long"))
+            .otherwise(col("keeper")).as("keeper_id"))
+      ledger.write.mode("overwrite").parquet(s"$outDir/b$batchId")
+      // dim slice: shas NEW to history, keyed by their batch keeper
+      scored.filter(col("feat_sum_micro") > 0)
+        .groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
+        .join(hist, Seq("h"), "left_anti")
+        .write.mode("overwrite").parquet(s"$dimDir/v$batchId/shas")
+      scored.unpersist(blocking = false)
+    }
 
-  /** Every committed batch's ledger rows, gated on the version marker
-    * like [[streamedRewrites]]. */
+  /** Every committed batch's ledger rows, gated like
+    * [[streamedRewrites]]. */
   def streamedLedger(spark: SparkSession, dimDir: String,
       outDir: String): DataFrame =
-    committedSlices(spark, outDir,
-        k => java.nio.file.Paths.get(s"$dimDir/v$k/_SUCCESS")) {
+    slicesOr(spark,
+        VersionedStore(dimDir, spark).committedSlices(outDir)) {
       spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0L).as("feat_sum_micro"),
           lit("").as("stage"), lit(0L).as("keeper_id")).limit(0)
@@ -752,15 +596,12 @@ object Streaming {
       compactLedgerIndex(batch.sparkSession, dimDir)
   }
 
-  /** Run the incremental ledger to completion (AvailableNow); same
-    * lifecycle guards as [[buildSpanIndex]]. */
+  /** Run the incremental ledger to completion (AvailableNow). */
   def buildLedger(docs: DataFrame, dimDir: String, outDir: String,
       ckptDir: String, weights: Array[Long],
       compactEvery: Int = 8): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    requireSharedLifecycle(dimDir, ckptDir)
-    requireSliceLifecycle(outDir, ckptDir, "ledger")
+    VersionedStore(dimDir, docs.sparkSession).startLineage(ckptDir)
+    VersionedStore(outDir, docs.sparkSession).startSlices(ckptDir, "ledger")
     runAvailableNow(docs, ckptDir)(
       _.foreachBatch(ledgerMaintain(dimDir, outDir, weights, compactEvery) _))
   }
@@ -804,93 +645,84 @@ object Streaming {
     *    langs embedded (inc from the batch, hist from the stored
     *    slice), so the reader never joins back to the corpus.
     *
-    * Same versioned-dir exactly-once shape as [[unigramModelUpdate]]
-    * (merged hist/src rewritten per version; sh/bands/pairs append-only
-    * slices; `_SUCCESS` marker last; committed replay is a no-op). */
-  def datasheetUpdate(dimDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    if (Files.isRegularFile(Paths.get(s"$dimDir/v$batchId/_SUCCESS"))) return
-    val spark = batch.sparkSession
-    graft.functions.CustomExprs.register(spark)
-    val prior = modelVersions(dimDir).filter(_ < batchId)
-    requirePredecessorState(dimDir, batchId, prior)
-    val docs = batch.select(col("doc_id"), col("lang"), col("source"),
-        col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def merged(name: String, batchCounts: DataFrame,
-        keys: Seq[String]): DataFrame =
-      if (prior.isEmpty) batchCounts
-      else spark.read.parquet(s"$dimDir/v${prior.max}/$name")
-        .unionByName(batchCounts)
-        .groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt"))
-    val hist = merged("hist",
-      docs.select(col("lang"),
-          call_function("word_count", col("text")).cast("long")
-            .as("n_tokens"))
-        .groupBy("lang", "n_tokens").agg(count(lit(1)).as("cnt")),
-      Seq("lang", "n_tokens"))
-    val src = merged("src",
-      docs.groupBy("lang", "source").agg(count(lit(1)).as("cnt")),
-      Seq("lang", "source"))
-    // near-dup pairs: the SAME 8×4 banded index as batch x73's dup
-    // counter (ccLabels ← minhashLshPairs) — within-batch band
-    // self-join plus the cross-history band probe, both exact-verified
-    // from the stored shingle arrays (see the scaladoc above for why
-    // banding, not the exact inverted index, is the correct engine)
-    val sh = graft.ops.Dedup.shingledOf(docs)
-      .join(docs.select("doc_id", "lang"), "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted like sh: bands feeds the within self-join, the
-    // cross-history probe, AND its own slice write — three separate
-    // actions; without the persist the 32-hash signature aggregation
-    // re-runs per action (exchange reuse cannot span write jobs)
-    val bands = graft.ops.Dedup.bandsOf(sh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val langOf = docs.select(col("doc_id"), col("lang"))
-    val within = graft.ops.Dedup.verifyJaccard(
-        graft.ops.Dedup.bandSelfCandidates(bands), sh, sh)
-      .join(langOf.select(col("doc_id").as("id_a"), col("lang").as("lang_a")),
-        "id_a")
-      .join(langOf.select(col("doc_id").as("id_b"), col("lang").as("lang_b")),
-        "id_b")
-      .select("id_a", "lang_a", "id_b", "lang_b")
-    val pairs =
-      if (prior.isEmpty) within
-      else {
-        // history = newest compaction + O(K) tail slices, the verify
-        // pruned to the candidates' id_b buckets (r19) — the
-        // bandIndexUpdate machinery, SHARED so the two dup engines
-        // cannot drift. The pruned histSh also serves the lang_b
-        // join-back: verified pairs are ⊆ candidates, whose buckets
-        // the pruned frame includes by construction.
-        val histBands = bandHistBands(spark, dimDir, prior)
-        val candLazy = bands.as("a").join(histBands.as("b"),
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
-        val (cand, histSh) = bandVerifyInputs(spark, dimDir, prior,
-          candLazy, docsPart = "sh",
-          docsCols = Seq("doc_id", "sh", "nsh", "lang"))
-        val cross = graft.ops.Dedup.verifyJaccard(cand, sh, histSh)
-          .join(langOf.select(col("doc_id").as("id_a"),
-            col("lang").as("lang_a")), "id_a")
-          .join(histSh.select(col("doc_id").as("id_b"),
-            col("lang").as("lang_b")), "id_b")
-          .select("id_a", "lang_a", "id_b", "lang_b")
-        within.unionByName(cross)
-      }
-    // slices first, marker last (bandIndexUpdate's commit discipline)
-    hist.write.mode("overwrite").parquet(s"$dimDir/v$batchId/hist")
-    src.write.mode("overwrite").parquet(s"$dimDir/v$batchId/src")
-    pairs.write.mode("overwrite").parquet(s"$dimDir/v$batchId/pairs")
-    sh.write.mode("overwrite").parquet(s"$dimDir/v$batchId/sh")
-    bands.write.mode("overwrite").parquet(s"$dimDir/v$batchId/bands")
-    bands.unpersist(blocking = false)
-    sh.unpersist(blocking = false)
-    docs.unpersist(blocking = false)
-    Files.write(Paths.get(s"$dimDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
-  }
+    * Merged hist/src are rewritten per version; sh/bands/pairs are
+    * append-only slices ([[VersionedStore]]). */
+  def datasheetUpdate(dimDir: String)(batch: DataFrame, batchId: Long): Unit =
+    VersionedStore(dimDir, batch.sparkSession).wave(batchId) { prior =>
+      val spark = batch.sparkSession
+      graft.functions.CustomExprs.register(spark)
+      val docs = batch.select(col("doc_id"), col("lang"), col("source"),
+          col("text"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      def merged(name: String, batchCounts: DataFrame,
+          keys: Seq[String]): DataFrame =
+        if (prior.isEmpty) batchCounts
+        else spark.read.parquet(s"$dimDir/v${prior.max}/$name")
+          .unionByName(batchCounts)
+          .groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt"))
+      val hist = merged("hist",
+        docs.select(col("lang"),
+            call_function("word_count", col("text")).cast("long")
+              .as("n_tokens"))
+          .groupBy("lang", "n_tokens").agg(count(lit(1)).as("cnt")),
+        Seq("lang", "n_tokens"))
+      val src = merged("src",
+        docs.groupBy("lang", "source").agg(count(lit(1)).as("cnt")),
+        Seq("lang", "source"))
+      // near-dup pairs: the SAME 8×4 banded index as batch x73's dup
+      // counter (ccLabels ← minhashLshPairs) — within-batch band
+      // self-join plus the cross-history band probe, both exact-verified
+      // from the stored shingle arrays (see the scaladoc above for why
+      // banding, not the exact inverted index, is the correct engine)
+      val sh = graft.ops.Dedup.shingledOf(docs)
+        .join(docs.select("doc_id", "lang"), "doc_id")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // persisted like sh: bands feeds the within self-join, the
+      // cross-history probe, AND its own slice write — three separate
+      // actions; without the persist the 32-hash signature aggregation
+      // re-runs per action (exchange reuse cannot span write jobs)
+      val bands = graft.ops.Dedup.bandsOf(sh)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val langOf = docs.select(col("doc_id"), col("lang"))
+      val within = graft.ops.Dedup.verifyJaccard(
+          graft.ops.Dedup.bandSelfCandidates(bands), sh, sh)
+        .join(langOf.select(col("doc_id").as("id_a"), col("lang").as("lang_a")),
+          "id_a")
+        .join(langOf.select(col("doc_id").as("id_b"), col("lang").as("lang_b")),
+          "id_b")
+        .select("id_a", "lang_a", "id_b", "lang_b")
+      val pairs =
+        if (prior.isEmpty) within
+        else {
+          // the bandIndexUpdate read set and bucket-pruned verify,
+          // SHARED so the two dup engines cannot drift. The pruned histSh
+          // also serves the lang_b join-back: verified pairs are ⊆
+          // candidates, whose buckets the pruned frame includes.
+          val histBands = bandHistBands(spark, dimDir, prior)
+          val candLazy = bands.as("a").join(histBands.as("b"),
+              col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
+            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+            .distinct()
+          val (cand, histSh) = bandVerifyInputs(spark, dimDir, prior,
+            candLazy, docsPart = "sh",
+            docsCols = Seq("doc_id", "sh", "nsh", "lang"))
+          val cross = graft.ops.Dedup.verifyJaccard(cand, sh, histSh)
+            .join(langOf.select(col("doc_id").as("id_a"),
+              col("lang").as("lang_a")), "id_a")
+            .join(histSh.select(col("doc_id").as("id_b"),
+              col("lang").as("lang_b")), "id_b")
+            .select("id_a", "lang_a", "id_b", "lang_b")
+          within.unionByName(cross)
+        }
+      hist.write.mode("overwrite").parquet(s"$dimDir/v$batchId/hist")
+      src.write.mode("overwrite").parquet(s"$dimDir/v$batchId/src")
+      pairs.write.mode("overwrite").parquet(s"$dimDir/v$batchId/pairs")
+      sh.write.mode("overwrite").parquet(s"$dimDir/v$batchId/sh")
+      bands.write.mode("overwrite").parquet(s"$dimDir/v$batchId/bands")
+      bands.unpersist(blocking = false)
+      sh.unpersist(blocking = false)
+      docs.unpersist(blocking = false)
+    }
 
   /** The composed streamed datasheet — batch x73's exact report shape
     * ((lang | ALL) × counters × exact interpolated median) assembled
@@ -899,7 +731,7 @@ object Streaming {
     * here touches the corpus. */
   def streamedDatasheet(spark: SparkSession, dimDir: String): DataFrame = {
     import spark.implicits._
-    val vs = modelVersions(dimDir)
+    val vs = VersionedStore(dimDir, spark).versions
     require(vs.nonEmpty, s"no committed datasheet versions under $dimDir")
     val hist0 = spark.read.parquet(s"$dimDir/v${vs.max}/hist")
     val src0 = spark.read.parquet(s"$dimDir/v${vs.max}/src")
@@ -949,23 +781,19 @@ object Streaming {
   }
 
   /** Run the incremental datasheet over a documents stream to
-    * completion (AvailableNow); same lifecycle guards as the other
-    * versioned dims. */
+    * completion (AvailableNow). */
   def buildDatasheet(docs: DataFrame, dimDir: String,
       ckptDir: String, compactEvery: Int = 8): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
-    requireSharedLifecycle(dimDir, ckptDir)
+    VersionedStore(dimDir, docs.sparkSession).startLineage(ckptDir)
     runAvailableNow(docs, ckptDir)(
       _.foreachBatch(datasheetMaintain(dimDir, compactEvery) _))
   }
 
   /** One maintained datasheet wave WITH the compaction cadence on its
-    * embedded dup engine's (sh, bands) slices — the same per-wave
-    * ∝-history listing/footer growth [[compactBandIndex]] closes for
-    * the standalone band index, measured at the same ~100 KB/wave on
-    * the r19 probe corpus. The hist/src merged dims and the pairs
-    * slices are untouched (newest-only reads / append-only).
-    * `compactEvery <= 0` disables. */
+    * embedded dup engine's (sh, bands) slices — [[compactBandIndex]],
+    * which bounds the per-wave slice listing as for the standalone band
+    * index. The hist/src merged dims and the pairs slices are untouched
+    * (newest-only reads / append-only). `compactEvery <= 0` disables. */
   private[graft] def datasheetMaintain(dimDir: String, compactEvery: Int)(
       batch: DataFrame, batchId: Long): Unit = {
     datasheetUpdate(dimDir)(batch, batchId)
@@ -992,34 +820,28 @@ object Streaming {
     * each with the same pushed cell IN-list, so file-level pruning
     * survives incrementality (files touched = probed cells × committed
     * slices; at scale a compactor folds old slices back through
-    * [[graft.ops.Similarity.materializeIvfPqIndex]]). Same
-    * versioned-dir exactly-once shape as the other dims: a replayed
-    * committed batch is a no-op, `_SUCCESS` marker last. */
+    * [[graft.ops.Similarity.materializeIvfPqIndex]]). Commit
+    * protocol: [[VersionedStore]]. */
   def ivfPqIndexUpdate(indexDir: String, cents: Array[Array[Double]],
       books: Array[Array[Array[Double]]])(
-      batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    if (Files.isRegularFile(Paths.get(s"$indexDir/v$batchId/_SUCCESS"))) return
-    val prior = modelVersions(indexDir).filter(_ < batchId)
-    requirePredecessorState(indexDir, batchId, prior)
-    val all = graft.ops.Similarity.corpusOf(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.ops.Similarity.ivfPqIndexOf(all, cents, books)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/v$batchId/index")
-    // the VECTOR STORE slice: the exact-rescore stage needs the full
-    // vectors of every indexed id, and a vector that arrived only via
-    // the stream exists nowhere else — without this, stream-only
-    // candidates would silently vanish at the rescore join. Separate
-    // subdir (not extra columns in the code slice) so the ADC scan's
-    // 16-bytes-per-row claim stays a file-layout fact, not a
-    // column-pruning hope.
-    all.write.mode("overwrite").parquet(s"$indexDir/v$batchId/vecs")
-    all.unpersist(blocking = false)
-    Files.write(Paths.get(s"$indexDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    VersionedStore(indexDir, batch.sparkSession).wave(batchId) { _ =>
+      val all = graft.ops.Similarity.corpusOf(batch)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      graft.ops.Similarity.ivfPqIndexOf(all, cents, books)
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$indexDir/v$batchId/index")
+      // the VECTOR STORE slice: the exact-rescore stage needs the full
+      // vectors of every indexed id, and a vector that arrived only via
+      // the stream exists nowhere else — without this, stream-only
+      // candidates would silently vanish at the rescore join. Separate
+      // subdir (not extra columns in the code slice) so the ADC scan's
+      // 16-bytes-per-row claim stays a file-layout fact, not a
+      // column-pruning hope.
+      all.write.mode("overwrite").parquet(s"$indexDir/v$batchId/vecs")
+      all.unpersist(blocking = false)
+    }
 
   val embeddingsRawSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
@@ -1027,14 +849,12 @@ object Streaming {
     StructField("label", IntegerType)))
 
   /** Run the incremental index maintainer over an embeddings stream to
-    * completion (AvailableNow); same lifecycle guards as the other
-    * versioned dims. The model is captured ONCE, before the stream
-    * starts — never per batch. */
+    * completion (AvailableNow). The model is captured ONCE, before the
+    * stream starts — never per batch. */
   def buildIvfPqIndexStream(embs: DataFrame, indexDir: String,
       ckptDir: String, cents: Array[Array[Double]],
       books: Array[Array[Array[Double]]]): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
-    requireSharedLifecycle(indexDir, ckptDir)
+    VersionedStore(indexDir, embs.sparkSession).startLineage(ckptDir)
     runAvailableNow(embs, ckptDir)(
       _.foreachBatch(ivfPqIndexUpdate(indexDir, cents, books) _))
   }
@@ -1050,7 +870,7 @@ object Streaming {
   def streamedIvfPqTopK(spark: SparkSession, indexDir: String,
       cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
       nQueries: Int = 8, topK: Int = 5): DataFrame = {
-    val vs = modelVersions(indexDir).sorted
+    val vs = VersionedStore(indexDir, spark).versions
     require(vs.nonEmpty, s"no committed index slices under $indexDir")
     val all = vs.map(v => spark.read.parquet(s"$indexDir/v$v/vecs"))
       .reduce(_ unionByName _)
@@ -1086,40 +906,33 @@ object Streaming {
     * — one definition, so streamed and batch flags cannot diverge by
     * construction), then the batch's clean training rows land as an
     * append-only versioned slice. Cost ∝ batch (the bench store is
-    * read-only state); replay-safe via the _SUCCESS marker like every
-    * other versioned dim. */
+    * read-only state). */
   def semDecontUpdate(benchDir: String, outDir: String,
-      cents: Array[Array[Double]])(batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    if (Files.isRegularFile(Paths.get(s"$outDir/v$batchId/_SUCCESS"))) return
-    val prior = modelVersions(outDir).filter(_ < batchId)
-    requirePredecessorState(outDir, batchId, prior)
-    val spark = batch.sparkSession
-    val sim = graft.ops.Similarity
-    val bench = spark.read.parquet(benchDir)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    val train = sim.corpusOf(batch.select("vec_id", "embedding"))
-      .filter(col("vec_id") % 17 =!= 0)
-    val assigned = sim.multiCellAssign(train, cents, sim.SemDedupAssignProbes)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    val flagged = sim.celledDecontFlagsOf(assigned.unionByName(bench),
-      sim.SemDedupTauHigh)
-    batch.filter(col("vec_id") % 17 =!= 0)
-      .join(flagged.select(col("train_id").as("vec_id")),
-        Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("label"))
-      .write.mode("overwrite").parquet(s"$outDir/v$batchId/clean")
-    Files.write(Paths.get(s"$outDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
-  }
+      cents: Array[Array[Double]])(batch: DataFrame, batchId: Long): Unit =
+    VersionedStore(outDir, batch.sparkSession).wave(batchId) { _ =>
+      val spark = batch.sparkSession
+      val sim = graft.ops.Similarity
+      val bench = spark.read.parquet(benchDir)
+        .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
+      val train = sim.corpusOf(batch.select("vec_id", "embedding"))
+        .filter(col("vec_id") % 17 =!= 0)
+      val assigned = sim.multiCellAssign(train, cents, sim.SemDedupAssignProbes)
+        .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
+      val flagged = sim.celledDecontFlagsOf(assigned.unionByName(bench),
+        sim.SemDedupTauHigh)
+      batch.filter(col("vec_id") % 17 =!= 0)
+        .join(flagged.select(col("train_id").as("vec_id")),
+          Seq("vec_id"), "left_anti")
+        .select(col("vec_id"), col("label"))
+        .write.mode("overwrite").parquet(s"$outDir/v$batchId/clean")
+    }
 
   /** Run the streamed decontamination to completion (AvailableNow);
     * model (centroids + bench store) captured before the stream. */
   def buildSemDecontStream(embs: DataFrame, benchDir: String,
       outDir: String, ckptDir: String,
       cents: Array[Array[Double]]): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    requireSharedLifecycle(outDir, ckptDir)
+    VersionedStore(outDir, embs.sparkSession).startLineage(ckptDir)
     runAvailableNow(embs, ckptDir)(
       _.foreachBatch(semDecontUpdate(benchDir, outDir, cents) _))
   }
@@ -1128,7 +941,7 @@ object Streaming {
     * the streamed x79 output (streamed ≡ batch when the stream
     * replayed the batch corpus under the batch model; spec-pinned). */
   def streamedSemDecontClean(spark: SparkSession, outDir: String): DataFrame = {
-    val vs = modelVersions(outDir).sorted
+    val vs = VersionedStore(outDir, spark).versions
     require(vs.nonEmpty, s"no committed clean slices under $outDir")
     vs.map(v => spark.read.parquet(s"$outDir/v$v/clean"))
       .reduce(_ unionByName _)
@@ -1155,37 +968,30 @@ object Streaming {
     * v&lt;batch&gt;/ids (the skinny frame the stream-close `removed`
     * pass anti-joins: absence is only knowable once the crawl
     * completes, so `removed` is deliberately NOT a per-batch output).
-    * Cost ∝ batch; replay-safe via the _SUCCESS marker like every
-    * versioned dim. */
+    * Cost ∝ batch. */
   def snapshotDiffUpdate(oldDir: String, outDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    if (Files.isRegularFile(Paths.get(s"$outDir/v$batchId/_SUCCESS"))) return
-    val prior = modelVersions(outDir).filter(_ < batchId)
-    requirePredecessorState(outDir, batchId, prior)
-    val spark = batch.sparkSession
-    val neu = graft.ops.Pipeline.newSnapshotHashes(batch)
-      .select(col("doc_id"), col("h").as("n_h"))
-    val old = spark.read.parquet(oldDir)
-      .select(col("doc_id"), col("h").as("o_h"))
-    neu.join(old, Seq("doc_id"), "left")
-      .withColumn("status",
-        when(col("o_h").isNull, lit("added")).otherwise(lit("changed")))
-      .filter(col("o_h").isNull || !(col("o_h") <=> col("n_h")))
-      .select(col("doc_id"), col("status"))
-      .write.mode("overwrite").parquet(s"$outDir/v$batchId/delta")
-    neu.select(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$outDir/v$batchId/ids")
-    Files.write(Paths.get(s"$outDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    VersionedStore(outDir, batch.sparkSession).wave(batchId) { _ =>
+      val spark = batch.sparkSession
+      val neu = graft.ops.Pipeline.newSnapshotHashes(batch)
+        .select(col("doc_id"), col("h").as("n_h"))
+      val old = spark.read.parquet(oldDir)
+        .select(col("doc_id"), col("h").as("o_h"))
+      neu.join(old, Seq("doc_id"), "left")
+        .withColumn("status",
+          when(col("o_h").isNull, lit("added")).otherwise(lit("changed")))
+        .filter(col("o_h").isNull || !(col("o_h") <=> col("n_h")))
+        .select(col("doc_id"), col("status"))
+        .write.mode("overwrite").parquet(s"$outDir/v$batchId/delta")
+      neu.select(col("doc_id"))
+        .write.mode("overwrite").parquet(s"$outDir/v$batchId/ids")
+    }
 
   /** Run the streamed reconciliation to completion (AvailableNow);
     * the old store is the frozen model, captured before the stream. */
   def buildSnapshotDiffStream(docs: DataFrame, oldDir: String,
       outDir: String, ckptDir: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    requireSharedLifecycle(outDir, ckptDir)
+    VersionedStore(outDir, docs.sparkSession).startLineage(ckptDir)
     runAvailableNow(docs, ckptDir)(
       _.foreachBatch(snapshotDiffUpdate(oldDir, outDir) _))
   }
@@ -1197,7 +1003,7 @@ object Streaming {
     * spec-pinned. */
   def streamedSnapshotDiff(spark: SparkSession, oldDir: String,
       outDir: String): DataFrame = {
-    val vs = modelVersions(outDir).sorted
+    val vs = VersionedStore(outDir, spark).versions
     require(vs.nonEmpty, s"no committed delta slices under $outDir")
     val deltas = vs.map(v => spark.read.parquet(s"$outDir/v$v/delta"))
       .reduce(_ unionByName _)
@@ -1216,10 +1022,8 @@ object Streaming {
     * over an outDir holding a dead lineage's slices is refused. */
   def buildSpanIndex(docs: DataFrame, dimDir: String, outDir: String,
       ckptDir: String, compactEvery: Int = 8): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    requireSharedLifecycle(dimDir, ckptDir)
-    requireSliceLifecycle(outDir, ckptDir, "rewrite")
+    VersionedStore(dimDir, docs.sparkSession).startLineage(ckptDir)
+    VersionedStore(outDir, docs.sparkSession).startSlices(ckptDir, "rewrite")
     runAvailableNow(docs, ckptDir)(
       _.foreachBatch(spanIndexMaintain(dimDir, outDir, compactEvery) _))
   }
@@ -1229,19 +1033,17 @@ object Streaming {
     * `dimDir`, emits per-batch verified pair slices under `pairsDir`. */
   def buildBandIndex(docs: DataFrame, dimDir: String, pairsDir: String,
       ckptDir: String, compactEvery: Int = 8): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pairsDir))
-    requireSharedLifecycle(dimDir, ckptDir)
-    requireSliceLifecycle(pairsDir, ckptDir, "pair")
+    VersionedStore(dimDir, docs.sparkSession).startLineage(ckptDir)
+    VersionedStore(pairsDir, docs.sparkSession).startSlices(ckptDir, "pair")
     runAvailableNow(docs, ckptDir)(
       _.foreachBatch(bandIndexMaintain(dimDir, pairsDir, compactEvery) _))
   }
 
   /** One maintained wave of the band index WITH the compaction
     * cadence — [[keepBestDeltaMaintain]]'s shape on the index
-    * direction. Defaults ON at 8 wherever a stream drives it (the
-    * r18 VERDICT #4 stance: the bounded-probe property must hold
-    * without operator opt-in). `compactEvery <= 0` disables. */
+    * direction. Defaults ON at 8 wherever a stream drives it: the
+    * bounded-probe property must hold without operator opt-in.
+    * `compactEvery <= 0` disables. */
   private[graft] def bandIndexMaintain(dimDir: String, pairsDir: String,
       compactEvery: Int)(batch: DataFrame, batchId: Long): Unit = {
     bandIndexUpdate(dimDir, pairsDir)(batch, batchId)
@@ -1249,32 +1051,17 @@ object Streaming {
       compactBandIndex(batch.sparkSession, dimDir)
   }
 
-  /** All near-dup pairs the stream has emitted so far (union of the
-    * per-batch slices), or an empty frame before any batch. Only
-    * slices whose batch COMMITTED are read: [[bandIndexUpdate]] writes
-    * the pair slice before the version marker, so a crash in that
-    * window leaves an uncommitted `b<k>` on disk — recovery replay
-    * overwrites it byte-identically, but a reader between crash and
-    * replay must not see it, so each slice is gated on the
-    * `v<k>/_SUCCESS` marker in `dimDir` (the single commit point for
-    * the batch). A slice at or below the newest [[compactBandIndex]]
-    * base also counts as committed with its version dir gone (r19
-    * janitor parity): the compaction reads only marker-committed
-    * versions and [[requirePredecessorState]] enforces per-wave
-    * contiguity, so every k ≤ base was committed before the base
-    * could be. */
+  /** All near-dup pairs the stream has emitted so far: the band
+    * lineage's committed `b<k>` pair slices, or an empty frame before
+    * any batch. */
   def streamedNearDupPairs(spark: SparkSession, dimDir: String,
-      pairsDir: String): DataFrame = {
-    val base = bandCumulativeBase(dimDir, modelVersions(dimDir))
-    committedSlices(spark, pairsDir,
-        k => java.nio.file.Paths.get(
-          if (base.exists(_ >= k.toLong)) s"$dimDir/v${base.get}/_SUCCESS"
-          else s"$dimDir/v$k/_SUCCESS")) {
+      pairsDir: String): DataFrame =
+    slicesOr(spark,
+        VersionedStore(dimDir, spark).committedSlices(pairsDir)) {
       spark.emptyDataFrame
         .select(lit(0L).as("inc_id"), lit(0L).as("hist_id"),
           lit(0.0).as("jaccard")).limit(0)
     }
-  }
 
   /** x59 streaming sibling — incremental KEEP-BEST survivors: maintain
     * the per-cluster best-quality survivor dim continuously as
@@ -1298,72 +1085,67 @@ object Streaming {
     *     [[unigramModelUpdate]] pattern); docs + intra-pair slices are
     *     append-only (the band-index pattern).
     *
-    * Same exactly-once discipline: recompute from committed inputs is
-    * deterministic, the `_SUCCESS` marker is written last, and a replay
-    * of a committed batch is a no-op. The singleton majority never
-    * enters state — readers anti-join it at read time, like batch x59.
-    * StreamingSpec replays a 2-wave split and proves the streamed
-    * survivor set ≡ batch x59 on the full corpus. */
+    * Recompute from committed inputs is deterministic
+    * ([[VersionedStore]]). The singleton majority never enters state —
+    * readers anti-join it at read time, like batch x59. StreamingSpec
+    * replays a 2-wave split and proves the streamed survivor set ≡
+    * batch x59 on the full corpus. */
   def keepBestUpdate(dimDir: String, pairsDir: String, survDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
     val spark = batch.sparkSession
     // 1. band index + cross pairs (skips itself if already committed)
     bandIndexUpdate(dimDir, pairsDir)(batch, batchId)
-    if (Files.isRegularFile(Paths.get(s"$survDir/v$batchId/_SUCCESS"))) return
-    val prior = modelVersions(survDir).filter(_ < batchId)
-    requirePredecessorState(survDir, batchId, prior)
-    // 2. intra-batch pairs from the committed band slice (same verify
-    //    as the cross probe: equi join on (band, bh), exact jaccard)
-    val docsSh = spark.read.parquet(s"$dimDir/v$batchId/docs")
-    val bands = spark.read.parquet(s"$dimDir/v$batchId/bands")
-    val intra = graft.ops.Dedup.verifyJaccard(
-        graft.ops.Dedup.bandSelfCandidates(bands), docsSh, docsSh)
-      .select(col("id_a"), col("id_b"))
-    intra.write.mode("overwrite").parquet(s"$survDir/v$batchId/intra")
-    // 3. the batch's doc-attribute slice (append-only)
-    batch
-      .select(col("doc_id"),
-        graft.ops.TextAnalysis.qualityScore(col("text")).as("quality_score"),
-        col("lang"))
-      .write.mode("overwrite").parquet(s"$survDir/v$batchId/docs")
-    // 4. merged survivor dim over the accumulated pair graph
-    val versions = prior :+ batchId
-    val cross = streamedNearDupPairs(spark, dimDir, pairsDir)
-      .select(col("inc_id").as("id_a"), col("hist_id").as("id_b"))
-    val intraAll = spark.read.parquet(
-      versions.map(v => s"$survDir/v$v/intra"): _*)
-    val pairs = cross.union(intraAll)
-    val (labels, survivors) =
-      if (pairs.isEmpty) {
-        val l = spark.emptyDataFrame
-          .select(lit(0L).as("id"), lit(0L).as("label")).limit(0)
-        val s = spark.emptyDataFrame
-          .select(lit(0L).as("doc_id"), lit(0L).as("cluster_id"),
-            lit(0.0).as("quality_score"), lit("").as("lang")).limit(0)
-        (l, s)
-      } else {
-        val (lbl, _) = graft.ops.Dedup.ccStars(pairs)
-        val quality = spark.read.parquet(
-          versions.map(v => s"$survDir/v$v/docs"): _*)
-        val members = quality.join(
-          lbl.select(col("id").as("doc_id"), col("label").as("cluster_id")),
-          "doc_id")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("cluster_id"))
-          .orderBy(col("quality_score").desc, col("doc_id").asc)
-        val best = members
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") === 1)
-          .select(col("doc_id"), col("cluster_id"),
-            col("quality_score"), col("lang"))
-        (lbl, best)
-      }
-    labels.write.mode("overwrite").parquet(s"$survDir/v$batchId/labels")
-    survivors.write.mode("overwrite").parquet(s"$survDir/v$batchId/survivors")
-    labels.unpersist(blocking = false) // ccStars persists its result
-    Files.write(Paths.get(s"$survDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
+    VersionedStore(survDir, spark).wave(batchId) { prior =>
+      // 2. intra-batch pairs from the committed band slice (same verify
+      //    as the cross probe: equi join on (band, bh), exact jaccard)
+      val docsSh = spark.read.parquet(s"$dimDir/v$batchId/docs")
+      val bands = spark.read.parquet(s"$dimDir/v$batchId/bands")
+      val intra = graft.ops.Dedup.verifyJaccard(
+          graft.ops.Dedup.bandSelfCandidates(bands), docsSh, docsSh)
+        .select(col("id_a"), col("id_b"))
+      intra.write.mode("overwrite").parquet(s"$survDir/v$batchId/intra")
+      // 3. the batch's doc-attribute slice (append-only)
+      batch
+        .select(col("doc_id"),
+          graft.ops.TextAnalysis.qualityScore(col("text")).as("quality_score"),
+          col("lang"))
+        .write.mode("overwrite").parquet(s"$survDir/v$batchId/docs")
+      // 4. merged survivor dim over the accumulated pair graph
+      val versions = prior :+ batchId
+      val cross = streamedNearDupPairs(spark, dimDir, pairsDir)
+        .select(col("inc_id").as("id_a"), col("hist_id").as("id_b"))
+      val intraAll = spark.read.parquet(
+        versions.map(v => s"$survDir/v$v/intra"): _*)
+      val pairs = cross.union(intraAll)
+      val (labels, survivors) =
+        if (pairs.isEmpty) {
+          val l = spark.emptyDataFrame
+            .select(lit(0L).as("id"), lit(0L).as("label")).limit(0)
+          val s = spark.emptyDataFrame
+            .select(lit(0L).as("doc_id"), lit(0L).as("cluster_id"),
+              lit(0.0).as("quality_score"), lit("").as("lang")).limit(0)
+          (l, s)
+        } else {
+          val (lbl, _) = graft.ops.Dedup.ccStars(pairs)
+          val quality = spark.read.parquet(
+            versions.map(v => s"$survDir/v$v/docs"): _*)
+          val members = quality.join(
+            lbl.select(col("id").as("doc_id"), col("label").as("cluster_id")),
+            "doc_id")
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("cluster_id"))
+            .orderBy(col("quality_score").desc, col("doc_id").asc)
+          val best = members
+            .withColumn("rk", row_number().over(w))
+            .filter(col("rk") === 1)
+            .select(col("doc_id"), col("cluster_id"),
+              col("quality_score"), col("lang"))
+          (lbl, best)
+        }
+      labels.write.mode("overwrite").parquet(s"$survDir/v$batchId/labels")
+      survivors.write.mode("overwrite").parquet(s"$survDir/v$batchId/survivors")
+      labels.unpersist(blocking = false) // ccStars persists its result
+    }
   }
 
   /** Run the incremental keep-best dedup over a documents stream to
@@ -1371,14 +1153,7 @@ object Streaming {
     * the survivor dim. */
   def buildKeepBest(docs: DataFrame, dimDir: String, pairsDir: String,
       survDir: String, ckptDir: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pairsDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(survDir))
-    requireSharedLifecycle(dimDir, ckptDir)
-    requireSharedLifecycle(survDir, ckptDir)
-    // the pairs dir is the same bandIndexUpdate state buildBandIndex
-    // drives — both entry points must enforce the same slice guard
-    requireSliceLifecycle(pairsDir, ckptDir, "pair")
+    startKeepBest(docs.sparkSession, dimDir, pairsDir, survDir, ckptDir)
     runAvailableNow(docs, ckptDir)(
       _.foreachBatch(keepBestUpdate(dimDir, pairsDir, survDir) _))
   }
@@ -1394,7 +1169,7 @@ object Streaming {
     * ccStars' (id, label)). */
   private def keepBestSurvivorsFrom(spark: SparkSession, survDir: String,
       labelsIdCol: String): DataFrame = {
-    val versions = modelVersions(survDir).sorted
+    val versions = VersionedStore(survDir, spark).versions
     require(versions.nonEmpty, s"no committed survivor version in $survDir")
     val latest = versions.max
     val best = spark.read.parquet(s"$survDir/v$latest/survivors")
@@ -1452,159 +1227,121 @@ object Streaming {
     *     doc-id-asc window — so the assembled dim stays ≡ the rebuild
     *     form ≡ batch x59 (StreamingSpec proves both).
     *
-    * r17 (the write-side sibling of the r16 attrs read fix): the wave
-    * no longer REWRITES the accumulated attrs/labels/survivors dims —
-    * bytes written per wave were ∝ accumulated docs, the last
-    * history-proportional term here. It writes DELTA slices instead:
-    * `attrs_delta` (this batch's first-time attribute rows), `drops`
-    * (the touched cluster ids, retiring every older row of those
-    * clusters), `labels_delta` / `survivors_delta` (the re-labeled
-    * members / re-ranked best of the touched clusters). Readers
-    * assemble the current dims from the newest [[compactKeepBest]]
-    * manifest's tier roots plus the delta slices after it, under the
-    * gram index's latest-wins algebra ([[assembledKeepBestDims]]); the
-    * compaction cadence bounds the read listing at O(K) slices and makes
-    * pre-compaction version dirs janitor-deletable. Per-wave bytes
-    * written are now ∝ batch + touched clusters, never ∝ corpus
-    * (StreamProbe's wave_bytes records it).
-    *
-    * r18 (the read-side sibling): the wave no longer materializes the
-    * full assembled attrs dim per wave — the first-time anti-join
-    * probes the doc_id-only membership ([[assembledKeepBestMembers]]:
-    * the compaction's sorted `members` artifact + delta doc_id
-    * columns), the corpus-sized `localCheckpoint` is gone (every
-    * consumer is a column-pruned scan over committed parquet), and
-    * the touched-size `newMembers` result is checkpointed instead so
-    * the label/survivor writes stop double-scanning the corpus-sized
-    * inputs. StreamProbe's wave_read_bytes records the per-wave read
-    * profile; the residual ∝-corpus terms (membership doc_id column,
-    * the touched-cluster label probe) are named in PLANS.md with
-    * their warehouse forms (bucketed membership / cluster-keyed
-    * label store).
-    *
-    * Same exactly-once discipline as every versioned dim: recompute
-    * from committed inputs + the PRIOR versions' committed slices is
-    * deterministic, `_SUCCESS` is written last, replay of a committed
-    * batch is a no-op. */
+    * The wave writes DELTA slices only, so its bytes are ∝ batch +
+    * touched clusters, never ∝ corpus: `attrs_delta` (this batch's
+    * first-time attribute rows), `drops` (the touched cluster ids,
+    * retiring every older row of those clusters), `labels_delta` /
+    * `survivors_delta` (the re-labeled members / re-ranked best of the
+    * touched clusters). Readers assemble the dims from the read set
+    * ([[assembledKeepBestDims]]). The wave reads bucket-pruned probes
+    * of the tier stores plus O(K) tail slices and pins only the
+    * touched-size `newMembers`; StreamProbe's wave_bytes and
+    * wave_read_bytes record both sides. Recompute from committed inputs
+    * is deterministic ([[VersionedStore]]). */
   def keepBestDeltaUpdate(dimDir: String, pairsDir: String,
       survDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
     val spark = batch.sparkSession
     bandIndexUpdate(dimDir, pairsDir)(batch, batchId)
-    if (Files.isRegularFile(Paths.get(s"$survDir/v$batchId/_SUCCESS"))) return
-    val prior = modelVersions(survDir).filter(_ < batchId)
-    requirePredecessorState(survDir, batchId, prior)
-    val docsSh = spark.read.parquet(s"$dimDir/v$batchId/docs")
-    val bands = spark.read.parquet(s"$dimDir/v$batchId/bands")
-    graft.ops.Dedup.verifyJaccard(
-        graft.ops.Dedup.bandSelfCandidates(bands), docsSh, docsSh)
-      .select(col("id_a"), col("id_b"))
-      .write.mode("overwrite").parquet(s"$survDir/v$batchId/intra")
-    batch
-      .select(col("doc_id"),
-        graft.ops.TextAnalysis.qualityScore(col("text")).as("quality_score"),
-        col("lang"))
-      .write.mode("overwrite").parquet(s"$survDir/v$batchId/docs")
-    // attrs DELTA: this batch's first-time doc_ids only (first-wins
-    // against the assembled prior attrs — a recurring doc_id keeps
-    // its first wave's row). The anti-join probes the doc_id-only
-    // MEMBERSHIP — since r19 (VERDICT #2) pruned to the batch's
-    // kb_bucket partitions of the compaction's bucketed members store
-    // (read ∝ touched buckets × target bucket rows, i.e. ∝ batch,
-    // never ∝ corpus) plus the O(K) post-compaction delta doc_id
-    // columns; the full prior attrs dim is no longer read at all.
-    val batchAttrs = spark.read.parquet(s"$survDir/v$batchId/docs")
-    val priorMembers = keepBestMembersProbe(spark, survDir, prior, batchAttrs)
-    (if (prior.isEmpty) batchAttrs
-     else batchAttrs.join(priorMembers, Seq("doc_id"), "left_anti"))
-      .write.mode("overwrite").parquet(s"$survDir/v$batchId/attrs_delta")
-    // THIS batch's pair delta only — never the accumulated union
-    val wavePairs = spark.read.parquet(s"$pairsDir/b$batchId")
-      .select(col("inc_id").as("id_a"), col("hist_id").as("id_b"))
-      .union(spark.read.parquet(s"$survDir/v$batchId/intra"))
-      .pipe(graft.Caches.pin)
-    val (drops, labelsDelta, survDelta, ccHandle) =
-      if (wavePairs.isEmpty)
-        (emptyKbRows(spark).select(col("cluster_id")), emptyKbRows(spark),
-          emptyKbRows(spark), Option.empty[DataFrame])
-      else {
-        val touchedIds = wavePairs.select(col("id_a").as("doc_id"))
-          .union(wavePairs.select(col("id_b").as("doc_id"))).distinct()
-          .pipe(graft.Caches.pin) // touched-size; probed for buckets + joined
-        // touched-cluster discovery probes the labels store BY DOC —
-        // since r19 (VERDICT #3) pruned to the probe's kb_bucket
-        // partitions of the compaction's doc-keyed labels_by_doc copy
-        // (plus O(K) delta slices) instead of scanning the corpus
-        // labels dim per wave
-        val touchedClusters =
-          labelsProbe(spark, survDir, prior, "labels_by_doc", "doc_id",
-              touchedIds)
-            .join(touchedIds, Seq("doc_id"), "left_semi")
-            .select(col("cluster_id")).distinct().pipe(graft.Caches.pin)
-        // member expansion probes BY CLUSTER — the cluster-keyed copy,
-        // pruned to the touched clusters' buckets
-        val members =
-          labelsProbe(spark, survDir, prior, "labels", "cluster_id",
-              touchedClusters)
-            .join(touchedClusters, Seq("cluster_id"), "left_semi")
-        val starEdges = members
-          .select(col("doc_id").as("id_a"), col("cluster_id").as("id_b"))
-        val (lbl, _) = graft.ops.Dedup.ccStars(wavePairs.union(starEdges))
-        val lblNodes = lbl
-          .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-        // prior-label attributes: every labeled node of the delta graph
-        // lies in a TOUCHED cluster — a wave-pair endpoint's cluster is
-        // touched by construction (touchedClusters = clusters of all
-        // labeled wave-pair endpoints), a star-edge member node is a
-        // touched cluster's member, and a cluster id appearing as a
-        // node is itself a member's doc_id under min-id labeling — so
-        // the touched members ARE the complete attribute source and the
-        // corpus-sized priorLabels projection is gone (r19, VERDICT #3;
-        // the delta ≡ batch spec would surface any violation as
-        // duplicate label rows)
-        val known = members
-          .select(col("doc_id"), col("quality_score"), col("lang"))
-        // attributes for FIRST-TIME nodes (never labeled before): probe
-        // the bucketed attrs store at their buckets + this batch's
-        // just-written delta
-        val firstTimers = lblNodes
-          .join(known.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .select(col("doc_id")).pipe(graft.Caches.pin)
-        val fetched =
-          attrsProbe(spark, survDir, prior, firstTimers)
-            .unionByName(
-              spark.read.parquet(s"$survDir/v$batchId/attrs_delta"))
-            .join(firstTimers, Seq("doc_id"), "left_semi")
+    VersionedStore(survDir, spark).wave(batchId) { prior =>
+      val docsSh = spark.read.parquet(s"$dimDir/v$batchId/docs")
+      val bands = spark.read.parquet(s"$dimDir/v$batchId/bands")
+      graft.ops.Dedup.verifyJaccard(
+          graft.ops.Dedup.bandSelfCandidates(bands), docsSh, docsSh)
+        .select(col("id_a"), col("id_b"))
+        .write.mode("overwrite").parquet(s"$survDir/v$batchId/intra")
+      batch
+        .select(col("doc_id"),
+          graft.ops.TextAnalysis.qualityScore(col("text")).as("quality_score"),
+          col("lang"))
+        .write.mode("overwrite").parquet(s"$survDir/v$batchId/docs")
+      // attrs DELTA: this batch's first-time doc_ids only (first-wins —
+      // a recurring doc_id keeps its first wave's row), anti-joined
+      // against the bucket-pruned doc_id MEMBERSHIP, read ∝ batch
+      val batchAttrs = spark.read.parquet(s"$survDir/v$batchId/docs")
+      val priorMembers = keepBestMembersProbe(spark, survDir, prior, batchAttrs)
+      (if (prior.isEmpty) batchAttrs
+       else batchAttrs.join(priorMembers, Seq("doc_id"), "left_anti"))
+        .write.mode("overwrite").parquet(s"$survDir/v$batchId/attrs_delta")
+      // THIS batch's pair delta only — never the accumulated union
+      val wavePairs = spark.read.parquet(s"$pairsDir/b$batchId")
+        .select(col("inc_id").as("id_a"), col("hist_id").as("id_b"))
+        .union(spark.read.parquet(s"$survDir/v$batchId/intra"))
+        .pipe(graft.Caches.pin)
+      val (drops, labelsDelta, survDelta, ccHandle) =
+        if (wavePairs.isEmpty)
+          (emptyKbRows(spark).select(col("cluster_id")), emptyKbRows(spark),
+            emptyKbRows(spark), Option.empty[DataFrame])
+        else {
+          val touchedIds = wavePairs.select(col("id_a").as("doc_id"))
+            .union(wavePairs.select(col("id_b").as("doc_id"))).distinct()
+            .pipe(graft.Caches.pin) // touched-size; probed for buckets + joined
+          // touched-cluster discovery probes the doc-keyed labels_by_doc
+          // copy, pruned to the probe's kb_buckets (plus O(K) tails)
+          val touchedClusters =
+            labelsProbe(spark, survDir, prior, "labels_by_doc", "doc_id",
+                touchedIds)
+              .join(touchedIds, Seq("doc_id"), "left_semi")
+              .select(col("cluster_id")).distinct().pipe(graft.Caches.pin)
+          // member expansion probes BY CLUSTER — the cluster-keyed copy,
+          // pruned to the touched clusters' buckets
+          val members =
+            labelsProbe(spark, survDir, prior, "labels", "cluster_id",
+                touchedClusters)
+              .join(touchedClusters, Seq("cluster_id"), "left_semi")
+          val starEdges = members
+            .select(col("doc_id").as("id_a"), col("cluster_id").as("id_b"))
+          val (lbl, _) = graft.ops.Dedup.ccStars(wavePairs.union(starEdges))
+          val lblNodes = lbl
+            .select(col("id").as("doc_id"), col("label").as("cluster_id"))
+          // prior-label attributes: every labeled node of the delta graph
+          // lies in a TOUCHED cluster — a wave-pair endpoint's cluster is
+          // touched by construction (touchedClusters = clusters of all
+          // labeled wave-pair endpoints), a star-edge member node is a
+          // touched cluster's member, and a cluster id appearing as a
+          // node is itself a member's doc_id under min-id labeling — so
+          // the touched members ARE the complete attribute source (the
+          // delta ≡ batch spec would surface a violation as duplicate
+          // label rows)
+          val known = members
             .select(col("doc_id"), col("quality_score"), col("lang"))
-        // checkpoint the TOUCHED-SIZE result (∝ wave pairs + touched
-        // members, never ∝ corpus — the opposite class from the
-        // retired priorAttrs checkpoint): labels_delta and the
-        // survivor re-rank both consume it, and without the pin each
-        // would re-scan the corpus-sized priorLabels/priorAttrs inputs
-        val newMembers = lblNodes
-          .join(known.unionByName(fetched), Seq("doc_id"))
-          .select(kbCols.map(col): _*)
-          .pipe(graft.Caches.pin)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("cluster_id"))
-          .orderBy(col("quality_score").desc, col("doc_id").asc)
-        val newBest = newMembers
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") === 1)
-          .select(kbCols.map(col): _*)
-        (touchedClusters, newMembers, newBest, Some(lbl))
-      }
-    // delta slices only: drops retire every older row of the touched
-    // clusters; the deltas carry their re-labeled members / re-ranked
-    // best. Bytes ∝ touched clusters, never ∝ accumulated corpus.
-    drops.write.mode("overwrite").parquet(s"$survDir/v$batchId/drops")
-    labelsDelta.write.mode("overwrite")
-      .parquet(s"$survDir/v$batchId/labels_delta")
-    survDelta.write.mode("overwrite")
-      .parquet(s"$survDir/v$batchId/survivors_delta")
-    ccHandle.foreach(_.unpersist(blocking = false)) // ccStars persists it
-    Files.write(Paths.get(s"$survDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
+          // attributes for FIRST-TIME nodes (never labeled before): probe
+          // the bucketed attrs store at their buckets + this batch's
+          // just-written delta
+          val firstTimers = lblNodes
+            .join(known.select(col("doc_id")), Seq("doc_id"), "left_anti")
+            .select(col("doc_id")).pipe(graft.Caches.pin)
+          val fetched =
+            attrsProbe(spark, survDir, prior, firstTimers)
+              .unionByName(
+                spark.read.parquet(s"$survDir/v$batchId/attrs_delta"))
+              .join(firstTimers, Seq("doc_id"), "left_semi")
+              .select(col("doc_id"), col("quality_score"), col("lang"))
+          // pin the TOUCHED-SIZE result (∝ wave pairs + touched members):
+          // labels_delta and the survivor re-rank both consume it, and
+          // without the pin each would re-run the probes above
+          val newMembers = lblNodes
+            .join(known.unionByName(fetched), Seq("doc_id"))
+            .select(kbCols.map(col): _*)
+            .pipe(graft.Caches.pin)
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("cluster_id"))
+            .orderBy(col("quality_score").desc, col("doc_id").asc)
+          val newBest = newMembers
+            .withColumn("rk", row_number().over(w))
+            .filter(col("rk") === 1)
+            .select(kbCols.map(col): _*)
+          (touchedClusters, newMembers, newBest, Some(lbl))
+        }
+      // delta slices only: drops retire every older row of the touched
+      // clusters; the deltas carry their re-labeled members / re-ranked
+      // best. Bytes ∝ touched clusters, never ∝ accumulated corpus.
+      drops.write.mode("overwrite").parquet(s"$survDir/v$batchId/drops")
+      labelsDelta.write.mode("overwrite")
+        .parquet(s"$survDir/v$batchId/labels_delta")
+      survDelta.write.mode("overwrite")
+        .parquet(s"$survDir/v$batchId/survivors_delta")
+      ccHandle.foreach(_.unpersist(blocking = false)) // ccStars persists it
+    }
   }
 
   /** Label/survivor row layout of the delta keep-best lineage. */
@@ -1617,21 +1354,6 @@ object Streaming {
     spark.emptyDataFrame
       .select(lit(0L).as("doc_id"), lit(0L).as("cluster_id"),
         lit(0.0).as("quality_score"), lit("").as("lang")).limit(0)
-
-  /** The read set of a delta keep-best lineage over the committed
-    * versions `vs0`: the newest [[compactKeepBest]] base (None before
-    * the first compaction), the tier roots its `_CUMULATIVE` manifest
-    * lists, and the versions committed after it, whose delta slices
-    * every reader adds on top. compact/ roots are trusted only under
-    * the marker (written last): a torn compaction leaves compact/
-    * without it and readers keep ignoring it. */
-  private def kbReadSet(survDir: String, vs0: Seq[Long])
-      : (Option[Long], Seq[(Long, String)], Seq[Long]) = {
-    val vs = vs0.sorted
-    val base = cumulativeBaseAt(survDir, vs, "attrs")
-    (base, base.toSeq.flatMap(kbTierRoots(survDir, _)),
-      vs.filter(v => base.forall(v > _)))
-  }
 
   /** First-wins attrs rows projected to `cols`: the given tier frames
     * plus each tail version's `attrs_delta` slice — append-only, no
@@ -1664,29 +1386,29 @@ object Streaming {
       .getOrElse(emptyKbRows(spark))
 
   /** Assembled (attrs, labels, survivors) over the committed versions
-    * `vs0` of a delta keep-best lineage: rows from the newest base's
-    * tier roots plus the delta slices committed after it, under
-    * [[liveGramSlices]]' latest-wins algebra on the CLUSTER axis — a
-    * row from version u survives iff no version later than u dropped
-    * its cluster (ties keep the delta: a wave's drop applies to
-    * strictly older rows, its own delta re-labels the cluster). Attrs
-    * are append-only first-wins deltas, no drops. The per-cluster
-    * drop dim broadcasts at a size bounded by the clusters dropped
-    * SINCE the oldest manifest tier: the compaction prunes cumulative
-    * entries no kept row can match (see [[compactKeepBest]]'s drops
-    * write), and the bucket-dir tier-merge bound advances the oldest
-    * tier, so the store cannot grow with every cluster ever dropped. */
+    * `vs` of a delta keep-best lineage: the read set's tier roots plus
+    * the delta slices committed after them, under [[liveGramRows]]'
+    * latest-wins algebra on the CLUSTER axis — a row from version u
+    * survives iff no version later than u dropped its cluster (ties
+    * keep the delta: a wave's drop applies to strictly older rows, its
+    * own delta re-labels the cluster). Attrs are append-only first-wins
+    * deltas, no drops. The per-cluster drop dim broadcasts at a size
+    * bounded by the clusters dropped SINCE the oldest manifest tier:
+    * the compaction prunes cumulative entries no kept row can match
+    * (see [[compactKeepBest]]'s drops write), and the bucket-dir bound
+    * advances the oldest tier, so the store cannot grow with every
+    * cluster ever dropped. */
   private[graft] def assembledKeepBestDims(spark: SparkSession,
       survDir: String,
-      vs0: Seq[Long]): (DataFrame, DataFrame, DataFrame) = {
-    val (base, roots, tail) = kbReadSet(survDir, vs0)
-    def tiers(part: String) = roots.map { case (ver, root) =>
+      vs: Seq[Long]): (DataFrame, DataFrame, DataFrame) = {
+    val rs = VersionedStore(survDir, spark).readSet(vs)
+    def tiers(part: String) = rs.roots.map { case (ver, root) =>
       ver -> spark.read.parquet(s"$root/$part") }
-    val cumDrops = kbCumulativeDrops(spark, survDir, base)
-    (kbAttrRows(spark, survDir, tiers("attrs").map(_._2), tail),
-      kbLatestRows(spark, survDir, cumDrops, tiers("labels"), tail,
+    val cumDrops = kbCumulativeDrops(spark, survDir, rs.base)
+    (kbAttrRows(spark, survDir, tiers("attrs").map(_._2), rs.tail),
+      kbLatestRows(spark, survDir, cumDrops, tiers("labels"), rs.tail,
         "labels_delta"),
-      kbLatestRows(spark, survDir, cumDrops, tiers("survivors"), tail,
+      kbLatestRows(spark, survDir, cumDrops, tiers("survivors"), rs.tail,
         "survivors_delta"))
   }
 
@@ -1699,99 +1421,52 @@ object Streaming {
     * three-column dim and never through a localCheckpoint. The wave
     * reads the bucket-pruned form, [[keepBestMembersProbe]]. */
   private[graft] def assembledKeepBestMembers(spark: SparkSession,
-      survDir: String, vs0: Seq[Long]): DataFrame = {
-    val (_, roots, tail) = kbReadSet(survDir, vs0)
+      survDir: String, vs: Seq[Long]): DataFrame = {
+    val rs = VersionedStore(survDir, spark).readSet(vs)
     kbAttrRows(spark, survDir,
-      roots.map { case (_, root) => spark.read.parquet(s"$root/members") },
-      tail, Seq("doc_id"))
+      rs.roots.map { case (_, root) => spark.read.parquet(s"$root/members") },
+      rs.tail, Seq("doc_id"))
   }
-
-  /** The distinct kb_bucket ids (key >> shift) present in `probe`,
-    * collected to the driver to drive partition-directory pruning —
-    * bounded by the probe's distinct keys (touched-size driver state,
-    * the same class as the gram reader's version dims; in the common
-    * range-clustered-id case it is far smaller: the probe's id spread
-    * over the bucket width). */
-  private def touchedKbBuckets(probe: DataFrame, idCol: String,
-      shift: Int): Seq[Long] =
-    probe.select(shiftright(col(idCol), shift).cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-
-  /** Prune a bucketed compaction artifact to the given buckets. The
-    * filter literals are cast to the INFERRED partition-column dtype
-    * up front — a mistyped literal would wrap the partition attribute
-    * in a cast and silently defeat directory pruning (the probe would
-    * still be correct, and ∝ corpus again). A frame without the
-    * kb_bucket column (an empty artifact written unbucketed — see
-    * [[compactKeepBest]]) passes through whole. */
-  private def bucketPruned(df: DataFrame, buckets: Seq[Long]): DataFrame = {
-    if (!df.columns.contains("kb_bucket")) df
-    else if (buckets.isEmpty) df.where(lit(false))
-    else {
-      val dt = df.schema("kb_bucket").dataType
-      df.where(col("kb_bucket").isin(buckets.map(b => lit(b).cast(dt)): _*))
-    }
-  }
-
-  /** Per-root bucket-pruned reads of a compaction artifact across a
-    * base's tier roots: roots are grouped by their `BUCKETS` shift so
-    * the probe's touched-bucket set is collected once per DISTINCT
-    * width — tiers written at different corpus sizes legitimately
-    * carry different widths. Returns (build version, pruned frame)
-    * pairs. */
-  private def kbRootsPruned(spark: SparkSession, roots: Seq[(Long, String)],
-      part: String, probe: DataFrame,
-      probeKey: String): Seq[(Long, DataFrame)] =
-    roots.groupBy { case (_, root) => kbShiftAtRoot(root) }.toSeq
-      .flatMap { case (shift, rs) =>
-        val buckets = touchedKbBuckets(probe, probeKey, shift)
-        rs.map { case (ver, root) =>
-          ver -> bucketPruned(spark.read.parquet(s"$root/$part"), buckets) }
-      }
 
   /** [[assembledKeepBestMembers]] pruned to the buckets the `probe`
-    * frame's doc_ids could live in: the base compaction's bucketed
-    * members stores are read at the probe's kb_bucket partitions only
-    * — per-wave read ∝ touched buckets × target bucket rows, i.e.
-    * ∝ batch — plus the O(K) tail delta doc_id columns. Sound as the
-    * first-time anti-join's right side because a member whose bucket
-    * is outside the probe's bucket set can never equal a probe
-    * doc_id. */
+    * frame's doc_ids could live in: the tier roots' bucketed members
+    * stores are read at the probe's kb_bucket partitions only —
+    * per-wave read ∝ touched buckets × target bucket rows, i.e. ∝ batch
+    * — plus the O(K) tail delta doc_id columns. */
   private[graft] def keepBestMembersProbe(spark: SparkSession,
-      survDir: String, vs0: Seq[Long], probe: DataFrame): DataFrame =
-    attrsProbe(spark, survDir, vs0, probe, "members", Seq("doc_id"))
+      survDir: String, vs: Seq[Long], probe: DataFrame): DataFrame =
+    attrsProbe(spark, survDir, vs, probe, "members", Seq("doc_id"))
 
   /** Label rows possibly matching the `probe` frame's `keyCol` values
     * — the bucketed-probe sibling of [[assembledKeepBestDims]]' label
-    * assembly: the newest base's `<root>/<basePart>` stores (`labels`
+    * assembly: the tier roots' `<root>/<basePart>` stores (`labels`
     * keyed by cluster_id, or the doc-keyed `labels_by_doc` copy)
     * pruned to the probe's kb_bucket partitions, plus ALL tail
     * `labels_delta` slices (each ∝ its wave), under the SAME drop
     * algebra. Returns a SUPERSET of the probe's rows (whole buckets)
-    * so callers semi-join exactly as before — sound because a row
-    * whose bucketed key is outside the probe's bucket set can never
-    * equal a probe key. */
+    * so callers semi-join. */
   private def labelsProbe(spark: SparkSession, survDir: String,
-      vs0: Seq[Long], basePart: String, keyCol: String,
+      vs: Seq[Long], basePart: String, keyCol: String,
       probe: DataFrame): DataFrame = {
-    val (base, roots, tail) = kbReadSet(survDir, vs0)
-    kbLatestRows(spark, survDir, kbCumulativeDrops(spark, survDir, base),
-      kbRootsPruned(spark, roots, basePart, probe, keyCol), tail,
+    val store = VersionedStore(survDir, spark)
+    val rs = store.readSet(vs)
+    kbLatestRows(spark, survDir, kbCumulativeDrops(spark, survDir, rs.base),
+      store.bucketPrunedTiers(rs.roots, basePart, probe, keyCol), rs.tail,
       "labels_delta")
   }
 
   /** First-wins attrs rows (the `part` artifact projected to `cols`)
-    * possibly matching the `probe` frame's doc_ids: the base
-    * compaction's bucketed store pruned to the probe's buckets + the
-    * tail `attrs_delta` slices. Superset semantics as in
-    * [[labelsProbe]]. */
+    * possibly matching the `probe` frame's doc_ids: the tier roots'
+    * bucketed stores pruned to the probe's buckets + the tail
+    * `attrs_delta` slices. Superset semantics as in [[labelsProbe]]. */
   private def attrsProbe(spark: SparkSession, survDir: String,
-      vs0: Seq[Long], probe: DataFrame, part: String = "attrs",
+      vs: Seq[Long], probe: DataFrame, part: String = "attrs",
       cols: Seq[String] = kbAttrCols): DataFrame = {
-    val (_, roots, tail) = kbReadSet(survDir, vs0)
+    val store = VersionedStore(survDir, spark)
+    val rs = store.readSet(vs)
     kbAttrRows(spark, survDir,
-      kbRootsPruned(spark, roots, part, probe, "doc_id").map(_._2),
-      tail, cols)
+      store.bucketPrunedTiers(rs.roots, part, probe, "doc_id").map(_._2),
+      rs.tail, cols)
   }
 
   /** The shared latest-wins drop algebra over versioned label rows
@@ -1827,21 +1502,6 @@ object Streaming {
     }
   }
 
-  /** Tier roots of a keep-best compaction base, each holding
-    * attrs/members/labels/labels_by_doc/survivors and its own
-    * `BUCKETS` width, newest last. Each root's BUILD version — the
-    * `_ver` its rows carry under [[applyKbDrops]] — is parsed from the
-    * root path. */
-  private def kbTierRoots(survDir: String, b: Long): Seq[(Long, String)] =
-    manifestRoots(survDir, b).map { root =>
-      val ver = "^v(\\d+)/".r
-        .findFirstMatchIn(root.stripPrefix(s"$survDir/"))
-        .map(_.group(1).toLong)
-        .getOrElse(throw new IllegalStateException(
-          s"unparseable keep-best tier root '$root' in v$b/_CUMULATIVE"))
-      ver -> root
-    }
-
   /** The newest compaction's cumulative per-cluster drop store
     * ((cluster_id, _maxDrop) — see [[applyKbDrops]]), or None before
     * the first compaction. */
@@ -1849,487 +1509,171 @@ object Streaming {
       base: Option[Long]): Option[DataFrame] =
     base.map(b => spark.read.parquet(s"$survDir/v$b/compact/drops"))
 
-  /** Power-of-two range-bucket exponent for a compaction's bucketed
-    * stores: one stats pass over the assembled dim picks the width
-    * targeting ~targetRowsPerBucket rows per bucket at the OBSERVED
-    * key density. Because every compaction re-derives the width,
-    * bucket size stays ≈ constant as the corpus grows — so a wave's
-    * probe reads (touched buckets × target rows), ∝ batch, never
-    * ∝ corpus. RANGE buckets (key >> shift) rather than hash: new
-    * documents arrive in new id ranges, so a mostly-new batch's
-    * buckets don't even exist in the store and the probe reads
-    * ~nothing; hash buckets would spread any batch over
-    * min(batch, B) directories. Skewed id ranges fatten individual
-    * buckets' constant factor, never correctness (a probe always
-    * includes every bucket a probe key could live in). Shared by
-    * [[compactKeepBest]] and [[compactBandIndex]] so the two
-    * compactions' bucket algebra cannot drift. */
-  private def kbShiftFor(dim: DataFrame, keyCol: String,
-      targetRowsPerBucket: Long): Int = {
-    val st = dim
-      .agg(min(col(keyCol)), max(col(keyCol)), count(lit(1)))
-      .collect()(0)
-    val (lo, hi, n) =
-      if (st.isNullAt(0)) (0L, 0L, 0L)
-      else (st.getLong(0), st.getLong(1), st.getLong(2))
-    require(lo >= 0L,
-      s"negative $keyCol $lo — kb range bucketing assumes nonnegative ids")
-    val width = math.max(1.0,
-      (hi - lo + 1).toDouble * targetRowsPerBucket / math.max(1L, n))
-    math.min(62,
-      math.max(0, math.ceil(math.log(width) / math.log(2)).toInt))
-  }
+  /** Footer row count of a parquet store ([[VersionedStore.rowCount]]). */
+  private[graft] def parquetRowCount(spark: SparkSession, dir: String): Long =
+    VersionedStore(dir, spark).rowCount(dir)
 
-  /** Write one kb_bucket-partitioned compaction artifact, sorted by
-    * key within each bucket so row-group min/max pruning inside a
-    * touched bucket stays available at warehouse scale. An EMPTY dim
-    * is written plain (a partitioned write of zero rows creates no
-    * files and the dir cannot be re-read) — [[bucketPruned]] passes
-    * kb_bucket-less frames through whole. */
-  private def writeKbBucketed(df: DataFrame, keyCol: String, out: String,
-      shift: Int): Unit = {
-    if (df.isEmpty) df.write.mode("overwrite").parquet(out)
-    else df
-      .withColumn("kb_bucket", shiftright(col(keyCol), shift).cast("long"))
-      .repartition(col("kb_bucket"))
-      .sortWithinPartitions(col("kb_bucket"), col(keyCol))
-      .write.mode("overwrite").partitionBy("kb_bucket").parquet(out)
-  }
-
-  /** Driver-side parquet row count of a store dir, summed from file
-    * FOOTERS (r20, ADVICE): the tier metrics below used to run
-    * `spark.read.parquet(dir).count()` per store per trigger — each a
-    * scheduled Spark job (tasks, exchanges of nothing, listener
-    * events), so trigger overhead grew with tier + tail count even
-    * when nothing would be absorbed. A footer read is pure metadata
-    * (the row count is in the file footer), needs no job, and costs
-    * one short ranged read per file — stores are written
-    * size-targeted, so file counts are bounded. The recursive walk
-    * covers kb_bucket-partitioned stores and, like Spark's file index,
-    * skips every `_`- or `.`-prefixed entry (a committer's
-    * `_temporary` attempt dirs, checksum and marker files), so the
-    * count is the one `spark.read.parquet(dir).count()` returns. */
-  private[graft] def parquetRowCount(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    def rows(d: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(d).iterator
-        .filterNot { st =>
-          val name = st.getPath.getName
-          name.startsWith("_") || name.startsWith(".")
-        }
-        .map { st =>
-          if (st.isDirectory) rows(st.getPath)
-          else if (!st.getPath.getName.endsWith(".parquet")) 0L
-          else {
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromStatus(st, conf))
-            try r.getRecordCount finally r.close()
-          }
-        }.sum
-    if (fs.exists(p)) rows(p) else 0L
-  }
-
-  /** Number of kb_bucket partition directories under a bucketed store
-    * — the per-root term of the tier-merge bound below. */
-  private def bucketDirCount(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).count(s =>
-      s.isDirectory && s.getPath.getName.startsWith("kb_bucket=")).toLong
-  }
-
-  /** Tier-merge bound for the bucketed stores (r20, VERDICT #4): when
-    * the BUCKET DIRECTORIES across a manifest's kept tier roots exceed
-    * this, the next compaction absorbs every root into one tier
-    * regardless of the size rule. Unmerged tiers each carry their own
-    * bucket-dir fan-out, and every wave's probe lists touched buckets
-    * per root — at warehouse wave counts the listing cost the
-    * compaction removed would re-grow with tier count. The default
-    * (4096) keeps listings trivially cheap on any store while firing
-    * rarely enough that the forced rewrite amortizes (a major merge is
-    * one extra O(corpus) rewrite per ~doubling). Parameterised for
-    * tests and clusters; scale-adaptive because bucket width re-derives
-    * per tier, so dir count tracks corpus/target rows, not waves. */
-  private def maxKeptBucketDirs(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.kb.maxKeptBucketDirs")
-      .flatMap(_.toLongOption).getOrElse(4096L)
-
-  /** Compact a delta keep-best lineage at its newest committed
-    * version: SIZE-TIERED — merge the fresh tail slices plus any prior
-    * tier roots of comparable size into a new tier under
-    * `v<top>/compact/`, list kept roots + the new tier in the
-    * `_CUMULATIVE` manifest (written last) — the [[compactGramIndex]]
-    * story on the survivor direction with [[compactUnionStore]]'s
-    * amortization. Readers stand on the manifest tiers + later delta
-    * slices (O(log W) stores + O(K) listings). Janitor-deletable set:
-    * [[janitorDeletablePaths]]. Idempotent; safe at any cadence.
-    *
-    * The `compact/` namespace keeps reads and writes disjoint by
-    * construction: nothing is checkpointed, a crash mid-compaction
-    * leaves a torn `compact/` dir no reader trusts (the marker is
-    * written last), and the retry overwrites it whole. */
+  /** Compact a delta keep-best lineage at its newest committed version
+    * `top`: merge the tail slices and the roots [[VersionedStore.absorb]]
+    * picks (tier metric: attrs rows) into a new tier `v<top>/compact`
+    * holding attrs, members, labels, labels_by_doc, survivors, the
+    * cumulative drop store and `BUCKETS`. Readers stand on the manifest
+    * tiers + later delta slices. Layout, commit and janitor contract:
+    * [[VersionedStore]]. Idempotent; safe at any cadence. */
   def compactKeepBest(spark: SparkSession, survDir: String,
-      targetRowsPerBucket: Long = 65536L): Unit = {
-    import java.nio.file.{Files, Paths}
-    val vs = modelVersions(survDir).sorted
-    require(vs.nonEmpty, s"no committed survivor version under $survDir")
-    val top = vs.max
-    if (Files.isRegularFile(Paths.get(s"$survDir/v$top/_CUMULATIVE"))) return
-    val (base, roots, tail) = kbReadSet(survDir, vs)
-    // SIZE-TIERED merge ([[compactUnionStore]]'s rule; the latest-wins
-    // precedence across tiers comes from [[applyKbDrops]]' cumDrops
-    // store + build-version tags): absorb prior tier roots
-    // smallest-first while a root's attrs rows are ≤ 2× the rows
-    // merged so far — a row is rewritten O(log W) times and a trigger
-    // whose tails are small writes a small tier. The tier metric is
-    // attrs ROW COUNT (one row per streamed doc), summed from parquet
-    // footers on the driver ([[parquetRowCount]]: no per-store
-    // count() jobs on the trigger path).
-    def rowsOf(dir: String): Long = parquetRowCount(spark, dir)
-    var acc = tail.map(v => rowsOf(s"$survDir/v$v/attrs_delta")).sum
-    val absorbed = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    roots.map(rv => rv -> rowsOf(s"${rv._2}/attrs")).sortBy(_._2).foreach {
-      case (rv, n) => if (n <= 2 * acc) { absorbed += rv; acc += n }
+      targetRowsPerBucket: Long = 65536L): Unit =
+    compactKeepBest(spark, survDir, targetRowsPerBucket,
+      VersionedStore.MaxKeptBucketDirs)
+
+  private[graft] def compactKeepBest(spark: SparkSession, survDir: String,
+      targetRowsPerBucket: Long, maxKeptBucketDirs: Long): Unit = {
+    val store = VersionedStore(survDir, spark)
+    store.compact(VersionedStore.Tiered("attrs", "attrs_delta",
+        maxKeptBucketDirs)) { m =>
+      def tiers(part: String) = m.absorbed.map { case (ver, root) =>
+        ver -> spark.read.parquet(s"$root/$part") }
+      val attrs = kbAttrRows(spark, survDir, tiers("attrs").map(_._2), m.tail)
+      // the SAME drop algebra as the readers (tiers and tails tagged with
+      // their build versions): the new tier holds exactly the rows that
+      // survive through `top`, so reading it tagged `top` is sound
+      val priorCumDrops = kbCumulativeDrops(spark, survDir, m.base)
+      val labels = kbLatestRows(spark, survDir, priorCumDrops,
+        tiers("labels"), m.tail, "labels_delta")
+      val survivors = kbLatestRows(spark, survDir, priorCumDrops,
+        tiers("survivors"), m.tail, "survivors_delta")
+      // the width derives from THIS tier's rows; cluster ids are
+      // member-minimum doc_ids, so they bucket under the same width
+      val shift = VersionedStore.bucketShiftFor(attrs, "doc_id",
+        targetRowsPerBucket)
+      val out = s"$survDir/v${m.top}/compact"
+      def writeBucketed(df: DataFrame, keyCol: String, part: String): Unit =
+        VersionedStore.writeBucketed(df, keyCol, s"$out/$part", shift)
+      writeBucketed(attrs, "doc_id", "attrs")
+      // doc_id-only membership (the first-time anti-join's probe side),
+      // re-read from the written attrs instead of re-running the assembly
+      writeBucketed(spark.read.parquet(s"$out/attrs").select(col("doc_id")),
+        "doc_id", "members")
+      writeBucketed(labels, "cluster_id", "labels")
+      // the same label rows keyed the OTHER way: touched-cluster
+      // discovery probes BY DOC (wave-pair endpoints → their clusters),
+      // member expansion probes BY CLUSTER — two narrow copies beat one
+      // corpus labels scan per wave
+      writeBucketed(spark.read.parquet(s"$out/labels")
+          .select(kbCols.map(col): _*),
+        "doc_id", "labels_by_doc")
+      survivors.write.mode("overwrite").parquet(s"$out/survivors")
+      // cumulative per-cluster drop store (prior cumulative + tail drop
+      // slices, per-cluster max): the drop history KEPT tiers need once
+      // the janitor deletes the waves' own `drops` slices. Pruned to
+      // entries that can still kill a row — every presented row carries
+      // _ver >= the new manifest's oldest build version — so the store
+      // [[applyKbDrops]] broadcasts does not grow with every drop ever.
+      val minKeptVer = (m.kept.map(_._1) :+ m.top).min
+      (priorCumDrops
+          .map(_.select(col("cluster_id"), col("_maxDrop").as("_dver")))
+          .toSeq ++
+        m.tail.map(v => spark.read.parquet(s"$survDir/v$v/drops")
+          .select(col("cluster_id")).withColumn("_dver", lit(v))))
+        .reduce(_ unionByName _)
+        .groupBy(col("cluster_id")).agg(max(col("_dver")).as("_maxDrop"))
+        .where(col("_maxDrop") > lit(minKeptVer))
+        .write.mode("overwrite").parquet(s"$out/drops")
+      store.writeBucketShift(out, shift)
+      s"v${m.top}/compact"
     }
-    var kept = roots.filterNot(absorbed.contains)
-    // bucket-dir tier-merge bound — see [[maxKeptBucketDirs]]. Counted
-    // over the roots that would be KEPT (the new tier's dirs replace
-    // the absorbed ones).
-    if (kept.map { case (_, root) => bucketDirCount(spark, s"$root/attrs") }
-        .sum > maxKeptBucketDirs(spark)) {
-      absorbed ++= kept
-      kept = Seq.empty
-    }
-    def tiers(part: String) = absorbed.toSeq.map { case (ver, root) =>
-      ver -> spark.read.parquet(s"$root/$part") }
-    val attrs = kbAttrRows(spark, survDir, tiers("attrs").map(_._2), tail)
-    // merged label/survivor rows carry the SAME drop algebra as the
-    // readers (absorbed tiers tagged with their build versions, tails
-    // with theirs) — so the new tier contains exactly the rows that
-    // survive through `top`, and reading it tagged `top` is sound
-    // (see [[applyKbDrops]])
-    val priorCumDrops = kbCumulativeDrops(spark, survDir, base)
-    val labels = kbLatestRows(spark, survDir, priorCumDrops,
-      tiers("labels"), tail, "labels_delta")
-    val survivors = kbLatestRows(spark, survDir, priorCumDrops,
-      tiers("survivors"), tail, "survivors_delta")
-    // bucket width (r19, VERDICT #2/#3): see [[kbShiftFor]] — derived
-    // from THIS tier's rows, so every tier targets ≈ constant rows per
-    // bucket at its own key density (probes collect buckets per
-    // distinct width, [[kbRootsPruned]]). Cluster ids are
-    // member-minimum doc_ids, so they bucket under the same width as
-    // doc ids.
-    val shift = kbShiftFor(attrs, "doc_id", targetRowsPerBucket)
-    def writeBucketed(df: DataFrame, keyCol: String, part: String): Unit =
-      writeKbBucketed(df, keyCol, s"$survDir/v$top/compact/$part", shift)
-    writeBucketed(attrs, "doc_id", "attrs")
-    // doc_id-only membership (the first-time anti-join's probe side),
-    // derived from the just-written attrs so it re-reads one narrow
-    // column instead of re-running the assembly
-    writeBucketed(
-      spark.read.parquet(s"$survDir/v$top/compact/attrs")
-        .select(col("doc_id")),
-      "doc_id", "members")
-    writeBucketed(labels, "cluster_id", "labels")
-    // the same label rows keyed the OTHER way: touched-cluster
-    // discovery probes BY DOC (wave-pair endpoints → their clusters),
-    // member expansion probes BY CLUSTER — two narrow copies beat one
-    // corpus labels scan per wave
-    writeBucketed(
-      spark.read.parquet(s"$survDir/v$top/compact/labels")
-        .select(col("doc_id"), col("cluster_id"), col("quality_score"),
-          col("lang")),
-      "doc_id", "labels_by_doc")
-    survivors.write.mode("overwrite")
-      .parquet(s"$survDir/v$top/compact/survivors")
-    // cumulative per-cluster drop store (r19 tiering): prior
-    // cumulative + tail drop slices, per-cluster max — the drop
-    // history KEPT tiers need after their recording waves' own
-    // `drops` slices are janitor-deleted. Written before the marker
-    // like every tier artifact. PRUNED to entries that can still kill
-    // a row (r20, ADVICE): every row a reader can present carries
-    // _ver >= the minimum build version in the NEW manifest (kept
-    // tiers at their build versions, the new tier at `top`, later
-    // deltas newer still), and `_maxDrop <= _ver` always survives —
-    // so entries with _maxDrop <= that minimum are dead weight, and
-    // without pruning the store (broadcast by [[applyKbDrops]] on
-    // every wave) would grow with every cluster EVER dropped.
-    val minKeptVer = (kept.map(_._1) :+ top).min
-    (priorCumDrops
-        .map(_.select(col("cluster_id"), col("_maxDrop").as("_dver")))
-        .toSeq ++
-      tail.map(v => spark.read.parquet(s"$survDir/v$v/drops")
-        .select(col("cluster_id")).withColumn("_dver", lit(v))))
-      .reduce(_ unionByName _)
-      .groupBy(col("cluster_id")).agg(max(col("_dver")).as("_maxDrop"))
-      .where(col("_maxDrop") > lit(minKeptVer))
-      .write.mode("overwrite").parquet(s"$survDir/v$top/compact/drops")
-    // bucket meta BEFORE the marker: a torn compaction never exposes it
-    Files.write(Paths.get(s"$survDir/v$top/compact/BUCKETS"),
-      shift.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the marker is the MANIFEST: kept roots + the new tier,
-    // dim-relative, one per line. Written last — a torn merge leaves
-    // the old manifest authoritative and the orphan compact/ dir
-    // invisible.
-    val prefix = s"$survDir/"
-    val manifest = (kept.map(_._2.stripPrefix(prefix)) :+
-      s"v$top/compact").mkString("\n")
-    Files.write(Paths.get(s"$survDir/v$top/_CUMULATIVE"),
-      manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ()
   }
 
   /** The accumulated band index's (band, bh, doc_id) rows over the
-    * committed versions `prior`: the newest [[compactBandIndex]]
-    * store + O(K) tail slices, or all slices pre-compaction. */
+    * committed versions `prior`: the read set's tier stores + O(K) tail
+    * slices. */
   private[graft] def bandHistBands(spark: SparkSession, dimDir: String,
       prior: Seq[Long]): DataFrame = {
-    val vs = prior.sorted
-    val base = bandCumulativeBase(dimDir, vs)
-    val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    val roots = base.toSeq.flatMap(manifestRoots(dimDir, _))
+    val rs = VersionedStore(dimDir, spark).readSet(prior)
     spark.read.parquet(
-      (roots.map(r => s"$r/bands") ++
-        tail.map(p => s"$dimDir/v$p/bands")): _*)
+      (rs.roots.map(r => s"${r._2}/bands") ++
+        rs.tail.map(p => s"$dimDir/v$p/bands")): _*)
       .select(col("band"), col("bh"), col("doc_id"))
   }
 
   /** The exact-Jaccard verify's inputs for a band-index probe: the
     * (possibly pinned) candidate pairs and the hist shingle rows that
-    * can match them. With a compacted base, candidates are
-    * touched-size — pin them once, then prune the fat shingle store
-    * to the candidates' id_b kb_buckets: the verify reads ∝ matches,
-    * never ∝ corpus (sound: a hist doc outside the candidates'
-    * buckets can never equal a candidate id_b). Pre-compaction both
-    * fall through lazily to the all-slices scan. `docsPart`/`docsCols`
-    * name the shingle artifact — "docs"(doc_id, sh, nsh) on the
-    * standalone band index, "sh"(… + lang) inside the datasheet's
-    * embedded dup engine. */
+    * can match them. With tier roots, candidates are touched-size —
+    * pin them once, then prune the fat shingle stores to the
+    * candidates' id_b kb_buckets: the verify reads ∝ matches, never
+    * ∝ corpus. Before the first compaction both fall through lazily to
+    * the all-slices scan. `docsPart`/`docsCols` name the shingle
+    * artifact — "docs"(doc_id, sh, nsh) on the standalone band index,
+    * "sh"(… + lang) inside the datasheet's embedded dup engine. */
   private[graft] def bandVerifyInputs(spark: SparkSession, dimDir: String,
       prior: Seq[Long], candLazy: DataFrame,
       docsPart: String = "docs",
       docsCols: Seq[String] = Seq("doc_id", "sh", "nsh"))
       : (DataFrame, DataFrame) = {
-    val vs = prior.sorted
-    val base = bandCumulativeBase(dimDir, vs)
-    val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    base match {
-      case Some(b) =>
-        val c = graft.Caches.pin(candLazy)
-        // one bucket collection per DISTINCT shift — tiers written at
-        // different corpus sizes carry different bucket widths
-        val shifts = manifestRoots(dimDir, b).map(r => r -> kbShiftAtRoot(r))
-        val bucketsByShift = shifts.map(_._2).distinct
-          .map(s => s -> touchedKbBuckets(c, "id_b", s)).toMap
-        val h = (shifts.map { case (r, sh) =>
-            bucketPruned(spark.read.parquet(s"$r/$docsPart"),
-              bucketsByShift(sh)).select(docsCols.map(col): _*)
-          } ++
-          tail.map(p => spark.read.parquet(s"$dimDir/v$p/$docsPart")
-            .select(docsCols.map(col): _*)))
-          .reduce(_ unionByName _)
-        (c, h)
-      case None =>
-        (candLazy,
-          spark.read.parquet(tail.map(p => s"$dimDir/v$p/$docsPart"): _*))
+    val store = VersionedStore(dimDir, spark)
+    val rs = store.readSet(prior)
+    if (rs.base.isEmpty)
+      (candLazy,
+        spark.read.parquet(rs.tail.map(p => s"$dimDir/v$p/$docsPart"): _*))
+    else {
+      val c = graft.Caches.pin(candLazy)
+      val h = (store.bucketPrunedTiers(rs.roots, docsPart, c, "id_b")
+          .map(_._2) ++
+        rs.tail.map(p => spark.read.parquet(s"$dimDir/v$p/$docsPart")))
+        .map(_.select(docsCols.map(col): _*))
+        .reduce(_ unionByName _)
+      (c, h)
     }
   }
 
-  /** Newest committed version of a band-index lineage carrying a
-    * compacted store ([[compactBandIndex]]'s `compact/bands` under a
-    * `_CUMULATIVE` marker). None = no compaction yet: probes fall
-    * back to the all-slices scan. */
-  private def bandCumulativeBase(dimDir: String,
-      vs: Seq[Long]): Option[Long] =
-    cumulativeBaseAt(dimDir, vs, "bands")
-
-  /** The kb_bucket shift a tier root was written with (its `BUCKETS`
-    * meta, committed before the manifest that lists the root). */
-  private def kbShiftAtRoot(root: String): Int = {
-    import java.nio.file.{Files, Paths}
-    new String(Files.readAllBytes(Paths.get(s"$root/BUCKETS")),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toInt
+  /** Paths composing a union-store history read over the committed
+    * versions `vs`: the read set's stores + the raw slices after it. */
+  private def unionStorePaths(spark: SparkSession, dimDir: String,
+      vs: Seq[Long], part: String): Seq[String] = {
+    val rs = VersionedStore(dimDir, spark).readSet(vs)
+    rs.roots.map(_._2) ++ rs.tail.map(v => s"$dimDir/v$v/$part")
   }
 
-  /** Newest committed version under `dimDir` whose `compact/<part>`
-    * store committed (`_CUMULATIVE` marker written after it). */
-  private def cumulativeBaseAt(dimDir: String, vs: Seq[Long],
-      part: String): Option[Long] = {
-    import java.nio.file.{Files, Paths}
-    vs.filter { v =>
-      Files.isRegularFile(Paths.get(s"$dimDir/v$v/_CUMULATIVE")) &&
-        Files.exists(Paths.get(s"$dimDir/v$v/compact/$part"))
-    }.sorted.lastOption
-  }
+  /** The exact paths a janitor may delete under a compacted lineage dir
+    * (keep-best survivors, band, span and gram index, ledger, datasheet
+    * dims) — the contract of [[VersionedStore.janitorDeletablePaths]]:
+    * janitors enumerate instead of re-deriving the rule. */
+  def janitorDeletablePaths(dimDir: String): Seq[String] =
+    VersionedStore(dimDir).janitorDeletablePaths
 
-  /** The tier dirs a compaction base's `_CUMULATIVE` marker lists, as
-    * paths under `dimDir`. The marker is a MANIFEST — one
-    * dim-relative dir per line, newest last: the size-tiered set whose
-    * union is the full accumulated store (a union store's part dir, or
-    * a band/keep-best root holding several artifacts). Every
-    * compaction lists at least its own new tier. */
-  private def manifestRoots(dimDir: String, b: Long): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    val rels = new String(
-      Files.readAllBytes(Paths.get(s"$dimDir/v$b/_CUMULATIVE")),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    require(rels.nonEmpty, s"empty compaction manifest $dimDir/v$b/_CUMULATIVE")
-    rels.map(rel => s"$dimDir/$rel")
-  }
-
-  /** Paths composing a union-store history read: the manifest stores
-    * of the newest committed compaction (if any) + the raw slices
-    * after it — O(log W) stores + O(K) tails instead of O(W) slices.
-    * Falls back to the all-slices scan when no compaction exists. */
-  private def unionStorePaths(dimDir: String, vs: Seq[Long],
-      part: String): Seq[String] = {
-    val sorted = vs.sorted
-    val base = cumulativeBaseAt(dimDir, sorted, part)
-    val tail = base.map(b => sorted.filter(_ > b)).getOrElse(sorted)
-    base.toSeq.flatMap(manifestRoots(dimDir, _)) ++
-      tail.map(v => s"$dimDir/v$v/$part")
-  }
-
-  /** The exact paths a janitor may delete under a `_CUMULATIVE`-marker
-    * lineage dir (keep-best survivors, band index, span index, ledger,
-    * datasheet dims) — r20, ADVICE: since the r19 tiering, KEPT tier
-    * roots live INSIDE old version dirs, so the pre-r19 janitor
-    * contract ("version dirs below the newest compaction are deletable
-    * outright") silently inverted; a janitor built on it destroys
-    * manifest-referenced tiers, detected only as a path-not-found
-    * crash at read time. This helper IS the contract now: janitors
-    * enumerate instead of re-deriving the rule from doc comments.
-    *
-    * Protected: version dirs NEWER than the newest manifest (live tail
-    * slices), every root the newest manifest references (whole
-    * subtrees, wherever they live), and each version dir's
-    * `_SUCCESS`/`_CUMULATIVE` markers (version registration + manifest
-    * history). Everything else at or below the manifest version is
-    * subsumed by the tiers: raw slices, and compact roots earlier
-    * merges superseded. Returns maximal deletable subtrees; deleting
-    * exactly this set leaves every reader, the next wave and the next
-    * recompaction unchanged (StreamingSpec gates it against the batch
-    * oracle). */
-  def janitorDeletablePaths(dimDir: String): Seq[String] = {
-    import java.nio.file.{Files, Paths, Path}
-    val vs = modelVersions(dimDir).sorted
-    val base = vs.filter(v =>
-      Files.isRegularFile(Paths.get(s"$dimDir/v$v/_CUMULATIVE"))).lastOption
-    base match {
-      case None => Seq.empty // nothing compacted: every slice is live
-      case Some(b) =>
-        // candidates and roots are compared as NORMALIZED paths: a
-        // `.` or `..` segment in `dimDir` would otherwise defeat
-        // startsWith and offer a protected root
-        val roots = manifestRoots(dimDir, b).map(r => Paths.get(r).normalize)
-        def list(d: Path): Seq[Path] = {
-          val entries = Files.list(d)
-          try entries.toArray.toSeq.map(_.asInstanceOf[Path])
-          finally entries.close()
-        }
-        // a path is deletable iff it neither contains nor lies inside
-        // a protected root; a dir containing one recurses so the
-        // siblings of a nested root (e.g. v1/compact/shas) still go
-        def sweep(p: Path): Seq[String] =
-          if (roots.exists(r => r.startsWith(p) && r != p))
-            list(p).flatMap(sweep)
-          else if (roots.exists(p.startsWith)) Seq.empty
-          else Seq(p.toString)
-        vs.filter(_ <= b).flatMap { v =>
-          list(Paths.get(s"$dimDir/v$v").normalize)
-            .filterNot(e => e.getFileName.toString == "_CUMULATIVE" ||
-              e.getFileName.toString == "_SUCCESS")
-            .flatMap(sweep)
-        }
-    }
-  }
-
-  /** SIZE-TIERED compaction of a distinct-union lineage (ledger shas,
-    * span index) at its newest committed version `top`. The
-    * pre-tiering form rewrote the FULL accumulated store at every
-    * cadence trigger — total compaction work quadratic in wave count
-    * (every K waves re-reads and re-writes ∝ corpus). Tiered, each
-    * trigger merges the fresh tail slices plus any existing manifest
-    * stores of comparable size (absorb smallest-first while a store
-    * is ≤ 2× the rows merged so far): a row is rewritten O(log W)
-    * times total, per-trigger cost is ∝ tails except at exponentially
-    * spaced promotions, and readers list O(log W) stores + O(K)
-    * tails. Commit protocol unchanged: the merged store is written
-    * under `v<top>/compact/<part>` FIRST, then the `_CUMULATIVE`
-    * manifest (surviving stores + the new one, dim-relative) LAST —
-    * a torn merge leaves the old manifest authoritative and the
-    * orphan dir invisible; a replayed trigger is a marker-check
-    * no-op. Superseded store dirs are left on disk (same append-only
-    * discipline as raw slices — deleting under a concurrent reader
-    * of the prior manifest would tear its read); janitor-deletable
-    * set = slices at-or-below the base + compact stores unreferenced
-    * by the newest manifest, keeping version markers (StreamingSpec
-    * sweeps exactly that and proves the reader, later waves and the
-    * next recompaction unchanged).
+  /** Size-tiered compaction of a distinct-union lineage (ledger shas,
+    * span index) at its newest committed version `top`: the tail slices
+    * and the stores [[VersionedStore.absorb]] picks merge into
+    * `v<top>/compact/<part>` (a row is rewritten O(log W) times, and a
+    * trigger with small tails writes a small store). Superseded store
+    * dirs stay on disk for a concurrent reader of the prior manifest;
+    * the janitor contract says which may go.
     *
     * `distinctStore`: span slices overlap across waves, so merges
     * re-distinct (cross-tier duplicates are harmless to the left_semi
     * probe and collapse at the next shared merge); ledger slices are
     * anti-joined disjoint at write, so the union is exact without it. */
   private def compactUnionStore(spark: SparkSession, dimDir: String,
-      part: String, cols: Seq[String], distinctStore: Boolean): Unit = {
-    import java.nio.file.{Files, Paths}
-    val vs = modelVersions(dimDir).sorted
-    require(vs.nonEmpty, s"no committed version under $dimDir")
-    val top = vs.max
-    if (Files.isRegularFile(Paths.get(s"$dimDir/v$top/_CUMULATIVE"))) return
-    val base = cumulativeBaseAt(dimDir, vs, part)
-    val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    val stores = base.toSeq.flatMap(manifestRoots(dimDir, _))
-    val tailDirs = tail.map(v => s"$dimDir/v$v/$part")
-    // the tier metric is ROW COUNT, not bytes: rows track data
-    // ∝-exactly for a fixed schema at any scale, and (unlike file
-    // bytes) they are not poisoned by per-file overhead on small
-    // slices. Summed from parquet footers on the driver (r20, ADVICE
-    // — [[parquetRowCount]]: no count() jobs on the trigger path).
-    def rowsOf(dir: String): Long = parquetRowCount(spark, dir)
-    var acc = tailDirs.map(rowsOf).sum
-    val absorbed = scala.collection.mutable.ArrayBuffer.empty[String]
-    stores.map(s => s -> rowsOf(s)).sortBy(_._2).foreach { case (s, b) =>
-      if (b <= 2 * acc) { absorbed += s; acc += b }
+      part: String, cols: Seq[String], distinctStore: Boolean): Unit =
+    VersionedStore(dimDir, spark).compact(
+        VersionedStore.Tiered("", part)) { m =>
+      val merged0 = spark.read.parquet((m.absorbed.map(_._2) ++
+          m.tail.map(v => s"$dimDir/v$v/$part")): _*)
+        .select(cols.map(col): _*)
+      val merged = (if (distinctStore) merged0.distinct() else merged0)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val n = merged.count()
+      merged.repartition(math.max(1L, n / 8000000L + 1L).toInt)
+        .sortWithinPartitions(col(cols.head))
+        .write.mode("overwrite").parquet(s"$dimDir/v${m.top}/compact/$part")
+      merged.unpersist(blocking = false)
+      s"v${m.top}/compact/$part"
     }
-    val kept = stores.filterNot(absorbed.contains)
-    val merged0 = spark.read.parquet((absorbed.toSeq ++ tailDirs): _*)
-      .select(cols.map(col): _*)
-    val merged = (if (distinctStore) merged0.distinct() else merged0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = merged.count()
-    merged.repartition(math.max(1L, n / 8000000L + 1L).toInt)
-      .sortWithinPartitions(col(cols.head))
-      .write.mode("overwrite").parquet(s"$dimDir/v$top/compact/$part")
-    merged.unpersist(blocking = false)
-    val prefix = s"$dimDir/"
-    val manifest = (kept.map(_.stripPrefix(prefix)) :+
-      s"v$top/compact/$part").mkString("\n")
-    Files.write(Paths.get(s"$dimDir/v$top/_CUMULATIVE"),
-      manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ()
-  }
 
-  /** Compact a band-index lineage at its newest committed version:
-    * persist the accumulated (bands, docs) under that version's
-    * `compact/` namespace, `_CUMULATIVE` marker last — the
-    * [[compactKeepBest]] discipline on the index direction
-    * (idempotent, disjoint read/write namespaces, a torn `compact/`
-    * dir is invisible without the marker).
-    *
-    * Why (r19, measured): pre-compaction, every [[bandIndexUpdate]]
-    * wave re-opened ALL prior slices — O(waves × shuffle-partitions)
-    * files, whose footer/listing reads alone grew ~91 KB/wave on the
-    * r19 probe corpus, the dominant per-wave ∝-history read term
-    * after the keep-best store bucketing. Post-compaction a wave
-    * stands on ONE store + O(K) tail slices.
+  /** Compact a band-index lineage at its newest committed version `top`:
+    * the tail slices and the roots [[VersionedStore.absorb]] picks (tier
+    * metric: shingle rows) merge into `v<top>/compact`. Band/docs slices
+    * are per-batch disjoint, so tiers partition the store exactly and
+    * need no precedence (unlike the keep-best stores' drop algebra).
     *
     * The `docs` store (the fat shingle arrays — the verify side) is
     * kb_bucket range-partitioned by doc_id and sorted within buckets,
@@ -2337,106 +1681,84 @@ object Streaming {
     * (∝ matches). The `bands` store is size-targeted files sorted by
     * (band, bh): band keys are uniform hashes, so arrival-range
     * bucketing cannot prune a probe — the win here is bounded file
-    * count (and the sort keeps row-group stats usable for any future
-    * literal probe). */
+    * count. */
   def compactBandIndex(spark: SparkSession, dimDir: String,
       targetRowsPerBucket: Long = 65536L,
       docsPart: String = "docs",
-      docsCols: Seq[String] = Seq("doc_id", "sh", "nsh")): Unit = {
-    import java.nio.file.{Files, Paths}
-    val vs = modelVersions(dimDir).sorted
-    require(vs.nonEmpty, s"no committed band-index version under $dimDir")
-    val top = vs.max
-    if (Files.isRegularFile(Paths.get(s"$dimDir/v$top/_CUMULATIVE"))) return
-    // assemble from the PRIOR tiers + the tail (not all slices):
-    // recompaction stays O(tail) on the listing side and a
-    // janitor-swept lineage can still recompact
-    val base = bandCumulativeBase(dimDir, vs)
-    val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs)
-    val roots = base.toSeq.flatMap(manifestRoots(dimDir, _))
-    // SIZE-TIERED merge ([[compactUnionStore]]'s rule on the shingle
-    // rows): absorb prior tiers smallest-first while a tier is ≤ 2×
-    // the rows merged so far — the pre-tiering form rewrote the FULL
-    // accumulated store every trigger, total work quadratic in wave
-    // count. Kept tiers survive in the manifest; band/docs slices are
-    // per-batch disjoint, so tiers partition the store exactly and no
-    // precedence is needed (unlike the latest-wins keep-best survivor
-    // stores, which need [[applyKbDrops]]' build-version tags).
-    def rowsOf(dir: String): Long = parquetRowCount(spark, dir)
-    var acc = tail.map(v => rowsOf(s"$dimDir/v$v/$docsPart")).sum
-    val absorbed = scala.collection.mutable.ArrayBuffer.empty[String]
-    roots.map(r => r -> rowsOf(s"$r/$docsPart")).sortBy(_._2).foreach {
-      case (r, n) => if (n <= 2 * acc) { absorbed += r; acc += n }
+      docsCols: Seq[String] = Seq("doc_id", "sh", "nsh")): Unit =
+    compactBandIndex(spark, dimDir, targetRowsPerBucket, docsPart, docsCols,
+      VersionedStore.MaxKeptBucketDirs)
+
+  private[graft] def compactBandIndex(spark: SparkSession, dimDir: String,
+      targetRowsPerBucket: Long, docsPart: String, docsCols: Seq[String],
+      maxKeptBucketDirs: Long): Unit = {
+    val store = VersionedStore(dimDir, spark)
+    store.compact(VersionedStore.Tiered(docsPart, docsPart,
+        maxKeptBucketDirs)) { m =>
+      // the kb_bucket-partitioned tiers and the plain tail slices must
+      // be read separately (one mixed read trips Spark's conflicting-
+      // directory-structures check) — select() aligns the schemas
+      val docs =
+        (m.absorbed.map(r => spark.read.parquet(s"${r._2}/$docsPart"))
+          ++ m.tail.map(v => spark.read.parquet(s"$dimDir/v$v/$docsPart")))
+        .map(_.select(docsCols.map(col): _*))
+        .reduce(_ unionByName _)
+      val bands = spark.read.parquet(
+        (m.absorbed.map(r => s"${r._2}/bands") ++
+          m.tail.map(v => s"$dimDir/v$v/bands")): _*)
+        .select(col("band"), col("bh"), col("doc_id"))
+      val out = s"$dimDir/v${m.top}/compact"
+      val shift = VersionedStore.bucketShiftFor(docs, "doc_id",
+        targetRowsPerBucket)
+      VersionedStore.writeBucketed(docs, "doc_id", s"$out/$docsPart", shift)
+      val nBands = bands.count()
+      bands.repartition(math.max(1L, nBands / 4000000L + 1L).toInt)
+        .sortWithinPartitions(col("band"), col("bh"))
+        .write.mode("overwrite").parquet(s"$out/bands")
+      store.writeBucketShift(out, shift)
+      s"v${m.top}/compact"
     }
-    var kept = roots.filterNot(absorbed.contains)
-    // r20 (VERDICT #4): bucket-dir tier-merge bound over the kept
-    // roots' bucketed docs stores — see [[maxKeptBucketDirs]]
-    if (kept.map(r => bucketDirCount(spark, s"$r/$docsPart")).sum
-        > maxKeptBucketDirs(spark)) {
-      absorbed ++= kept
-      kept = Seq.empty
-    }
-    // the kb_bucket-partitioned tiers and the plain tail slices must
-    // be read separately (one mixed read trips Spark's conflicting-
-    // directory-structures check) — select() aligns the schemas
-    val docs =
-      (absorbed.toSeq.map(r => spark.read.parquet(s"$r/$docsPart"))
-        ++ tail.map(v => spark.read.parquet(s"$dimDir/v$v/$docsPart")))
-      .map(_.select(docsCols.map(col): _*))
-      .reduce(_ unionByName _)
-    val bands = spark.read.parquet(
-      (absorbed.toSeq.map(r => s"$r/bands") ++
-        tail.map(v => s"$dimDir/v$v/bands")): _*)
-      .select(col("band"), col("bh"), col("doc_id"))
-    val shift = kbShiftFor(docs, "doc_id", targetRowsPerBucket)
-    writeKbBucketed(docs, "doc_id", s"$dimDir/v$top/compact/$docsPart",
-      shift)
-    val nBands = bands.count()
-    bands.repartition(math.max(1L, nBands / 4000000L + 1L).toInt)
-      .sortWithinPartitions(col("band"), col("bh"))
-      .write.mode("overwrite").parquet(s"$dimDir/v$top/compact/bands")
-    // bucket meta BEFORE the marker: a torn compaction never exposes it
-    Files.write(Paths.get(s"$dimDir/v$top/compact/BUCKETS"),
-      shift.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val prefix = s"$dimDir/"
-    val manifest = (kept.map(_.stripPrefix(prefix)) :+
-      s"v$top/compact").mkString("\n")
-    Files.write(Paths.get(s"$dimDir/v$top/_CUMULATIVE"),
-      manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ()
   }
 
   /** One maintained wave of the delta keep-best WITH the compaction
     * cadence — [[gramIndexMaintain]]'s sibling on the survivor
-    * direction. Since r19 the cadence also compacts the band-index
-    * lineage the maintainer drives (same wave, same `compactEvery`):
-    * the keep-best wave cost is bounded only if BOTH its stores'
-    * probes are. `compactEvery <= 0` disables the cadence. */
+    * direction. The cadence also compacts the band-index lineage the
+    * maintainer drives (same wave, same `compactEvery`): the keep-best
+    * wave cost is bounded only if BOTH its stores' probes are.
+    * `compactEvery <= 0` disables the cadence. */
   private[graft] def keepBestDeltaMaintain(dimDir: String, pairsDir: String,
-      survDir: String, compactEvery: Int)(
+      survDir: String, compactEvery: Int,
+      maxKeptBucketDirs: Long = VersionedStore.MaxKeptBucketDirs)(
       batch: DataFrame, batchId: Long): Unit = {
     keepBestDeltaUpdate(dimDir, pairsDir, survDir)(batch, batchId)
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-      compactKeepBest(batch.sparkSession, survDir)
-      compactBandIndex(batch.sparkSession, dimDir)
+      val spark = batch.sparkSession
+      compactKeepBest(spark, survDir, 65536L, maxKeptBucketDirs)
+      compactBandIndex(spark, dimDir, 65536L, "docs",
+        Seq("doc_id", "sh", "nsh"), maxKeptBucketDirs)
     }
+  }
+
+  /** The lifecycle guards of a keep-best stream: band and survivor
+    * lineages plus the pair slices (the same bandIndexUpdate state
+    * [[buildBandIndex]] drives, so both entry points guard it alike). */
+  private def startKeepBest(spark: SparkSession, dimDir: String,
+      pairsDir: String, survDir: String, ckptDir: String): Unit = {
+    VersionedStore(dimDir, spark).startLineage(ckptDir)
+    VersionedStore(survDir, spark).startLineage(ckptDir)
+    VersionedStore(pairsDir, spark).startSlices(ckptDir, "pair")
   }
 
   /** Run the delta keep-best maintainer over a documents stream to
     * completion (AvailableNow) — [[buildKeepBest]]'s sibling on the
     * delta-star updater, compacting the survivor lineage every
-    * `compactEvery` waves. Defaults ON at 8 (r18, VERDICT #4): the
-    * bounded-listing property must hold without operator opt-in — a
-    * lineage that grows until someone remembers to compact is the
-    * failure mode the cadence exists to close. Pass 0 to disable. */
+    * `compactEvery` waves. Defaults ON at 8: the bounded-listing
+    * property must hold without operator opt-in — a lineage that grows
+    * until someone remembers to compact is the failure mode the cadence
+    * exists to close. Pass 0 to disable. */
   def buildKeepBestDelta(docs: DataFrame, dimDir: String, pairsDir: String,
       survDir: String, ckptDir: String, compactEvery: Int = 8): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dimDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pairsDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(survDir))
-    requireSharedLifecycle(dimDir, ckptDir)
-    requireSharedLifecycle(survDir, ckptDir)
-    requireSliceLifecycle(pairsDir, ckptDir, "pair")
+    startKeepBest(docs.sparkSession, dimDir, pairsDir, survDir, ckptDir)
     runAvailableNow(docs, ckptDir)(_.foreachBatch(
       keepBestDeltaMaintain(dimDir, pairsDir, survDir, compactEvery) _))
   }
@@ -2450,9 +1772,8 @@ object Streaming {
     * dirs. */
   def streamedKeepBestDeltaSurvivors(spark: SparkSession,
       survDir: String): DataFrame = {
-    val vs = modelVersions(survDir).sorted
-    require(vs.nonEmpty, s"no committed survivor version in $survDir")
-    val (attrs, labels, survivors) = assembledKeepBestDims(spark, survDir, vs)
+    val (attrs, labels, survivors) = assembledKeepBestDims(spark, survDir,
+      committedSurvivorVersions(spark, survDir))
     val singletons = attrs
       .join(labels.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("cluster_id"),
@@ -2463,10 +1784,15 @@ object Streaming {
   /** The assembled first-wins attrs dim as of the latest committed
     * version (spec/debug surface for the delta lineage). */
   private[graft] def streamedKeepBestAttrs(spark: SparkSession,
-      survDir: String): DataFrame = {
-    val vs = modelVersions(survDir).sorted
+      survDir: String): DataFrame =
+    assembledKeepBestDims(spark, survDir,
+      committedSurvivorVersions(spark, survDir))._1
+
+  private def committedSurvivorVersions(spark: SparkSession,
+      survDir: String): Seq[Long] = {
+    val vs = VersionedStore(survDir, spark).versions
     require(vs.nonEmpty, s"no committed survivor version in $survDir")
-    assembledKeepBestDims(spark, survDir, vs)._1
+    vs
   }
 
   /** The key kernel's df map of a frozen gram order frame, collected
@@ -2501,44 +1827,35 @@ object Streaming {
     * ∝ accumulated dictionary.
     *
     * Batch schema: (vkey, canon, vorder, op), op ∈ 'add'|'del'.
-    * Tombstones are VERSIONED (r16; the r15 global-tombstone rule —
-    * re-add requires a new lineage — is retired): a del at version v
-    * kills adds from versions < v only, so add→del→re-add works in
-    * one lineage, and the reader keeps only each vkey's LATEST add
-    * slice (duplicate re-adds can never double a vkey's bkey rows —
-    * the candidate-count economics the shared-key filter was derived
-    * for survive long lineages). Within one batch, add wins over del
-    * for the same vkey (a del applies to strictly older versions).
-    * Exactly-once: slices first, `_SUCCESS` last, committed replays
-    * are no-ops. */
+    * Tombstones are VERSIONED: a del at version v kills adds from
+    * versions < v only, so add→del→re-add works in one lineage, and
+    * the reader keeps only each vkey's LATEST add slice (duplicate
+    * re-adds can never double a vkey's bkey rows — the candidate-count
+    * economics the shared-key filter was derived for survive long
+    * lineages). Within one batch, add wins over del for the same vkey
+    * (a del applies to strictly older versions). Commit protocol:
+    * [[VersionedStore]]. */
   def gramIndexUpdate(idxDir: String, gramOrder: DataFrame)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    if (Files.isRegularFile(Paths.get(s"$idxDir/v$batchId/_SUCCESS"))) return
-    val prior = modelVersions(idxDir).filter(_ < batchId)
-    requirePredecessorState(idxDir, batchId, prior)
-    graft.ops.LocationResolve.withBlockKeys(
-        batch.filter(col("op") === "add")
-          .select(col("vkey"), col("canon"), col("vorder")),
-        "vkey", frozenGramDf(gramOrder), "dlen",
-        graft.nlp.Cleaner.FuzzyScoreCutoff,
-        grams = true, crossGrams = true)
-      .write.mode("overwrite").parquet(s"$idxDir/v$batchId/keys")
-    batch.filter(col("op") === "del").select(col("vkey"))
-      .write.mode("overwrite").parquet(s"$idxDir/v$batchId/dels")
-    Files.write(Paths.get(s"$idxDir/v$batchId/_SUCCESS"),
-      Array.emptyByteArray)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    VersionedStore(idxDir, batch.sparkSession).wave(batchId) { _ =>
+      graft.ops.LocationResolve.withBlockKeys(
+          batch.filter(col("op") === "add")
+            .select(col("vkey"), col("canon"), col("vorder")),
+          "vkey", frozenGramDf(gramOrder), "dlen",
+          graft.nlp.Cleaner.FuzzyScoreCutoff,
+          grams = true, crossGrams = true)
+        .write.mode("overwrite").parquet(s"$idxDir/v$batchId/keys")
+      batch.filter(col("op") === "del").select(col("vkey"))
+        .write.mode("overwrite").parquet(s"$idxDir/v$batchId/dels")
+    }
 
   /** One maintained wave of the gram index WITH the compaction
-    * cadence (r17, VERDICT #5): the per-batch update, then — every
-    * `compactEvery` committed versions — [[compactGramIndex]], so a
-    * long-running lineage bounds its own read listing at O(K) waves
-    * without an operator remembering to compact. Exactly-once
-    * composes: a replayed committed batch no-ops the update, and the
-    * compaction is idempotent (`_COMPACT` checked, overwrite-then-
-    * marker on retry after a crash mid-compaction). `compactEvery <=
-    * 0` disables the cadence (the pre-r17 behavior). */
+    * cadence: the per-batch update, then — every `compactEvery`
+    * committed versions — [[compactGramIndex]], so a long-running
+    * lineage bounds its own read listing at O(K) waves without an
+    * operator remembering to compact. A replayed committed batch
+    * no-ops the update, and the compaction is idempotent.
+    * `compactEvery <= 0` disables the cadence. */
   private[graft] def gramIndexMaintain(idxDir: String,
       gramOrder: DataFrame, compactEvery: Int)(
       batch: DataFrame, batchId: Long): Unit = {
@@ -2550,72 +1867,46 @@ object Streaming {
   /** Run the incremental dictionary-index maintainer over a variant
     * update stream (rows (vkey, canon, vorder, op)) to completion,
     * compacting the index every `compactEvery` waves. Defaults ON at
-    * 8 (r18, VERDICT #4; see [[buildKeepBestDelta]]). Pass 0 to
-    * disable. */
+    * 8 (see [[buildKeepBestDelta]]). Pass 0 to disable. */
   def buildGramIndex(updates: DataFrame, idxDir: String,
       gramOrder: DataFrame, ckptDir: String,
       compactEvery: Int = 8): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(idxDir))
-    requireSharedLifecycle(idxDir, ckptDir)
+    VersionedStore(idxDir, updates.sparkSession).startLineage(ckptDir)
     runAvailableNow(updates, ckptDir)(
       _.foreachBatch(gramIndexMaintain(idxDir, gramOrder, compactEvery) _))
   }
 
-  /** Compact the streamed gram index up to its newest committed
-    * version: materialize the LIVE key rows (latest-wins semantics,
-    * `_ver` preserved) as a consolidated `compact/keys` artifact under
-    * that version (plus an empty-by-construction `compact/dels` —
-    * compacted tombstones are provably inert, see below), `_COMPACT`
-    * marker last. [[streamedGramResolve]] then
-    * reads the newest compaction + only the slices COMMITTED AFTER
-    * it — per-read file listing drops from ∝ lineage length to
-    * O(waves since last compaction), the same history-proportional
-    * class the r16 attrs dim killed in the keep-best maintainer.
+  /** Compact the streamed gram index at its newest committed version
+    * `top`, all in one: the LIVE key rows (latest-wins, `_ver` kept)
+    * of the prior root and the tail become `v<top>/compact/keys`, the
+    * one root of the new manifest, beside an empty `compact/dels`.
     * Dead key rows (tombstoned or superseded re-adds) leave the read
-    * path physically. Idempotent; safe to run at any cadence (each
-    * compaction is self-contained, and later updates never touch
-    * committed versions). Pre-compaction slice dirs become dead
-    * weight on disk that a janitor may delete — correctness never
-    * reads them again (StreamingSpec proves resolution survives
-    * their deletion). */
-  def compactGramIndex(spark: SparkSession, idxDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val vs = modelVersions(idxDir).sorted
-    require(vs.nonEmpty, s"no committed index version under $idxDir")
-    val top = vs.max
-    if (Files.isRegularFile(Paths.get(s"$idxDir/v$top/_COMPACT"))) return
-    val (live, dels) = liveGramSlices(spark, idxDir, vs)
-    live.write.mode("overwrite").parquet(s"$idxDir/v$top/compact/keys")
-    // compacted tombstones are provably inert (r17, ADVICE):
-    // compact/keys already excludes every row a tombstone ≤ top could
-    // kill, and any post-compaction add carries _ver > top ≥ every
-    // compacted _maxDel, so the reader's `_maxDel <= _maxAdd` liveness
-    // test can never fail through them — the artifact's dels are
-    // written pruned to EMPTY (schema preserved for the reader's
-    // union) instead of carrying every historical per-vkey tombstone
-    // forever, which grew ∝ delete churn for zero read-path effect.
-    dels.limit(0).write.mode("overwrite")
-      .parquet(s"$idxDir/v$top/compact/dels")
-    Files.write(Paths.get(s"$idxDir/v$top/_COMPACT"), Array.emptyByteArray)
-  }
+    * path physically. Layout, commit and janitor contract:
+    * [[VersionedStore]]. */
+  def compactGramIndex(spark: SparkSession, idxDir: String): Unit =
+    VersionedStore(idxDir, spark).compact(VersionedStore.AllInOne) { m =>
+      val (live, dels) = liveGramRows(spark, idxDir, m.absorbed, m.tail)
+      live.write.mode("overwrite").parquet(s"$idxDir/v${m.top}/compact/keys")
+      // compacted tombstones are provably inert: compact/keys already
+      // excludes every row a tombstone ≤ top could kill, and any later
+      // add carries _ver > top ≥ every compacted _maxDel, so the
+      // reader's `_maxDel <= _maxAdd` test can never fail through them
+      // — the dels are written pruned to EMPTY (schema kept for the
+      // reader's union) instead of growing ∝ delete churn
+      dels.limit(0).write.mode("overwrite")
+        .parquet(s"$idxDir/v${m.top}/compact/dels")
+      s"v${m.top}/compact"
+    }
 
   /** The live key rows (with `_ver`) and per-vkey max tombstone
-    * version over the given committed versions, starting from the
-    * newest compaction at or below them (if any). */
-  private def liveGramSlices(spark: SparkSession, idxDir: String,
-      vs: Seq[Long]): (DataFrame, DataFrame) = {
-    import java.nio.file.{Files, Paths}
-    val base = vs.filter(v =>
-      Files.isRegularFile(Paths.get(s"$idxDir/v$v/_COMPACT")))
-      .sorted.lastOption
-    val tail = base.map(b => vs.filter(_ > b)).getOrElse(vs).sorted
-    val keys = (base.map(b => spark.read
-        .parquet(s"$idxDir/v$b/compact/keys")).toSeq ++
+    * version of the tier `roots` plus the `tail` versions' slices. */
+  private def liveGramRows(spark: SparkSession, idxDir: String,
+      roots: Seq[(Long, String)], tail: Seq[Long]): (DataFrame, DataFrame) = {
+    val keys = (roots.map(r => spark.read.parquet(s"${r._2}/keys")) ++
       tail.map(v => spark.read.parquet(s"$idxDir/v$v/keys")
         .withColumn("_ver", lit(v))))
       .reduce(_ unionByName _)
-    val dels = (base.map(b => spark.read
-        .parquet(s"$idxDir/v$b/compact/dels")).toSeq ++
+    val dels = (roots.map(r => spark.read.parquet(s"${r._2}/dels")) ++
       tail.map(v => spark.read.parquet(s"$idxDir/v$v/dels")
         .select(col("vkey")).withColumn("_maxDel", lit(v))))
       .reduce(_ unionByName _)
@@ -2632,29 +1923,28 @@ object Streaming {
 
   /** Resolve DISTINCT probe strings (`fnorm`) against the streamed
     * dictionary index as of the latest committed version: union the
-    * committed key slices under LATEST-WINS version semantics (r16 —
-    * a key row from slice v is live iff v is its vkey's newest add
-    * AND no tombstone at a version > v exists; add→del→re-add
-    * resolves to the re-add, duplicate re-adds keep one slice), then
-    * the n11/n13 candidate pipeline — shared-key filter, derived
-    * length band, codegen scorer, argmax with the vorder-then-vkey
-    * tiebreak. Reads start from the newest [[compactGramIndex]]
-    * artifact when one exists, so lineage length stops growing the
-    * per-read file listing. Probes are keyed under the same frozen
-    * order with EVERY family on, mirroring the index's carry (since
-    * r16 the cold path keys every family too, so the candidate sets
-    * match shape-for-shape). The per-vkey version dims broadcast at
-    * dictionary size — the same class as the dict broadcasts
-    * everywhere else. StreamingSpec pins equality with the cold
-    * rebuild over the surviving dictionary, including an
+    * read set's key rows under LATEST-WINS version semantics (a key
+    * row from slice v is live iff v is its vkey's newest add AND no
+    * tombstone at a version > v exists; add→del→re-add resolves to the
+    * re-add, duplicate re-adds keep one slice), then the n11/n13
+    * candidate pipeline — shared-key filter, derived length band,
+    * codegen scorer, argmax with the vorder-then-vkey tiebreak. Probes
+    * are keyed under the same frozen order with EVERY family on,
+    * mirroring the index's carry (the cold path keys every family too,
+    * so the candidate sets match shape-for-shape). The per-vkey
+    * version dims broadcast at dictionary size, like the dict
+    * broadcasts everywhere else. StreamingSpec pins equality with the
+    * cold rebuild over the surviving dictionary, including an
     * add→del→re-add lineage and a compacted one. */
   def streamedGramResolve(spark: SparkSession, idxDir: String,
       gramOrder: DataFrame, probes: DataFrame,
       probeBroadcast: Option[Boolean] = None): DataFrame = {
     graft.functions.CustomExprs.register(spark)
-    val vs = modelVersions(idxDir).sorted
+    val store = VersionedStore(idxDir, spark)
+    val vs = store.versions
     require(vs.nonEmpty, s"no committed index version under $idxDir")
-    val (liveKeys, _) = liveGramSlices(spark, idxDir, vs)
+    val rs = store.readSet(vs)
+    val (liveKeys, _) = liveGramRows(spark, idxDir, rs.roots, rs.tail)
     val live = liveKeys.drop("_ver")
     val probeD = probes.select(col("fnorm")).distinct()
     // probe broadcast under the batch path's sizing rule: a

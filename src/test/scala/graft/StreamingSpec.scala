@@ -822,8 +822,8 @@ class StreamingSpec extends AnyFunSuite {
     // 4th committed version, newest at v19
     Seq(3, 7, 11, 15, 19).foreach { v =>
       assert(java.nio.file.Files.isRegularFile(
-          java.nio.file.Paths.get(s"$idxDir/v$v/_COMPACT")),
-        s"no _COMPACT at v$v — the cadence did not fire")
+          java.nio.file.Paths.get(s"$idxDir/v$v/_CUMULATIVE")),
+        s"no _CUMULATIVE at v$v — the cadence did not fire")
     }
     val probes = LocationResolve.gramProbes(
         spark.range(0, 1100, 3).select($"id".as("p_partkey")))
@@ -832,6 +832,23 @@ class StreamingSpec extends AnyFunSuite {
       Streaming.streamedGramResolve(spark, idxDir, gorder, probes)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val streamed = resolveNow()
+    // the janitor contract: the offered set holds the v0–v18 slices and
+    // no manifest root, and deleting exactly it changes no resolution
+    val roots = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$idxDir/v19/_CUMULATIVE")),
+      java.nio.charset.StandardCharsets.UTF_8)
+      .linesIterator.map(_.trim).filter(_.nonEmpty).map(r => s"$idxDir/$r")
+      .toSeq
+    val offered = Streaming.janitorDeletablePaths(idxDir)
+    for (v <- 0 until 19; p <- Seq("keys", "dels"))
+      assert(offered.contains(s"$idxDir/v$v/$p"),
+        s"janitor does not offer v$v/$p: $offered")
+    assert(roots.nonEmpty && !offered.exists(p =>
+        roots.exists(r => p == r || p.startsWith(s"$r/"))),
+      s"janitor offers a manifest root ($roots): $offered")
+    offered.foreach(deleteRec)
+    assert(resolveNow() == streamed,
+      "resolution changed after deleting the janitor's offered set")
     // janitor: every version dir BELOW the newest compaction goes —
     // whole dirs, _SUCCESS included; the reader must stand on
     // v19/compact + the v20/v21 tail alone (O(K) listings by
@@ -1973,13 +1990,10 @@ class StreamingSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "cluster_id", "quality_score", "lang")
         .collect().map(_.toSeq).toSet
-    spark.conf.set("spark.graft.kb.maxKeptBucketDirs", "0")
-    try {
-      waves.zipWithIndex.foreach { case (w, i) =>
-        Streaming.keepBestDeltaMaintain(dimDir, pairsDir, survDir,
-          compactEvery = 2)(w, i.toLong)
-      }
-    } finally spark.conf.unset("spark.graft.kb.maxKeptBucketDirs")
+    waves.zipWithIndex.foreach { case (w, i) =>
+      Streaming.keepBestDeltaMaintain(dimDir, pairsDir, survDir,
+        compactEvery = 2, maxKeptBucketDirs = 0L)(w, i.toLong)
+    }
     val manifest = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$survDir/v3/_CUMULATIVE")),
       java.nio.charset.StandardCharsets.UTF_8)
