@@ -163,36 +163,16 @@ class GramKeysSpec extends AnyFunSuite {
 
   test("a warm n13 build runs at most 3 eager SQL executions (t12 pin, " +
       "probe sizing, fuzzy pin): no pin for the probe keys") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     graft.functions.CustomExprs.register(spark)
     // warm: the index memos (dim, df map, keyed index, guard verdicts)
     LocationResolve.gramDictScale(spark, SparkSuite.sf).count()
-    val starts = new java.util.concurrent.atomic.AtomicInteger(0)
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          starts.incrementAndGet()
-          descs.add(s.description)
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      LocationResolve.gramDictScale(spark, SparkSuite.sf)
-      // the listener bus is asynchronous: wait until the count holds
-      var (last, stable) = (-1, 0)
-      while (stable < 3) {
-        Thread.sleep(200)
-        val n = starts.get()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    assert(starts.get() >= 1, "listener saw no execution — gate is vacuous")
-    assert(starts.get() <= 3,
-      s"${starts.get()} eager executions while building a warm n13: " +
-        descs.asScala.mkString(" | "))
+    val m = Metrics.attach(spark)
+    try LocationResolve.gramDictScale(spark, SparkSuite.sf)
+    finally m.detach()
+    val execs = m.executions
+    assert(execs.size >= 1, "listener saw no execution — gate is vacuous")
+    assert(execs.size <= 3,
+      s"${execs.size} eager executions while building a warm n13: " +
+        execs.map(_.description).mkString(" | "))
   }
 }

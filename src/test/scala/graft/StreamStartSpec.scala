@@ -3,7 +3,6 @@ package graft
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import graft.streaming.Streaming
 
@@ -17,7 +16,7 @@ class StreamStartSpec extends AnyFunSuite {
   private val Key = "spark.sql.artifact.isolation.enabled"
 
   /** janino compilations in this JVM so far (driver and local tasks). */
-  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private def compiles: Long = Metrics.compiled._1
 
   private def tmp(p: String) = Files.createTempDirectory(s"graft_start_$p")
 
