@@ -31,7 +31,7 @@ import java.nio.charset.StandardCharsets
   *    record was ~25% slow at t01-index 1.48 from a CPU-character
   *    drift t01 cannot see. [[cpuCanaryOnce]] is the complementary
   *    zero-IO probe (fixed 12.3M-row sha2 hash loop over 32 partitions,
-  *    pinned via [[CanaryCalibrate]]); contention_index_cpu is emitted
+  *    pinned via `Probe canary`); contention_index_cpu is emitted
   *    beside contention_index so IO noise, CPU noise, and code changes
   *    are separable off the record;
   *  - SEGMENT-BRACKETED CLEAN SAMPLES (round 18): waiting for a
@@ -63,7 +63,7 @@ import java.nio.charset.StandardCharsets
   */
 object Bench {
   /** The shared memoized frames consumed by the documents/embeddings
-    * query family — ONE list used by both Bench and ScaleProbe, so a
+    * query family — ONE list used by both Bench and `Probe scale`, so a
     * frame added to the cache tier can never be prewarmed in one timing
     * harness but silently charged to the first timed query in the other
     * (which would corrupt the scaling ratios PLANS.md is built on). */

@@ -248,9 +248,11 @@ object Dedup {
 
   /** Within-set LSH candidate pairs: the (band, bh) self-join with
     * id_a < id_b dedup — the candidate-generation head shared by batch
-    * x11 and the streamed datasheet's within-batch stage. */
-  private[graft] def bandSelfCandidates(bands: DataFrame): DataFrame =
-    bands.as("a").join(bands.as("b"),
+    * x11 and the streamed datasheet's within-batch stage. `build` maps
+    * the right side (a [[graft.Broadcasts]] gate, say). */
+  private[graft] def bandSelfCandidates(bands: DataFrame,
+      build: DataFrame => DataFrame = identity): DataFrame =
+    bands.as("a").join(build(bands).as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
@@ -277,10 +279,18 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  private def buildMinhashLshPairs(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def buildMinhashLshPairs(spark: SparkSession,
+      sfDir: String): DataFrame = {
     import spark.implicits._
     val docs = shingled(spark, sfDir)
-    verifyJaccard(bandSelfCandidates(bandsOf(docs)), docs, docs)
+    // the band dim is corpus-sized (Bands rows a document, footer count):
+    // gated, the right side is the build side. Left to AQE, the two
+    // identical band stages race and the first one done is broadcast,
+    // so the cached plan changed from run to run
+    val bandRows = Bands * graft.streaming.Streaming.parquetRowCount(spark,
+      s"$sfDir/documents.parquet")
+    verifyJaccard(bandSelfCandidates(bandsOf(docs),
+        graft.Broadcasts(_, bandRows)), docs, docs)
       .orderBy($"id_a", $"id_b")
   }
 
@@ -597,39 +607,27 @@ object Dedup {
     * fractions of 30-50% are routine, so the dim GROWS WITH THE CORPUS
     * and an unconditional broadcast is an OOM at 100 TB. The weight
     * join is therefore GUARDED the same way x56 guards its dictionary
-    * dim: broadcast hash join while the memoized label count is ≤
-    * [[CcBroadcastMaxLabels]], plain shuffle join beyond it (one
-    * shuffle of the label dim + corpus ids, never all-pairs). */
-  def softDedup(spark: SparkSession, sfDir: String): DataFrame =
-    softDedupVia(spark, sfDir,
-      broadcastDim = ccLabelCount(spark, sfDir) <= CcBroadcastMaxLabels)
-
-  /** Both join paths of x28; DedupSimilaritySpec pins them identical. */
-  private[graft] def softDedupVia(spark: SparkSession, sfDir: String,
-      broadcastDim: Boolean): DataFrame = {
+    * dim: [[graft.Broadcasts]] sizes the label dim from the memoized
+    * label count, broadcast hash join while it fits, plain shuffle join
+    * beyond it (one shuffle of the label dim + corpus ids, never
+    * all-pairs). */
+  def softDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val clusters = dupClusters(spark, sfDir)
       .select($"doc_id", $"cluster_size")
-    val dim = if (broadcastDim) broadcast(clusters) else clusters
     Tables.documents(spark, sfDir)
       .select($"doc_id", $"lang")
-      .join(dim, Seq("doc_id"), "left")
+      .join(graft.Broadcasts(clusters, ccLabelCount(spark, sfDir)),
+        Seq("doc_id"), "left")
       .withColumn("cluster_size", coalesce($"cluster_size", lit(1L)))
       .withColumn("weight_ppm", expr("1000000 div cluster_size"))
       .select($"doc_id", $"lang", $"cluster_size", $"weight_ppm")
       .orderBy($"doc_id")
   }
 
-  /** Broadcast budget for the CC label dim (x28/x59): rows are two
-    * BIGINTs plus hash-relation overhead (~24 B effective), so 40 M
-    * labels ≈ 1 GB — the same conservative executor-broadcast ceiling
-    * [[TextAnalysis.BpeBroadcastMaxWords]] assumes. Beyond it the dup
-    * fraction of the corpus is large enough that a shuffle join is the
-    * correct plan anyway. */
-  private[graft] val CcBroadcastMaxLabels = 40000000L
-
-  /** Memoized row count of [[ccLabels]] — sizes the x28/x59 broadcast
-    * guard; counting the already-persisted label frame is free. */
+  /** Memoized row count of [[ccLabels]]: the known count every CC label
+    * dim's [[graft.Broadcasts]] gate sizes from; counting the
+    * already-persisted label frame is free. */
   private[graft] def ccLabelCount(spark: SparkSession, sfDir: String): Long =
     graft.Caches.memoValue(spark, s"cc-label-count:$sfDir") {
       ccLabels(spark, sfDir).count()
@@ -671,24 +669,19 @@ object Dedup {
     * the untouched singleton majority is a LEFT ANTI of the same dim:
     * the full corpus is never shuffled by the window. The label dim
     * grows with the corpus dup count (30-50% on a web crawl), so both
-    * joins are GUARDED like x28/x56: broadcast while the memoized
-    * label count is ≤ [[CcBroadcastMaxLabels]], shuffle join beyond.
-    * Quality is the shared [[TextAnalysis.qualityScore]] column, so
-    * policy and x30 cannot drift. */
-  def dedupKeepBest(spark: SparkSession, sfDir: String): DataFrame =
-    dedupKeepBestVia(spark, sfDir,
-      broadcastDim = ccLabelCount(spark, sfDir) <= CcBroadcastMaxLabels)
-
-  /** Both join paths of x59; DedupSimilaritySpec pins them identical. */
-  private[graft] def dedupKeepBestVia(spark: SparkSession, sfDir: String,
-      broadcastDim: Boolean): DataFrame = {
+    * joins are GUARDED like x28/x56 ([[graft.Broadcasts]] on the
+    * memoized label count). Quality is the shared
+    * [[TextAnalysis.qualityScore]] column, so policy and x30 cannot
+    * drift. */
+  def dedupKeepBest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // the memoized label dim directly — routing through dupClusters
     // would bolt on a cluster_size window and an orderBy this consumer
     // immediately discards (leakageFreeAssign takes the same path)
     val clusters = ccLabels(spark, sfDir)
       .select($"id".as("doc_id"), $"label".as("cluster_id"))
-    def dim(df: DataFrame): DataFrame = if (broadcastDim) broadcast(df) else df
+    def dim(df: DataFrame): DataFrame =
+      graft.Broadcasts(df, ccLabelCount(spark, sfDir))
     val docs = Tables.spread(Tables.documents(spark, sfDir))
       .select($"doc_id", $"lang",
         TextAnalysis.qualityScore($"text").as("quality_score"))

@@ -465,33 +465,21 @@ object LocationResolve {
     keysPerEntry * meanDepth * GramDepthRatio <= e.toDouble
   }
 
-  /** Probe-string count above which the blocked join's probe side is
-    * shuffled instead of broadcast: the "probes are a
-    * vocabulary-bounded dim" doctrine holds for every registered
-    * caller (≤ ~350k distinct strings ≈ 15 MB at sf0.1), but the
-    * generic entry point must turn a fact-level probe set into a plan
-    * choice, not a driver OOM. 1M keyed strings ≈ tens of MB — past
-    * it the key join becomes a shuffle equi-join (each side still
-    * streams map-side into the exchange; no all-pairs stage either
-    * way). */
-  private[graft] val ProbeBroadcastMax = 1000000L
-
-  /** The [[ProbeBroadcastMax]] decision for a probe frame: an early-out
-    * `limit(max + 1).count()`, never a full count of a large probe
-    * side. */
-  private[graft] def probesFitBroadcast(probes: DataFrame): Boolean =
-    probes.limit((ProbeBroadcastMax + 1).toInt).count() <= ProbeBroadcastMax
-
-  /** Broadcast bound for the guard-tripped exhaustive fallback's
-    * dictionary side (r17): past ~1M variants the dictionary stops
-    * being a safe driver/executor-memory broadcast — the same class
-    * of bound as [[ProbeBroadcastMax]] — and the exhaustive
-    * length-banded join degrades to a shuffled nested loop. The
-    * blocked path's dim join-backs stay broadcast everywhere
-    * (vocabulary-bounded dims by contract); this bound exists
-    * precisely because the tripped guard signals a PATHOLOGICAL
-    * dictionary, where the contract may not hold. */
-  private[graft] val DictBroadcastMax = 1000000L
+  /** The blocked join's probe side: the distinct probe strings keyed
+    * under the dictionary's gram order (`t:` pair keys only with
+    * `pairKeys`) and pinned once, so the [[graft.Broadcasts]] gate sizes
+    * the rows the key join reads. Registered callers' probes are
+    * vocabulary-bounded (≤ ~350k strings at sf0.1); a fact-level probe
+    * set past the budget makes the key join a shuffle equi-join. */
+  private[graft] def keyedProbeSide(probes: DataFrame,
+      gramDf: CustomExprs.GramDf, pairKeys: Boolean = true): DataFrame = {
+    val keyed = withBlockKeys(probes.select(col("fnorm")), "fnorm", gramDf,
+        "plen", graft.nlp.Cleaner.FuzzyScoreCutoff,
+        grams = true, crossGrams = true)
+      .select(col("fnorm"), col("plen"), col("bkey"))
+    graft.Broadcasts(graft.Caches.pin(
+      if (pairKeys) keyed else keyed.filter(!col("bkey").startsWith("t:"))))
+  }
 
   /** Dictionary document frequency per bigram over the SPACED
     * sorted-join of every dictionary entry, as rows (_g0, _gdf): the
@@ -794,24 +782,19 @@ object LocationResolve {
     *    keys from both sides — recall is untouched (grams carry the
     *    guarantee), only the redundant quadratic join goes.
     *    `pairGuard` forces the verdict for specs;
-    *  - probe-broadcast switch ([[ProbeBroadcastMax]],
-    *    [[probesFitBroadcast]]): past ~1M distinct probe strings the
-    *    key join and the string join-backs become shuffle equi-joins
-    *    instead of probe-side broadcasts (`probeBroadcast` forces
-    *    either form).
+    *  - probe side ([[keyedProbeSide]]): keyed once, pinned, and
+    *    broadcast while [[graft.Broadcasts]] fits it, else the key
+    *    join becomes a shuffle equi-join.
     *
     * Per-dictionary artifacts — the id'd dim, its gram df map, the
     * keyed index and the guard verdicts — are memoized under
-    * `indexMemoKey`. The probe side is keyed per call in one
-    * projection ([[withBlockKeys]]), never pinned, so a warm call's
-    * only eager action here is the probe sizing count. */
+    * `indexMemoKey`. The probe side is keyed per call, so a warm call's
+    * eager actions here are the keyed probe pin and its sizing count. */
   private[graft] def fuzzyResolveDim(probes: DataFrame, dim: DataFrame,
       blocked: Option[Boolean] = None,
       indexMemoKey: Option[String] = None,
-      probeBroadcast: Option[Boolean] = None,
       gramGuard: Option[Boolean] = None,
-      pairGuard: Option[Boolean] = None,
-      dictBroadcast: Option[Boolean] = None): DataFrame = {
+      pairGuard: Option[Boolean] = None): DataFrame = {
     val spark = probes.sparkSession
     import spark.implicits._
     graft.functions.CustomExprs.register(spark)
@@ -845,9 +828,7 @@ object LocationResolve {
             .withColumn("_vid", monotonically_increasing_id())))
         // the probe side is keyed by the probe STRING itself (r15):
         // probe strings are vocabulary-bounded (≤ ~20 chars), so no id
-        // and no string join-back. The sizing count and the keying
-        // each evaluate the probe frame (the composed resolver derives
-        // it from its pinned token frame)
+        // and no string join-back
         val probeC = probes.select($"fnorm")
         // r16: the index carries EVERY key family for EVERY caller —
         // grams on the spaced joined form are the sole recall-complete
@@ -877,11 +858,10 @@ object LocationResolve {
           // score cutoff alone — per-ROW O(len) prep, applied as the
           // join condition so the O(len²) scorer only runs on
           // band-surviving pairs); and the dictionary broadcast is
-          // SIZE-GATED ([[DictBroadcastMax]]) — the guard exists
-          // precisely for pathological dictionaries, and a
-          // pathological AND huge one must degrade to a shuffled
-          // nested loop instead of driver memory pressure
-          // (`dictBroadcast` forces either form for specs).
+          // SIZE-GATED ([[graft.Broadcasts]] at the memoized entry
+          // count) — the guard exists precisely for pathological
+          // dictionaries, and a pathological AND huge one must degrade
+          // to a shuffled nested loop instead of driver memory pressure.
           val dimN = memoVal("dimN")(
             dimC.agg(count(lit(1))).head.getLong(0))
           System.err.println("[graft] fuzzyResolveDim: gram economics " +
@@ -890,10 +870,8 @@ object LocationResolve {
             "length-banded crossJoin; upstream tokenization is the " +
             "real fix for such dictionaries")
           def sortedLen(c: Column): Column = length(sortedJoinCol(c))
-          val bcastDim = dictBroadcast.getOrElse(dimN <= DictBroadcastMax)
-          val dimB0 = dimC.select($"vkey", $"canon", $"vorder")
-            .withColumn("_dl", sortedLen($"vkey"))
-          val dimB = if (bcastDim) broadcast(dimB0) else dimB0
+          val dimB = graft.Broadcasts(dimC.select($"vkey", $"canon", $"vorder")
+            .withColumn("_dl", sortedLen($"vkey")), dimN)
           probeC.withColumn("_pl", sortedLen($"fnorm"))
             .join(dimB, fuzzyLenBandPred($"_pl", $"_dl",
               graft.nlp.Cleaner.FuzzyScoreCutoff))
@@ -907,24 +885,11 @@ object LocationResolve {
           val dimKeyed =
             if (guardT) dimKeyed0
             else dimKeyed0.filter(!$"bkey".startsWith("t:"))
-          val probeKeyed0 = withBlockKeys(probeC,
-            "fnorm", gdf, "plen", graft.nlp.Cleaner.FuzzyScoreCutoff,
-            grams = true, crossGrams = true)
-            .select($"fnorm", $"plen", $"bkey")
-          val probeKeyed =
-            if (guardT) probeKeyed0
-            else probeKeyed0.filter(!$"bkey".startsWith("t:"))
-          // sized lazily HERE: it only feeds the broadcast default, and
-          // the guard-tripped branch above must not pay a dead driver
-          // action for it
-          val bcast = probeBroadcast.getOrElse(probesFitBroadcast(probeC))
-          def maybeBcast(df: DataFrame): DataFrame =
-            if (bcast) broadcast(df) else df
           candidateFilter(
-            // probe keys broadcast (under the sizing switch): the
-            // dictionary index streams map-side, never shuffle-sorted
-            // (see fuzzyDictScale)
-            dimKeyed.join(maybeBcast(probeKeyed), "bkey")
+            // probe keys broadcast (while they fit): the dictionary
+            // index streams map-side, never shuffle-sorted (see
+            // fuzzyDictScale)
+            dimKeyed.join(keyedProbeSide(probeC, gdf, guardT), "bkey")
               .where(fuzzyLenBandPred($"plen", $"dlen",
                 graft.nlp.Cleaner.FuzzyScoreCutoff)),
             Seq("fnorm", "_vid"))

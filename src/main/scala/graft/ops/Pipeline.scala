@@ -68,9 +68,8 @@ object Pipeline {
     //    cluster_size window this consumer discards (the x59 route)
     val clusters = Dedup.ccLabels(spark, sfDir)
       .select($"id".as("doc_id"), $"label".as("cluster_id"))
-    val bcast =
-      Dedup.ccLabelCount(spark, sfDir) <= Dedup.CcBroadcastMaxLabels
-    def dim(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    def dim(df: DataFrame): DataFrame =
+      graft.Broadcasts(df, Dedup.ccLabelCount(spark, sfDir))
     val rkW = Window.partitionBy($"cluster_id")
       .orderBy($"quality_score".desc, $"doc_id".asc)
     val best = exact.join(dim(clusters), "doc_id")
@@ -83,7 +82,7 @@ object Pipeline {
     // 4. decontaminate — x19's containment pairs; bench slice excluded.
     //    NO forced broadcast here: the contaminated dim's cardinality
     //    tracks contamination volume, not the CC label count the
-    //    `bcast` gate above is sized for (benchmark text syndicated
+    //    label gate above is sized for (benchmark text syndicated
     //    across a crawl could make this dim huge while labels stay
     //    small) — AQE picks broadcast vs shuffle from its actual size
     val contaminated = Dedup.decontaminate(spark, sfDir)
@@ -247,9 +246,7 @@ object Pipeline {
     graft.functions.CustomExprs.register(spark)
     val labels = Dedup.ccLabels(spark, sfDir)
       .select($"id".as("doc_id"), $"label")
-    val bcast =
-      Dedup.ccLabelCount(spark, sfDir) <= Dedup.CcBroadcastMaxLabels
-    val dim = if (bcast) broadcast(labels) else labels
+    val dim = graft.Broadcasts(labels, Dedup.ccLabelCount(spark, sfDir))
     val p50 =
       if (exactMedian) expr("percentile(n_tokens, 0.5)")
       else expr("approx_percentile(n_tokens, 0.5, 10000)").cast("double")
@@ -318,9 +315,7 @@ object Pipeline {
     graft.functions.CustomExprs.register(spark)
     val labels = Dedup.ccLabels(spark, sfDir)
       .select($"id".as("doc_id"), $"label")
-    val bcast =
-      Dedup.ccLabelCount(spark, sfDir) <= Dedup.CcBroadcastMaxLabels
-    val dim = if (bcast) broadcast(labels) else labels
+    val dim = graft.Broadcasts(labels, Dedup.ccLabelCount(spark, sfDir))
     Tables.documents(spark, sfDir)
       .select($"doc_id", $"lang", $"source",
         call_function("word_count", $"text").cast("long").as("n_tokens"))
@@ -412,9 +407,7 @@ object Pipeline {
     //    over the memoized full-corpus label dim (guarded broadcast)
     val labels = Dedup.ccLabels(spark, sfDir)
       .select($"id".as("doc_id"), $"label")
-    val bcast =
-      Dedup.ccLabelCount(spark, sfDir) <= Dedup.CcBroadcastMaxLabels
-    val dim = if (bcast) broadcast(labels) else labels
+    val dim = graft.Broadcasts(labels, Dedup.ccLabelCount(spark, sfDir))
     val split8 = surv.join(dim, Seq("doc_id"), "left")
       .withColumn("rep", coalesce($"label", $"doc_id"))
       .withColumn("split", Sampling.splitOf($"rep"))

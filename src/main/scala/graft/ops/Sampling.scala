@@ -305,32 +305,30 @@ object Sampling {
     * representative's.
     *
     * Scale: one left join of the corpus against the label dim —
-    * broadcast while the memoized label count fits
-    * [[graft.ops.Dedup.CcBroadcastMaxLabels]], shuffle join beyond
-    * (web-crawl dup fractions make the dim corpus-sized — the x28
-    * lesson), then one map-side-combinable aggregation. */
+    * broadcast while [[graft.Broadcasts]] fits it at the memoized label
+    * count, shuffle join beyond (web-crawl dup fractions make the dim
+    * corpus-sized — the x28 lesson), then one map-side-combinable
+    * aggregation. */
   def leakageFreeSplit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    leakageFreeAssign(spark, sfDir,
-        broadcastDim =
-          Dedup.ccLabelCount(spark, sfDir) <= Dedup.CcBroadcastMaxLabels)
+    leakageFreeAssign(spark, sfDir)
       .groupBy($"split", $"lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(when($"label".isNull, 0L).otherwise(1L)).as("n_clustered"))
       .orderBy($"split", $"lang")
   }
 
-  /** Per-doc assignment, both join regimes — the spec surface for the
-    * no-cluster-spans-two-splits gate and broadcast/shuffle parity. */
-  private[graft] def leakageFreeAssign(spark: SparkSession, sfDir: String,
-      broadcastDim: Boolean): DataFrame = {
+  /** Per-doc assignment — the spec surface for the
+    * no-cluster-spans-two-splits gate. */
+  private[graft] def leakageFreeAssign(spark: SparkSession,
+      sfDir: String): DataFrame = {
     import spark.implicits._
     val labels = Dedup.ccLabels(spark, sfDir)
       .select($"id".as("doc_id"), $"label")
-    val dim = if (broadcastDim) broadcast(labels) else labels
     Tables.documents(spark, sfDir)
       .select($"doc_id", $"lang")
-      .join(dim, Seq("doc_id"), "left")
+      .join(graft.Broadcasts(labels, Dedup.ccLabelCount(spark, sfDir)),
+        Seq("doc_id"), "left")
       .withColumn("rep", coalesce($"label", $"doc_id"))
       .withColumn("split", splitOf($"rep"))
   }

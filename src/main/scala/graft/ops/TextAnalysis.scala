@@ -1712,34 +1712,16 @@ object TextAnalysis {
     * sub-linearly (Heaps' law) on natural text, but a 100 TB web crawl's
     * "word" set (typos, URLs, hex blobs) can still reach billions of
     * entries and blow an unconditional broadcast, so the join side is
-    * GUARDED: broadcast only while the memoized distinct-word count is
-    * ≤ [[BpeBroadcastMaxWords]], plain shuffle join (still one shuffle
-    * of the small dim, not the corpus re-encode) beyond it.
+    * GUARDED: [[graft.Broadcasts]] sizes it from the memoized
+    * distinct-word count, broadcast while it fits, plain shuffle join
+    * (still one shuffle of the small dim, not the corpus re-encode)
+    * beyond it.
     * HASH-checked since round 10: [[bpeTokenizeSql]] replays training
     * unrolled and reads each word's token count off the final
     * vocabulary state; CurationSpec replays the encode on the collected
     * dictionary, pins per-word token counts + bounds invariants, and
     * proves the two join paths byte-identical. */
   def bpeTokenize(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // count via the SAME helper the merge table trains on, so the guard
-    // stays coupled to the dictionary it sizes if the word rule changes
-    val nWords = graft.Caches.memoValue(spark, s"bpe-dict-count:$sfDir") {
-      bpeVocab(spark, sfDir).count()
-    }
-    bpeTokenizeVia(spark, sfDir, broadcastDim = nWords <= BpeBroadcastMaxWords)
-  }
-
-  /** Broadcast budget for the x56 dictionary dim: ~words × (avg word +
-    * 8-byte count) must stay well inside a 1-8 GB executor broadcast
-    * budget; 50M words × ~20 B ≈ 1 GB is the conservative ceiling. */
-  private[graft] val BpeBroadcastMaxWords = 50000000L
-
-  /** Both join regimes of x56, spec-provable equal: the encode-per-
-    * distinct-word dim either broadcasts (small-dict fast path) or
-    * shuffle-joins (the web-scale fallback the guard selects). */
-  private[graft] def bpeTokenizeVia(spark: SparkSession, sfDir: String,
-      broadcastDim: Boolean): DataFrame = {
     import spark.implicits._
     val merges = bpeMergeTable(spark, sfDir).map(m => (m._2, m._3))
     val encode = udf { (w: String) =>
@@ -1752,7 +1734,12 @@ object TextAnalysis {
       .filter($"w" =!= "")
     val dict = words.select($"w").distinct()
       .withColumn("n_toks", encode($"w").cast("long"))
-    words.join(if (broadcastDim) broadcast(dict) else dict, "w")
+    // count via the SAME helper the merge table trains on, so the guard
+    // stays coupled to the dictionary it sizes if the word rule changes
+    words.join(graft.Broadcasts(dict,
+        graft.Caches.memoValue(spark, s"bpe-dict-count:$sfDir") {
+          bpeVocab(spark, sfDir).count()
+        }), "w")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_words"),
         sum($"n_toks").as("n_tokens"),

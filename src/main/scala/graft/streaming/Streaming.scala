@@ -1375,7 +1375,7 @@ object Streaming {
     * the full assembly, the bucketed probe and the compaction merge,
     * so the three cannot drift. */
   private def kbLatestRows(spark: SparkSession, survDir: String,
-      cumDrops: Option[DataFrame], tiers: Seq[(Long, DataFrame)],
+      cumDrops: Option[String], tiers: Seq[(Long, DataFrame)],
       tail: Seq[Long], deltaPart: String): DataFrame =
     (tiers ++
         tail.map(v => v -> spark.read.parquet(s"$survDir/v$v/$deltaPart")))
@@ -1404,7 +1404,7 @@ object Streaming {
     val rs = VersionedStore(survDir, spark).readSet(vs)
     def tiers(part: String) = rs.roots.map { case (ver, root) =>
       ver -> spark.read.parquet(s"$root/$part") }
-    val cumDrops = kbCumulativeDrops(spark, survDir, rs.base)
+    val cumDrops = kbCumulativeDrops(survDir, rs.base)
     (kbAttrRows(spark, survDir, tiers("attrs").map(_._2), rs.tail),
       kbLatestRows(spark, survDir, cumDrops, tiers("labels"), rs.tail,
         "labels_delta"),
@@ -1450,7 +1450,7 @@ object Streaming {
       probe: DataFrame): DataFrame = {
     val store = VersionedStore(survDir, spark)
     val rs = store.readSet(vs)
-    kbLatestRows(spark, survDir, kbCumulativeDrops(spark, survDir, rs.base),
+    kbLatestRows(spark, survDir, kbCumulativeDrops(survDir, rs.base),
       store.bucketPrunedTiers(rs.roots, basePart, probe, keyCol), rs.tail,
       "labels_delta")
   }
@@ -1482,12 +1482,14 @@ object Streaming {
     * a tier built at t contains only rows that survived every drop
     * ≤ t (applied at merge time), so `maxDrop <= t` never wrongly
     * saves a row and `maxDrop > t` is exactly the set that must kill
-    * it. */
+    * it. The per-cluster drop dim is broadcast while
+    * [[graft.Broadcasts]] fits it at its inputs' footer row count. */
   private def applyKbDrops(spark: SparkSession, survDir: String,
       dropVersions: Seq[Long], rows: DataFrame,
-      cumDrops: Option[DataFrame]): DataFrame = {
-    val dropDim = (cumDrops
-        .map(_.select(col("cluster_id"), col("_maxDrop").as("_dver"))).toSeq ++
+      cumDrops: Option[String]): DataFrame = {
+    val dropDirs = cumDrops.toSeq ++ dropVersions.map(v => s"$survDir/v$v/drops")
+    val dropDim = (cumDrops.map(p => spark.read.parquet(p)
+          .select(col("cluster_id"), col("_maxDrop").as("_dver"))).toSeq ++
       dropVersions.map(v =>
         spark.read.parquet(s"$survDir/v$v/drops").select(col("cluster_id"))
           .withColumn("_dver", lit(v))))
@@ -1496,7 +1498,9 @@ object Streaming {
     dropDim match {
       case None => rows.drop("_ver")
       case Some(d) =>
-        rows.join(broadcast(d), Seq("cluster_id"), "left")
+        val store = VersionedStore(survDir, spark)
+        rows.join(graft.Broadcasts(d, dropDirs.map(store.rowCount).sum),
+            Seq("cluster_id"), "left")
           .where(col("_maxDrop").isNull || col("_maxDrop") <= col("_ver"))
           .drop("_ver", "_maxDrop")
     }
@@ -1505,9 +1509,9 @@ object Streaming {
   /** The newest compaction's cumulative per-cluster drop store
     * ((cluster_id, _maxDrop) — see [[applyKbDrops]]), or None before
     * the first compaction. */
-  private def kbCumulativeDrops(spark: SparkSession, survDir: String,
-      base: Option[Long]): Option[DataFrame] =
-    base.map(b => spark.read.parquet(s"$survDir/v$b/compact/drops"))
+  private def kbCumulativeDrops(survDir: String,
+      base: Option[Long]): Option[String] =
+    base.map(b => s"$survDir/v$b/compact/drops")
 
   /** Footer row count of a parquet store ([[VersionedStore.rowCount]]). */
   private[graft] def parquetRowCount(spark: SparkSession, dir: String): Long =
@@ -1536,7 +1540,7 @@ object Streaming {
       // the SAME drop algebra as the readers (tiers and tails tagged with
       // their build versions): the new tier holds exactly the rows that
       // survive through `top`, so reading it tagged `top` is sound
-      val priorCumDrops = kbCumulativeDrops(spark, survDir, m.base)
+      val priorCumDrops = kbCumulativeDrops(survDir, m.base)
       val labels = kbLatestRows(spark, survDir, priorCumDrops,
         tiers("labels"), m.tail, "labels_delta")
       val survivors = kbLatestRows(spark, survDir, priorCumDrops,
@@ -1569,8 +1573,8 @@ object Streaming {
       // _ver >= the new manifest's oldest build version — so the store
       // [[applyKbDrops]] broadcasts does not grow with every drop ever.
       val minKeptVer = (m.kept.map(_._1) :+ m.top).min
-      (priorCumDrops
-          .map(_.select(col("cluster_id"), col("_maxDrop").as("_dver")))
+      (priorCumDrops.map(p => spark.read.parquet(p)
+          .select(col("cluster_id"), col("_maxDrop").as("_dver")))
           .toSeq ++
         m.tail.map(v => spark.read.parquet(s"$survDir/v$v/drops")
           .select(col("cluster_id")).withColumn("_dver", lit(v))))
@@ -1899,9 +1903,15 @@ object Streaming {
     }
 
   /** The live key rows (with `_ver`) and per-vkey max tombstone
-    * version of the tier `roots` plus the `tail` versions' slices. */
+    * version of the tier `roots` plus the `tail` versions' slices. The
+    * two per-vkey version dims are broadcast while [[graft.Broadcasts]]
+    * fits them at their inputs' footer row counts (key rows bound the
+    * vkeys from above). */
   private def liveGramRows(spark: SparkSession, idxDir: String,
       roots: Seq[(Long, String)], tail: Seq[Long]): (DataFrame, DataFrame) = {
+    val store = VersionedStore(idxDir, spark)
+    def footerRows(part: String) = (roots.map(r => s"${r._2}/$part") ++
+      tail.map(v => s"$idxDir/v$v/$part")).map(store.rowCount).sum
     val keys = (roots.map(r => spark.read.parquet(s"${r._2}/keys")) ++
       tail.map(v => spark.read.parquet(s"$idxDir/v$v/keys")
         .withColumn("_ver", lit(v))))
@@ -1913,9 +1923,9 @@ object Streaming {
       .groupBy(col("vkey")).agg(max(col("_maxDel")).as("_maxDel"))
     val lastAdd = keys.groupBy(col("vkey")).agg(max(col("_ver")).as("_maxAdd"))
     val live = keys
-      .join(broadcast(lastAdd), Seq("vkey"))
+      .join(graft.Broadcasts(lastAdd, footerRows("keys")), Seq("vkey"))
       .where(col("_ver") === col("_maxAdd"))
-      .join(broadcast(dels), Seq("vkey"), "left")
+      .join(graft.Broadcasts(dels, footerRows("dels")), Seq("vkey"), "left")
       .where(col("_maxDel").isNull || col("_maxDel") <= col("_maxAdd"))
       .drop("_maxAdd", "_maxDel")
     (live, dels)
@@ -1931,14 +1941,14 @@ object Streaming {
     * codegen scorer, argmax with the vorder-then-vkey tiebreak. Probes
     * are keyed under the same frozen order with EVERY family on,
     * mirroring the index's carry (the cold path keys every family too,
-    * so the candidate sets match shape-for-shape). The per-vkey
-    * version dims broadcast at dictionary size, like the dict
-    * broadcasts everywhere else. StreamingSpec pins equality with the
-    * cold rebuild over the surviving dictionary, including an
+    * so the candidate sets match shape-for-shape), on the batch path's
+    * keyed probe side ([[graft.ops.LocationResolve.keyedProbeSide]]).
+    * The per-vkey version dims are sized from footer counts (see
+    * [[liveGramRows]]). StreamingSpec pins equality with the cold
+    * rebuild over the surviving dictionary, including an
     * add→del→re-add lineage and a compacted one. */
   def streamedGramResolve(spark: SparkSession, idxDir: String,
-      gramOrder: DataFrame, probes: DataFrame,
-      probeBroadcast: Option[Boolean] = None): DataFrame = {
+      gramOrder: DataFrame, probes: DataFrame): DataFrame = {
     graft.functions.CustomExprs.register(spark)
     val store = VersionedStore(idxDir, spark)
     val vs = store.versions
@@ -1946,19 +1956,8 @@ object Streaming {
     val rs = store.readSet(vs)
     val (liveKeys, _) = liveGramRows(spark, idxDir, rs.roots, rs.tail)
     val live = liveKeys.drop("_ver")
-    val probeD = probes.select(col("fnorm")).distinct()
-    // probe broadcast under the batch path's sizing rule: a
-    // fact-level probe set past ~1M distinct strings degrades to a
-    // shuffle equi-join instead of a driver-sized broadcast;
-    // `probeBroadcast` forces either form for the StreamingSpec
-    // shuffle≡broadcast gate
-    val bcast = probeBroadcast.getOrElse(
-      graft.ops.LocationResolve.probesFitBroadcast(probeD))
-    val probeKeyed0 = graft.ops.LocationResolve.withBlockKeys(
-        probeD, "fnorm", frozenGramDf(gramOrder),
-        "plen", graft.nlp.Cleaner.FuzzyScoreCutoff,
-        grams = true, crossGrams = true)
-    val probeKeyed = if (bcast) broadcast(probeKeyed0) else probeKeyed0
+    val probeKeyed = graft.ops.LocationResolve.keyedProbeSide(
+      probes.select(col("fnorm")).distinct(), frozenGramDf(gramOrder))
     val cutoff = graft.nlp.Cleaner.FuzzyScoreCutoff
     graft.ops.LocationResolve.candidateFilter(
         live.join(probeKeyed, "bkey")

@@ -423,8 +423,8 @@ class CurationSpec extends AnyFunSuite {
     // the public entry picks broadcast vs shuffle join from the memoized
     // distinct-word count (web-scale dictionaries must not broadcast);
     // the two paths must be indistinguishable in output
-    val bc = TextAnalysis.bpeTokenizeVia(spark, sf, broadcastDim = true)
-    val sj = TextAnalysis.bpeTokenizeVia(spark, sf, broadcastDim = false)
+    val bc = Broadcasts.forcing(true)(TextAnalysis.bpeTokenize(spark, sf))
+    val sj = Broadcasts.forcing(false)(TextAnalysis.bpeTokenize(spark, sf))
     assert(bc.schema == sj.schema)
     val a = bc.collect().map(_.toSeq).toSeq
     val b = sj.collect().map(_.toSeq).toSeq
@@ -444,8 +444,8 @@ class CurationSpec extends AnyFunSuite {
   test("x71 leakage-free split: clusters never straddle; regimes agree") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val asg = graft.ops.Sampling.leakageFreeAssign(spark, sf,
-      broadcastDim = true).persist()
+    val asg = Broadcasts.forcing(true)(
+      graft.ops.Sampling.leakageFreeAssign(spark, sf)).persist()
     try {
       // the leakage property: every cluster sees exactly one split
       val straddling = asg.filter($"label".isNotNull)
@@ -470,8 +470,8 @@ class CurationSpec extends AnyFunSuite {
           .when($"doc_id" % 10 === 8, "val").otherwise("test")).count()
       assert(singletonDrift == 0)
       // both join regimes produce identical assignments
-      val shuffled = graft.ops.Sampling.leakageFreeAssign(spark, sf,
-        broadcastDim = false)
+      val shuffled = Broadcasts.forcing(false)(
+        graft.ops.Sampling.leakageFreeAssign(spark, sf))
       assert(asg.select("doc_id", "split").except(
         shuffled.select("doc_id", "split")).count() == 0)
     } finally asg.unpersist()

@@ -519,8 +519,8 @@ class DictionaryScaleSpec extends AnyFunSuite {
       spark.range(0, 1500, 5).select($"id".as("p_partkey")))
       .select($"norm".as("fnorm")).distinct()
     def resolved(bcast: Boolean): Map[String, String] =
-      LocationResolve.fuzzyResolveDim(probes, dim, Some(true),
-          probeBroadcast = Some(bcast))
+      Broadcasts.forcing(bcast)(
+          LocationResolve.fuzzyResolveDim(probes, dim, Some(true)))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val (bc, sh) = (resolved(bcast = true), resolved(bcast = false))
     assert(bc == sh, {
@@ -592,8 +592,8 @@ class DictionaryScaleSpec extends AnyFunSuite {
     val shuffledExh =
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = LocationResolve.fuzzyResolveDim(probes, dim,
-          dictBroadcast = Some(false))
+        val df = Broadcasts.forcing(false)(
+          LocationResolve.fuzzyResolveDim(probes, dim))
         val p = df.queryExecution.executedPlan.toString
         assert(!p.contains("BroadcastNestedLoopJoin"),
           s"forced non-broadcast form still broadcasts the dictionary\n" +

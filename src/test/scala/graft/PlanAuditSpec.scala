@@ -123,7 +123,7 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!plan.contains("BroadcastNestedLoopJoin"),
         s"[$name] ${plan.take(1500)}")
       // the key join itself must be a BROADCAST hash join ON bkey in
-      // the default regime (the ProbeBroadcastMax doctrine): match the
+      // the default regime (the Broadcasts budget): match the
       // FormattedMode detail block's key list, because a bare
       // contains(BroadcastHashJoin) is satisfied by the dimC string
       // join-back and the gram-order broadcasts, and a blanket
@@ -137,7 +137,7 @@ class PlanAuditSpec extends AnyFunSuite {
           .findFirstIn(plan).isEmpty,
         s"[$name] key join regressed to a shuffle\n${plan.take(1500)}")
     }
-    // the OTHER physical form: past ProbeBroadcastMax (forced here) the
+    // the OTHER physical form: past the Broadcasts budget (forced here) the
     // probe side leaves the broadcast and the key join becomes a
     // shuffle equi-join — both shapes must exist as plans, so a probe
     // set outgrowing the broadcast is a plan choice, not an OOM. The
@@ -150,9 +150,9 @@ class PlanAuditSpec extends AnyFunSuite {
     val shuffled =
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        formatted(graft.ops.LocationResolve.fuzzyResolveDim(
-          probes, dims.head._2, Some(true), probeBroadcast = Some(false),
-          gramGuard = Some(true)))
+        formatted(Broadcasts.forcing(false)(
+          graft.ops.LocationResolve.fuzzyResolveDim(
+            probes, dims.head._2, Some(true), gramGuard = Some(true))))
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
     assert(bkeyJoin("(?:SortMergeJoin|ShuffledHashJoin)")
         .findFirstIn(shuffled).isDefined,

@@ -39,6 +39,23 @@ class ProbeSpec extends AnyFunSuite {
     } finally Fs.deleteRecursively(dir)
   }
 
+  test("explain: dumps of x17 from cold memos are equal") {
+    // x17's label memo caches the LSH band self-join, whose build side AQE
+    // once took from whichever of two identical stages finished first:
+    // at sf0.01, 3 dumps in 8 planned BuildLeft and 5 BuildRight
+    val dir = Files.createTempDirectory("graft_probe_x17")
+    val dumps = Seq("_a", "_b", "_c", "_d")
+    try {
+      dumps.foreach { s =>
+        Caches.clear(spark)
+        run("explain", SparkSuite.sf01, dir.toString, "x17_dup_clusters", s)
+      }
+      val txt = dumps.map(s => Files.readString(dir.resolve(s"x17_dup_clusters$s.txt")))
+      assert(txt.head.contains("BroadcastHashJoin Inner"), txt.head)
+      assert(txt.distinct.size == 1, "x17's plan differs between dumps")
+    } finally { Caches.clear(spark); Fs.deleteRecursively(dir) }
+  }
+
   test("unknown modes, queries and dims fail before a session exists") {
     val bad = Seq(
       Nil, Seq("nope"), Seq("query", sf), Seq("query", sf, "t01_top30_orders,nope"),

@@ -18,4 +18,6 @@ object SparkSuite {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+  /** The sf0.01 fixture beside [[sf]], the scale the plan dumps use. */
+  val sf01: String = new java.io.File(sf).getParent + "/sf0.01"
 }

@@ -631,7 +631,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(full != streamed,
       "tombstone set removed nothing any probe cared about — vacuous")
     // r17 (VERDICT #2): the reader's probe broadcast is size-gated
-    // like the batch path's ProbeBroadcastMax switch — the forced
+    // by the batch path's Broadcasts rule — the forced
     // shuffle form must be row-identical, and its bkey join must
     // physically leave the broadcast (auto-broadcast disabled so
     // Catalyst's size estimate can't re-broadcast the tiny fixture
@@ -640,8 +640,8 @@ class StreamingSpec extends AnyFunSuite {
     val shuffledForm =
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = Streaming.streamedGramResolve(spark, idxDir, gorder,
-          probes, probeBroadcast = Some(false))
+        val df = Broadcasts.forcing(false)(
+          Streaming.streamedGramResolve(spark, idxDir, gorder, probes))
         val plan = df.queryExecution.executedPlan.toString
         assert("(?:SortMergeJoin|ShuffledHashJoin)".r
             .findFirstIn(plan).isDefined,
