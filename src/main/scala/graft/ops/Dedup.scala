@@ -287,8 +287,9 @@ object Dedup {
     // gated, the right side is the build side. Left to AQE, the two
     // identical band stages race and the first one done is broadcast,
     // so the cached plan changed from run to run
-    val bandRows = Bands * graft.streaming.Streaming.parquetRowCount(spark,
-      s"$sfDir/documents.parquet")
+    val docsPath = s"$sfDir/documents.parquet"
+    val bandRows = Bands *
+      graft.streaming.VersionedStore(docsPath, spark).rowCount(docsPath)
     verifyJaccard(bandSelfCandidates(bandsOf(docs),
         graft.Broadcasts(_, bandRows)), docs, docs)
       .orderBy($"id_a", $"id_b")

@@ -1063,144 +1063,23 @@ object Streaming {
           lit(0.0).as("jaccard")).limit(0)
     }
 
-  /** x59 streaming sibling — incremental KEEP-BEST survivors: maintain
-    * the per-cluster best-quality survivor dim continuously as
+  /** x59 streaming sibling — incremental KEEP-BEST survivors: the
+    * per-cluster best-quality survivor dim maintained continuously as
     * documents arrive, composed over the streamed band index
-    * ([[bandIndexUpdate]]). Each micro-batch:
+    * ([[bandIndexUpdate]]), with DELTA-star label maintenance: each
+    * wave's new pairs merge into the PERSISTED label dim, so only the
+    * components TOUCHED by the wave recompute. Per batch:
     *
-    *  1. updates the band index and emits cross-batch verified pairs
-    *     (delegated — idempotent, shared committed state),
-    *  2. verifies its own INTRA-batch pairs from the just-committed
-    *     band slice (the one pair family the cross-probe never sees:
-    *     a pair is either within a batch or across batches, so the
-    *     accumulated union is exactly the full-corpus LSH pair set),
-    *  3. writes the batch's (doc_id, quality_score, lang) attribute
-    *     slice — append-only, cost ∝ batch, the doc-level quality
-    *     table a curation pipeline materializes anyway (x30),
-    *  4. rewrites the MERGED survivor dim: CC labels over the
-    *     accumulated pair graph (cost ∝ pair graph, which holds only
-    *     verified near-dups — never corpus-sized), quality joined for
-    *     cluster members only, per-cluster rank window. Labels +
-    *     survivors are the versioned merged dim (the
-    *     [[unigramModelUpdate]] pattern); docs + intra-pair slices are
-    *     append-only (the band-index pattern).
-    *
-    * Recompute from committed inputs is deterministic
-    * ([[VersionedStore]]). The singleton majority never enters state —
-    * readers anti-join it at read time, like batch x59. StreamingSpec
-    * replays a 2-wave split and proves the streamed survivor set ≡
-    * batch x59 on the full corpus. */
-  def keepBestUpdate(dimDir: String, pairsDir: String, survDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    // 1. band index + cross pairs (skips itself if already committed)
-    bandIndexUpdate(dimDir, pairsDir)(batch, batchId)
-    VersionedStore(survDir, spark).wave(batchId) { prior =>
-      // 2. intra-batch pairs from the committed band slice (same verify
-      //    as the cross probe: equi join on (band, bh), exact jaccard)
-      val docsSh = spark.read.parquet(s"$dimDir/v$batchId/docs")
-      val bands = spark.read.parquet(s"$dimDir/v$batchId/bands")
-      val intra = graft.ops.Dedup.verifyJaccard(
-          graft.ops.Dedup.bandSelfCandidates(bands), docsSh, docsSh)
-        .select(col("id_a"), col("id_b"))
-      intra.write.mode("overwrite").parquet(s"$survDir/v$batchId/intra")
-      // 3. the batch's doc-attribute slice (append-only)
-      batch
-        .select(col("doc_id"),
-          graft.ops.TextAnalysis.qualityScore(col("text")).as("quality_score"),
-          col("lang"))
-        .write.mode("overwrite").parquet(s"$survDir/v$batchId/docs")
-      // 4. merged survivor dim over the accumulated pair graph
-      val versions = prior :+ batchId
-      val cross = streamedNearDupPairs(spark, dimDir, pairsDir)
-        .select(col("inc_id").as("id_a"), col("hist_id").as("id_b"))
-      val intraAll = spark.read.parquet(
-        versions.map(v => s"$survDir/v$v/intra"): _*)
-      val pairs = cross.union(intraAll)
-      val (labels, survivors) =
-        if (pairs.isEmpty) {
-          val l = spark.emptyDataFrame
-            .select(lit(0L).as("id"), lit(0L).as("label")).limit(0)
-          val s = spark.emptyDataFrame
-            .select(lit(0L).as("doc_id"), lit(0L).as("cluster_id"),
-              lit(0.0).as("quality_score"), lit("").as("lang")).limit(0)
-          (l, s)
-        } else {
-          val (lbl, _) = graft.ops.Dedup.ccStars(pairs)
-          val quality = spark.read.parquet(
-            versions.map(v => s"$survDir/v$v/docs"): _*)
-          val members = quality.join(
-            lbl.select(col("id").as("doc_id"), col("label").as("cluster_id")),
-            "doc_id")
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("cluster_id"))
-            .orderBy(col("quality_score").desc, col("doc_id").asc)
-          val best = members
-            .withColumn("rk", row_number().over(w))
-            .filter(col("rk") === 1)
-            .select(col("doc_id"), col("cluster_id"),
-              col("quality_score"), col("lang"))
-          (lbl, best)
-        }
-      labels.write.mode("overwrite").parquet(s"$survDir/v$batchId/labels")
-      survivors.write.mode("overwrite").parquet(s"$survDir/v$batchId/survivors")
-      labels.unpersist(blocking = false) // ccStars persists its result
-    }
-  }
-
-  /** Run the incremental keep-best dedup over a documents stream to
-    * completion (AvailableNow), maintaining band index, pair slices and
-    * the survivor dim. */
-  def buildKeepBest(docs: DataFrame, dimDir: String, pairsDir: String,
-      survDir: String, ckptDir: String): Unit = {
-    startKeepBest(docs.sparkSession, dimDir, pairsDir, survDir, ckptDir)
-    runAvailableNow(docs, ckptDir)(
-      _.foreachBatch(keepBestUpdate(dimDir, pairsDir, survDir) _))
-  }
-
-  /** Survivor-set reader for the REBUILD-form maintainer: the latest
-    * committed merged survivors plus the singleton majority (every
-    * streamed doc not in any cluster), labeled as its own cluster —
-    * the batch-x59 output shape. The delta form has its own reader
-    * over the assembled delta lineage
-    * ([[streamedKeepBestDeltaSurvivors]]); both are pinned ≡ batch
-    * x59 by StreamingSpec, so the shapes cannot drift. `labelsIdCol`
-    * names the id column of the labels slice (the rebuild form writes
-    * ccStars' (id, label)). */
-  private def keepBestSurvivorsFrom(spark: SparkSession, survDir: String,
-      labelsIdCol: String): DataFrame = {
-    val versions = VersionedStore(survDir, spark).versions
-    require(versions.nonEmpty, s"no committed survivor version in $survDir")
-    val latest = versions.max
-    val best = spark.read.parquet(s"$survDir/v$latest/survivors")
-    val labeled = spark.read.parquet(s"$survDir/v$latest/labels")
-      .select(col(labelsIdCol).as("doc_id"))
-    val docs = spark.read.parquet(
-      versions.map(v => s"$survDir/v$v/docs"): _*)
-    val singletons = docs
-      .join(labeled, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("cluster_id"),
-        col("quality_score"), col("lang"))
-    best.unionByName(singletons)
-  }
-
-  /** The full keep-best survivor set as of the latest committed
-    * version — the rebuild maintainer's reader. */
-  def streamedKeepBestSurvivors(spark: SparkSession,
-      survDir: String): DataFrame =
-    keepBestSurvivorsFrom(spark, survDir, labelsIdCol = "id")
-
-  /** x59 delta sibling — incremental keep-best with DELTA-star label
-    * maintenance: where [[keepBestUpdate]] re-runs connected components
-    * over the FULL accumulated pair graph every micro-batch (per-wave
-    * cost ∝ P(w) — the one maintainer the r14 StreamProbe measured
-    * growing with history, by design), this maintainer merges each
-    * wave's new pairs into the PERSISTED label dim so only components
-    * TOUCHED by the wave recompute. Per batch:
-    *
-    *  1.–3. identical to [[keepBestUpdate]]: band-index update + cross
-    *     pairs (delegated, idempotent), intra-batch pairs from the
-    *     committed band slice, the batch's doc-attribute slice;
+    *  1. the band-index update emits the cross-batch verified pairs
+    *     (delegated — idempotent, shared committed state);
+    *  2. the batch's INTRA-batch pairs are verified from the
+    *     just-committed band slice — the one pair family the cross
+    *     probe never sees: a pair is either within a batch or across
+    *     batches, so the two together are the wave's exact share of the
+    *     full-corpus LSH pair set;
+    *  3. the batch's (doc_id, quality_score, lang) rows for its
+    *     first-time doc_ids become `attrs_delta` (first-wins — a
+    *     recurring doc_id keeps its first wave's row);
     *  4. delta-star merge: wave pairs P_w = cross(batch) ∪
     *     intra(batch); touched clusters = prior labels of P_w's
     *     endpoints; prior members of those clusters re-enter as
@@ -1210,32 +1089,32 @@ object Streaming {
     *     carrying exactly the old component's connectivity. CC runs
     *     over P_w ∪ star edges: cost ∝ |wave pairs| + |touched
     *     members|, INDEPENDENT of the accumulated pair count.
-    *     Label equality with the full rebuild is structural:
-    *     components only ever change by MERGING, every merge contains
-    *     a wave pair (so the merged component is fully present in the
-    *     delta graph), and untouched components keep their min-id
-    *     label verbatim;
+    *     Label equality with CC over the whole pair graph is
+    *     structural: components only ever change by MERGING, every
+    *     merge contains a wave pair (so the merged component is fully
+    *     present in the delta graph), and untouched components keep
+    *     their min-id label verbatim;
     *  5. the label dim carries (doc_id, cluster_id, quality_score,
     *     lang) so survivor re-ranking never re-reads history; quality
     *     for FIRST-TIME historical nodes (a cross pair can touch an
     *     old doc that never paired before) is probed from the
-    *     assembled attrs dim — per-wave `attrs_delta` slices (this
-    *     batch's first-time doc_ids only) over the newest cumulative
-    *     base;
+    *     assembled attrs dim — per-wave `attrs_delta` slices over the
+    *     newest cumulative base;
     *  6. survivors: untouched clusters' rows carry over verbatim;
     *     touched clusters re-rank under the same quality-desc /
-    *     doc-id-asc window — so the assembled dim stays ≡ the rebuild
-    *     form ≡ batch x59 (StreamingSpec proves both).
+    *     doc-id-asc window — so the assembled dim stays ≡ batch x59
+    *     (StreamingSpec proves it).
     *
     * The wave writes DELTA slices only, so its bytes are ∝ batch +
-    * touched clusters, never ∝ corpus: `attrs_delta` (this batch's
-    * first-time attribute rows), `drops` (the touched cluster ids,
-    * retiring every older row of those clusters), `labels_delta` /
-    * `survivors_delta` (the re-labeled members / re-ranked best of the
-    * touched clusters). Readers assemble the dims from the read set
-    * ([[assembledKeepBestDims]]). The wave reads bucket-pruned probes
-    * of the tier stores plus O(K) tail slices and pins only the
-    * touched-size `newMembers`; StreamProbe's wave_bytes and
+    * touched clusters, never ∝ corpus: `attrs_delta`, `drops` (the
+    * touched cluster ids, retiring every older row of those clusters),
+    * `labels_delta` / `survivors_delta` (the re-labeled members /
+    * re-ranked best of the touched clusters). Readers assemble the dims
+    * from the read set ([[assembledKeepBestDims]]). The singleton
+    * majority never enters the label dim — the reader anti-joins it at
+    * read time, like batch x59. The wave reads bucket-pruned probes of
+    * the tier stores plus O(K) tail slices and pins only the wave pairs
+    * and touched-size frames; `Probe stream`'s wave_bytes and
     * wave_read_bytes record both sides. Recompute from committed inputs
     * is deterministic ([[VersionedStore]]). */
   def keepBestDeltaUpdate(dimDir: String, pairsDir: String,
@@ -1243,32 +1122,40 @@ object Streaming {
     val spark = batch.sparkSession
     bandIndexUpdate(dimDir, pairsDir)(batch, batchId)
     VersionedStore(survDir, spark).wave(batchId) { prior =>
-      val docsSh = spark.read.parquet(s"$dimDir/v$batchId/docs")
-      val bands = spark.read.parquet(s"$dimDir/v$batchId/bands")
-      graft.ops.Dedup.verifyJaccard(
-          graft.ops.Dedup.bandSelfCandidates(bands), docsSh, docsSh)
-        .select(col("id_a"), col("id_b"))
-        .write.mode("overwrite").parquet(s"$survDir/v$batchId/intra")
-      batch
-        .select(col("doc_id"),
-          graft.ops.TextAnalysis.qualityScore(col("text")).as("quality_score"),
-          col("lang"))
-        .write.mode("overwrite").parquet(s"$survDir/v$batchId/docs")
       // attrs DELTA: this batch's first-time doc_ids only (first-wins —
       // a recurring doc_id keeps its first wave's row), anti-joined
-      // against the bucket-pruned doc_id MEMBERSHIP, read ∝ batch
-      val batchAttrs = spark.read.parquet(s"$survDir/v$batchId/docs")
-      val priorMembers = keepBestMembersProbe(spark, survDir, prior, batchAttrs)
+      // against the bucket-pruned doc_id MEMBERSHIP, read ∝ batch. The
+      // membership probe collects doc_id buckets only, so the quality
+      // score is computed once, by this write
+      val batchAttrs = batch.select(col("doc_id"),
+        graft.ops.TextAnalysis.qualityScore(col("text")).as("quality_score"),
+        col("lang"))
       (if (prior.isEmpty) batchAttrs
-       else batchAttrs.join(priorMembers, Seq("doc_id"), "left_anti"))
+       else batchAttrs.join(
+         keepBestMembersProbe(spark, survDir, prior, batchAttrs),
+         Seq("doc_id"), "left_anti"))
         .write.mode("overwrite").parquet(s"$survDir/v$batchId/attrs_delta")
-      // THIS batch's pair delta only — never the accumulated union
-      val wavePairs = spark.read.parquet(s"$pairsDir/b$batchId")
+      // THIS batch's pair delta only — never the accumulated union: the
+      // cross pairs the band update emitted plus the intra-batch pairs
+      // verified from the committed band slice (same verify as the
+      // cross probe: equi join on (band, bh), exact jaccard)
+      val docsSh = spark.read.parquet(s"$dimDir/v$batchId/docs")
+      val intra = graft.ops.Dedup.verifyJaccard(
+          graft.ops.Dedup.bandSelfCandidates(
+            spark.read.parquet(s"$dimDir/v$batchId/bands")),
+          docsSh, docsSh)
+        .select(col("id_a"), col("id_b"))
+      val pinned = spark.read.parquet(s"$pairsDir/b$batchId")
         .select(col("inc_id").as("id_a"), col("hist_id").as("id_b"))
-        .union(spark.read.parquet(s"$survDir/v$batchId/intra"))
+        .union(intra)
         .pipe(graft.Caches.pin)
+      // the pin keeps the estimate of the plan it pinned, the verify
+      // join's product of sides; sized at its rows, the joins of the CC
+      // rounds below broadcast their small sides instead of shuffling
+      val pairRows = pinned.queryExecution.toRdd.count()
+      val wavePairs = org.apache.spark.sql.graft.PinnedSize(pinned, pairRows)
       val (drops, labelsDelta, survDelta, ccHandle) =
-        if (wavePairs.isEmpty)
+        if (pairRows == 0L)
           (emptyKbRows(spark).select(col("cluster_id")), emptyKbRows(spark),
             emptyKbRows(spark), Option.empty[DataFrame])
         else {
@@ -1513,10 +1400,6 @@ object Streaming {
       base: Option[Long]): Option[String] =
     base.map(b => s"$survDir/v$b/compact/drops")
 
-  /** Footer row count of a parquet store ([[VersionedStore.rowCount]]). */
-  private[graft] def parquetRowCount(spark: SparkSession, dir: String): Long =
-    VersionedStore(dir, spark).rowCount(dir)
-
   /** Compact a delta keep-best lineage at its newest committed version
     * `top`: merge the tail slices and the roots [[VersionedStore.absorb]]
     * picks (tier metric: attrs rows) into a new tier `v<top>/compact`
@@ -1525,12 +1408,8 @@ object Streaming {
     * tiers + later delta slices. Layout, commit and janitor contract:
     * [[VersionedStore]]. Idempotent; safe at any cadence. */
   def compactKeepBest(spark: SparkSession, survDir: String,
-      targetRowsPerBucket: Long = 65536L): Unit =
-    compactKeepBest(spark, survDir, targetRowsPerBucket,
-      VersionedStore.MaxKeptBucketDirs)
-
-  private[graft] def compactKeepBest(spark: SparkSession, survDir: String,
-      targetRowsPerBucket: Long, maxKeptBucketDirs: Long): Unit = {
+      targetRowsPerBucket: Long = 65536L,
+      maxKeptBucketDirs: Long = VersionedStore.MaxKeptBucketDirs): Unit = {
     val store = VersionedStore(survDir, spark)
     store.compact(VersionedStore.Tiered("attrs", "attrs_delta",
         maxKeptBucketDirs)) { m =>
@@ -1565,7 +1444,7 @@ object Streaming {
       writeBucketed(spark.read.parquet(s"$out/labels")
           .select(kbCols.map(col): _*),
         "doc_id", "labels_by_doc")
-      survivors.write.mode("overwrite").parquet(s"$out/survivors")
+      VersionedStore.writeOrdered(survivors, "cluster_id", s"$out/survivors")
       // cumulative per-cluster drop store (prior cumulative + tail drop
       // slices, per-cluster max): the drop history KEPT tiers need once
       // the janitor deletes the waves' own `drops` slices. Pruned to
@@ -1573,15 +1452,16 @@ object Streaming {
       // _ver >= the new manifest's oldest build version — so the store
       // [[applyKbDrops]] broadcasts does not grow with every drop ever.
       val minKeptVer = (m.kept.map(_._1) :+ m.top).min
-      (priorCumDrops.map(p => spark.read.parquet(p)
-          .select(col("cluster_id"), col("_maxDrop").as("_dver")))
-          .toSeq ++
-        m.tail.map(v => spark.read.parquet(s"$survDir/v$v/drops")
-          .select(col("cluster_id")).withColumn("_dver", lit(v))))
-        .reduce(_ unionByName _)
-        .groupBy(col("cluster_id")).agg(max(col("_dver")).as("_maxDrop"))
-        .where(col("_maxDrop") > lit(minKeptVer))
-        .write.mode("overwrite").parquet(s"$out/drops")
+      VersionedStore.writeOrdered(
+        (priorCumDrops.map(p => spark.read.parquet(p)
+            .select(col("cluster_id"), col("_maxDrop").as("_dver")))
+            .toSeq ++
+          m.tail.map(v => spark.read.parquet(s"$survDir/v$v/drops")
+            .select(col("cluster_id")).withColumn("_dver", lit(v))))
+          .reduce(_ unionByName _)
+          .groupBy(col("cluster_id")).agg(max(col("_dver")).as("_maxDrop"))
+          .where(col("_maxDrop") > lit(minKeptVer)),
+        "cluster_id", s"$out/drops")
       store.writeBucketShift(out, shift)
       s"v${m.top}/compact"
     }
@@ -1689,13 +1569,8 @@ object Streaming {
   def compactBandIndex(spark: SparkSession, dimDir: String,
       targetRowsPerBucket: Long = 65536L,
       docsPart: String = "docs",
-      docsCols: Seq[String] = Seq("doc_id", "sh", "nsh")): Unit =
-    compactBandIndex(spark, dimDir, targetRowsPerBucket, docsPart, docsCols,
-      VersionedStore.MaxKeptBucketDirs)
-
-  private[graft] def compactBandIndex(spark: SparkSession, dimDir: String,
-      targetRowsPerBucket: Long, docsPart: String, docsCols: Seq[String],
-      maxKeptBucketDirs: Long): Unit = {
+      docsCols: Seq[String] = Seq("doc_id", "sh", "nsh"),
+      maxKeptBucketDirs: Long = VersionedStore.MaxKeptBucketDirs): Unit = {
     val store = VersionedStore(dimDir, spark)
     store.compact(VersionedStore.Tiered(docsPart, docsPart,
         maxKeptBucketDirs)) { m =>
@@ -1717,7 +1592,7 @@ object Streaming {
       VersionedStore.writeBucketed(docs, "doc_id", s"$out/$docsPart", shift)
       val nBands = bands.count()
       bands.repartition(math.max(1L, nBands / 4000000L + 1L).toInt)
-        .sortWithinPartitions(col("band"), col("bh"))
+        .sortWithinPartitions(col("band"), col("bh"), col("doc_id"))
         .write.mode("overwrite").parquet(s"$out/bands")
       store.writeBucketShift(out, shift)
       s"v${m.top}/compact"
@@ -1737,9 +1612,8 @@ object Streaming {
     keepBestDeltaUpdate(dimDir, pairsDir, survDir)(batch, batchId)
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
       val spark = batch.sparkSession
-      compactKeepBest(spark, survDir, 65536L, maxKeptBucketDirs)
-      compactBandIndex(spark, dimDir, 65536L, "docs",
-        Seq("doc_id", "sh", "nsh"), maxKeptBucketDirs)
+      compactKeepBest(spark, survDir, maxKeptBucketDirs = maxKeptBucketDirs)
+      compactBandIndex(spark, dimDir, maxKeptBucketDirs = maxKeptBucketDirs)
     }
   }
 
@@ -1753,13 +1627,13 @@ object Streaming {
     VersionedStore(pairsDir, spark).startSlices(ckptDir, "pair")
   }
 
-  /** Run the delta keep-best maintainer over a documents stream to
-    * completion (AvailableNow) — [[buildKeepBest]]'s sibling on the
-    * delta-star updater, compacting the survivor lineage every
-    * `compactEvery` waves. Defaults ON at 8: the bounded-listing
-    * property must hold without operator opt-in — a lineage that grows
-    * until someone remembers to compact is the failure mode the cadence
-    * exists to close. Pass 0 to disable. */
+  /** Run the keep-best maintainer ([[keepBestDeltaUpdate]]) over a
+    * documents stream to completion (AvailableNow), maintaining band
+    * index, pair slices and the survivor dim, and compacting both
+    * lineages every `compactEvery` waves. Defaults ON at 8: the
+    * bounded-listing property must hold without operator opt-in — a
+    * lineage that grows until someone remembers to compact is the
+    * failure mode the cadence exists to close. Pass 0 to disable. */
   def buildKeepBestDelta(docs: DataFrame, dimDir: String, pairsDir: String,
       survDir: String, ckptDir: String, compactEvery: Int = 8): Unit = {
     startKeepBest(docs.sparkSession, dimDir, pairsDir, survDir, ckptDir)
@@ -1767,13 +1641,12 @@ object Streaming {
       keepBestDeltaMaintain(dimDir, pairsDir, survDir, compactEvery) _))
   }
 
-  /** The delta maintainer's survivor set as of the latest committed
-    * version: assembled survivors plus the singleton majority. The
-    * singletons derive from the assembled ATTRS dim (one first-wins
-    * row per streamed doc) rather than the all-versions docs-slice
-    * union the rebuild form's reader scans — same rows, deduplicated,
-    * and it survives the janitor deleting pre-compaction version
-    * dirs. */
+  /** The keep-best survivor set as of the latest committed version:
+    * assembled survivors plus the singleton majority (every streamed
+    * doc in no cluster, labeled as its own cluster — the batch-x59
+    * output shape). The singletons derive from the assembled ATTRS dim
+    * (one first-wins row per streamed doc), so the reader survives the
+    * janitor deleting pre-compaction version dirs. */
   def streamedKeepBestDeltaSurvivors(spark: SparkSession,
       survDir: String): DataFrame = {
     val (attrs, labels, survivors) = assembledKeepBestDims(spark, survDir,

@@ -360,18 +360,34 @@ private[graft] object VersionedStore {
   }
 
   /** Write a kb_bucket-partitioned tier store, sorted by key within each
-    * bucket so row-group min/max pruning stays available. An empty frame
-    * is written plain (a partitioned write of zero rows leaves nothing to
-    * re-read); [[bucketPruned]] passes it through whole. */
+    * bucket so row-group min/max pruning stays available, then by the
+    * other columns, so the bytes written do not depend on the order the
+    * rows arrived in (a key can repeat: labels keyed by cluster_id). An
+    * empty frame is written plain (a partitioned write of zero rows
+    * leaves nothing to re-read); [[bucketPruned]] passes it through
+    * whole. */
   def writeBucketed(df: DataFrame, keyCol: String, out: String,
       shift: Int): Unit = {
     if (df.isEmpty) df.write.mode("overwrite").parquet(out)
     else df
       .withColumn("kb_bucket", shiftright(col(keyCol), shift).cast("long"))
       .repartition(col("kb_bucket"))
-      .sortWithinPartitions(col("kb_bucket"), col(keyCol))
+      .sortWithinPartitions(col("kb_bucket") +: rowOrder(df, keyCol): _*)
       .write.mode("overwrite").partitionBy("kb_bucket").parquet(out)
   }
+
+  /** Write an unbucketed tier artifact in a pinned row order: hash
+    * partitioned by `keyCol`, each partition sorted by `keyCol` and then
+    * the other columns, so its bytes do not depend on the upstream
+    * plan's partitioning or arrival order. */
+  def writeOrdered(df: DataFrame, keyCol: String, out: String): Unit =
+    df.repartition(col(keyCol))
+      .sortWithinPartitions(rowOrder(df, keyCol): _*)
+      .write.mode("overwrite").parquet(out)
+
+  /** `keyCol`, then every other column of `df`: a total order on rows. */
+  private def rowOrder(df: DataFrame, keyCol: String) =
+    (keyCol +: df.columns.toSeq.filterNot(_ == keyCol)).map(col)
 
   /** The distinct kb_buckets of `probe`'s `idCol`, collected to drive
     * partition-directory pruning (touched-size driver state). */

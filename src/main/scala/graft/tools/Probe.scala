@@ -144,20 +144,7 @@ object Probe {
       println(fmt("[job] %3d  at %7.2fs  dur %6.2fs  exec %4d  %s",
         j.id, j.start, j.end - j.start, j.exec, j.site))
     }
-    val execs = m.executions.map(e => e.id -> e).toMap
-    val byExec = jobs.groupBy(_.exec)
-    val outside = "jobs outside any SQL execution"
-    (execs.keySet ++ byExec.keySet).toSeq.sorted.foreach { id =>
-      val js = byExec.getOrElse(id, Nil)
-      val e = execs.getOrElse(id, Metrics.Exec(id, outside, outside,
-        js.map(_.start).min, js.map(_.end).max, 0L, 0L))
-      val site = if (e.frame == e.description) e.description else s"${e.description} <- ${e.frame}"
-      val span = e.end - e.start
-      println(fmt("[exec] %4d  at %7.2fs  span %6.2fs  %3d jobs  gap %6.2fs  " +
-        "%2d compiles %5.0f ms  %s", id, e.start, span, js.length,
-        span - Metrics.union(js.map(j => (j.start, j.end))), e.compiles,
-        e.compileNs / 1e6, site))
-    }
+    execLines(jobs, m.executions).foreach(println)
     // the gap is total minus the UNION of job intervals, not minus their
     // sum: broadcast jobs run concurrently with their parents
     val total = end - start
@@ -172,6 +159,33 @@ object Probe {
       " | action %.2fs (scheduled %.2fs, driver %.2fs)",
       name, built - start, coveredCon, built - start - coveredCon, end - built,
       covered - coveredCon, (end - built) - (covered - coveredCon)))
+  }
+
+  /** One `[exec]` line per SQL execution: start, span, jobs, the gap no
+    * job of it covered, compiles and the engine frame that asked. Jobs
+    * outside any execution (id -1) share no span: they run wherever the
+    * driver asked, between and beside other executions, so their line
+    * gives only their count and job-sum. */
+  private[graft] def execLines(jobs: Seq[Metrics.Job],
+      executions: Seq[Metrics.Exec]): Seq[String] = {
+    val execs = executions.map(e => e.id -> e).toMap
+    val byExec = jobs.groupBy(_.exec)
+    (execs.keySet ++ byExec.keySet).toSeq.sorted.map { id =>
+      val js = byExec.getOrElse(id, Nil)
+      execs.get(id) match {
+        case None =>
+          fmt("[exec] %4d  %3d jobs  job-sum %6.2fs  jobs outside any SQL execution",
+            id, js.length, js.map(j => j.end - j.start).sum)
+        case Some(e) =>
+          val site =
+            if (e.frame == e.description) e.description else s"${e.description} <- ${e.frame}"
+          val span = e.end - e.start
+          fmt("[exec] %4d  at %7.2fs  span %6.2fs  %3d jobs  gap %6.2fs  " +
+            "%2d compiles %5.0f ms  %s", id, e.start, span, js.length,
+            span - Metrics.union(js.map(j => (j.start, j.end))), e.compiles,
+            e.compileNs / 1e6, site)
+      }
+    }
   }
 
   // -------------------------------------------------------------- explain
@@ -335,13 +349,6 @@ object Probe {
       Streaming.buildOldSnapshotStore(Tables.documents(s.spark, s.baseDir), oldD)
       s.run("snapshot_diff", Streaming.snapshotDiffUpdate(oldD, outD), s.docWave)
     }),
-    // the rebuild form: each wave rebuilds the survivors from the whole
-    // pair graph, so its cost grows linearly with history by design; it
-    // is the reference point for keepbest_delta, and the probe measures
-    // the slope
-    "keepbest" -> doc(s => s.run("keepbest", Streaming.keepBestUpdate(
-      s.tmp("kb_dim"), s.tmp("kb_pairs"), s.tmp("kb_surv")), s.docWave,
-      trackReads = false)),
     // delta-star label merge: per-wave cost ∝ wave pairs + touched
     // members, and each wave writes deltas and drops, so wave_bytes
     // must stay flat ≈ batch + touched
@@ -403,10 +410,11 @@ object Probe {
     StreamDims.keys.filterNot(_.matches(".*_(c|m|mc)")).toSeq
 
   /** One stream probe run. Each dim prints one JSON line with its
-    * per-wave seconds and, per wave, the bytes it read
-    * (`wave_read_bytes`, split by call site in `wave_read_sites`) and,
-    * for the keep-best and gram-index dims, the bytes under its version
-    * dir (`wave_bytes`). A maintainer that re-scans or rewrites its
+    * per-wave seconds and, per wave, the Spark jobs it ran
+    * (`wave_jobs`), the bytes it read (`wave_read_bytes`, split by call
+    * site in `wave_read_sites`) and, for the keep-best and gram-index
+    * dims, the bytes under its version dir (`wave_bytes`). A
+    * maintainer that re-scans or rewrites its
     * accumulated state shows these growing with history; a delta
     * maintainer stays flat. Read bytes count task input, which
     * includes cached-block reads, so levels are not disk bytes but
@@ -460,11 +468,12 @@ object Probe {
     } finally metrics.detach()
 
     def run(name: String, update: (DataFrame, Long) => Unit, waveOf: Int => DataFrame,
-        bytesOf: Option[Int => Long] = None, trackReads: Boolean = true): Unit = {
+        bytesOf: Option[Int => Long] = None): Unit = {
       val samples = (0 until waves).map { w =>
         System.err.println(s"[stream-probe] $name wave ${w + 1}/$waves")
         metrics.drain()
         val mark = metrics.stages.lastOption.fold(-1)(_.id)
+        val jobMark = metrics.jobs.lastOption.fold(-1)(_.id)
         val t0 = System.nanoTime()
         update(waveOf(w), w.toLong)
         val dt = (System.nanoTime() - t0) / 1e9
@@ -472,7 +481,7 @@ object Probe {
         val sites = metrics.stages.filter(_.id > mark)
           .groupMapReduce(_.name)(_.totals.inputBytes)(_ + _).filter(_._2 > 0)
           .toSeq.sortBy(-_._2)
-        (dt, bytesOf.map(_(w)), sites)
+        (dt, bytesOf.map(_(w)), sites, metrics.jobs.count(_.id > jobMark))
       }
       val times = samples.map(_._1)
       // the first wave carries codegen and scan warm-up: compare the
@@ -483,8 +492,8 @@ object Probe {
         else samples.flatMap(_._2).mkString(""","wave_bytes":[""", ",", "]")
       def quote(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val readFields =
-        if (!trackReads) ""
-        else samples.map(_._3.map(_._2).sum).mkString(""","wave_read_bytes":[""", ",", "]") +
+        samples.map(_._4).mkString(""","wave_jobs":[""", ",", "]") +
+          samples.map(_._3.map(_._2).sum).mkString(""","wave_read_bytes":[""", ",", "]") +
           samples.map(_._3.map { case (s, b) => s"${quote(s)}:$b" }.mkString("{", ",", "}"))
             .mkString(""","wave_read_sites":[""", ",", "]")
       println(s"""{"probe":"stream","dim":"$name","waves":$waves,""" +

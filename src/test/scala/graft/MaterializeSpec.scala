@@ -98,6 +98,29 @@ class MaterializeSpec extends AnyFunSuite {
     }
   }
 
+  test("a pin over a join, sized at its rows, plans the joins above it as broadcasts") {
+    import spark.implicits._
+    // a 1000-row equi self-join keeps 1000 rows, but its estimate, which
+    // the pin keeps, is the product of its sides (64 MB)
+    val ids = spark.range(1000).toDF("id")
+    val joined = ids.join(ids.select($"id".as("id2")), $"id" === $"id2")
+    def size(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    // joined against a side too large to broadcast itself
+    def plan(side: DataFrame) = joined.select($"id")
+      .join(side.select($"id"), "id").queryExecution.executedPlan.toString
+    def check(): Unit = {
+      val pinned = Caches.pin(joined)
+      assert(size(pinned) == size(ids) * size(ids))
+      assert(plan(pinned).contains("SortMergeJoin"), plan(pinned))
+      val sized = org.apache.spark.sql.graft.PinnedSize(pinned, 1000L)
+      assert(size(sized) == 1000 * 24) // 8 B row + two BIGINTs
+      assert(plan(sized).contains("BroadcastHashJoin"), plan(sized))
+      assert(rows(sized) == rows(pinned))
+    }
+    cold(check())
+    reliable(check())
+  }
+
   test("pin strategy: a local master decides alone; a cluster needs dir and cleaner") {
     // (local master, checkpoint dir, cleanCheckpoints) -> strategy
     val table = Seq(

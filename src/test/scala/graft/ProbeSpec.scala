@@ -28,6 +28,24 @@ class ProbeSpec extends AnyFunSuite {
     assert(totals(1).contains(" construction ") && totals(1).contains(" | action "), out)
   }
 
+  test("query: jobs outside any SQL execution print a count and job-sum, no span") {
+    // a warm n13 trace holds one early job and one late sizing count
+    // outside any execution; a span from the first to the last would
+    // report the 0.54 s between them as a driver gap
+    val jobs = Seq(
+      Metrics.Job(0, -1L, "early", Seq(0), 0.05, 0.07),
+      Metrics.Job(1, 3L, "scan", Seq(1), 0.10, 0.50),
+      Metrics.Job(2, -1L, "count", Seq(2), 0.61, 0.64))
+    val execs = Seq(Metrics.Exec(3L, "q", "q", 0.08, 0.55, 1L, 2000000L))
+    val lines = Probe.execLines(jobs, execs)
+    assert(lines.size == 2, lines)
+    val outside = lines.head
+    assert(outside.startsWith("[exec]   -1  ") && outside.contains("  2 jobs  job-sum   0.05s"),
+      outside)
+    assert(!outside.contains("span") && !outside.contains("gap"), outside)
+    assert(lines(1).contains("span   0.47s    1 jobs  gap   0.07s"), lines(1))
+  }
+
   test("explain: one normalized plan file per query, stable across dumps") {
     val dir = Files.createTempDirectory("graft_probe_explain")
     try {

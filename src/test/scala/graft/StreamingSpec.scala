@@ -146,17 +146,23 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  /** Stage a frame as N single parquet files in a fresh landing dir so
-    * AvailableNow + maxFilesPerTrigger=1 replays it as N micro-batches. */
+  /** Stage frames as N single parquet files in a fresh landing dir so
+    * AvailableNow + maxFilesPerTrigger=1 replays them as N micro-batches,
+    * in order. */
   private def stageLanding(prefix: String,
       parts: Seq[org.apache.spark.sql.DataFrame]): String = {
     val landing = java.nio.file.Files.createTempDirectory(s"graft_${prefix}_landing")
+    val mtime0 = System.currentTimeMillis() - parts.size * 1000L
     parts.zipWithIndex.foreach { case (df, i) =>
       val tmp = java.nio.file.Files.createTempDirectory(s"graft_${prefix}_$i")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, landing.resolve(s"part$i.parquet"))
+      val dst = landing.resolve(s"part$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      // the file source orders a landing by modification time: space
+      // the parts a second apart so part i is always micro-batch i
+      dst.toFile.setLastModified(mtime0 + i * 1000L)
     }
     landing.toString
   }
@@ -226,7 +232,7 @@ class StreamingSpec extends AnyFunSuite {
     val pairsDir = java.nio.file.Files.createTempDirectory("graft_kb_pairs").toString
     val survDir = java.nio.file.Files.createTempDirectory("graft_kb_surv").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_kb_ckpt").toString
-    Streaming.buildKeepBest(
+    Streaming.buildKeepBestDelta(
       spark.readStream.schema(Streaming.documentsRawSchema)
         .option("maxFilesPerTrigger", 1).parquet(landing),
       dimDir, pairsDir, survDir, ckpt)
@@ -234,11 +240,18 @@ class StreamingSpec extends AnyFunSuite {
     val versions = new java.io.File(survDir).listFiles()
       .filter(_.getName.matches("v\\d+"))
     assert(versions.length == 2, s"expected 2 versions, got ${versions.toSeq}")
+    // a committed version holds the four delta slices and its marker,
+    // nothing else
+    val entries = new java.io.File(s"$survDir/v1").list().toSet
+      .filterNot(_.startsWith("."))
+    assert(entries == Set("attrs_delta", "drops", "labels_delta",
+        "survivors_delta", "_SUCCESS"),
+      s"unexpected slices in a committed keep-best version: $entries")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "cluster_id", "quality_score", "lang")
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getDouble(2), r.getString(3))).toSet
-    val streamed = rows(Streaming.streamedKeepBestSurvivors(spark, survDir))
+    val streamed = rows(Streaming.streamedKeepBestDeltaSurvivors(spark, survDir))
     val batch = rows(graft.ops.Dedup.dedupKeepBest(spark, sf))
     assert(streamed.nonEmpty)
     // the fixture must exercise real clusters, not just singletons
@@ -249,12 +262,12 @@ class StreamingSpec extends AnyFunSuite {
         s"missing=${(batch -- streamed).take(5)} extra=${(streamed -- batch).take(5)}")
 
     // replay of the committed final batch is a no-op (marker discipline)
-    val before = snapshot(s"$survDir/v1/survivors")
+    val before = snapshot(s"$survDir/v1/survivors_delta")
     assert(before.nonEmpty)
-    Streaming.keepBestUpdate(dimDir, pairsDir, survDir)(
+    Streaming.keepBestDeltaUpdate(dimDir, pairsDir, survDir)(
       docs.filter($"doc_id" % 7 === 0), 1L)
-    assert(snapshot(s"$survDir/v1/survivors") == before,
-      "replay of a committed batch rewrote the survivor dim")
+    assert(snapshot(s"$survDir/v1/survivors_delta") == before,
+      "replay of a committed batch rewrote the survivor slices")
   }
 
   test("delta-star keep-best: 3-wave delta maintainer == batch x59 " +
@@ -522,8 +535,8 @@ class StreamingSpec extends AnyFunSuite {
       .filter(f => f.getName != "compact" && f.getName != "_CUMULATIVE" &&
         f.getName != "_SUCCESS")
       .foreach(f => deleteRec(f.getPath))
-    Seq("labels_delta", "survivors_delta", "attrs_delta", "drops",
-      "docs", "intra").foreach(p => deleteRec(s"$survDir/v3/$p"))
+    Seq("labels_delta", "survivors_delta", "attrs_delta", "drops")
+      .foreach(p => deleteRec(s"$survDir/v3/$p"))
     assert(rows(Streaming.streamedKeepBestDeltaSurvivors(spark, survDir))
         == batch,
       "post-janitor tiered reader diverged — a kept-tier read or the " +
@@ -537,9 +550,8 @@ class StreamingSpec extends AnyFunSuite {
       "post-sweep wave over the two-tier stores diverged from batch x59")
   }
 
-  test("pre-attrs backfill is deterministic first-wins: a doc_id " +
-      "recurring across waves with CHANGED attributes backfills to its " +
-      "first wave's row, identical to the always-incremental lineage") {
+  test("attrs are deterministic first-wins: a doc_id recurring across " +
+      "waves with CHANGED attributes keeps its first wave's row") {
     import spark.implicits._
     val docs = Tables.documents(spark, sf)
     // wave 2 re-submits a slice of wave-1 doc_ids with mutated text
@@ -599,13 +611,22 @@ class StreamingSpec extends AnyFunSuite {
     val gorder = LocationResolve.gramOrderOf(wave1, "vkey").localCheckpoint()
     val idxDir =
       java.nio.file.Files.createTempDirectory("graft_gidx").toString
-    Streaming.gramIndexUpdate(idxDir, gorder)(
-      wave1.withColumn("op", lit("add")), 0L)
-    Streaming.gramIndexUpdate(idxDir, gorder)(
+    // the two waves land as two files of an update stream, one
+    // micro-batch each
+    val updates = Seq(wave1.withColumn("op", lit("add")),
       wave2Adds.withColumn("op", lit("add"))
         .unionByName(dels.withColumn("canon", lit("")).withColumn("vorder",
           lit(0L)).withColumn("op", lit("del"))
-          .select($"vkey", $"canon", $"vorder", $"op")), 1L)
+          .select($"vkey", $"canon", $"vorder", $"op")))
+    val landing = stageLanding("gidx", updates)
+    Streaming.buildGramIndex(
+      spark.readStream.schema(updates.head.schema)
+        .option("maxFilesPerTrigger", 1).parquet(landing),
+      idxDir, gorder,
+      java.nio.file.Files.createTempDirectory("graft_gidx_ckpt").toString)
+    val versions = new java.io.File(idxDir).listFiles()
+      .filter(_.getName.matches("v\\d+"))
+    assert(versions.length == 2, s"expected 2 versions, got ${versions.toSeq}")
     val probes = LocationResolve.gramProbes(
         spark.range(0, 1200, 3).select($"id".as("p_partkey")))
       .select($"norm".as("fnorm")).distinct().localCheckpoint()
@@ -1830,7 +1851,6 @@ class StreamingSpec extends AnyFunSuite {
       val (lDim, lOut) = (tmp("ldg_dim"), tmp("ldg_out"))
       val dsDim = tmp("dsh")
       val iDir = tmp("ivfpq")
-      val (kDim, kPairs, kSurv) = (tmp("kb_dim"), tmp("kb_pairs"), tmp("kb_surv"))
       val (k2Dim, k2Pairs, k2Surv) =
         (tmp("kbd_dim"), tmp("kbd_pairs"), tmp("kbd_surv"))
       // gram-index waves: the dictionary UPDATE stream (adds derived
@@ -1880,11 +1900,6 @@ class StreamingSpec extends AnyFunSuite {
           vMark(iDir),
           () => rows(Streaming.streamedIvfPqTopK(spark, iDir, cents, books)),
           Seq(embs.filter($"vec_id" % 2 === 0), embs.filter($"vec_id" % 2 === 1))),
-        TornDim("keep-best survivors",
-          Streaming.keepBestUpdate(kDim, kPairs, kSurv),
-          vMark(kSurv),
-          () => rows(Streaming.streamedKeepBestSurvivors(spark, kSurv)),
-          fifthWaves),
         TornDim("keep-best delta survivors",
           Streaming.keepBestDeltaUpdate(k2Dim, k2Pairs, k2Surv),
           vMark(k2Surv),
@@ -1919,7 +1934,7 @@ class StreamingSpec extends AnyFunSuite {
     val covered = Set("unigramModelUpdate", "blocklistUpdate",
       "bandIndexUpdate", "spanIndexUpdate", "decontamRewriteUpdate",
       "ledgerUpdate", "datasheetUpdate", "ivfPqIndexUpdate",
-      "keepBestUpdate", "keepBestDeltaUpdate", "gramIndexUpdate",
+      "keepBestDeltaUpdate", "gramIndexUpdate",
       "semDecontUpdate", "snapshotDiffUpdate")
     assert(updaters == covered,
       s"torn-write registry out of sync with Streaming.scala: " +
@@ -2054,9 +2069,9 @@ class StreamingSpec extends AnyFunSuite {
     val part = java.nio.file.Files.walk(java.nio.file.Paths.get(store))
       .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
     java.nio.file.Files.copy(part, stray.resolve(part.getFileName))
-    assert(Streaming.parquetRowCount(spark, store)
+    assert(graft.streaming.VersionedStore(store, spark).rowCount(store)
         == spark.read.parquet(store).count(),
-      "parquetRowCount diverged from count() on a bucketed store")
+      "rowCount diverged from count() on a bucketed store")
     deleteRec(s"$store/_temporary")
     val deletable = Streaming.janitorDeletablePaths(survDir)
     // the contract's safety half: nothing protected is offered — also
